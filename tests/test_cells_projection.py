@@ -110,3 +110,19 @@ def test_projection_roundtrip(spark):
     lon, lat = meters2lonlat_py(x, y)
     assert lon == pytest.approx(-8.61234, abs=1e-12)
     assert lat == pytest.approx(41.17, abs=1e-12)
+
+
+def test_with_cell_key_never_null(spark):
+    df = spark.createDataFrame(
+        [(None, None), (G.x_min - 1.0, G.y_min + 10.0), (G.x_min + 250.0, G.y_min + 420.0)],
+        "x double, y double",
+    )
+    out = cells.with_cell(df, G)
+    assert out.schema["cell_id"].nullable is False
+    cx, cy = G.center
+    center = oracle_cell(cx, cy)[2]
+    assert cells.center_cell_id(G) == center
+    got = [r.cell_id for r in out.collect()]
+    assert got == [center, center, oracle_cell(G.x_min + 250.0, G.y_min + 420.0)[2]]
+    cid = df.select(cells.cell_id(F.col("x"), F.col("y"), G).alias("c"))
+    assert cid.schema["c"].nullable is False

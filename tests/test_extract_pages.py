@@ -87,3 +87,41 @@ def test_generate_pages_partition_layout_invariant(spark):
     ra = sorted((r.url, r.warc_ts, r.html, r.text, r.lang) for r in a.collect())
     rb = sorted((r.url, r.warc_ts, r.html, r.text, r.lang) for r in b.collect())
     assert ra == rb
+
+
+def test_jvm_and_arrow_miners_agree(spark):
+    """The codegen miner and the pandas-UDF twin give the same rows, bit
+    for bit, decoy pages included."""
+    pg = pages_src.generate_pages(spark, 2000, skew=True)
+    cols = ["url", "pos", "ts_ms", "lon", "lat", "x", "y"]
+
+    def rows(method):
+        pts = extract.pages_to_points(pg, bbox_filter=False, method=method)
+        return sorted(tuple(r) for r in pts.select(*cols).collect())
+
+    jvm, arrow = rows("jvm"), rows("arrow")
+    assert len(jvm) > 0
+    assert jvm == arrow
+
+
+def test_point_prefix_plan_shape(spark):
+    """The point prefix runs once per mention: no regex split of the
+    mention, and no Filter re-evaluating the Mercator projection (which an
+    inferred isnotnull on a nullable cell key would push below the
+    projects)."""
+    from trajlib_spark.config import PORTO_GRID as G
+    from trajlib_spark.operators import cells, spatial_join
+
+    pg = pages_src.generate_pages(spark, 50)
+    pts = cells.with_cell(extract.pages_to_points(pg), G)
+    x0, y0, x1, y1 = G.x_min + 1000.0, G.y_min + 1000.0, G.x_min + 9000.0, G.y_min + 9000.0
+    polys = spark.createDataFrame(
+        [(1, [[[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]])],
+        "geo_id long, coord array<array<array<double>>>",
+    )
+    pip = spatial_join.point_in_polygon(pts, polys, G)
+    plan = pip._jdf.queryExecution().optimizedPlan().toString()
+    assert "split(" not in plan
+    filters = [ln for ln in plan.splitlines()
+               if ln.lstrip(" :+-").startswith("Filter")]
+    assert not [f for f in filters if "SIN(" in f or "ln(" in f], filters

@@ -159,6 +159,46 @@ def test_pip_degenerate_polygons(spark, points):
     assert counts.get(100, 0) >= 0  # sliver handled without error
 
 
+def _box(x0, y0, x1, y1):
+    return [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+
+
+def _pip_rows(spark, points, rows):
+    polys = spark.createDataFrame(
+        rows, "geo_id long, type string, coord array<array<array<double>>>"
+    )
+    out = spatial_join.point_in_polygon(points, polys, G, point_cols=["point_id"])
+    return sorted((r.point_id, r.geo_id) for r in out.collect())
+
+
+def test_pip_skips_polygons_without_edges(spark, points):
+    """Empty, null and edge-less coord arrays contain no point (and used to
+    crash the driver-side cell classification)."""
+    box = _box(G.x_min + 1000.0, G.y_min + 1000.0, G.x_min + 9000.0, G.y_min + 9000.0)
+    alone = _pip_rows(spark, points, [(1, "polygon", [box])])
+    assert alone
+    one_point = [[[G.x_min + 2000.0, G.y_min + 2000.0]]]
+    got = _pip_rows(spark, points, [
+        (1, "polygon", [box]), (2, "polygon", []), (3, "polygon", None),
+        (4, "polygon", [[]]), (5, "polygon", one_point),
+    ])
+    assert got == alone
+    assert _pip_rows(spark, points, [(2, "polygon", []), (5, "polygon", one_point)]) == []
+
+
+def test_pip_duplicate_geo_id_rows_stay_apart(spark, points):
+    """Two polygon rows sharing a geo_id give exactly the union of their
+    own containment rows: no cross product, no shape tested against the
+    other row's cells."""
+    a = _box(G.x_min + 1000.0, G.y_min + 1000.0, G.x_min + 8000.0, G.y_min + 8000.0)
+    b = _box(G.x_min + 5000.0, G.y_min + 4000.0, G.x_min + 15000.0, G.y_min + 12000.0)
+    only_a = _pip_rows(spark, points, [(7, "polygon", [a])])
+    only_b = _pip_rows(spark, points, [(7, "polygon", [b])])
+    assert only_a and only_b and set(only_a) & set(only_b)
+    both = _pip_rows(spark, points, [(7, "polygon", [a]), (7, "polygon", [b])])
+    assert both == sorted(only_a + only_b)
+
+
 def test_raster_roundtrip_and_pyramid(spark, points):
     tc = raster.tile_counts(points, G, zooms=(0, 1, 2))
     # pyramid consistency: direct assignment on the zoom-2 grid == rollup

@@ -15,6 +15,8 @@ Reference semantics (/root/reference/fedtraj/utils/cellspace.py):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,8 +61,26 @@ def cell_id_from_idx(i_x: Column, i_y: Column, grid: GridConfig) -> Column:
     return (i_x * F.lit(grid.y_size) + i_y).cast("long")
 
 
+def center_cell_id(grid: GridConfig) -> int:
+    """Cell id of the MBR center, where clamp_x/clamp_y park null and
+    out-of-MBR points: the same floor arithmetic as ``_idx``, in Python."""
+    cx, cy = grid.center
+    i_x = math.floor(math.floor(cx - grid.x_min) / grid.x_unit)
+    i_y = math.floor(math.floor(cy - grid.y_min) / grid.y_unit)
+    return int(i_x * grid.y_size + i_y)
+
+
+def _never_null(cid: Column, grid: GridConfig) -> Column:
+    # The clamps send null and out-of-MBR coordinates to the center, so the
+    # cell expression is never null; the coalesce (a no-op on every row)
+    # only tells Catalyst so. See with_cell for why that matters.
+    return F.coalesce(cid, F.lit(center_cell_id(grid)).cast("long"))
+
+
 def cell_id(x: Column, y: Column, grid: GridConfig) -> Column:
-    return cell_id_from_idx(x_idx(x, y, grid), y_idx(x, y, grid), grid)
+    return _never_null(
+        cell_id_from_idx(x_idx(x, y, grid), y_idx(x, y, grid), grid), grid
+    )
 
 
 def idx_from_cell_id(cid: Column, grid: GridConfig) -> tuple[Column, Column]:
@@ -144,11 +164,20 @@ def neighbour_cell_pairs(spark: SparkSession, grid: GridConfig) -> DataFrame:
 
 def with_cell(df: DataFrame, grid: GridConfig, x: str = "x", y: str = "y",
               prefix: str = "") -> DataFrame:
-    """Attach (i_x, i_y, cell_id) columns computed from Mercator x/y."""
+    """Attach (i_x, i_y, cell_id) columns computed from Mercator x/y.
+
+    ``cell_id`` is never null (null and out-of-MBR points snap to the
+    center cell) and is declared non-nullable in the schema. Joining on a
+    nullable key makes Catalyst infer ``isnotnull(cell_id)`` and push it
+    below the projects, where the Filter re-evaluates the whole chain
+    (coordinate parse, Mercator sin/ln, cell CASE) once per reference, with
+    no common-subexpression elimination. On a non-nullable key the
+    inferred filter folds to true, and the chain runs once, in the project.
+    """
     xc, yc = F.col(x), F.col(y)
     ix, iy = x_idx(xc, yc, grid), y_idx(xc, yc, grid)
     return df.withColumns({
         f"{prefix}i_x": ix,
         f"{prefix}i_y": iy,
-        f"{prefix}cell_id": cell_id_from_idx(ix, iy, grid),
+        f"{prefix}cell_id": _never_null(cell_id_from_idx(ix, iy, grid), grid),
     })

@@ -17,6 +17,12 @@ porto.py:19-49): url plays traj_id, point k gets timestamp
 warc_ts + 15k seconds (the reference's fixed 15-s cadence, porto.py:26-28),
 and the strict bbox filter mirrors inrange
 (/root/reference/fedtraj/utils/preprocessing_porto.py:24-33).
+
+Each matched mention holds exactly one ", ", so the JVM miner cuts it
+with ``substring_index`` (a fixed-string search) rather than ``split``:
+Spark's ``split`` takes a Java regex, and a two-character separator misses
+``String.split``'s fast path, so every call would compile a ``Pattern``.
+Both cuts give the same substrings, hence bit-identical doubles.
 """
 
 from __future__ import annotations
@@ -108,8 +114,8 @@ def pages_to_points(
                 "url",
                 "base_ms",
                 "pos",
-                F.split("mention", ", ").getItem(0).cast("double").alias("lat"),
-                F.split("mention", ", ").getItem(1).cast("double").alias("lon"),
+                F.substring_index("mention", ", ", 1).cast("double").alias("lat"),
+                F.substring_index("mention", ", ", -1).cast("double").alias("lon"),
             )
         )
     elif method == "arrow":

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import GridConfig
 from . import cells
@@ -153,10 +154,11 @@ def point_in_polygon(
     # (bx−ax)·(py−ay)/(by−ay)+ax with IEEE doubles, same any-over-all-edges
     # / parity-over-all-rings shape (classification diffed cell-exact
     # against the Catalyst expression: 18 203 rows, 0 diffs) — in
-    # milliseconds, and ships only (geo_id, cell, _full) scalars back; the
-    # coord arrays never round-trip (a mapInPandas variant measured SLOWER
-    # than the HOF because of the nested-array Arrow transfer). The tiny
-    # broadcast join re-attaches coord in the JVM.
+    # milliseconds, and ships (cell, _full) scalars back per cell. geo_id
+    # and coord go back once per polygon row, in a small local frame that
+    # the tiny broadcast join re-attaches on the row index (a mapInPandas
+    # variant that shipped coord per row measured SLOWER than the HOF
+    # because of the nested-array Arrow transfer).
     import math
 
     import numpy as np
@@ -164,22 +166,31 @@ def point_in_polygon(
 
     x_min, x_unit, x_max, x_size = grid.x_min, grid.x_unit, grid.x_max, grid.x_size
     y_min, y_unit, y_max, y_size = grid.y_min, grid.y_unit, grid.y_max, grid.y_size
-    cx, cy = grid.center
-    center_cell_v = int(
-        math.floor(math.floor(float(cx) - x_min) / x_unit) * y_size
-        + math.floor(math.floor(float(cy) - y_min) / y_unit)
-    )
+    center_cell_v = cells.center_cell_id(grid)
 
     def _bidx(v: float, v_min: float, v_max: float, unit: float, size: int) -> int:
         clamped = max(v_min, min(v_max, v))
         idx = int(math.floor(math.floor(clamped - v_min) / unit))
         return min(size - 1, max(0, idx))
 
-    out_gid, out_cell, out_full = [], [], []
+    # Each collected polygon row gets its own index (_pidx), and coord is
+    # re-attached on that index, so rows sharing a geo_id stay apart.
+    # A polygon with no ring of >= 2 points has no edge and so contains
+    # no point: it is skipped and covers no cells.
+    out_pidx, out_cell, out_full, kept = [], [], [], []
     for r in polygons.select("geo_id", "coord").collect():
-        gid, coord = r["geo_id"], r["coord"]
+        gid, coord = r["geo_id"], r["coord"] or []
+        segs = []
+        for ring in coord:
+            if ring and len(ring) >= 2:
+                R = np.array(ring, dtype=np.float64)
+                segs.append((R[:-1], R[1:]))
+        if not segs:
+            continue
+        pidx = len(kept)
+        kept.append((pidx, gid, coord))
         pts_all = np.array(
-            [p for ring in coord for p in ring], dtype=np.float64
+            [p for ring in coord if ring for p in ring], dtype=np.float64
         )
         xs_a, ys_a = pts_all[:, 0], pts_all[:, 1]
         ix_lo = _bidx(float(np.min(xs_a)), x_min, x_max, x_unit, x_size)
@@ -190,11 +201,6 @@ def point_in_polygon(
             np.arange(ix_lo, ix_hi + 1, dtype=np.int64)[:, None] * y_size
             + np.arange(iy_lo, iy_hi + 1, dtype=np.int64)[None, :]
         ).ravel()
-        segs = []
-        for ring in coord:
-            R = np.array([np.asarray(p, dtype=np.float64) for p in ring])
-            if len(R) >= 2:
-                segs.append((R[:-1], R[1:]))
         A = np.concatenate([a for a, _ in segs])
         B = np.concatenate([b for _, b in segs])
         ax, ay, bx, by = A[:, 0], A[:, 1], B[:, 0], B[:, 1]
@@ -217,25 +223,29 @@ def point_in_polygon(
             ] + ax[None, :]
         inside = ((cond & (rx_lo < xint)).sum(axis=1) % 2) == 1
         full = (cell_ids != center_cell_v) & ~overlap & inside
-        out_gid.extend([gid] * len(cell_ids))
+        out_pidx.extend([pidx] * len(cell_ids))
         out_cell.extend(cell_ids.tolist())
         out_full.extend(full.tolist())
 
-    gid_type = dict(polygons.dtypes)["geo_id"]
     spark = polygons.sparkSession
-    schema = f"geo_id {gid_type}, _g_cell long, _full boolean"
-    if out_gid:
+    schema = "_pidx long, _g_cell long, _full boolean"
+    poly_schema = T.StructType([T.StructField("_pidx", T.LongType(), False),
+                                polygons.schema["geo_id"], polygons.schema["coord"]])
+    if kept:
         cells_df = spark.createDataFrame(
             pd.DataFrame(
-                {"geo_id": out_gid, "_g_cell": out_cell, "_full": out_full}
+                {"_pidx": out_pidx, "_g_cell": out_cell, "_full": out_full}
             ),
             schema=schema,
         )
+        poly_df = spark.createDataFrame(
+            pd.DataFrame(kept, columns=["_pidx", "geo_id", "coord"]),
+            schema=poly_schema,
+        )
     else:
         cells_df = spark.createDataFrame([], schema)
-    index = F.broadcast(
-        cells_df.join(F.broadcast(polygons.select("geo_id", "coord")), "geo_id")
-    )
+        poly_df = spark.createDataFrame([], poly_schema)
+    index = F.broadcast(cells_df.join(F.broadcast(poly_df), "_pidx"))
     # refine lives in the join condition: evaluated exactly at the hash
     # join's probe, immune to pushdown/replan mangling
     cond = (points["cell_id"] == index["_g_cell"]) & (
