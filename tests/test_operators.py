@@ -250,9 +250,11 @@ def test_similarity_operator_matches_kernel(spark, points):
 
 
 def test_multi_measure_join_matches_single_measure_joins(spark, points):
-    """The one-pass multi-measure join must equal the four single-measure
-    joins pair-for-pair, with ε-match measures reading the z-scored
-    arrays and metric measures the raw ones."""
+    """The one-pass multi-measure join must equal the dp_distances kernels
+    pair-for-pair over the upper-triangular pair index, with ε-match
+    measures reading the z-scored arrays and metric measures the raw ones."""
+    from trajlib_spark.kernels import dp_distances as dpk
+
     sub = points.where(F.col("traj_id") < 6)
     polys = similarity.collect_polylines(sub)
     both = similarity.normalize_polylines(polys, out_cols=("xs_n", "ys_n"))
@@ -264,17 +266,49 @@ def test_multi_measure_join_matches_single_measure_joins(spark, points):
         },
         coord_cols={"lcss": ("xs_n", "ys_n"), "edr": ("xs_n", "ys_n")},
     ).toPandas().set_index(["i", "j"]).sort_index()
-    normed = similarity.normalize_polylines(polys)
-    for measure, space in (("lcss", normed), ("edr", normed),
-                           ("frechet", polys), ("hausdorff", polys)):
-        single = (
-            similarity.similarity_join(space, measure, eps=0.25)
-            .toPandas().set_index(["i", "j"]).sort_index()
-        )
-        assert list(single.index) == list(multi.index)
+    raw = {r.traj_id: np.column_stack([r.xs, r.ys]) for r in polys.collect()}
+    normed = {
+        r.traj_id: np.column_stack([r.xs, r.ys])
+        for r in similarity.normalize_polylines(polys).collect()
+    }
+    ids = sorted(raw)
+    pairs = [(a, b) for a in ids for b in ids if a < b]
+    assert list(multi.index) == pairs
+    reference = {
+        "lcss": lambda a, b: dpk.lcss_distance_vec(normed[a], normed[b], 0.25),
+        "edr": lambda a, b: dpk.edr_distance_vec(normed[a], normed[b], 0.25),
+        "frechet": lambda a, b: dpk.discrete_frechet(raw[a], raw[b]),
+        "hausdorff": lambda a, b: dpk.hausdorff_distance(raw[a], raw[b]),
+    }
+    for measure, ref in reference.items():
         np.testing.assert_allclose(
-            multi[measure].to_numpy(), single["dist"].to_numpy(), rtol=1e-12
+            multi[measure].to_numpy(), [ref(a, b) for a, b in pairs], rtol=1e-12
         )
+
+
+@pytest.mark.parametrize("call", [
+    "similarity_join", "multi_measure_join",
+    "measure_topk", "measure_topk_brute", "measure_topk_grid",
+])
+def test_unknown_measure_rejected_when_plan_is_built(spark, call):
+    """A bad measure name raises ValueError naming it and the valid set on
+    the operator call itself, not inside a Python worker at action time."""
+    schema = "traj_id long, xs array<double>, ys array<double>"
+    polys = spark.createDataFrame(
+        [(1, [0.0, 1.0], [0.0, 1.0]), (2, [5.0, 6.0], [5.0, 6.0])], schema
+    )
+    calls = {
+        "similarity_join": lambda: similarity.similarity_join(polys, "nope"),
+        "multi_measure_join": lambda: similarity.multi_measure_join(
+            polys, {"d": ("nope", 0.0)}),
+        "measure_topk": lambda: similarity.measure_topk(polys, polys, "nope", k=5),
+        "measure_topk_brute": lambda: similarity.measure_topk(
+            polys, polys, "nope", k=5, brute=True),
+        "measure_topk_grid": lambda: similarity.measure_topk(
+            polys, polys, "nope", k=5, grid=G),
+    }
+    with pytest.raises(ValueError, match=r"'nope'.*'frechet'"):
+        calls[call]()
 
 
 def test_multi_measure_join_single_kernel_pass(spark, points):

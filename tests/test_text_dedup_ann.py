@@ -106,6 +106,20 @@ def test_jaccard_verify_slim_path_matches_join_path(spark):
     assert not any(99 in (i, j) for i, j, _ in rows_s)  # missing ids dropped
 
 
+@pytest.mark.parametrize("collect_max_docs", [100_000, 0, -1])
+def test_jaccard_verify_empty_docs(spark, collect_max_docs):
+    # candidates against an empty doc table give no rows on both paths
+    # (an empty table passes the row gate even at 0; -1 forces the join path)
+    d = spark.createDataFrame([], "doc_id long, text string")
+    cands = spark.createDataFrame([(1, 2), (2, 3)], "i long, j long")
+    out = dedup.ngram_jaccard_verify(
+        d, cands, threshold=0.0, collect_max_docs=collect_max_docs
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert ("Join" in plan) == (collect_max_docs < 0), plan
+    assert out.collect() == []
+
+
 def test_minhash_estimates_jaccard(spark):
     d = _docs_with_dups(spark)
     sigs = {r.doc_id: np.array(r.sig) for r in dedup.minhash_signatures(d, num_perm=128).collect()}

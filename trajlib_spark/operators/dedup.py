@@ -40,21 +40,27 @@ def _minhash_params(num_perm: int, seed: int = 1) -> tuple[np.ndarray, np.ndarra
     return a, b
 
 
-def _stable_shingles(text: str, k: int) -> np.ndarray:
-    """Hashes of all k-byte shingle windows with a process-stable FNV-1a
-    (python hash() of str is salted per process — useless across
-    executors)."""
-    s = text.lower().encode("utf-8", "ignore")
-    if len(s) < k:
-        s = s + b" " * (k - len(s))
-    arr = np.frombuffer(s, dtype=np.uint8).astype(np.uint64)
-    # FNV-1a over each k-byte window, vectorized across windows
+def _shingle_bytes(text: str | None, k: int) -> bytes:
+    """Lower-cased UTF-8 bytes, space-padded to at least one k-byte window."""
+    return (text or "").lower().encode("utf-8", "ignore").ljust(k)
+
+
+def _fnv1a_windows(buf: bytes, k: int) -> np.ndarray:
+    """Process-stable FNV-1a hash of every k-byte window of ``buf``,
+    vectorized across windows in k passes (python hash() of str is salted
+    per process — useless across executors)."""
+    arr = np.frombuffer(buf, dtype=np.uint8).astype(np.uint64)
     n = len(arr) - k + 1
     h = np.full(n, np.uint64(1469598103934665603), dtype=np.uint64)
     prime = np.uint64(1099511628211)
     for off in range(k):
         h = (h ^ arr[off : off + n]) * prime
-    return np.unique(h)
+    return h
+
+
+def _stable_shingles(text: str, k: int) -> np.ndarray:
+    """Sorted unique hashes of all k-byte shingle windows of ``text``."""
+    return np.unique(_fnv1a_windows(_shingle_bytes(text, k), k))
 
 
 def minhash_signatures(
@@ -82,20 +88,10 @@ def minhash_signatures(
                 if not len(pdf):
                     yield pd.DataFrame({id_col: pdf[id_col], "sig": []})
                     continue
-                bs = [
-                    (s or "").lower().encode("utf-8", "ignore") for s in pdf[text]
-                ]
-                bs = [
-                    x if len(x) >= shingle_k else x + b" " * (shingle_k - len(x))
-                    for x in bs
-                ]
+                bs = [_shingle_bytes(s, shingle_k) for s in pdf[text]]
                 lens = np.array([len(x) for x in bs], dtype=np.int64)
-                arr = np.frombuffer(b"".join(bs), dtype=np.uint8).astype(np.uint64)
-                n_win = len(arr) - shingle_k + 1
-                h = np.full(n_win, np.uint64(1469598103934665603), dtype=np.uint64)
-                prime = np.uint64(1099511628211)
-                for off in range(shingle_k):
-                    h = (h ^ arr[off : off + n_win]) * prime
+                h = _fnv1a_windows(b"".join(bs), shingle_k)
+                n_win = len(h)
                 starts = np.zeros(len(bs), dtype=np.int64)
                 starts[1:] = np.cumsum(lens)[:-1]
                 counts = lens - shingle_k + 1
@@ -166,6 +162,45 @@ def lsh_candidates(
     return cands
 
 
+def _jaccard_scores(ii: np.ndarray, jj: np.ndarray, shingles_of) -> pd.DataFrame:
+    """(i, j, jaccard) for non-empty id arrays, ``shingles_of(id)`` giving
+    each doc's sorted shingle hashes. Pairs are grouped by i: one vectorized
+    searchsorted membership pass per left doc instead of a per-pair
+    intersect1d sort (the counts are integer-exact either way)."""
+    order = np.argsort(ii, kind="stable")
+    ii, jj = ii[order], jj[order]
+    starts = np.flatnonzero(np.r_[True, ii[1:] != ii[:-1]])
+    bounds = np.r_[starts, len(ii)]
+    jac = np.empty(len(ii))
+    for s, e in zip(bounds[:-1], bounds[1:]):
+        A = shingles_of(ii[s])
+        parts = [shingles_of(jj[r]) for r in range(s, e)]
+        sizes = np.array([p.size for p in parts], dtype=np.int64)
+        B = np.concatenate(parts)
+        pos = np.searchsorted(A, B)
+        member = (pos < A.size) & (A[np.minimum(pos, A.size - 1)] == B)
+        seg = np.zeros(len(sizes), dtype=np.int64)
+        seg[1:] = np.cumsum(sizes)[:-1]
+        inter = np.add.reduceat(member, seg) if B.size else np.zeros(len(sizes), np.int64)
+        union = A.size + sizes - inter
+        jac[s:e] = np.where(union > 0, inter / np.maximum(union, 1), 1.0)
+    return pd.DataFrame({"i": ii, "j": jj, "jaccard": jac})
+
+
+def _shingle_cache(text_of, k: int):
+    """id → shingle hashes, memoized for one task (docs repeat across the
+    task's batches, not just within one batch)."""
+    cache: dict[int, np.ndarray] = {}
+
+    def shingles_of(key: int) -> np.ndarray:
+        v = cache.get(key)
+        if v is None:
+            cache[key] = v = _stable_shingles(text_of(key), k)
+        return v
+
+    return shingles_of
+
+
 def ngram_jaccard_verify(
     docs: DataFrame,
     candidates: DataFrame,
@@ -186,68 +221,30 @@ def ngram_jaccard_verify(
     candidate pair crossing the Arrow boundary (~13 GB serialized at
     sf1.0 for a 180 MB decision). Above the gate the proven join path
     runs unchanged (at corpus scale the attach degrades to a shuffle
-    join; a driver collect would not degrade, so it stays gated)."""
+    join; a driver collect would not degrade, so it stays gated). Both
+    paths score with the same ``_jaccard_scores``; they differ only in
+    where a doc's text comes from."""
     sc = docs.sparkSession.sparkContext
     slim = candidates.repartition(sc.defaultParallelism, "i", "j")
-    if docs.count() <= collect_max_docs:
-        doc_map = {r[0]: r[1] for r in docs.select(id_col, text).collect()}
-        bmap = sc.broadcast(doc_map)
+    # one bounded job decides the gate AND fetches the texts: the docs
+    # lineage runs once, and never collects more than collect_max_docs + 1
+    rows = docs.select(id_col, text).limit(max(collect_max_docs + 1, 0)).collect()
+    if len(rows) <= collect_max_docs:
+        bmap = sc.broadcast({r[0]: r[1] for r in rows})
 
         def run_slim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             tm = bmap.value
-            ids_sorted = None  # built once per task, only if a filter is needed
-            cache: dict[int, np.ndarray] = {}
-
-            def sh(key: int) -> np.ndarray:
-                v = cache.get(key)
-                if v is None:
-                    cache[key] = v = _stable_shingles(tm[key] or "", shingle_k)
-                return v
-
+            ids = np.fromiter(tm.keys(), dtype=np.int64, count=len(tm))
+            shingles_of = _shingle_cache(tm.__getitem__, shingle_k)
             for pdf in batches:
-                if not len(pdf):
-                    continue
                 ii = pdf["i"].to_numpy()
                 jj = pdf["j"].to_numpy()
                 # inner-join semantics of the join path: drop pairs whose
-                # id has no doc row (vectorized membership test; candidate
-                # tables derived from the same docs never hit this)
-                if ids_sorted is None:
-                    ids_sorted = np.sort(
-                        np.fromiter(tm.keys(), dtype=np.int64, count=len(tm))
-                    )
-                pos_i = np.searchsorted(ids_sorted, ii)
-                pos_j = np.searchsorted(ids_sorted, jj)
-                ok = (
-                    (pos_i < ids_sorted.size)
-                    & (ids_sorted[np.minimum(pos_i, ids_sorted.size - 1)] == ii)
-                    & (pos_j < ids_sorted.size)
-                    & (ids_sorted[np.minimum(pos_j, ids_sorted.size - 1)] == jj)
-                )
-                if not ok.all():
-                    ii, jj = ii[ok], jj[ok]
-                    if not len(ii):
-                        continue
-                # group the batch's pairs by i: one vectorized searchsorted
-                # membership pass per left doc (same core as the join path)
-                order = np.argsort(ii, kind="stable")
-                ii, jj = ii[order], jj[order]
-                starts = np.flatnonzero(np.r_[True, ii[1:] != ii[:-1]])
-                bounds = np.r_[starts, len(ii)]
-                jac = np.empty(len(ii))
-                for s, e in zip(bounds[:-1], bounds[1:]):
-                    A = sh(ii[s])
-                    parts = [sh(jj[r]) for r in range(s, e)]
-                    sizes = np.array([p.size for p in parts], dtype=np.int64)
-                    B = np.concatenate(parts) if parts else np.empty(0, np.uint64)
-                    pos = np.searchsorted(A, B)
-                    member = (pos < A.size) & (A[np.minimum(pos, A.size - 1)] == B)
-                    seg = np.zeros(len(sizes), dtype=np.int64)
-                    seg[1:] = np.cumsum(sizes)[:-1]
-                    inter = np.add.reduceat(member, seg) if B.size else np.zeros(len(sizes), np.int64)
-                    union = A.size + sizes - inter
-                    jac[s:e] = np.where(union > 0, inter / np.maximum(union, 1), 1.0)
-                yield pd.DataFrame({"i": ii, "j": jj, "jaccard": jac})
+                # id has no doc row (candidate tables derived from the same
+                # docs never hit this)
+                ok = np.isin(ii, ids) & np.isin(jj, ids)
+                if ok.any():
+                    yield _jaccard_scores(ii[ok], jj[ok], shingles_of)
 
         out = slim.mapInPandas(run_slim, "i long, j long, jaccard double")
         return out.where(F.col("jaccard") >= threshold)
@@ -264,43 +261,15 @@ def ngram_jaccard_verify(
     joined = slim.join(left, "i").join(right, "j")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one shingle cache per TASK (docs repeat across the task's batches,
-        # not just within one batch)
-        cache: dict[int, np.ndarray] = {}
-
-        def sh(key: int, t: str | None) -> np.ndarray:
-            if key not in cache:
-                cache[key] = _stable_shingles(t or "", shingle_k)
-            return cache[key]
-
+        texts: dict[int, str | None] = {}  # the current batch's id → text
+        shingles_of = _shingle_cache(texts.__getitem__, shingle_k)
         for pdf in batches:
             if not len(pdf):
                 continue
-            ii = pdf["i"].to_numpy()
-            jj = pdf["j"].to_numpy()
-            ti = pdf["t_i"].to_numpy()
-            tj = pdf["t_j"].to_numpy()
-            # group the batch's pairs by i: one vectorized searchsorted
-            # membership pass per left doc instead of a per-pair
-            # intersect1d sort (the counts are integer-exact either way)
-            order = np.argsort(ii, kind="stable")
-            ii, jj, ti, tj = ii[order], jj[order], ti[order], tj[order]
-            starts = np.flatnonzero(np.r_[True, ii[1:] != ii[:-1]])
-            bounds = np.r_[starts, len(ii)]
-            jac = np.empty(len(ii))
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                A = sh(ii[s], ti[s])
-                parts = [sh(jj[r], tj[r]) for r in range(s, e)]
-                sizes = np.array([p.size for p in parts], dtype=np.int64)
-                B = np.concatenate(parts) if parts else np.empty(0, np.uint64)
-                pos = np.searchsorted(A, B)
-                member = (pos < A.size) & (A[np.minimum(pos, A.size - 1)] == B)
-                seg = np.zeros(len(sizes), dtype=np.int64)
-                seg[1:] = np.cumsum(sizes)[:-1]
-                inter = np.add.reduceat(member, seg) if B.size else np.zeros(len(sizes), np.int64)
-                union = A.size + sizes - inter
-                jac[s:e] = np.where(union > 0, inter / np.maximum(union, 1), 1.0)
-            yield pd.DataFrame({"i": ii, "j": jj, "jaccard": jac})
+            texts.clear()
+            texts.update(zip(pdf["i"], pdf["t_i"]))
+            texts.update(zip(pdf["j"], pdf["t_j"]))
+            yield _jaccard_scores(pdf["i"].to_numpy(), pdf["j"].to_numpy(), shingles_of)
 
     out = joined.mapInPandas(run, "i long, j long, jaccard double")
     return out.where(F.col("jaccard") >= threshold)

@@ -8,8 +8,13 @@ Plan shape:
   the reference's halving trick as a join condition);
 - attach both polylines (two hash joins; at scale, block the pair space
   by a coarse cell prefix so only spatially-plausible pairs join);
-- evaluate the kernel per Arrow batch via mapInPandas (never a dense
+- evaluate the kernels per Arrow batch via mapInPandas (never a dense
   matrix — the pair table is the output).
+
+Every pair scorer — similarity_join, multi_measure_join and the three
+measure_topk paths (brute, grid ring, ε-match) — ends in the same batch
+pass, ``_kernel_pass``; each caller only builds and partitions its pair
+table.
 
 Normalization matches the reference: per-axis population-σ z-score over
 ALL points of the dataset (preprocessing_porto.py:232-252 — numpy std is
@@ -154,6 +159,54 @@ def _eval_pairs(measure, eps, xi, yi, xj, yj) -> np.ndarray:
     return dists
 
 
+def _respread(pairs: DataFrame) -> DataFrame:
+    """Hash-spread the pair table over every core before a kernel pass: the
+    kernels cost per PAIR (tens of ms for EDwP), while AQE sizes partitions
+    by BYTES and would coalesce a few-MB pair table onto 1-2 cores."""
+    return pairs.repartition(pairs.sparkSession.sparkContext.defaultParallelism, "i", "j")
+
+
+def _kernel_pass(
+    pairs: DataFrame,
+    measures: dict[str, tuple[str, float]],
+    coord_cols: dict[str, tuple[str, str]] | None = None,
+) -> DataFrame:
+    """The one Arrow batch pass every pair scorer runs: (i, j, <xc>_i, <yc>_i,
+    <xc>_j, <yc>_j, ...) → (i, j, <out>...), one double column per entry of
+    ``measures`` (out_col → (measure_name, eps)), each read from the
+    coordinate columns ``coord_cols`` names for it (default ("xs", "ys")).
+    Measure names are checked here, while the plan is built, so a bad name
+    raises on the call instead of inside a Python worker at action time.
+    The caller owns the partitioning of ``pairs``."""
+    coord_cols = coord_cols or {}
+    for out, (m, _e) in measures.items():
+        if m not in _KERNELS:
+            raise ValueError(
+                f"unknown measure {m!r} for {out!r}; one of {sorted(_KERNELS)}"
+            )
+    specs = [
+        (out, m, eps, coord_cols.get(out, ("xs", "ys")))
+        for out, (m, eps) in measures.items()
+    ]
+    arr_cols = sorted({f"{c}_{side}" for *_, xy in specs for c in xy for side in "ij"})
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = {"i": pdf["i"], "j": pdf["j"]}
+            for name, m, eps, (xc, yc) in specs:
+                out[name] = _eval_pairs(
+                    m, eps,
+                    pdf[f"{xc}_i"].to_numpy(), pdf[f"{yc}_i"].to_numpy(),
+                    pdf[f"{xc}_j"].to_numpy(), pdf[f"{yc}_j"].to_numpy(),
+                )
+            yield pd.DataFrame(out)
+
+    i_type = dict(pairs.dtypes)["i"]
+    schema = ", ".join([f"i {i_type}", f"j {i_type}"]
+                       + [f"{name} double" for name in measures])
+    return pairs.select("i", "j", *arr_cols).mapInPandas(run, schema)
+
+
 def similarity_join(
     polys: DataFrame,
     measure: str,
@@ -164,35 +217,9 @@ def similarity_join(
 ) -> DataFrame:
     """→ (i, j, dist) for every pair. ``pairs`` overrides the generated
     upper-triangular pair table (e.g. a k-ring-bounded candidate set)."""
-    if measure not in _KERNELS:
-        raise ValueError(f"unknown measure {measure!r}; one of {sorted(_KERNELS)}")
-    if pairs is None:
-        pairs = pair_table(polys.select(id_col, *( [block_col] if block_col else [] )),
-                           id_col, block_col)
-    left = polys.select(
-        F.col(id_col).alias("i"), F.col("xs").alias("xs_i"), F.col("ys").alias("ys_i")
+    return multi_measure_join(
+        polys, {"dist": (measure, eps)}, pairs=pairs, id_col=id_col, block_col=block_col
     )
-    right = polys.select(
-        F.col(id_col).alias("j"), F.col("xs").alias("xs_j"), F.col("ys").alias("ys_j")
-    )
-    joined = pairs.select("i", "j").join(left, "i").join(right, "j")
-    # per-PAIR python kernel: respread explicitly (AQE coalesces by bytes
-    # and would serialize a few-MB pair table onto 1-2 cores)
-    joined = joined.repartition(
-        joined.sparkSession.sparkContext.defaultParallelism, "i", "j"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dists = _eval_pairs(
-                measure, eps,
-                pdf["xs_i"].to_numpy(), pdf["ys_i"].to_numpy(),
-                pdf["xs_j"].to_numpy(), pdf["ys_j"].to_numpy(),
-            )
-            yield pd.DataFrame({"i": pdf["i"], "j": pdf["j"], "dist": dists})
-
-    i_type = dict(joined.dtypes)["i"]
-    return joined.mapInPandas(run, f"i {i_type}, j {i_type}, dist double")
 
 
 def multi_measure_join(
@@ -217,9 +244,6 @@ def multi_measure_join(
     space (e.g. z-scored arrays for LCSS/EDR, raw for Fréchet/Hausdorff);
     defaults to ("xs", "ys")."""
     coord_cols = coord_cols or {}
-    for out, (m, _e) in measures.items():
-        if m not in _KERNELS:
-            raise ValueError(f"unknown measure {m!r} for {out!r}")
     arr_cols = sorted({c for out in measures for c in coord_cols.get(out, ("xs", "ys"))})
     if pairs is None:
         pairs = pair_table(polys.select(id_col, *( [block_col] if block_col else [] )),
@@ -231,71 +255,7 @@ def multi_measure_join(
         F.col(id_col).alias("j"), *[F.col(c).alias(f"{c}_j") for c in arr_cols]
     )
     joined = pairs.select("i", "j").join(left, "i").join(right, "j")
-    # per-PAIR python kernels: respread explicitly (AQE coalesces by bytes
-    # and would serialize a few-MB pair table onto 1-2 cores)
-    joined = joined.repartition(
-        joined.sparkSession.sparkContext.defaultParallelism, "i", "j"
-    )
-    specs = [
-        (out, m, eps, coord_cols.get(out, ("xs", "ys")))
-        for out, (m, eps) in measures.items()
-    ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"i": pdf["i"], "j": pdf["j"]}
-            cols = {c: pdf[c].to_numpy() for c in pdf.columns if c not in ("i", "j")}
-            for name, m, eps, (xc, yc) in specs:
-                out[name] = _eval_pairs(
-                    m, eps,
-                    cols[f"{xc}_i"], cols[f"{yc}_i"],
-                    cols[f"{xc}_j"], cols[f"{yc}_j"],
-                )
-            yield pd.DataFrame(out)
-
-    i_type = dict(joined.dtypes)["i"]
-    schema = ", ".join([f"i {i_type}", f"j {i_type}"]
-                       + [f"{name} double" for name in measures])
-    return joined.mapInPandas(run, schema)
-
-
-def _score_pairs(
-    pairs: DataFrame, measure: str, eps: float,
-    q_cols: tuple[str, str] = ("xs_q", "ys_q"),
-    d_cols: tuple[str, str] = ("xs_d", "ys_d"),
-    pre_spread: bool = False,
-) -> DataFrame:
-    """(i, j, polylines) → (query_id, neighbor_id, dist) via the Arrow-
-    batched DP kernel. The pair table is explicitly respread first: the
-    kernel's cost is per PAIR (tens of ms for EDwP), while AQE sizes
-    partitions by BYTES and would coalesce a few-MB pair table onto 1-2
-    cores. ``pre_spread=True`` skips the respread for callers that already
-    partitioned the SLIM pair ids before attaching the polylines —
-    respreading here would shuffle every pair with both arrays aboard
-    (round 9: at sf1.0 the LCSS path moved ~2 KB/pair × millions of pairs
-    through this exchange for a 16-byte decision)."""
-    if not pre_spread:
-        pairs = pairs.repartition(
-            pairs.sparkSession.sparkContext.defaultParallelism, "i", "j"
-        )
-    xq, yq = q_cols
-    xd, yd = d_cols
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dists = _eval_pairs(
-                measure, eps,
-                pdf[xq].to_numpy(), pdf[yq].to_numpy(),
-                pdf[xd].to_numpy(), pdf[yd].to_numpy(),
-            )
-            yield pd.DataFrame(
-                {"query_id": pdf["i"], "neighbor_id": pdf["j"], "dist": dists}
-            )
-
-    i_type = dict(pairs.dtypes)["i"]
-    return pairs.mapInPandas(
-        run, f"query_id {i_type}, neighbor_id {i_type}, dist double"
-    )
+    return _kernel_pass(_respread(joined), measures, coord_cols)
 
 
 def _traj_anchor(
@@ -410,8 +370,8 @@ def _lcss_edr_topk(
         F.floor(F.col("_ax") / delta).alias("cx"),
         F.floor(F.col("_ay") / delta).alias("cy"),
     )
-    db_lines = db_a.select("j", F.col("xs").alias("xs_d"), F.col("ys").alias("ys_d"))
-    q_lines = q_a.select("i", F.col("xs").alias("xs_q"), F.col("ys").alias("ys_q"))
+    db_lines = db_a.select("j", F.col("xs").alias("xs_j"), F.col("ys").alias("ys_j"))
+    q_lines = q_a.select("i", F.col("xs").alias("xs_i"), F.col("ys").alias("ys_i"))
     # ring covers d₂(anchors) < ε√2 + r_q + r_dmax: Chebyshev cell distance
     # ≤ d₂/δ + 1, hence ceil(T/δ) + 1 rings suffice
     ring = F.ceil(
@@ -445,9 +405,8 @@ def _lcss_edr_topk(
         .join(db_lines.repartition(par, "j"), "j")
         .join(F.broadcast(q_lines), "i")
     )
-    scored = _score_pairs(
-        pairs.select("i", "j", "xs_q", "ys_q", "xs_d", "ys_d"), measure, eps,
-        pre_spread=True,
+    scored = _kernel_pass(pairs, {"dist": (measure, eps)}).withColumnsRenamed(
+        {"i": "query_id", "j": "neighbor_id"}
     ).persist()
 
     # queries already exact: ≥ k candidates scoring strictly < 1.0 (then no
@@ -571,13 +530,14 @@ def measure_topk(
 
     if grid is None or measure not in _METRIC_MEASURES or brute:
         q = query_polys.select(
-            F.col(id_col).alias("i"), F.col("xs").alias("xs_q"), F.col("ys").alias("ys_q")
+            F.col(id_col).alias("i"), F.col("xs").alias("xs_i"), F.col("ys").alias("ys_i")
         )
         db = db_polys.select(
-            F.col(id_col).alias("j"), F.col("xs").alias("xs_d"), F.col("ys").alias("ys_d")
+            F.col(id_col).alias("j"), F.col("xs").alias("xs_j"), F.col("ys").alias("ys_j")
         )
         joined = F.broadcast(q).crossJoin(db).where(F.col("i") != F.col("j"))
-        return topk(_score_pairs(joined, measure, eps))
+        return topk(_kernel_pass(_respread(joined), {"dist": (measure, eps)})
+                    .withColumnsRenamed({"i": "query_id", "j": "neighbor_id"}))
 
     db_anchored = _traj_anchor(
         db_polys.select(id_col, "xs", "ys"), "j", grid, id_col=id_col
@@ -611,9 +571,9 @@ def measure_topk(
         "j", cell_id_expr("a_ix", "a_iy", grid).alias("cell_id")
     )
     db_lines = db_anchored.select(
-        "j", F.col("xs").alias("xs_d"), F.col("ys").alias("ys_d")
+        "j", F.col("xs").alias("xs_j"), F.col("ys").alias("ys_j")
     )
-    q_lines = q_all.select("i", F.col("xs").alias("xs_q"), F.col("ys").alias("ys_q"))
+    q_lines = q_all.select("i", F.col("xs").alias("xs_i"), F.col("ys").alias("ys_i"))
 
     cover = max(grid.x_size, grid.y_size)
     min_unit = min(grid.x_unit, grid.y_unit)
@@ -648,8 +608,8 @@ def measure_topk(
             .join(q_lines, "i")
             .join(db_lines, "j")
         )
-        scored = _score_pairs(
-            pairs.select("i", "j", "xs_q", "ys_q", "xs_d", "ys_d"), measure, eps
+        scored = _kernel_pass(_respread(pairs), {"dist": (measure, eps)}).withColumnsRenamed(
+            {"i": "query_id", "j": "neighbor_id"}
         )
         ranked = topk(scored).persist()
         if r >= cover:
