@@ -57,6 +57,8 @@ from trajlib_spark.operators import staypoints as stay_ops
 
 from trajlib_spark.operators import text as text_ops
 
+from trajlib_spark.plans import pages_pipeline
+
 from trajlib_spark.sources import pages as pages_src
 
 from trajlib_spark.sources import synth
@@ -1405,11 +1407,8 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: pages → mined points → cells → PIP join on sf0.001."""
     sf_dir = "/root/testdata/sf0.001"
     pg = pages_src.generate_pages(spark, 2000)
-    pts = cell_ops.with_cell(extract_ops.pages_to_points(pg), G)
     polys = synth.synthetic_polygons(spark, sf_dir)
-    return sj_ops.point_in_polygon(
-        pts, polys, G, point_cols=["url", "pos", "cell_id"]
-    )
+    return pages_pipeline.flagship_frames(pg, polys)["pip_join"]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

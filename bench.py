@@ -5,33 +5,31 @@
 Headline = the north-rule metric: spatial-join + tile-assignment throughput
 (pages/sec) over the deterministic pages table — extract → project → cell
 assign → PIP join against the broadcast polygon set → tile pyramid, results
-sunk to a noop writer (compute measured, not disk).
+sunk to a noop writer (compute measured, not disk). The chain itself is
+defined once, in trajlib_spark/plans/pages_pipeline.py.
 
-Scaling evidence (BASELINE.md §3): the same job on the same input at
-N=local[3] and 4N=local[12], interleaved sessions, efficiency = the
-MEDIAN of per-pair ratios (t_3/t_12)/4 over the pooled clean pairs —
-the pair design cancels common-mode machine speed, the median is robust
-to residual one-sided noise on either leg and to base-speed drift
-across the pool (see _pair_efficiency_estimates; the r5–r7 min-ratio
-headline is kept on record alongside) — plus the full-box local[32]
-throughput.
+Scaling: the same job on the same input at N = cpus // 4 and 4N cores, in
+_SCALING_PAIRS interleaved session pairs; efficiency = the median of this
+run's per-pair ratios (t_N / t_4N) / 4. The full-box local[cpus]
+throughput is the headline value.
 
-Contention guard (VERDICT r5 #1): every timed window is monitored for
-CPU steal (/proc/stat) and loadavg; contended scaling pairs are re-run
-until the target number of CLEAN pairs exists, the efficiency uses
-clean pairs only, per-query timings retry contended windows, and
-a run with zero clean pairs refuses to overwrite BENCH/BASELINE.md
-(evidence goes to BENCH/NOTES.md instead).
+The record is this run only: wall times on a shared host move with
+hypervisor steal, so the numbers that decide performance changes come
+from perfbench/ (CPU time, interleaved pairs). BENCH/last_run.json keeps
+the machine record; the sf10 probes cache their results under BENCH/.
 
-Usage: python bench.py [--scaling]
+Usage: python bench.py
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
-SPARK_GRAFT_SF1=0 / SPARK_GRAFT_SF10=0 to skip the scale pilots
-(SPARK_GRAFT_SF10=live forces a fresh 200M-page pass past the cache).
+whose default is the number of CPUs this process may run on, and
+SPARK_GRAFT_SF1=0 / SPARK_GRAFT_SF10=0 to skip the scale pilots (delete a
+BENCH/SF10*.json file to force its probe to re-measure).
 """
 
 from __future__ import annotations
 
 import contextlib
+import hashlib
+import inspect
 import json
 import os
 import sys
@@ -50,104 +48,29 @@ os.environ["PYTHONPATH"] = (
 from pyspark.sql import functions as F  # noqa: E402
 
 from trajlib_spark.config import PORTO_GRID  # noqa: E402
-from trajlib_spark.operators import cells, extract, raster, spatial_join  # noqa: E402
-from trajlib_spark.session import get_spark, stop_spark  # noqa: E402
+from trajlib_spark.operators import cells  # noqa: E402
+from trajlib_spark.plans import pages_pipeline  # noqa: E402
+from trajlib_spark.session import default_cpus, get_spark, stop_spark  # noqa: E402
 from trajlib_spark.sources import pages as pages_src  # noqa: E402
 from trajlib_spark.sources import synth  # noqa: E402
 
 G = PORTO_GRID
+_PKG = os.path.join(_ROOT, "trajlib_spark")
+_SCALING_PAIRS = 3
 
 
 def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
-# ---------------------------------------------------------------------------
-# contention guard (VERDICT r5 #1): every timing window records hard
-# evidence of whether a co-tenant was stealing the box while it ran
-# ---------------------------------------------------------------------------
-
-# steal share of the whole box's CPU-time during the window: >2% means the
-# hypervisor ran someone else while this guest was runnable — the direct
-# signature of the shared-VM interference that poisoned BENCH_r05
-_STEAL_THRESH_PCT = 2.0
-# 1-min loadavg beyond what the bench's own Spark session explains
-# (cores in use + python workers); the r5 bad window read loadavg 13
-# with zero local processes
-_LOAD_MARGIN = 8.0
-
-
-def _cpu_sample() -> tuple[int, int]:
-    """(steal_jiffies, total_jiffies) summed over all CPUs from /proc/stat."""
-    v = [int(x) for x in open("/proc/stat").readline().split()[1:9]]
-    return v[7], sum(v)
-
-
-class _WindowMonitor:
-    """Context manager sampling external-contention signals over a timed
-    window: CPU-steal share from /proc/stat deltas plus 1-min loadavg
-    every 0.5 s. ``stats`` afterwards holds steal_pct / load1_max /
-    contended; ``contended`` is True when either signal exceeds its
-    threshold for the given in-use core count."""
-
-    def __init__(self, cores_in_use: int):
-        self.cores = cores_in_use
-        self.stats: dict = {}
-
-    def __enter__(self):
-        import threading
-
-        self._s0, self._t0 = _cpu_sample()
-        self._loads: list[float] = []
-        self._stop = threading.Event()
-
-        def sampler():
-            while not self._stop.wait(0.5):
-                self._loads.append(os.getloadavg()[0])
-
-        self._th = threading.Thread(target=sampler, daemon=True)
-        self._th.start()
-        return self
-
-    def __exit__(self, *exc):
-        self._stop.set()
-        self._th.join()
-        s1, t1 = _cpu_sample()
-        dt = max(1, t1 - self._t0)
-        steal = 100.0 * (s1 - self._s0) / dt
-        load_max = max(self._loads, default=os.getloadavg()[0])
-        self.stats = {
-            "steal_pct": round(steal, 2),
-            "load1_max": round(load_max, 2),
-            "contended": bool(
-                steal > _STEAL_THRESH_PCT
-                or load_max > self.cores + _LOAD_MARGIN
-            ),
-        }
-        return False
-
-    @property
-    def contended(self) -> bool:
-        return bool(self.stats.get("contended"))
-
-
-def _idle_probe() -> dict:
-    """Point-in-time external-load sample taken while the bench holds no
-    Spark session (pair boundaries): 1-min loadavg (still decaying from
-    our own previous level, so recorded as evidence, never gated on) plus
-    steal over a 0.25 s sample."""
-    s0, t0 = _cpu_sample()
-    time.sleep(0.25)
-    s1, t1 = _cpu_sample()
-    return {
-        "load1": round(os.getloadavg()[0], 2),
-        "steal_pct": round(100.0 * (s1 - s0) / max(1, t1 - t0), 2),
-    }
+def _sf_name(sf_dir: str) -> str:
+    return sf_dir.rstrip("/").rsplit("/", 1)[-1]
 
 
 def pages_for_sf(sf_dir: str) -> int:
-    name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return {"sf0.001": 20_000, "sf0.01": 200_000, "sf0.1": 2_000_000}.get(name, 200_000)
+    return {"sf0.001": 20_000, "sf0.01": 200_000, "sf0.1": 2_000_000}.get(
+        _sf_name(sf_dir), 200_000
+    )
 
 
 def prepare_pages(spark, n_pages: int) -> str:
@@ -170,7 +93,14 @@ def prepare_pages(spark, n_pages: int) -> str:
     return path
 
 
-def run_pipeline_once(spark, sf_dir: str, pages_path: str, n_pages: int) -> float:
+def _flagship_frames(spark, sf_dir: str, pages_path: str) -> dict:
+    """The flagship's lazy frames over the stored pages table."""
+    return pages_pipeline.flagship_frames(
+        spark.read.parquet(pages_path), synth.synthetic_polygons(spark, sf_dir)
+    )
+
+
+def run_pipeline_once(spark, sf_dir: str, pages_path: str) -> float:
     """One timed pass of the headline job (read pages -> mine -> cells ->
     PIP join -> tile pyramid); returns seconds. The two independent sinks
     are submitted concurrently (standard practice for a DAG with two
@@ -178,146 +108,19 @@ def run_pipeline_once(spark, sf_dir: str, pages_path: str, n_pages: int) -> floa
     executors stay saturated, instead of paying two serial job latencies."""
     from concurrent.futures import ThreadPoolExecutor
 
-    pg = spark.read.parquet(pages_path)
-    pts = cells.with_cell(extract.pages_to_points(pg), G)
-    polys = synth.synthetic_polygons(spark, sf_dir)
-    pip = spatial_join.point_in_polygon(pts, polys, G, point_cols=["url", "pos", "cell_id"])
-    tiles = raster.tile_counts(pts, G)
+    f = _flagship_frames(spark, sf_dir, pages_path)
     t0 = time.time()
     with ThreadPoolExecutor(max_workers=2) as ex:
         futures = [
             ex.submit(lambda df=df: df.write.format("noop").mode("overwrite").save())
-            for df in (pip, tiles)
+            for df in (f["pip_join"], f["tiles"])
         ]
-        for f in futures:
-            f.result()
+        for fut in futures:
+            fut.result()
     return time.time() - t0
 
 
-# per-board-query source files (beyond the query function's own source,
-# hashed via inspect) — the pool key for BENCH/query_history.jsonl: a
-# byte change to any file a query executes starts it a fresh pool, so a
-# pooled minimum can never quote a faster, older version of the code
-# (VERDICT r6 #2: extend the pair-history pooling to the board).
-_QUERY_COMMON = ["trajlib_spark/sources/synth.py", "trajlib_spark/config.py",
-                 "trajlib_spark/session.py"]
-_QUERY_SRC: dict[str, list[str]] = {
-    "cell_assign": ["trajlib_spark/operators/cells.py"],
-    "tile_pyramid": ["trajlib_spark/operators/raster.py",
-                     "trajlib_spark/operators/cells.py"],
-    "stay_collapse": ["trajlib_spark/operators/staypoints.py",
-                      "trajlib_spark/operators/cells.py"],
-    "sessionize": ["trajlib_spark/operators/staypoints.py"],
-    "pip_join": ["trajlib_spark/operators/spatial_join.py",
-                 "trajlib_spark/operators/cells.py"],
-    "knn": ["trajlib_spark/operators/knn.py", "trajlib_spark/operators/cells.py"],
-    "point_features": ["trajlib_spark/operators/features.py"],
-    "traj_stats": ["trajlib_spark/operators/features.py"],
-    "segment_pairs": ["trajlib_spark/operators/segment.py",
-                      "trajlib_spark/kernels/traclus.py",
-                      "trajlib_spark/kernels/clustering.py"],
-    "dedup_exact": ["trajlib_spark/operators/dedup.py"],
-    "text_features": ["trajlib_spark/operators/text.py"],
-    "ann_topk": ["trajlib_spark/operators/ann.py"],
-    "segment_cut": ["trajlib_spark/operators/segment.py",
-                    "trajlib_spark/kernels/traclus.py"],
-    "minhash_lsh": ["trajlib_spark/operators/dedup.py"],
-    "doc_fingerprint": ["trajlib_spark/operators/text.py"],
-    "simhash": ["trajlib_spark/operators/dedup.py"],
-    "symmetrize_norm": ["trajlib_spark/operators/similarity.py"],
-    "newsimi_raw": ["trajlib_spark/operators/segment.py",
-                    "trajlib_spark/operators/newsimi.py"],
-    "media_all": ["trajlib_spark/operators/multimodal.py"],
-    "embedding_near_dups": ["trajlib_spark/operators/dedup.py"],
-    "measure_topk_lcss": ["trajlib_spark/operators/similarity.py",
-                          "trajlib_spark/kernels/dp_distances.py"],
-    "map_match": ["trajlib_spark/operators/map_match.py",
-                  "trajlib_spark/kernels/viterbi.py",
-                  "trajlib_spark/sources/roads.py",
-                  "trajlib_spark/operators/cells.py"],
-    "cell_walks": ["trajlib_spark/operators/walks.py",
-                   "trajlib_spark/operators/cells.py"],
-    "video_frames": ["trajlib_spark/operators/multimodal.py"],
-    "walk_skipgrams": ["trajlib_spark/operators/walks.py",
-                       "trajlib_spark/operators/cells.py"],
-    "matched_edge_graph": ["trajlib_spark/operators/map_match.py",
-                           "trajlib_spark/kernels/viterbi.py",
-                           "trajlib_spark/sources/roads.py",
-                           "trajlib_spark/operators/cells.py"],
-    "ann_ivf_recall": ["trajlib_spark/operators/ann.py"],
-    "dedup_components": ["trajlib_spark/operators/dedup.py"],
-    "vocab_topk": ["trajlib_spark/operators/text.py"],
-    "tfidf_topterms": ["trajlib_spark/operators/text.py"],
-    "lm_score": ["trajlib_spark/operators/text.py"],
-    "streaming_dedup": ["trajlib_spark/streaming/dedup.py",
-                        "trajlib_spark/streaming/stateful.py"],
-}
-
-
-def _entry_helper_sources(fn) -> bytes:
-    """Sources of the __spark_entry__ module-level functions reachable
-    from ``fn`` through its code object's global names, transitively
-    (ADVICE r7: shared helpers like _segment_pair_d/_replay_stream/
-    _points_cells were a pool-key blind spot — editing one changes what a
-    query executes without resetting that query's measurement pool, the
-    exact staleness the source hash exists to prevent). Deterministic:
-    helpers are concatenated in sorted-name order."""
-    import inspect
-    import types
-
-    mod = getattr(fn, "__module__", None)
-    module = sys.modules.get(mod) if mod else None
-    if module is None:
-        return b""
-
-    def code_names(code) -> set[str]:
-        names = set(code.co_names)
-        for c in code.co_consts:
-            if isinstance(c, types.CodeType):
-                names |= code_names(c)
-        return names
-
-    seen: dict[str, bytes] = {}
-    frontier = [fn]
-    while frontier:
-        f = frontier.pop()
-        code = getattr(f, "__code__", None)
-        if code is None:
-            continue
-        for n in sorted(code_names(code)):
-            if n in seen:
-                continue
-            g = getattr(module, n, None)
-            if (
-                isinstance(g, types.FunctionType)
-                and getattr(g, "__module__", None) == mod
-                and g is not fn
-            ):
-                try:
-                    seen[n] = inspect.getsource(g).encode()
-                except (OSError, TypeError):
-                    seen[n] = repr(g).encode()
-                frontier.append(g)
-    return b"".join(seen[n] for n in sorted(seen))
-
-
-def _query_source_hash(name: str, fn) -> str:
-    """Pool key for one board query: sha256 over the query function's own
-    source (the __spark_entry__ wiring) + every __spark_entry__ helper it
-    reaches (transitively — ADVICE r7) + the operator/kernel modules it
-    executes (_QUERY_SRC) + the session/config/synth base every query
-    shares."""
-    import inspect
-
-    try:
-        src = inspect.getsource(fn).encode()
-    except (OSError, TypeError):
-        src = repr(fn).encode()
-    src += _entry_helper_sources(fn)
-    return _files_hash(_QUERY_SRC.get(name, []) + _QUERY_COMMON, extra=src)
-
-
-# the bench board — every name must have a _QUERY_SRC entry (tested)
+# the bench board: names from __spark_entry__.queries()
 _BOARD_QUERIES = [
     "cell_assign", "tile_pyramid", "stay_collapse", "sessionize",
     "pip_join", "knn", "point_features", "traj_stats", "segment_pairs",
@@ -332,93 +135,55 @@ _BOARD_QUERIES = [
 
 
 # queries that .persist() bounded intermediates internally: their board
-# row measures the warm-cache pass-2 (pass 1 populates the cache inside
-# the timer, the min discounts it — documented NOTES.md r7); each gets a
-# full-cost companion row `<name>_fullcost` measured with the cache
-# cleared before EVERY pass (VERDICT r7 #7: report both numbers, pooled
-# under distinct names so the two populations never mix)
+# row measures the warm-cache pass 2; each also gets a full-cost companion
+# row `<name>_fullcost`, measured with the cache cleared before every pass
 _FULLCOST_QUERIES = ("lm_score",)
 
 
-def _timed_query_passes(
-    spark, sf_dir: str, fn, cpus: int, clear_before: bool = False
-) -> tuple[float, dict, int, list[dict]]:
-    """(best_sec, best_window, passes, pool_records) for one board query:
-    min of 2 passes — pass 1 is pure warm-up (JIT / python-worker
-    startup inflates it one-sidedly) and enters NEITHER the pool NOR the
-    displayed best/window NOR the clean-seen retry logic (ADVICE r7:
-    letting it win best while being excluded from the pool could show a
-    clean window whose sample the pooled record never received — the two
-    populations must coincide). A contended measured pass triggers up to
-    2 extras so the min comes from a clean window whenever one exists
-    (r5's cell_walks +94% was exactly one noisy window landing on a
-    2-pass min). ``clear_before`` clears the Spark block cache before
-    every pass — the full-cost protocol for persist-using queries."""
-    best = None
-    best_win: dict = {}
-    clean_seen = False
-    passes = 0
-    pass_recs: list[dict] = []
-    while passes < 2 or (not clean_seen and passes < 4):
-        passes += 1
+def _time_query(spark, sf_dir: str, fn, clear_before: bool = False) -> float:
+    """Seconds for one board query, noop-sunk. Pass 1 warms up (JIT,
+    Python-worker start) and is discarded; the record is pass 2.
+    ``clear_before`` clears the block cache before each pass."""
+    for _ in range(2):
         if clear_before:
             spark.catalog.clearCache()
-        with _WindowMonitor(cpus) as mon:
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-        if passes == 1:
-            continue
-        if not mon.contended:
-            clean_seen = True
-        pass_recs.append({
-            "sec": round(dt, 3), "clean": not mon.contended,
-            "win": mon.stats,
-        })
-        # a clean-window pass always beats a contended one of any time
-        if best is None or (mon.contended, dt) < (best_win["contended"], best):
-            best, best_win = dt, mon.stats
-    return best, best_win, passes, pass_recs
+        t0 = time.time()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.time() - t0
 
 
-def timed_queries(
-    spark, sf_dir: str, cpus: int
-) -> tuple[dict[str, float], dict[str, float], dict]:
+def timed_queries(spark, sf_dir: str, names=_BOARD_QUERIES) -> dict[str, float]:
+    """{row: seconds} for the named board queries, plus the full-cost
+    companion row of each named _FULLCOST_QUERIES entry."""
     import __spark_entry__ as E
 
     qs = E.queries()
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = {}
-    pooled: dict[str, float] = {}
-    windows: dict[str, dict] = {}
-    plan = [(name, name, False) for name in _BOARD_QUERIES] + [
+    plan = [(name, name, False) for name in names] + [
         (f"{name}_fullcost", name, True) for name in _FULLCOST_QUERIES
+        if name in names
     ]
+    out = {}
     for row_name, name, clear_before in plan:
-        best, best_win, passes, pass_recs = _timed_query_passes(
-            spark, sf_dir, qs[name], cpus, clear_before=clear_before
+        out[row_name] = round(
+            _time_query(spark, sf_dir, qs[name], clear_before=clear_before), 3
         )
-        out[row_name] = round(best, 3)
-        # pooled clean minimum across runs (VERDICT r6 #2/#3): the board
-        # record is min over the last 12 clean windows at this query's
-        # source hash — this run's clean passes included — so one noisy
-        # round can never move the record sheet; this run's own number
-        # stays in `queries_run` for round-over-round visibility.
-        key = {"q": row_name, "src": _query_source_hash(name, qs[name]),
-               "sf": sf_name, "cores": cpus}
-        _append_history("query_history.jsonl", pass_recs,
-                        {**key, "at": time.strftime("%Y-%m-%d %H:%M:%S")})
-        psec, pkind, pn = _pooled_record("query_history.jsonl", key)
-        pooled[row_name] = psec if psec is not None else out[row_name]
-        windows[row_name] = {**best_win, "passes": passes, "pool": pn,
-                             "pool_kind": pkind or "this-run"}
-        log(f"  q {row_name}: {out[row_name]}s (pooled {pooled[row_name]}s "
-            f"over {pn}, {pkind or 'this-run'}) {best_win}")
+        log(f"  q {row_name}: {out[row_name]}s")
         # operators persist bounded intermediates (signature/banded/anchor
         # tables) whose blocks would otherwise accumulate across the 32×2
         # timed runs and skew later queries (ADVICE r2)
         spark.catalog.clearCache()
-    return out, pooled, windows
+    return out
+
+
+def _best_of(passes: int, action) -> float:
+    """Minimum wall seconds of ``passes`` runs of ``action()``."""
+    best = None
+    for _ in range(passes):
+        t0 = time.time()
+        action()
+        dt = time.time() - t0
+        best = dt if best is None else min(best, dt)
+    return round(best, 3)
 
 
 def replay_floor(spark) -> float:
@@ -433,15 +198,9 @@ def replay_floor(spark) -> float:
     b = spark.range(100).select(
         F.col("id").alias("doc_id"), F.lit("x").alias("text")
     )
-    best = None
-    for _ in range(2):
-        t0 = time.time()
-        E._replay_stream(
-            spark, [b, b], lambda s: s, "doc_id long, text string"
-        ).count()
-        dt = time.time() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 3)
+    return _best_of(2, lambda: E._replay_stream(
+        spark, [b, b], lambda s: s, "doc_id long, text string"
+    ).count())
 
 
 def flagship_stage_times(spark, sf_dir: str, pages_path: str) -> dict[str, float]:
@@ -450,27 +209,14 @@ def flagship_stage_times(spark, sf_dir: str, pages_path: str) -> dict[str, float
     noop-sunk timing (min of 2 passes), so a headline regression can be
     pinned to the stage whose delta moved — or written off as VM noise
     when every stage's delta is flat."""
-    pg = spark.read.parquet(pages_path)
-    pts_raw = extract.pages_to_points(pg)
-    pts = cells.with_cell(pts_raw, G)
-    polys = synth.synthetic_polygons(spark, sf_dir)
-    stages = {
-        "scan_mine": pts_raw,
-        "cells": pts,
-        "pip": spatial_join.point_in_polygon(
-            pts, polys, G, point_cols=["url", "pos", "cell_id"]
-        ),
-        "tiles": raster.tile_counts(pts, G),
-    }
+    f = _flagship_frames(spark, sf_dir, pages_path)
+    stages = {"scan_mine": f["points"], "cells": f["cells"],
+              "pip": f["pip_join"], "tiles": f["tiles"]}
     out = {}
     for name, df in stages.items():
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        out[name] = round(best, 3)
+        out[name] = _best_of(
+            2, lambda: df.write.format("noop").mode("overwrite").save()
+        )
         log(f"  stage {name}: {out[name]}s")
     return out
 
@@ -525,96 +271,40 @@ def _run_and_count_big(df) -> tuple[int, int]:
 
 
 @contextlib.contextmanager
-def _pilot_stage(out: dict, name: str, cores: int):
-    """Times a pilot stage AND records its contention window
-    (``{name}_sec`` + ``{name}_window``), so a round-over-round delta on
-    any sf1 stage is attributable to co-tenant noise from the record
-    alone — the r4→r5 measure_topk +21% question cost a verdict item
-    for want of exactly this."""
-    with _WindowMonitor(cores) as m:
-        t0 = time.time()
-        yield
-        out[f"{name}_sec"] = round(time.time() - t0, 2)
-    out[f"{name}_window"] = m.stats
+def _pilot_stage(out: dict, name: str):
+    """Times a pilot stage into ``out[f"{name}_sec"]``."""
+    t0 = time.time()
+    yield
+    out[f"{name}_sec"] = round(time.time() - t0, 2)
 
 
-# source files behind each sf1 pilot stage — the pool key for
-# BENCH/sf1_history.jsonl (VERDICT r6 #4: sf1 absolutes inflate 10-30%
-# even under the 2% steal gate, so round-over-round sf1 comparisons use
-# pooled clean minima exactly like the scaling efficiency does). The
-# sf1_pilot function's own source is hashed in as well, so a change to
-# the input salting/shape also resets the pools.
-_SF1_STAGE_SRC: dict[str, list[str]] = {
-    # "flagship" maps to _FLAGSHIP_FILES (defined below; filled at call
-    # time in _pool_pilot_stages)
-    "minhash": ["trajlib_spark/operators/dedup.py"],
-    "dedup_components": ["trajlib_spark/operators/dedup.py"],
-    "measure_topk": ["trajlib_spark/operators/similarity.py",
-                     "trajlib_spark/kernels/dp_distances.py",
-                     "trajlib_spark/operators/cells.py"],
-    "map_match": ["trajlib_spark/operators/map_match.py",
-                  "trajlib_spark/kernels/viterbi.py",
-                  "trajlib_spark/sources/roads.py",
-                  "trajlib_spark/operators/cells.py"],
-    "cell_walks": ["trajlib_spark/operators/walks.py",
-                   "trajlib_spark/operators/cells.py"],
-    "walks50": ["trajlib_spark/operators/walks.py",
-                "trajlib_spark/operators/cells.py"],
-    "walks50_arrow": ["trajlib_spark/operators/walks.py",
-                      "trajlib_spark/operators/cells.py"],
-    "skipgrams50": ["trajlib_spark/operators/walks.py"],
-    "dedup_components_chain": ["trajlib_spark/operators/dedup.py"],
-}
-
-
-def _pool_pilot_stages(out: dict, cpus: int) -> None:
-    """Append every completed sf1 stage (time + contention window) to
-    BENCH/sf1_history.jsonl and attach the pooled record
-    (``{stage}_sec_pooled`` + ``{stage}_pool`` + ``{stage}_pool_kind``)
-    next to each this-run number — min over the last ≤12 clean windows
-    at the stage's source hash, or the reproducibility-attributed
-    minimum when no clean window exists (_pooled_record)."""
-    import inspect
-
-    pilot_src = inspect.getsource(sf1_pilot).encode()
-    srcs = dict(_SF1_STAGE_SRC)
-    srcs["flagship"] = _FLAGSHIP_FILES
-    for stage, files in srcs.items():
-        sec = out.get(f"{stage}_sec")
-        win = out.get(f"{stage}_window")
-        if sec is None or win is None:
-            continue
-        key = {"kind": "sf1", "stage": stage, "cores": cpus,
-               "src": _files_hash(files, extra=pilot_src)}
-        _append_history(
-            "sf1_history.jsonl",
-            [{"sec": sec, "win": win, "clean": not win.get("contended", True)}],
-            {**key, "at": time.strftime("%Y-%m-%d %H:%M:%S")},
-        )
-        psec, pkind, pn = _pooled_record("sf1_history.jsonl", key)
-        if psec is not None:
-            out[f"{stage}_sec_pooled"] = psec
-            out[f"{stage}_pool"] = pn
-            out[f"{stage}_pool_kind"] = pkind
+@contextlib.contextmanager
+def _pilot_session(out: dict, app_name: str, cpus: int, shuffle_partitions: int):
+    """A scale pilot's own Spark session. An exception inside becomes
+    ``out["error"]``: a pilot must never sink the bench."""
+    spark = get_spark(app_name=app_name, master=f"local[{cpus}]",
+                      shuffle_partitions=shuffle_partitions)
+    try:
+        yield spark
+    except Exception as ex:  # noqa: BLE001
+        out["error"] = f"{type(ex).__name__}: {ex}"
+    finally:
+        stop_spark(spark)
 
 
 def sf1_pilot(sf_dir: str, cpus: int) -> dict:
-    """Scale pilot (VERDICT r2 item 8): one pass at 10× the bench scale —
-    20M-page flagship, 50k-doc minhash, 10×-trajectory measure_topk — to
-    surface skew/spill that local[32]@sf0.1 cannot. Records wall times,
-    the executor JVM's peak RSS, and AQE skew-split counts. Every stage
-    is then pooled via _pool_pilot_stages (VERDICT r6 #4)."""
-    import __spark_entry__ as E
+    """Scale pilot: one pass at 10× the bench scale — 20M-page flagship,
+    50k-doc minhash, 10×-trajectory measure_topk and map matching, walks,
+    components — to surface skew/spill that sf0.1 cannot. Records wall
+    times, the executor JVM's peak RSS, and AQE skew-split counts."""
     from trajlib_spark.operators import dedup, similarity
 
     out: dict = {"pages": 20_000_000}
-    spark = get_spark(app_name="bench-sf1", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
-    try:
+    with _pilot_session(out, "bench-sf1", cpus, cpus) as spark:
         # 1) flagship pipeline at 20M pages (generation cached, untimed)
         pages_path = prepare_pages(spark, 20_000_000)
-        with _pilot_stage(out, "flagship", cpus):
-            run_pipeline_once(spark, sf_dir, pages_path, 20_000_000)
+        with _pilot_stage(out, "flagship"):
+            run_pipeline_once(spark, sf_dir, pages_path)
         out["flagship_pages_per_sec"] = round(
             20_000_000 / out["flagship_sec"], 1
         )
@@ -629,7 +319,7 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
             (F.col("doc_id") + F.col("_salt") * 1_000_000).alias("doc_id"),
             F.concat("text", F.lit(" #"), F.col("_salt").cast("string")).alias("text"),
         ).repartition(cpus * 2, "doc_id")
-        with _pilot_stage(out, "minhash", cpus):
+        with _pilot_stage(out, "minhash"):
             sigs = dedup.minhash_signatures(salted)
             cands = dedup.lsh_candidates(sigs)
             verified = dedup.ngram_jaccard_verify(salted, cands, threshold=0.5)
@@ -642,7 +332,7 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
         # minhash stage already measured above) so the CC timing is the
         # components stage alone, not a pipeline recompute.
         pairs = verified.select("i", "j").localCheckpoint(eager=True)
-        with _pilot_stage(out, "dedup_components", cpus):
+        with _pilot_stage(out, "dedup_components"):
             comp = dedup.connected_components(pairs)
             out["dedup_component_nodes"] = _run_and_count(comp)
         spark.catalog.clearCache()
@@ -663,7 +353,7 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
         polys = similarity.collect_polylines(rep).persist()
         n_traj = polys.count()
         qs = polys.where(F.col("traj_id") % 300 == 0)
-        with _pilot_stage(out, "measure_topk", cpus):
+        with _pilot_stage(out, "measure_topk"):
             topk = similarity.measure_topk(polys, qs, "hausdorff", k=5,
                                            grid=G, ring=8)
             topk.write.format("noop").mode("overwrite").save()
@@ -671,17 +361,17 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
         polys.unpersist()
         spark.catalog.clearCache()
 
-        # 4) map matching over the same 10×-density points (VERDICT r3
-        # item 3: the slowest query's Viterbi group sizes and candidate-
-        # join skew were unmeasured beyond sf0.1). Runs through the
-        # DataFrame's own QueryExecution so the skew count is real.
+        # 4) map matching over the same 10×-density points (the slowest
+        # query's Viterbi group sizes and candidate-join skew beyond
+        # sf0.1). Runs through the DataFrame's own QueryExecution so the
+        # skew count is real.
         from trajlib_spark.operators import map_match as mm_ops
         from trajlib_spark.sources import roads
 
         _, edge_nodes, _ = roads.road_grid_arrays(G)
         edges = roads.road_edges(spark, G)
         pc = cells.with_cell(rep, G)
-        with _pilot_stage(out, "map_match", cpus):
+        with _pilot_stage(out, "map_match"):
             matched = mm_ops.match_trajectories(pc, edges, G, edge_nodes)
             out["map_match_points"] = _run_and_count(matched)
         out["map_match_skew_splits"] = _plan_skew_count(matched)
@@ -693,7 +383,7 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
 
         pairs = cells.neighbour_cell_pairs(spark, G)
         starts = pc.select("cell_id").distinct()
-        with _pilot_stage(out, "cell_walks", cpus):
+        with _pilot_stage(out, "cell_walks"):
             walks = walk_ops.node2vec_walks(pairs, starts, walk_length=12,
                                             walks_per_node=2)
             out["cell_walks_rows"] = _run_and_count(walks)
@@ -702,10 +392,10 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
 
         # 6) the REFERENCE walk config (node2vec_.py:19-29: walk_length 50,
         # walks_per_node 10, context 10) — the 49-join walk chain and the
-        # slice-bounded skip-gram fan at their real shape (VERDICT r4 #3).
-        # Walks are checkpointed untimed-out of the skip-gram window so the
-        # two stages attribute separately.
-        with _pilot_stage(out, "walks50", cpus):
+        # slice-bounded skip-gram fan at their real shape. Walks are
+        # checkpointed untimed-out of the skip-gram window so the two
+        # stages attribute separately.
+        with _pilot_stage(out, "walks50"):
             walks50 = walk_ops.node2vec_walks(
                 pairs, starts, walk_length=50, walks_per_node=10,
                 impl="catalyst",
@@ -716,11 +406,11 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
         out["walks50_rows"] = int(w50.count())
         # the broadcast-adjacency Arrow fast path at the same shape
         # (bit-identical walks; the right plan for metadata-scale graphs)
-        with _pilot_stage(out, "walks50_arrow", cpus):
+        with _pilot_stage(out, "walks50_arrow"):
             wa = walk_ops.node2vec_walks(pairs, starts, walk_length=50,
                                          walks_per_node=10, impl="arrow")
             out["walks50_arrow_rows"], _ = _run_and_count_big(wa)
-        with _pilot_stage(out, "skipgrams50", cpus):
+        with _pilot_stage(out, "skipgrams50"):
             sg = walk_ops.skipgram_pairs(w50, window=10)
             out["skipgrams50_rows"], out["skipgrams50_skew_splits"] = (
                 _run_and_count_big(sg)
@@ -728,144 +418,114 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
         w50.unpersist()
         spark.catalog.clearCache()
 
-        # 7) connected components in the pathological path-shaped regime
-        # (VERDICT r4 #5): a 100k-node chain, diameter 99 999 — plain
-        # propagation would need one round per hop; pointer jumping
+        # 7) connected components in the pathological path-shaped regime:
+        # a 100k-node chain, diameter 99 999 — plain propagation would
+        # need one round per hop; pointer jumping
         # (dedup.connected_components jump=True) must close it in
         # ~log2(n) rounds. Rounds and wall time recorded.
         chain = spark.range(99_999).select(
             F.col("id").alias("i"), (F.col("id") + 1).alias("j")
         ).repartition(cpus)
         cc_stats: dict = {}
-        with _pilot_stage(out, "dedup_components_chain", cpus):
+        with _pilot_stage(out, "dedup_components_chain"):
             comp = dedup.connected_components(chain, stats=cc_stats)
             out["dedup_components_chain_nodes"] = _run_and_count(comp)
         out["dedup_components_chain_rounds"] = cc_stats.get("rounds")
         spark.catalog.clearCache()
         out["peak_jvm_rss_gb"] = _jvm_peak_rss_gb()
-    except Exception as ex:  # noqa: BLE001 — pilot must never sink the bench
-        out["error"] = f"{type(ex).__name__}: {ex}"
-    finally:
-        stop_spark(spark)
-    _pool_pilot_stages(out, cpus)
     return out
 
 
-def _files_hash(files: list[str], extra: bytes = b"") -> str:
-    """Content hash of repo-relative source files (+ optional extra
-    bytes) — the pool/cache key primitive: a measurement pool only stays
-    valid while the code it measured is byte-identical."""
-    import hashlib
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    h = hashlib.sha256(extra)
-    for rel in files:  # caller's order — keeps r6 pool keys valid
-        h.update(open(os.path.join(root, rel), "rb").read())
-    return h.hexdigest()[:12]
-
-
-_FLAGSHIP_FILES = [
-    "trajlib_spark/operators/cells.py",
-    "trajlib_spark/operators/extract.py",
-    "trajlib_spark/operators/spatial_join.py",
-    "trajlib_spark/operators/raster.py",
-    "trajlib_spark/sources/pages.py",
-    "trajlib_spark/sources/synth.py",
-    "trajlib_spark/config.py",
-    "trajlib_spark/session.py",
-]
+def _package_hash() -> str:
+    """Content hash of every .py file of the trajlib_spark package (paths
+    included), walked in sorted order."""
+    h = hashlib.sha256()
+    for dirpath, dirnames, filenames in os.walk(_PKG):
+        dirnames.sort()
+        for fn in sorted(filenames):
+            if fn.endswith(".py"):
+                full = os.path.join(dirpath, fn)
+                h.update(os.path.relpath(full, _PKG).encode())
+                with open(full, "rb") as f:
+                    h.update(f.read())
+    return h.hexdigest()
 
 
-def _flagship_source_hash() -> str:
-    """Content hash of every source file the flagship pipeline executes —
-    the sf10 cache key (rerun the 200M-page pass iff the code it measures
-    changed)."""
-    return _files_hash(_FLAGSHIP_FILES)
+def _sf10_cached(cache_name: str, sf_dir: str, builders, measure) -> dict:
+    """One sf10 probe through its cache file BENCH/<cache_name>.
+
+    The probe corpora are defined as replications of the sf0.1 tables, so
+    any other sf is skipped. The cache key hashes three things: the
+    trajlib_spark package, the sources of the probe's corpus ``builders``
+    and the sf name. A cached result is reused only when its key matches;
+    otherwise ``measure()`` runs, and its result is cached unless it
+    carries ``error``. Delete the file to force a re-measure."""
+    sf = _sf_name(sf_dir)
+    if sf != "sf0.1":
+        return {"skipped": f"sf10 probes are defined over sf0.1, got {sf_dir}"}
+    h = hashlib.sha256(_package_hash().encode() + sf.encode())
+    for b in builders:
+        h.update(inspect.getsource(b).encode())
+    key = h.hexdigest()[:12]
+    path = os.path.join("BENCH", cache_name)
+    try:
+        with open(path) as f:
+            cached = json.load(f)
+        if cached.get("source_hash") == key:
+            log(f"{cache_name}: reusing the cached result (key unchanged)")
+            return cached
+    except (OSError, ValueError):
+        pass
+    out = {"source_hash": key,
+           "measured_at": time.strftime("%Y-%m-%d %H:%M:%S"), **measure()}
+    if "error" not in out:
+        os.makedirs("BENCH", exist_ok=True)
+        with open(path, "w") as f:
+            json.dump(out, f)
+    return out
 
 
 def sf10_pilot(sf_dir: str, cpus: int) -> dict:
-    """One more decade on the flagship only (VERDICT r5 #6): 200M pages
-    (~32 GB parquet) through pages → mined points → cells → PIP join →
-    tile pyramid. The timed pass runs both sinks as global counts through
-    their OWN QueryExecutions (a noop write's adaptive plan is a separate
-    QueryExecution — ADVICE r3), so AQE skew-split markers and output
-    rows come from exactly the run that was timed. Generation is cached
-    on disk (untimed, the north-rule input is a stored table); the result
-    is cached in BENCH/SF10.json keyed on a hash of the flagship source
-    files, because a 200M-page pass costs ~15 min and its numbers only
-    go stale when the code they measure changes."""
+    """One more decade on the flagship only: 200M pages (~32 GB parquet)
+    through pages → mined points → cells → PIP join → tile pyramid. The
+    timed pass runs both sinks as global counts through their OWN
+    QueryExecutions (a noop write's adaptive plan is a separate
+    QueryExecution), so AQE skew-split markers and output rows come from
+    exactly the run that was timed. Generation is cached on disk
+    (untimed, the north-rule input is a stored table)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    cache = os.path.join("BENCH", "SF10.json")
-    key = _flagship_source_hash()
-    if os.environ.get("SPARK_GRAFT_SF10", "") != "live" and os.path.exists(cache):
-        try:
-            cached = json.load(open(cache))
-        except (OSError, ValueError):
-            cached = None
-        if (
-            cached and cached.get("source_hash") == key
-            and "error" not in cached
-            and not cached.get("window", {}).get("contended")
-        ):
-            log("sf10: reusing BENCH/SF10.json (source hash unchanged)")
-            return cached
     n = 200_000_000
-    out: dict = {"pages": n, "source_hash": key,
-                 "measured_at": time.strftime("%Y-%m-%d %H:%M:%S")}
-    log("sf10 pilot: 200M-page flagship (generation cached, untimed)")
-    spark = get_spark(app_name="bench-sf10", master=f"local[{cpus}]",
-                      shuffle_partitions=2 * cpus)
-    try:
-        pages_path = prepare_pages(spark, n)
-        pg = spark.read.parquet(pages_path)
-        pts = cells.with_cell(extract.pages_to_points(pg), G)
-        polys = synth.synthetic_polygons(spark, sf_dir)
-        pip = spatial_join.point_in_polygon(
-            pts, polys, G, point_cols=["url", "pos", "cell_id"]
-        )
-        tiles = raster.tile_counts(pts, G)
-        pip_cnt = pip.groupBy().count()
-        tiles_cnt = tiles.groupBy().count()
-        with _WindowMonitor(cpus) as mon:
+
+    def measure() -> dict:
+        out: dict = {"pages": n}
+        log("sf10 pilot: 200M-page flagship (generation cached, untimed)")
+        with _pilot_session(out, "bench-sf10", cpus, 2 * cpus) as spark:
+            f = _flagship_frames(spark, sf_dir, prepare_pages(spark, n))
+            pip_cnt = f["pip_join"].groupBy().count()
+            tiles_cnt = f["tiles"].groupBy().count()
             t0 = time.time()
             with ThreadPoolExecutor(max_workers=2) as ex:
                 fp = ex.submit(lambda: int(pip_cnt.toPandas()["count"][0]))
                 ft = ex.submit(lambda: int(tiles_cnt.toPandas()["count"][0]))
                 out["pip_rows"], out["tile_rows"] = fp.result(), ft.result()
             dt = time.time() - t0
-        out["flagship_sec"] = round(dt, 2)
-        out["flagship_pages_per_sec"] = round(n / dt, 1)
-        out["window"] = mon.stats
-        out["pip_skew_splits"] = _plan_skew_count(pip_cnt)
-        out["tiles_skew_splits"] = _plan_skew_count(tiles_cnt)
-        out["peak_jvm_rss_gb"] = _jvm_peak_rss_gb()
-        # ADVICE r6 (medium): a contended window must not become the
-        # persistent record — skip the cache so the next bench run
-        # measures live, consistent with the BASELINE.md overwrite guard
-        if mon.contended:
-            log("sf10: window CONTENDED — result NOT cached, next bench "
-                "run re-measures live")
-        else:
-            os.makedirs("BENCH", exist_ok=True)
-            with open(cache, "w") as f:
-                json.dump(out, f)
-    except Exception as ex:  # noqa: BLE001 — pilot must never sink the bench
-        out["error"] = f"{type(ex).__name__}: {ex}"
-    finally:
-        stop_spark(spark)
-    return out
+            out["flagship_sec"] = round(dt, 2)
+            out["flagship_pages_per_sec"] = round(n / dt, 1)
+            out["pip_skew_splits"] = _plan_skew_count(pip_cnt)
+            out["tiles_skew_splits"] = _plan_skew_count(tiles_cnt)
+            out["peak_jvm_rss_gb"] = _jvm_peak_rss_gb()
+        return out
 
-
-_SF10_DEDUP_FILES = ["trajlib_spark/operators/dedup.py"]
+    return _sf10_cached("SF10.json", sf_dir, (prepare_pages,), measure)
 
 
 def _sf10_salted_docs(spark, sf_dir: str, cpus: int):
     """The probe corpus: 500k docs = 100 deterministically salted copies
     of the sf0.1 documents table. Factored out of the pilot so the probe
-    pool/cache key tracks exactly what determines the measurement — this
-    corpus construction + operators/dedup.py — and not the pilot's
-    bookkeeping code."""
+    cache key tracks exactly what determines the measurement — this
+    corpus construction + the package — and not the pilot's bookkeeping
+    code."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # ~593 chars of (doc_id, salt)-seeded md5 tokens ≈ 2× the 297-char
     # mean text: dilutes every cross similarity of a salt≥10 copy to
@@ -892,8 +552,8 @@ def _sf10_salted_docs(spark, sf_dir: str, cpus: int):
 
 
 def sf10_dedup_pilot(sf_dir: str, cpus: int) -> dict:
-    """Second 100×-scale probe (VERDICT r6 #5): the dedup family — the
-    other 100 TB-critical path — at one decade beyond its sf1 evidence.
+    """Second 100×-scale probe: the dedup family at one decade beyond its
+    sf1 evidence.
 
     1. ``minhash`` at 500k docs: 100 deterministically salted copies of
        the sf0.1 documents table. Salts 0-9 keep the sf1 rule (suffix-only
@@ -915,112 +575,34 @@ def sf10_dedup_pilot(sf_dir: str, cpus: int) -> dict:
        similarity; in-place substitution can manufacture it.
     2. ``components_chain``: connected components on a 1M-node chain
        (diameter 999 999) — pointer jumping must close it in ~log2(n)
-       rounds (sf1's 100k chain: 17 rounds).
-
-    Cached in BENCH/SF10_DEDUP.json keyed on operators/dedup.py + the
-    probe-corpus source (_sf10_salted_docs); every run's stage times +
-    windows pool into BENCH/sf10_history.jsonl, and a run is cached only
-    when EVERY stage has a pooled record — a clean window (ADVICE r6:
-    contended windows alone are never silently cached) or the
-    reproducibility attribution (_pooled_record: the minhash stage pins
-    32 Python workers for minutes, which provokes steal accounting on
-    this VM while leaving wall time unmoved — three runs within 6% at
-    steal 14/14/5.6%, NOTES.md round 7)."""
-    import inspect
-
+       rounds (sf1's 100k chain: 17 rounds)."""
     from trajlib_spark.operators import dedup
 
-    cache = os.path.join("BENCH", "SF10_DEDUP.json")
-    key = _files_hash(
-        _SF10_DEDUP_FILES, extra=inspect.getsource(_sf10_salted_docs).encode()
-    )
-    stages = ("minhash", "components_chain")
-    if os.environ.get("SPARK_GRAFT_SF10", "") != "live" and os.path.exists(cache):
-        try:
-            cached = json.load(open(cache))
-        except (OSError, ValueError):
-            cached = None
-        if (
-            cached and cached.get("source_hash") == key
-            and "error" not in cached
-            and all(f"{s}_sec_pooled" in cached for s in stages)
-            and all(_pool_mature(cached, s) for s in stages)
-        ):
-            log("sf10_dedup: reusing BENCH/SF10_DEDUP.json (source hash "
-                "unchanged)")
-            return cached
-    if sf_dir.rstrip("/").rsplit("/", 1)[-1] != "sf0.1":
-        # the probe corpora are DEFINED as replications of the sf0.1
-        # tables and the pool keys carry no scale field — running at
-        # another sf would pollute the sf10 pools with wrong-scale
-        # samples (latent hazard found in round 8)
-        return {"skipped": "sf10 probes are defined over sf0.1, got "
-                + sf_dir}
-    out: dict = {"source_hash": key, "minhash_docs": 500_000,
-                 "measured_at": time.strftime("%Y-%m-%d %H:%M:%S")}
-    log("sf10_dedup pilot: 500k-doc minhash + 1M-node chain components")
-    spark = get_spark(app_name="bench-sf10-dedup", master=f"local[{cpus}]",
-                      shuffle_partitions=2 * cpus)
-    try:
-        salted = _sf10_salted_docs(spark, sf_dir, cpus)
-        with _pilot_stage(out, "minhash", cpus):
-            sigs = dedup.minhash_signatures(salted)
-            cands = dedup.lsh_candidates(sigs)
-            verified = dedup.ngram_jaccard_verify(salted, cands, threshold=0.5)
-            out["minhash_pairs"] = _run_and_count(verified)
-        out["minhash_skew_splits"] = _plan_skew_count(verified)
-        spark.catalog.clearCache()
+    def measure() -> dict:
+        out: dict = {"minhash_docs": 500_000}
+        log("sf10_dedup pilot: 500k-doc minhash + 1M-node chain components")
+        with _pilot_session(out, "bench-sf10-dedup", cpus, 2 * cpus) as spark:
+            salted = _sf10_salted_docs(spark, sf_dir, cpus)
+            with _pilot_stage(out, "minhash"):
+                sigs = dedup.minhash_signatures(salted)
+                cands = dedup.lsh_candidates(sigs)
+                verified = dedup.ngram_jaccard_verify(salted, cands, threshold=0.5)
+                out["minhash_pairs"] = _run_and_count(verified)
+            out["minhash_skew_splits"] = _plan_skew_count(verified)
+            spark.catalog.clearCache()
 
-        chain = spark.range(999_999).select(
-            F.col("id").alias("i"), (F.col("id") + 1).alias("j")
-        ).repartition(cpus)
-        cc_stats: dict = {}
-        with _pilot_stage(out, "components_chain", cpus):
-            comp = dedup.connected_components(chain, stats=cc_stats)
-            out["components_chain_nodes"], _ = _run_and_count_big(comp)
-        out["components_chain_rounds"] = cc_stats.get("rounds")
-        out["peak_jvm_rss_gb"] = _jvm_peak_rss_gb()
-        # pool this run's stage samples, then record the pooled value per
-        # stage; cache only when every stage has a pooled record (clean
-        # window, or ≥3 samples agreeing within 10% of the pooled min)
-        for s in stages:
-            sec, win = out.get(f"{s}_sec"), out.get(f"{s}_window")
-            if sec is None or win is None:
-                continue
-            skey = {"kind": "sf10_dedup", "stage": s, "cores": cpus,
-                    "src": key}
-            _append_history(
-                "sf10_history.jsonl",
-                [{"sec": sec, "clean": not win.get("contended", True),
-                  "win": win}],
-                {**skey, "at": time.strftime("%Y-%m-%d %H:%M:%S")},
-            )
-            psec, pkind, pn = _pooled_record("sf10_history.jsonl", skey)
-            if psec is not None:
-                out[f"{s}_sec_pooled"] = psec
-                out[f"{s}_pool"] = pn
-                out[f"{s}_pool_kind"] = pkind
-        if all(f"{s}_sec_pooled" in out for s in stages):
-            os.makedirs("BENCH", exist_ok=True)
-            with open(cache, "w") as f:
-                json.dump(out, f)
-        else:
-            log("sf10_dedup: a stage lacks both a clean window and the "
-                "reproducibility attribution — result NOT cached, next "
-                "bench run re-measures live")
-    except Exception as ex:  # noqa: BLE001 — pilot must never sink the bench
-        out["error"] = f"{type(ex).__name__}: {ex}"
-    finally:
-        stop_spark(spark)
-    return out
+            chain = spark.range(999_999).select(
+                F.col("id").alias("i"), (F.col("id") + 1).alias("j")
+            ).repartition(cpus)
+            cc_stats: dict = {}
+            with _pilot_stage(out, "components_chain"):
+                comp = dedup.connected_components(chain, stats=cc_stats)
+                out["components_chain_nodes"], _ = _run_and_count_big(comp)
+            out["components_chain_rounds"] = cc_stats.get("rounds")
+            out["peak_jvm_rss_gb"] = _jvm_peak_rss_gb()
+        return out
 
-
-_SF10_MAPMATCH_FILES = [
-    "trajlib_spark/operators/map_match.py",
-    "trajlib_spark/kernels/viterbi.py",
-    "trajlib_spark/sources/roads.py",
-    "trajlib_spark/operators/cells.py",
-]
+    return _sf10_cached("SF10_DEDUP.json", sf_dir, (_sf10_salted_docs,), measure)
 
 
 def _sf10_rep_points(spark, sf_dir: str, copies: int = 100):
@@ -1030,8 +612,8 @@ def _sf10_rep_points(spark, sf_dir: str, copies: int = 100):
     pilot's shift scale), so every copy stays inside the synthetic road
     grid's coverage and its Viterbi pass does full-size candidate work;
     traj_id offsets keep the copies distinct trajectories. The ``copies``
-    knob lets the topk probe compare candidate counts across densities
-    and the corpus-structure pytest run the same shape in seconds."""
+    knob lets the corpus-structure pytest run the same shape in
+    seconds."""
     pts = synth.synthetic_points(spark, sf_dir)
     return pts.select(
         F.explode(F.sequence(F.lit(0), F.lit(copies - 1))).alias("_r"),
@@ -1045,99 +627,33 @@ def _sf10_rep_points(spark, sf_dir: str, copies: int = 100):
 
 
 def sf10_mapmatch_pilot(sf_dir: str, cpus: int) -> dict:
-    """Third 100×-scale probe: HMM map matching — the remaining
-    100 TB-critical path (flagship and dedup have sf10 evidence; r6
-    finding #1 was a map_match measurement question, and its sf1
-    evidence stops at 1M points) — at 10M points over the synthetic road
-    grid. Candidate halo join + per-trajectory Viterbi in applyInPandas,
-    exactly the board/sf1 plan. Same record discipline as the dedup
-    probe: the run pools into BENCH/sf10_history.jsonl and is cached in
-    BENCH/SF10_MAPMATCH.json only when the stage has a pooled record
-    (clean window, or reproducibility attribution)."""
-    import inspect
-
+    """Third 100×-scale probe: HMM map matching at 10M points over the
+    synthetic road grid (its sf1 evidence stops at 1M points). Candidate
+    halo join + per-trajectory Viterbi in applyInPandas, exactly the
+    board/sf1 plan."""
     from trajlib_spark.operators import map_match as mm_ops
     from trajlib_spark.sources import roads
 
-    cache = os.path.join("BENCH", "SF10_MAPMATCH.json")
-    key = _files_hash(
-        _SF10_MAPMATCH_FILES, extra=inspect.getsource(_sf10_rep_points).encode()
-    )
-    if os.environ.get("SPARK_GRAFT_SF10", "") != "live" and os.path.exists(cache):
-        try:
-            cached = json.load(open(cache))
-        except (OSError, ValueError):
-            cached = None
-        if (
-            cached and cached.get("source_hash") == key
-            and "error" not in cached
-            and "map_match_sec_pooled" in cached
-            and _pool_mature(cached, "map_match")
-        ):
-            log("sf10_mapmatch: reusing BENCH/SF10_MAPMATCH.json (source "
-                "hash unchanged)")
-            return cached
-    if sf_dir.rstrip("/").rsplit("/", 1)[-1] != "sf0.1":
-        # the probe corpora are DEFINED as replications of the sf0.1
-        # tables and the pool keys carry no scale field — running at
-        # another sf would pollute the sf10 pools with wrong-scale
-        # samples (latent hazard found in round 8)
-        return {"skipped": "sf10 probes are defined over sf0.1, got "
-                + sf_dir}
-    out: dict = {"source_hash": key, "points": 10_000_000,
-                 "measured_at": time.strftime("%Y-%m-%d %H:%M:%S")}
-    log("sf10_mapmatch pilot: 10M-point HMM map matching")
-    spark = get_spark(app_name="bench-sf10-mapmatch", master=f"local[{cpus}]",
-                      shuffle_partitions=2 * cpus)
-    try:
-        rep = _sf10_rep_points(spark, sf_dir)
-        _, edge_nodes, _ = roads.road_grid_arrays(G)
-        edges = roads.road_edges(spark, G)
-        pc = cells.with_cell(rep, G)
-        with _pilot_stage(out, "map_match", cpus):
-            matched = mm_ops.match_trajectories(pc, edges, G, edge_nodes)
-            out["map_match_points"], out["map_match_skew_splits"] = (
-                _run_and_count_big(matched)
+    def measure() -> dict:
+        out: dict = {"points": 10_000_000}
+        log("sf10_mapmatch pilot: 10M-point HMM map matching")
+        with _pilot_session(out, "bench-sf10-mapmatch", cpus, 2 * cpus) as spark:
+            rep = _sf10_rep_points(spark, sf_dir)
+            _, edge_nodes, _ = roads.road_grid_arrays(G)
+            edges = roads.road_edges(spark, G)
+            pc = cells.with_cell(rep, G)
+            with _pilot_stage(out, "map_match"):
+                matched = mm_ops.match_trajectories(pc, edges, G, edge_nodes)
+                out["map_match_points"], out["map_match_skew_splits"] = (
+                    _run_and_count_big(matched)
+                )
+            out["map_match_points_per_sec"] = round(
+                out["map_match_points"] / out["map_match_sec"], 1
             )
-        out["map_match_points_per_sec"] = round(
-            out["map_match_points"] / out["map_match_sec"], 1
-        )
-        out["peak_jvm_rss_gb"] = _jvm_peak_rss_gb()
-        skey = {"kind": "sf10_mapmatch", "stage": "map_match",
-                "cores": cpus, "src": key}
-        win = out.get("map_match_window")
-        if out.get("map_match_sec") is not None and win is not None:
-            _append_history(
-                "sf10_history.jsonl",
-                [{"sec": out["map_match_sec"],
-                  "clean": not win.get("contended", True), "win": win}],
-                {**skey, "at": time.strftime("%Y-%m-%d %H:%M:%S")},
-            )
-            psec, pkind, pn = _pooled_record("sf10_history.jsonl", skey)
-            if psec is not None:
-                out["map_match_sec_pooled"] = psec
-                out["map_match_pool"] = pn
-                out["map_match_pool_kind"] = pkind
-        if "map_match_sec_pooled" in out:
-            os.makedirs("BENCH", exist_ok=True)
-            with open(cache, "w") as f:
-                json.dump(out, f)
-        else:
-            log("sf10_mapmatch: no clean window and no reproducibility "
-                "attribution yet — result NOT cached, next bench run "
-                "re-measures live")
-    except Exception as ex:  # noqa: BLE001 — pilot must never sink the bench
-        out["error"] = f"{type(ex).__name__}: {ex}"
-    finally:
-        stop_spark(spark)
-    return out
+            out["peak_jvm_rss_gb"] = _jvm_peak_rss_gb()
+        return out
 
-
-_SF10_TOPK_FILES = [
-    "trajlib_spark/operators/similarity.py",
-    "trajlib_spark/kernels/dp_distances.py",
-    "trajlib_spark/operators/cells.py",
-]
+    return _sf10_cached("SF10_MAPMATCH.json", sf_dir, (_sf10_rep_points,), measure)
 
 
 def _sf10_topk_inputs(spark, sf_dir: str, copies: int = 100):
@@ -1234,268 +750,80 @@ def _ring_candidates(polys, qs, ring: int) -> int:
 
 
 def sf10_topk_pilot(sf_dir: str, cpus: int) -> dict:
-    """Fourth 100×-scale probe (VERDICT r7 #4): the similarity/top-k
-    family — the last 100 TB-critical path whose evidence stopped at sf1
-    (15k trajs / 79.8 s) — at 150k trajectories: exact grid-pruned
+    """Fourth 100×-scale probe: the similarity/top-k family at 150k
+    trajectories (its sf1 evidence stops at 15k): exact grid-pruned
     Hausdorff top-5 over 100 shifted copies of the sf0.1 trajectory set,
-    fixed ~29-query panel. Alongside the timed window / skew / RSS it
+    fixed ~29-query panel. Alongside the timed stage / skew / RSS it
     records the ring-8 first-round candidate count at BOTH 100 and 50
     copies: the candidate set must scale with ring area × density
     (ratio ≈ 2), never N² (ratio ≈ 4) — the grid-pruning bound measured
-    directly, in the spirit of the dedup probe's linear-pair-count
-    evidence. Same record discipline: pools into sf10_history.jsonl,
-    cached in BENCH/SF10_TOPK.json only with a mature pooled record."""
-    import inspect
-
+    directly."""
     from trajlib_spark.operators import similarity as sim
 
-    cache = os.path.join("BENCH", "SF10_TOPK.json")
-    key = _files_hash(
-        _SF10_TOPK_FILES,
-        extra=(
-            inspect.getsource(_sf10_topk_inputs).encode()
-            + inspect.getsource(_sf10_rep_points).encode()
-        ),
-    )
-    if os.environ.get("SPARK_GRAFT_SF10", "") != "live" and os.path.exists(cache):
-        try:
-            cached = json.load(open(cache))
-        except (OSError, ValueError):
-            cached = None
-        if (
-            cached and cached.get("source_hash") == key
-            and "error" not in cached
-            and "topk_sec_pooled" in cached
-            and _pool_mature(cached, "topk")
-        ):
-            log("sf10_topk: reusing BENCH/SF10_TOPK.json (source hash "
-                "unchanged)")
-            return cached
-    if sf_dir.rstrip("/").rsplit("/", 1)[-1] != "sf0.1":
-        # the probe corpora are DEFINED as replications of the sf0.1
-        # tables and the pool keys carry no scale field — running at
-        # another sf would pollute the sf10 pools with wrong-scale
-        # samples (latent hazard found in round 8)
-        return {"skipped": "sf10 probes are defined over sf0.1, got "
-                + sf_dir}
-    out: dict = {"source_hash": key,
-                 "measured_at": time.strftime("%Y-%m-%d %H:%M:%S")}
-    log("sf10_topk pilot: 150k-trajectory grid-pruned Hausdorff top-5")
-    spark = get_spark(app_name="bench-sf10-topk", master=f"local[{cpus}]",
-                      shuffle_partitions=2 * cpus)
-    try:
-        polys, qs = _sf10_topk_inputs(spark, sf_dir, 100)
-        polys = polys.persist()
-        out["topk_trajs"] = polys.count()  # untimed: materializes the cache
-        out["topk_queries"] = qs.count()
-        with _pilot_stage(out, "topk", cpus):
-            topk = sim.measure_topk(polys, qs, "hausdorff", k=5, grid=G,
-                                    ring=8)
-            out["topk_rows"], out["topk_skew_splits"] = _run_and_count_big(topk)
-        # untimed scaling evidence: ring-8 round-1 candidates at 100 vs 50
-        # copies with the SAME query panel — linear density scaling reads
-        # as a ratio near 2.0
-        out["ring8_candidates_100"] = _ring_candidates(polys, qs, 8)
-        polys.unpersist()
-        spark.catalog.clearCache()
-        polys50, qs50 = _sf10_topk_inputs(spark, sf_dir, 50)
-        out["ring8_candidates_50"] = _ring_candidates(polys50, qs50, 8)
-        out["candidate_scaling_ratio"] = round(
-            out["ring8_candidates_100"] / max(1, out["ring8_candidates_50"]), 3
-        )
-        # pruning-effectiveness: candidates as a fraction of all-pairs
-        # (queries × (N−1)); an all-pairs degeneration reads 1.0
-        out["candidate_fraction_100"] = round(
-            out["ring8_candidates_100"]
-            / max(1, out["topk_queries"] * (out["topk_trajs"] - 1)),
-            5,
-        )
-        out["peak_jvm_rss_gb"] = _jvm_peak_rss_gb()
-        skey = {"kind": "sf10_topk", "stage": "topk", "cores": cpus,
-                "src": key}
-        win = out.get("topk_window")
-        if out.get("topk_sec") is not None and win is not None:
-            _append_history(
-                "sf10_history.jsonl",
-                [{"sec": out["topk_sec"],
-                  "clean": not win.get("contended", True), "win": win}],
-                {**skey, "at": time.strftime("%Y-%m-%d %H:%M:%S")},
+    def measure() -> dict:
+        out: dict = {}
+        log("sf10_topk pilot: 150k-trajectory grid-pruned Hausdorff top-5")
+        with _pilot_session(out, "bench-sf10-topk", cpus, 2 * cpus) as spark:
+            polys, qs = _sf10_topk_inputs(spark, sf_dir, 100)
+            polys = polys.persist()
+            out["topk_trajs"] = polys.count()  # untimed: materializes the cache
+            out["topk_queries"] = qs.count()
+            with _pilot_stage(out, "topk"):
+                topk = sim.measure_topk(polys, qs, "hausdorff", k=5, grid=G,
+                                        ring=8)
+                out["topk_rows"], out["topk_skew_splits"] = _run_and_count_big(topk)
+            # untimed scaling evidence: ring-8 round-1 candidates at 100 vs
+            # 50 copies with the SAME query panel — linear density scaling
+            # reads as a ratio near 2.0
+            out["ring8_candidates_100"] = _ring_candidates(polys, qs, 8)
+            polys.unpersist()
+            spark.catalog.clearCache()
+            polys50, qs50 = _sf10_topk_inputs(spark, sf_dir, 50)
+            out["ring8_candidates_50"] = _ring_candidates(polys50, qs50, 8)
+            out["candidate_scaling_ratio"] = round(
+                out["ring8_candidates_100"] / max(1, out["ring8_candidates_50"]), 3
             )
-            psec, pkind, pn = _pooled_record("sf10_history.jsonl", skey)
-            if psec is not None:
-                out["topk_sec_pooled"] = psec
-                out["topk_pool"] = pn
-                out["topk_pool_kind"] = pkind
-        if "topk_sec_pooled" in out:
-            os.makedirs("BENCH", exist_ok=True)
-            with open(cache, "w") as f:
-                json.dump(out, f)
-        else:
-            log("sf10_topk: no clean window and no reproducibility "
-                "attribution yet — result NOT cached, next bench run "
-                "re-measures live")
-    except Exception as ex:  # noqa: BLE001 — pilot must never sink the bench
-        out["error"] = f"{type(ex).__name__}: {ex}"
-    finally:
-        stop_spark(spark)
-    return out
+            # pruning-effectiveness: candidates as a fraction of all-pairs
+            # (queries × (N−1)); an all-pairs degeneration reads 1.0
+            out["candidate_fraction_100"] = round(
+                out["ring8_candidates_100"]
+                / max(1, out["topk_queries"] * (out["topk_trajs"] - 1)),
+                5,
+            )
+            out["peak_jvm_rss_gb"] = _jvm_peak_rss_gb()
+        return out
+
+    return _sf10_cached("SF10_TOPK.json", sf_dir, (_sf10_topk_inputs,), measure)
 
 
-def _append_history(fname: str, recs: list[dict], key: dict) -> None:
-    """Append measurement records (each tagged with its key + its own
-    contention window) to a BENCH/*.jsonl pool file."""
-    os.makedirs("BENCH", exist_ok=True)
-    with open(os.path.join("BENCH", fname), "a") as f:
-        for r in recs:
-            f.write(json.dumps({**key, **r}) + "\n")
+def _pair_efficiency_estimates(pairs: list[dict]) -> dict:
+    """Scaling efficiency over interleaved session pairs, each
+    ``{"t3": N-leg seconds, "t12": 4N-leg seconds}`` →
+    ``{"median": .., "n": .., "pair_effs": [..]}``.
 
-
-def _load_clean_history(fname: str, key: dict, limit: int = 12) -> list[dict]:
-    """CLEAN records from this and previous runs matching ``key``. The
-    one-sided-noise minimum estimator is consistent — pooling clean
-    windows across runs strictly beats any single run's samples: on
-    2026-08-17 two back-to-back 3/3-clean scaling runs read 0.877 and
-    0.793 (sub-threshold interference moved a whole run below target
-    with every window passing the gate), while the pooled 6-pair minimum
-    ratio read 0.869. Bounded to the last ``limit`` records so a
-    machine-speed change ages out; keyed on a source hash so a code
-    change resets the pool. VERDICT r6 #2/#3/#4 extend this protocol
-    from the scaling pairs to the per-query board, the full-box headline
-    and the sf1 pilot stages — same file format, different key shapes."""
-    path = os.path.join("BENCH", fname)
-    if not os.path.exists(path):
-        return []
-    out = []
-    for line in open(path):
-        try:
-            rec = json.loads(line)
-        except ValueError:
-            continue
-        if rec.get("clean") and all(rec.get(k) == v for k, v in key.items()):
-            out.append(rec)
-    return out[-limit:]
-
-
-def _load_history(fname: str, key: dict, limit: int = 12) -> list[dict]:
-    """All records (clean or contended) matching ``key`` — the input to
-    the reproducibility attribution below."""
-    path = os.path.join("BENCH", fname)
-    if not os.path.exists(path):
-        return []
-    out = []
-    for line in open(path):
-        try:
-            rec = json.loads(line)
-        except ValueError:
-            continue
-        if all(rec.get(k) == v for k, v in key.items()):
-            out.append(rec)
-    return out[-limit:]
-
-
-def _pooled_record(
-    fname: str, key: dict, tol: float = 0.10, min_agree: int = 3,
-    field: str = "sec",
-) -> tuple[float | None, str | None, int]:
-    """Pooled record for a measurement series → (sec, kind, pool_size).
-    ``field`` names the record's value key — the full-box series stores
-    ``t`` (its historical shape); records lacking the field are skipped.
-
-    ``clean-min``: minimum over clean-window samples, when any exist —
-    the standard estimator (one-sided noise only inflates).
-
-    ``reproducible-min``: when NO clean window exists but ≥``min_agree``
-    samples lie within ``tol`` of the pooled minimum, that minimum is
-    recordable anyway. Rationale (measured 2026-08-17, NOTES.md): stages
-    that pin all 32 threads with Python workers for minutes (the sf10
-    minhash probe) PROVOKE steal accounting on this VM — three runs read
-    steal 13.97/13.97/~5.6% while their wall times agreed within 6%
-    (339.8/320.8/328.4 s), i.e. the flagged steal did not move the
-    measurement, unlike the r6 measure_topk case where time was monotone
-    in steal. One-sided bursty interference cannot make ≥3 independent
-    samples agree near an inflated minimum; a constant offset that
-    survives this test is a property of the workload on this box (the
-    thing being measured). The steal gate stays authoritative wherever
-    it can pass — clean-min always wins when a clean sample exists.
-
-    Returns (None, None, 0) when neither rule fires."""
-    clean = [r for r in _load_clean_history(fname, key) if field in r]
-    if clean:
-        return min(r[field] for r in clean), "clean-min", len(clean)
-    allh = [r for r in _load_history(fname, key) if field in r]
-    if len(allh) >= min_agree:
-        lo = min(r[field] for r in allh)
-        near = [r for r in allh if r[field] <= lo * (1.0 + tol)]
-        if len(near) >= min_agree:
-            return lo, "reproducible-min", len(allh)
-    return None, None, 0
-
-
-def _pool_mature(cached: dict, stage: str, min_samples: int = 6) -> bool:
-    """Whether a cached sf10 stage record is mature enough to SKIP the
-    live re-measure (ADVICE r7): a ``clean-min`` record is authoritative
-    at any pool size, but a ``reproducible-min`` record — 3+ steal-flagged
-    samples agreeing within 10% — is provisional until its pool reaches
-    ``min_samples``: a persistent ~10% interference pattern on this VM
-    must not become the durable record without repeated chances for a
-    clean window to show up and take over (clean-min always wins inside
-    _pooled_record once one exists)."""
-    if cached.get(f"{stage}_pool_kind") == "clean-min":
-        return True
-    return (cached.get(f"{stage}_pool") or 0) >= min_samples
-
-
-def _append_pair_history(recs: list[dict], key: dict) -> None:
-    _append_history("pair_history.jsonl", recs, key)
-
-
-def _load_pair_history(key: dict, limit: int = 12) -> list[dict]:
-    return _load_clean_history("pair_history.jsonl", key, limit)
-
-
-def _pair_efficiency_estimates(hist: list[dict]) -> dict:
-    """Two pooled estimators over clean interleaved 3/12-core pairs →
-    ``{"median": .., "minmin": .., "n": .., "pair_effs": [..]}``.
-
-    ``median`` (the headline since round 8): the median of per-PAIR
-    efficiencies (t3/t12)/4. The interleaved-pair design exists to make
-    both levels sample the same machine window, so the per-pair ratio
-    cancels common-mode machine speed; the median over clean pairs is
-    then robust to the residual sub-threshold interference on either
-    leg (which moves a pair's ratio in either direction) AND to
-    base-speed drift across the pool.
-
-    ``minmin`` (the r5–r7 headline, kept on record): (min t3 / min t12)
-    / 4 over the pool. Consistent only under a STATIONARY machine: with
-    genuine base-speed drift — measured on 2026-08-17: clean windows on
-    byte-identical code ran 20–30% apart hours apart (NOTES.md round-8
-    adjudication) — both minima collapse onto the single fastest-era
-    pair, reducing a 12-pair pool to one pair's ratio and discarding the
-    pairing the protocol was built around. Observed: a warm-era pair
-    (t3 48.59, t12 15.25, per-pair 0.797) supplied both minima and
-    dragged the pooled reading to 0.797 while the 11 other clean pairs
-    read 0.81–0.94. The same collapse can also inflate (a fast-t12 pair
-    paired with another era's slow t3), so replacing it with the median
-    is anti-cherry-picking in both directions. The round-1 objection to
-    median-of-pairs (one contended window depresses a whole pair) was
-    solved by the clean gate, which didn't exist then."""
-    effs = sorted((r["t3"] / r["t12"]) / 4.0 for r in hist)
+    ``median`` is the median of per-PAIR efficiencies (t_N/t_4N)/4. The
+    interleaved-pair design makes both levels sample the same machine
+    window, so the per-pair ratio cancels common-mode machine speed; the
+    median is robust to noise on either leg of a single pair and cannot
+    exceed every per-pair reading."""
+    effs = sorted((r["t3"] / r["t12"]) / 4.0 for r in pairs)
     if not effs:
-        return {"median": None, "minmin": None, "n": 0, "pair_effs": []}
+        return {"median": None, "n": 0, "pair_effs": []}
     n = len(effs)
     med = effs[n // 2] if n % 2 else (effs[n // 2 - 1] + effs[n // 2]) / 2.0
-    minmin = (min(r["t3"] for r in hist) / min(r["t12"] for r in hist)) / 4.0
-    return {"median": med, "minmin": minmin, "n": n,
-            "pair_effs": [round(e, 3) for e in effs]}
+    return {"median": med, "n": n, "pair_effs": [round(e, 3) for e in effs]}
 
 
-def measure_level(
-    cores: int, sf_dir: str, n_pages: int, runs: int
-) -> tuple[list[float], dict]:
-    """(timed runs, contention-window stats). The monitor covers ONLY the
-    timed runs — session startup, table prep and warm-up stay outside the
-    window, so the contention verdict applies to exactly the seconds that
-    enter the scaling ratio."""
+def scaling_cores(cpus: int) -> tuple[int, int]:
+    """(N, 4N) for the scaling pair: N = cpus // 4 (at least 1), so the
+    4N leg fits the box."""
+    n = max(1, cpus // 4)
+    return n, 4 * n
+
+
+def measure_level(cores: int, sf_dir: str, n_pages: int, runs: int) -> list[float]:
+    """Seconds of ``runs`` timed flagship passes in a fresh local[cores]
+    session, after an untimed warm-up pass."""
     # split inputs ~8 MB so the scan yields >= 4 tasks/core even for a
     # few-hundred-MB pages table (default 128 MB bins would give ~3 tasks
     # total and flat-line the scaling measurement)
@@ -1505,148 +833,45 @@ def measure_level(
     pages_path = prepare_pages(spark, n_pages)
     # small warm-up (JIT + python workers); page cache warms on run 1,
     # which min-of-runs discounts
-    warm_path = prepare_pages(spark, min(n_pages, 200_000))
-    run_pipeline_once(spark, sf_dir, warm_path, min(n_pages, 200_000))
-    with _WindowMonitor(cores) as mon:
-        times = [
-            run_pipeline_once(spark, sf_dir, pages_path, n_pages)
-            for _ in range(runs)
-        ]
+    run_pipeline_once(spark, sf_dir, prepare_pages(spark, min(n_pages, 200_000)))
+    times = [run_pipeline_once(spark, sf_dir, pages_path) for _ in range(runs)]
     stop_spark(spark)
-    return times, mon.stats
+    return times
+
+
+def _save(result: dict) -> None:
+    """Checkpoint the record to BENCH/last_run.json: if an external
+    timeout kills a long pilot, the evidence so far survives."""
+    os.makedirs("BENCH", exist_ok=True)
+    with open("BENCH/last_run.json", "w") as f:
+        json.dump(result, f)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     n_pages = pages_for_sf(sf_dir)
+    small, big = scaling_cores(cpus)
+    log(f"bench: sf_dir={sf_dir} pages={n_pages} cpus={cpus} "
+        f"scaling local[{small}]/local[{big}]")
 
-
-    # Scaling pair N=3 / 4N=12: the box exposes 32 hardware threads, but
-    # memory-streaming work saturates its bandwidth well before 32 threads
-    # (a pure-python string workload scales 8->32 procs at only 0.46 on
-    # this VM), and the single local-mode JVM + python workers + OS share
-    # those same threads. Measured 4/16 pairs sit at 0.74-0.88 (partially
-    # saturated at 16); 3/12 pairs measure 0.88-0.94 — both levels stay in
-    # the un-saturated regime, which is what distinct executors on a real
-    # cluster look like. local[cpus] is still measured for the headline
-    # throughput.
-    log(f"bench: sf_dir={sf_dir} pages={n_pages} cpus={cpus}")
-    # INTERLEAVED runs + per-level MINIMA — always on, so the one JSON
-    # line the driver records carries the noise-robust number. This shared
-    # VM's interference is one-sided (co-tenants only ADD wall time, up to
-    # +50% in bad windows), so the minimum over repeated runs is the
-    # consistent estimator of the uncontended runtime at each level;
-    # alternating 3/12-core sessions makes both levels sample the same
-    # time window. Efficiency = (min t_3 / min t_12) / 4. The per-pair
-    # ratios are kept as supporting evidence (median-of-pairs was the
-    # round-1 protocol; it fails when one slow window depresses a whole
-    # pair asymmetrically — observed 0.77-0.93 across runs vs 0.86-0.96
-    # for the min-ratio).
-    # Contention guard (VERDICT r5 #1): every pair records its two runs'
-    # steal/loadavg windows; a pair is CLEAN iff both level windows are.
-    # Contended pairs are re-run (up to SPARK_GRAFT_SCALING_MAX_EXTRA
-    # extras) until the target number of clean pairs exists; the
-    # efficiency is computed from clean pairs only. A run that never saw
-    # a clean pair is marked contended — BENCH/BASELINE.md is NOT
-    # overwritten from it (the evidence lands in NOTES.md instead).
-    pairs = int(os.environ.get("SPARK_GRAFT_SCALING_PAIRS", "3"))
-    max_attempts = pairs + int(os.environ.get("SPARK_GRAFT_SCALING_MAX_EXTRA", "3"))
-    pair_records: list[dict] = []
-    t_small, t_big = [], []          # clean pairs only (fallback: all)
-    t_small_all, t_big_all = [], []
-    while len(pair_records) < max_attempts and len(t_small) < pairs:
-        idle = _idle_probe()
-        a_times, win_a = measure_level(3, sf_dir, n_pages, 1)
-        b_times, win_b = measure_level(12, sf_dir, n_pages, 1)
-        a, b = min(a_times), min(b_times)
-        clean = not (win_a["contended"] or win_b["contended"])
-        pair_records.append({
-            "t3": round(a, 3), "t12": round(b, 3),
-            "eff": round((a / b) / 4.0, 3), "clean": clean,
-            "idle_before": idle, "win3": win_a, "win12": win_b,
-        })
-        t_small_all.append(a)
-        t_big_all.append(b)
-        if clean:
-            t_small.append(a)
-            t_big.append(b)
-        log(f"  pair {len(pair_records)}: t3={a:.2f} t12={b:.2f} "
-            f"eff={(a / b) / 4.0:.3f} clean={clean} win3={win_a} win12={win_b}")
-    contended_run = not t_small
-    if contended_run:  # no clean pair — fall back to all, flag the run
-        t_small, t_big = t_small_all, t_big_all
-    med8, medbig = min(t_small), min(t_big)
-    thr8, thrbig = n_pages / med8, n_pages / medbig
-    # this-run estimate: same pair-median estimator as the pooled
-    # headline, over this run's clean pairs (all pairs when none clean)
-    eff_run = _pair_efficiency_estimates(
-        [r for r in pair_records if r["clean"]] or pair_records
-    )["median"]
-    pair_eff = [r["eff"] for r in pair_records]
-    # pooled clean-pair history: the headline efficiency is the MEDIAN
-    # of per-pair ratios over the last 12 clean pairs at this source
-    # hash + scale (see _pair_efficiency_estimates for why the r5–r7
-    # min-ratio headline was replaced) — this run's clean pairs
-    # included. Falls back to the run-only estimate when no history
-    # qualifies (first run after a flagship code change).
-    hist_key = {
-        "source_hash": _flagship_source_hash(),
-        "sf": sf_dir.rstrip("/").rsplit("/", 1)[-1],
-        "pages": n_pages, "cores_small": 3, "cores_big": 12,
-    }
-    _append_pair_history(
-        [r for r in pair_records if r["clean"]],
-        {**hist_key, "at": time.strftime("%Y-%m-%d %H:%M:%S")},
-    )
-    hist = _load_pair_history(hist_key)
-    est = _pair_efficiency_estimates(hist)
-    eff = est["median"] if est["median"] is not None else eff_run
-    eff_minmin = est["minmin"] if est["minmin"] is not None else eff_run
-    # full-box headline (VERDICT r6 #3): retry until a CLEAN window
-    # exists (up to 2 extras), keep every attempt's times WITH its own
-    # window (ADVICE r6: the old retry could report the second window
-    # against the first attempt's minimum), prefer clean attempts, and
-    # pool attempt minima in pair_history.jsonl (kind=full) so the
-    # BASELINE.md headline row is a pooled clean minimum, never a
-    # contended one-off.
-    full_attempts: list[dict] = []
-    for _ in range(3):
-        t_a, w_a = measure_level(cpus, sf_dir, n_pages, 2)
-        full_attempts.append({
-            "t": round(min(t_a), 3),
-            "times": [round(x, 3) for x in t_a],
-            "win": w_a, "clean": not w_a["contended"],
-        })
-        if not w_a["contended"]:
-            break
-    clean_atts = [a for a in full_attempts if a["clean"]]
-    pick = min(clean_atts or full_attempts, key=lambda a: a["t"])
-    medfull_run, win_full = pick["t"], pick["win"]
-    full_key = {"kind": "full", "source_hash": hist_key["source_hash"],
-                "sf": hist_key["sf"], "pages": n_pages, "cores": cpus}
-    _append_history(
-        "pair_history.jsonl",
-        [{"t": a["t"], "win": a["win"], "clean": a["clean"]}
-         for a in full_attempts],
-        {**full_key, "at": time.strftime("%Y-%m-%d %H:%M:%S")},
-    )
-    full_hist = _load_clean_history("pair_history.jsonl", full_key)
-    medfull = min(r["t"] for r in full_hist) if full_hist else medfull_run
-    thrfull = n_pages / medfull
-    thrfull_run = n_pages / medfull_run
-    log(f"local[3]: {med8:.2f}s ({thr8:.0f} pages/s); local[12]: "
-        f"{medbig:.2f}s ({thrbig:.0f} pages/s); efficiency={eff:.3f} "
-        f"(pair-median pooled over {len(hist)} clean pairs; min-ratio "
-        f"{eff_minmin:.3f}; this run alone "
-        f"{eff_run:.3f} from {len(t_small) if not contended_run else 0}/"
-        f"{len(pair_records)} clean); local[{cpus}]: {medfull:.2f}s "
-        f"({thrfull:.0f} pages/s, pooled over {len(full_hist)} clean "
-        f"attempts; this run {medfull_run:.2f}s)")
+    pairs = []
+    for i in range(_SCALING_PAIRS):
+        a = measure_level(small, sf_dir, n_pages, 1)[0]
+        b = measure_level(big, sf_dir, n_pages, 1)[0]
+        pairs.append({"t3": a, "t12": b})
+        log(f"  pair {i + 1}: local[{small}] {a:.2f}s, local[{big}] {b:.2f}s, "
+            f"eff {(a / b) / 4.0:.3f}")
+    eff = _pair_efficiency_estimates(pairs)["median"]
+    sec_small = min(p["t3"] for p in pairs)
+    sec_big = min(p["t12"] for p in pairs)
+    sec_full = min(measure_level(cpus, sf_dir, n_pages, 2))
+    log(f"efficiency={eff:.3f}; local[{cpus}]: {sec_full:.2f}s "
+        f"({n_pages / sec_full:.0f} pages/s)")
 
     spark = get_spark(app_name="bench-queries", master=f"local[{cpus}]",
                       shuffle_partitions=cpus)
-    queries_run, queries, query_windows = timed_queries(spark, sf_dir, cpus)
+    queries = timed_queries(spark, sf_dir)
     floor = replay_floor(spark)
     log(f"  streaming replay floor: {floor}s")
     stages = flagship_stage_times(spark, sf_dir, prepare_pages(spark, n_pages))
@@ -1654,306 +879,42 @@ def main() -> None:
 
     result = {
         "metric": "pages_per_sec_pip_tiles",
-        # headline = pooled clean minimum (provenance in scaling.*);
-        # queries = pooled clean minima per query, queries_run = this
-        # run's minima (VERDICT r6 #2/#3)
-        "value": round(thrfull, 1),
+        "value": round(n_pages / sec_full, 1),
         "unit": "sec",
         "queries": queries,
-        "queries_run": queries_run,
-        "query_windows": query_windows,
         "streaming_replay_floor_sec": floor,
         "flagship_stages": stages,
-        "sf": sf_dir.rstrip("/").rsplit("/", 1)[-1],
+        "sf": _sf_name(sf_dir),
         "pages": n_pages,
         "scaling": {
-            "cores_small": 3,
-            "cores_big": 12,
-            "sec_small": round(med8, 3),
-            "sec_big": round(medbig, 3),
-            "pages_per_sec_small": round(thr8, 1),
-            "pages_per_sec_big": round(thrbig, 1),
+            "cores_small": small,
+            "cores_big": big,
+            "sec_small": round(sec_small, 3),
+            "sec_big": round(sec_big, 3),
+            "pages_per_sec_small": round(n_pages / sec_small, 1),
+            "pages_per_sec_big": round(n_pages / sec_big, 1),
             "efficiency": round(eff, 3),
-            "efficiency_minmin": round(eff_minmin, 3),
-            "efficiency_this_run": round(eff_run, 3),
-            "history_pair_effs": est["pair_effs"],
-            "history_pairs": len(hist),
             "cores_full": cpus,
-            "sec_full": round(medfull, 3),
-            "sec_full_this_run": round(medfull_run, 3),
-            "pages_per_sec_full": round(thrfull, 1),
-            "pages_per_sec_full_this_run": round(thrfull_run, 1),
-            "window_full": win_full,
-            "full_history_attempts": len(full_hist),
-            "full_attempts": full_attempts,
-            "clean_pairs": 0 if contended_run else len(t_small),
-            "contended": contended_run,
-            "pair_records": pair_records,
+            "sec_full": round(sec_full, 3),
+            "pages_per_sec_full": round(n_pages / sec_full, 1),
+            "pair_efficiencies": [
+                round((p["t3"] / p["t12"]) / 4.0, 3) for p in pairs
+            ],
         },
     }
-    result["scaling"]["pair_efficiencies"] = [round(e, 3) for e in pair_eff]
-    # checkpoint the result BEFORE the (long) sf1 pilot: if an external
-    # timeout kills the process mid-pilot, the scaling + per-query
-    # evidence survives on disk even though stdout never got the line
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/last_run.json", "w") as f:
-        json.dump(result, f)
+    _save(result)
     if os.environ.get("SPARK_GRAFT_SF1", "1") != "0":
         log("sf1 pilot: 20M-page flagship + 50k-doc minhash + 10x measure_topk")
         result["sf1"] = sf1_pilot(sf_dir, cpus)
         log(f"sf1: {result['sf1']}")
-        with open("BENCH/last_run.json", "w") as f:
-            json.dump(result, f)
+        _save(result)
     if os.environ.get("SPARK_GRAFT_SF10", "1") != "0":
-        result["sf10"] = sf10_pilot(sf_dir, cpus)
-        log(f"sf10: {result['sf10']}")
-        with open("BENCH/last_run.json", "w") as f:
-            json.dump(result, f)
-        result["sf10_dedup"] = sf10_dedup_pilot(sf_dir, cpus)
-        log(f"sf10_dedup: {result['sf10_dedup']}")
-        with open("BENCH/last_run.json", "w") as f:
-            json.dump(result, f)
-        result["sf10_mapmatch"] = sf10_mapmatch_pilot(sf_dir, cpus)
-        log(f"sf10_mapmatch: {result['sf10_mapmatch']}")
-        with open("BENCH/last_run.json", "w") as f:
-            json.dump(result, f)
-        result["sf10_topk"] = sf10_topk_pilot(sf_dir, cpus)
-        log(f"sf10_topk: {result['sf10_topk']}")
-        with open("BENCH/last_run.json", "w") as f:
-            json.dump(result, f)
-    if contended_run:
-        # guard: a fully-contended run must not overwrite the curated
-        # evidence document — the numbers land in NOTES.md instead
-        os.makedirs("BENCH", exist_ok=True)
-        with open("BENCH/NOTES.md", "a") as f:
-            f.write(
-                f"\n### Contended run ({time.strftime('%Y-%m-%d %H:%M:%S')}, "
-                "BASELINE.md left untouched)\n\n"
-                f"No clean scaling pair in {len(pair_records)} attempts; "
-                f"efficiency this run over contended pairs = {eff_run:.3f}"
-                + (f"; pooled clean-history estimate = {eff:.3f} over "
-                   f"{len(hist)} prior clean pairs" if hist else
-                   "; no clean history at this source hash")
-                + f". Pair windows: {json.dumps(pair_records)}\n"
-            )
-        log("contended run — BENCH/BASELINE.md NOT overwritten; "
-            "evidence appended to BENCH/NOTES.md")
-        print(json.dumps(result))
-        return
-    # always persist the evidence document (--scaling kept as a no-op flag)
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write(
-                "# BENCH/BASELINE — measured throughput + scaling evidence\n\n"
-                f"Job: pages → mined points → cell assign → PIP join (broadcast "
-                f"polygon set) → tile pyramid, {n_pages} pages ({result['sf']}), "
-                "noop sink, warm-up discarded, minimum over "
-                f"{len(t_small)} clean pairs (of {len(pair_records)} run) "
-                "× 1 run per level.\n\n"
-                "| level | cores | median sec | pages/sec |\n|---|---|---|---|\n"
-                f"| N | 3 | {med8:.2f} | {thr8:.0f} |\n"
-                f"| 4N | 12 | {medbig:.2f} | {thrbig:.0f} |\n"
-                f"| full box | {cpus} | {medfull:.2f} | {thrfull:.0f} |\n\n"
-                f"Full-box row = pooled clean minimum over the last "
-                f"{len(full_hist)} clean full-box attempts at this source "
-                f"hash (VERDICT r6 #3 — this run: {medfull_run:.2f}s, "
-                f"window {win_full}); attempts this run: "
-                f"{[(a['t'], a['clean']) for a in full_attempts]}.\n\n"
-                "N/4N = 3/12 cores: memory-streaming work saturates this VM's "
-                "bandwidth before 32 threads (pure-python string workloads scale "
-                "8→32 procs at 0.46 here), and local mode shares one JVM + python "
-                "workers + OS across the same threads; 3→12 keeps both levels "
-                "un-saturated, which is the regime distinct executors on a real "
-                "cluster run in. The full-box row is the headline throughput.\n\n"
-                f"**Scaling efficiency (N→4N)** = MEDIAN of per-pair "
-                f"ratios (t_3/t_12)/4 over the last {len(hist)} CLEAN "
-                f"interleaved 3/12-core session pairs at this flagship "
-                f"source hash = **{eff:.3f}** (target ≥ 0.8, "
-                f"BASELINE.json; this run alone: {eff_run:.3f}; pooled "
-                f"per-pair ratios: {est['pair_effs']}). The interleaved-"
-                "pair design makes both levels sample the same machine "
-                "window, so the per-pair ratio cancels common-mode "
-                "machine speed; the median over clean pairs is robust "
-                "both to residual sub-threshold interference on either "
-                "leg and to base-speed drift across the pool. The r5–r7 "
-                f"headline, (min t_3 / min t_12)/4 = {eff_minmin:.3f}, "
-                "stays on record but is no longer the headline: it is "
-                "consistent only on a stationary machine — under the "
-                "measured base-speed drift (clean windows on byte-"
-                "identical code 20–30% apart within hours, NOTES.md "
-                "round 8) both minima collapse onto the single fastest-"
-                "era pair, reducing the pool to one pair's ratio (and "
-                "able to err in either direction when the two minima "
-                "come from different eras). The round-1 objection to "
-                "median-of-pairs — one contended window depresses a "
-                "whole pair — is handled by the clean gate, which "
-                "post-dates it. The pool (BENCH/pair_history.jsonl, "
-                "every pair retained with its contention window) is "
-                "keyed on the flagship source hash — a code change "
-                "starts a fresh pool — and bounded to 12 pairs so "
-                "machine-speed drift ages out.\n\n"
-                "**Contention guard** (protocol, VERDICT r5 #1): every "
-                "timed window is monitored — CPU-steal share from "
-                "/proc/stat deltas (steal > "
-                f"{_STEAL_THRESH_PCT}% of box CPU ⇒ the hypervisor ran a "
-                "co-tenant while this guest was runnable) and 1-min "
-                f"loadavg (> cores-in-use + {_LOAD_MARGIN:.0f} ⇒ external "
-                "load). A pair is CLEAN iff both its level windows are; "
-                "contended pairs are re-run (up to 3 extras) and the "
-                "efficiency uses clean pairs only. A run with zero "
-                "clean pairs refuses to overwrite this file (evidence "
-                "goes to NOTES.md).\n\n"
-                f"Clean pairs {len(t_small)}/{len(pair_records)}; per-pair "
-                f"(t3, t12, eff, clean, steal3%, steal12%, load3, load12): "
-                + str([
-                    (r["t3"], r["t12"], r["eff"], r["clean"],
-                     r["win3"]["steal_pct"], r["win12"]["steal_pct"],
-                     r["win3"]["load1_max"], r["win12"]["load1_max"])
-                    for r in pair_records
-                ])
-                + f"\n\nLevel minima over clean pairs: "
-                f"local[3]={[round(t,2) for t in t_small]}, "
-                f"local[12]={[round(t,2) for t in t_big]}; full-box "
-                f"attempts (sec, clean): "
-                f"{[(a['t'], a['clean']) for a in full_attempts]} "
-                f"(picked window: {win_full})\n\n"
-                "Flagship per-stage prefix timings (noop sink, seconds; each "
-                "row includes everything above it — scan+mine ⊂ cells ⊂ "
-                "pip/tiles):\n\n"
-                + "\n".join(f"- {k}: {v}" for k, v in stages.items())
-                + "\n\nPer-query timings (noop sink, seconds): the record "
-                "value is the POOLED CLEAN MINIMUM over the last ≤12 clean "
-                "windows at the query's source hash "
-                "(BENCH/query_history.jsonl, VERDICT r6 #2); `this run` is "
-                "the best pass of this invocation, `pool` its history "
-                "depth. A row marked `reproducible-min` had no clean window "
-                "yet ≥3 samples within 10% of the pooled minimum — "
-                "steal-flagged-but-reproducible (workload-provoked steal, "
-                "NOTES.md round 7). A `<name>_fullcost` row is the "
-                "cold-path companion of a persist-using query (cache "
-                "cleared before every pass — VERDICT r7 #7): its plain "
-                "row measures the warm-cache pass-2, both numbers are on "
-                "record, pooled separately:\n\n"
-                + "\n".join(
-                    f"- {k}: {v} (this run {queries_run[k]}, pool "
-                    f"{query_windows[k].get('pool', 0)}"
-                    + (f", {query_windows[k].get('pool_kind')}"
-                       if query_windows[k].get("pool_kind")
-                       not in (None, "clean-min") else "")
-                    + ")"
-                    for k, v in queries.items()
-                )
-                + f"\n\nStreaming replay machinery floor (2-batch "
-                f"passthrough, zero data-path work): {floor} s — the "
-                "streaming_* rows read as this floor plus their data "
-                "path.\n"
-                + (
-                    "\n## sf1 scale pilot (10× the bench scale, one pass)\n\n"
-                    + "\n".join(f"- {k}: {v}" for k, v in result["sf1"].items())
-                    + "\n\nFlagship at 20M pages, minhash dedup at 50k docs "
-                    "(10 salted copies), exact grid-pruned Hausdorff top-k at "
-                    "10× trajectory density — surfaces skew/spill regimes "
-                    "sf0.1 cannot. peak_jvm_rss_gb is the local-mode executor "
-                    "JVM's VmHWM; *_skew_splits counts AQE skew-split joins "
-                    "in the executed plans.\n"
-                    if "sf1" in result else ""
-                )
-                + (
-                    "\n## sf10 scale pilot (100× the bench scale — flagship "
-                    "only, one pass)\n\n"
-                    + "\n".join(f"- {k}: {v}" for k, v in result["sf10"].items())
-                    + "\n\n200M pages (~32 GB parquet, VERDICT r5 #6): one "
-                    "decade beyond sf1, the cheapest probe for nonlinearity "
-                    "in the 100×-design claims. The timed pass drives both "
-                    "sinks through their own QueryExecutions (global-count "
-                    "sink instead of noop) so the AQE-final skew markers and "
-                    "output rows are read from the very run that was timed. "
-                    "Result cached in BENCH/SF10.json keyed on the hash of "
-                    "the flagship's source files — reruns automatically "
-                    "when any of them change; a contended window is never "
-                    "cached.\n"
-                    if "sf10" in result else ""
-                )
-                + (
-                    "\n## sf10 dedup probe (VERDICT r6 #5 — minhash at "
-                    "500k docs, components on a 1M-node chain)\n\n"
-                    + "\n".join(
-                        f"- {k}: {v}" for k, v in result["sf10_dedup"].items()
-                    )
-                    + "\n\n500k docs = 100 salted copies of the sf0.1 "
-                    "documents table; salts 0-9 are within-decade near-dups "
-                    "(the sf1 pair structure), salts 10-99 carry additive "
-                    "seeded-noise prefixes ~2× the text length that dilute "
-                    "every cross similarity below the 0.5 threshold — the "
-                    "corpus scales 10× over sf1 while the "
-                    "true-pair count stays ~constant, so the row measures "
-                    "the signature + banded-LSH-join stages' scaling, not a "
-                    "quadratic verify blow-up. components_chain is pointer "
-                    "jumping over a diameter-999 999 path — rounds must stay "
-                    "~log2(n). Cached in BENCH/SF10_DEDUP.json keyed on "
-                    "operators/dedup.py + the probe-corpus source; a stage "
-                    "is recorded from a clean window or, failing that, the "
-                    "reproducibility attribution (≥3 pooled samples within "
-                    "10% of the minimum — the minhash stage provokes steal "
-                    "accounting without moving wall time, NOTES.md round "
-                    "7); a run with neither is never cached.\n"
-                    if "sf10_dedup" in result else ""
-                )
-                + (
-                    "\n## sf10 map-match probe (10M points — the third "
-                    "100 TB-critical path)\n\n"
-                    + "\n".join(
-                        f"- {k}: {v}"
-                        for k, v in result["sf10_mapmatch"].items()
-                    )
-                    + "\n\n10M points = 100 shifted copies of the sf0.1 "
-                    "point set (offset lattice ≤ ~1.9 km keeps every copy "
-                    "inside road-grid coverage, so the candidate halo join "
-                    "and per-trajectory Viterbi do full-size work; "
-                    "traj_id offsets keep copies distinct). Exactly the "
-                    "board/sf1 plan, one decade beyond the sf1 evidence. "
-                    "Cached in BENCH/SF10_MAPMATCH.json under the same "
-                    "record discipline as the dedup probe.\n"
-                    if "sf10_mapmatch" in result else ""
-                )
-                + (
-                    "\n## sf10 similarity/top-k probe (150k trajectories "
-                    "— the fourth 100 TB-critical path, VERDICT r7 #4)\n\n"
-                    + "\n".join(
-                        f"- {k}: {v}"
-                        for k, v in result["sf10_topk"].items()
-                    )
-                    + "\n\n150k trajectories = 100 lattice-shifted copies "
-                    "of a COMPACT-trajectory corpus (each whole-extent "
-                    "synthetic trajectory shrunk 50× about its MBR "
-                    "center — raw radii are 11-13 km on a 20×16 km grid, "
-                    "a shape where the pruned path legitimately degrades "
-                    "to one full equi-join round, which the sf1 stage "
-                    "already evidences — then re-centred at a per-base "
-                    "hash position ≥2.1 km inside the grid edge). Exact "
-                    "grid-pruned Hausdorff top-5, fixed ~29-query panel. "
-                    "ring8_candidates_100 vs _50 is the pruning-scaling "
-                    "criterion measured directly: halving corpus density "
-                    "at identical extent must ~halve the ring-8 "
-                    "candidate count (ratio ≈ 2 = linear in density; a "
-                    "quadratic candidate set reads ≈ 4), and "
-                    "candidate_fraction_100 — candidates over all-pairs "
-                    "queries×(N−1) — must stay ≪ 1 (an all-pairs "
-                    "degeneration reads 1.0). Corpus structure pinned by "
-                    "tests/test_sf10_topk_corpus.py; cached in "
-                    "BENCH/SF10_TOPK.json under the same record "
-                    "discipline as the other probes.\n"
-                    if "sf10_topk" in result else ""
-                )
-        )
-    # curated analysis notes survive reruns: BASELINE.md is regenerated
-    # from scratch each run, so round-over-round attribution lives in
-    # BENCH/NOTES.md and is re-appended here
-    notes = os.path.join("BENCH", "NOTES.md")
-    if os.path.exists(notes):
-        with open("BENCH/BASELINE.md", "a") as f:
-            f.write("\n" + open(notes).read())
-    log("wrote BENCH/BASELINE.md")
+        for key, probe in (("sf10", sf10_pilot), ("sf10_dedup", sf10_dedup_pilot),
+                           ("sf10_mapmatch", sf10_mapmatch_pilot),
+                           ("sf10_topk", sf10_topk_pilot)):
+            result[key] = probe(sf_dir, cpus)
+            log(f"{key}: {result[key]}")
+            _save(result)
     print(json.dumps(result))
 
 

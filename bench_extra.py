@@ -1,19 +1,15 @@
-"""Round-9 optimization harness (bench.py is FROZEN for measurement — this
-file holds the extra instrumentation the optimization round needs).
-
-Times individual board queries with the noop sink under the exact session
-configuration bench.py's timed_queries uses (local[$SPARK_GRAFT_CPUS],
-shuffle_partitions = cpus), and captures `.explain("formatted")` plans to
-plans/r09/<query>_<tag>.txt so plan-shape claims in OPTIMIZATION_r09.md are
-reproducible.
+"""Per-query instrumentation beside bench.py: times chosen board queries
+through bench.timed_queries (local[$SPARK_GRAFT_CPUS], shuffle_partitions
+= cpus, noop sink, pass 1 discarded as warm-up), and captures
+`.explain("formatted")` plans to plans/r09/<query>_<tag>.txt so plan-shape
+claims are reproducible.
 
 Usage:
     python bench_extra.py time  [query ...]        # default: all board queries
     python bench_extra.py plan  <tag> [query ...]  # writes plans/r09/<q>_<tag>.txt
-    python bench_extra.py stage <query>            # per-stage breakdown where defined
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-(default 32), QT_PASSES (default 2, min reported).
+(default: the CPUs this process may run on).
 """
 
 from __future__ import annotations
@@ -21,21 +17,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-from trajlib_spark.session import get_spark
-
-BOARD = [
-    "cell_assign", "tile_pyramid", "stay_collapse", "sessionize",
-    "pip_join", "knn", "point_features", "traj_stats", "segment_pairs",
-    "dedup_exact", "text_features",
-    "ann_topk", "segment_cut", "minhash_lsh", "doc_fingerprint",
-    "simhash", "symmetrize_norm", "newsimi_raw", "media_all",
-    "embedding_near_dups", "measure_topk_lcss", "map_match", "cell_walks",
-    "video_frames", "walk_skipgrams", "matched_edge_graph",
-    "ann_ivf_recall", "dedup_components", "vocab_topk",
-    "tfidf_topterms", "lm_score", "streaming_dedup",
-]
+from bench import _BOARD_QUERIES as BOARD
+from bench import timed_queries
+from trajlib_spark.session import default_cpus, get_spark
 
 
 def _session(cpus: int):
@@ -44,36 +29,19 @@ def _session(cpus: int):
 
 
 def time_queries(names: list[str]) -> None:
-    import __spark_entry__ as E
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    passes = int(os.environ.get("QT_PASSES", "2"))
-    spark = _session(cpus)
-    qs = E.queries()
-    out: dict[str, dict] = {}
-    for name in names:
-        times = []
-        for p in range(passes):
-            spark.sparkContext.setJobDescription(f"qtime:{name}:pass{p}")
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            times.append(round(time.time() - t0, 3))
-        spark.catalog.clearCache()
-        out[name] = {"min": min(times), "times": times}
-        print(f"QTIME {name}: {out[name]}", flush=True)
+    cpus = default_cpus()
+    queries = timed_queries(_session(cpus), sf_dir, names)
     print("QTIME_JSON " + json.dumps(
         {"sf": sf_dir.rstrip("/").rsplit("/", 1)[-1], "cpus": cpus,
-         "queries": {k: v["min"] for k, v in out.items()},
-         "all": out}), flush=True)
+         "queries": queries}), flush=True)
 
 
 def capture_plans(tag: str, names: list[str]) -> None:
     import __spark_entry__ as E
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = _session(cpus)
+    spark = _session(default_cpus())
     qs = E.queries()
     os.makedirs("plans/r09", exist_ok=True)
     for name in names:

@@ -1,227 +1,94 @@
-"""Bench contention-guard plumbing (no Spark): the window monitor must
-produce the documented stats shape and thresholds, and the clean-pair
-history pool must filter on key + cleanliness and bound its window."""
+"""Bench plumbing (no Spark): the scaling pair and its efficiency
+estimator, the board's query names, the one sf10 cache rule, and the
+CPU default every harness shares."""
 
 from __future__ import annotations
 
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
+from trajlib_spark import session
 
 
-def test_window_monitor_stats_shape():
-    with bench._WindowMonitor(4) as m:
-        time.sleep(0.6)
-    s = m.stats
-    assert set(s) == {"steal_pct", "load1_max", "contended"}
-    assert s["steal_pct"] >= 0.0
-    assert s["load1_max"] >= 0.0
-    # an idle sleep on a quiet box must not read as contended unless the
-    # box genuinely is (steal threshold is absolute, loadavg vs 4+8)
-    assert s["contended"] in (True, False)
-
-
-def test_window_monitor_contended_thresholds(monkeypatch):
-    # forced steal: fake /proc/stat deltas via _cpu_sample
-    seq = iter([(0, 1000), (100, 2000)])  # 10% steal over the window
-    monkeypatch.setattr(bench, "_cpu_sample", lambda: next(seq))
-    with bench._WindowMonitor(4) as m:
-        pass
-    assert m.stats["steal_pct"] == 10.0
-    assert m.contended
-
-
-def test_pair_history_pool_filter_and_bound(tmp_path, monkeypatch):
-    monkeypatch.chdir(tmp_path)
-    key = {"source_hash": "abc", "sf": "sf0.1", "pages": 10,
-           "cores_small": 3, "cores_big": 12}
-    other = {**key, "source_hash": "zzz"}
-    recs = [
-        {"t3": 40.0 + i, "t12": 10.0, "eff": 1.0, "clean": i % 2 == 0}
-        for i in range(30)
-    ]
-    bench._append_pair_history(recs, key)
-    bench._append_pair_history([{"t3": 1.0, "t12": 1.0, "clean": True}], other)
-    hist = bench._load_pair_history(key)
-    assert len(hist) == 12                      # bounded window
-    assert all(r["clean"] for r in hist)        # clean only
-    assert all(r["source_hash"] == "abc" for r in hist)  # keyed
-    # corrupt line is skipped, not fatal
-    with open(os.path.join("BENCH", "pair_history.jsonl"), "a") as f:
-        f.write("not json\n")
-    assert len(bench._load_pair_history(key)) == 12
-    # a different key (code change) starts an empty pool
-    assert bench._load_pair_history({**key, "source_hash": "new"}) == []
-
-
-def test_full_and_pair_history_share_file_without_crosstalk(tmp_path, monkeypatch):
-    """Full-box attempts (kind=full) live in pair_history.jsonl next to
-    the 3/12 scaling pairs; each loader's key must exclude the other's
-    records."""
-    monkeypatch.chdir(tmp_path)
-    pair_key = {"source_hash": "abc", "sf": "sf0.1", "pages": 10,
-                "cores_small": 3, "cores_big": 12}
-    full_key = {"kind": "full", "source_hash": "abc", "sf": "sf0.1",
-                "pages": 10, "cores": 32}
-    bench._append_pair_history([{"t3": 1.0, "t12": 0.3, "clean": True}], pair_key)
-    bench._append_history("pair_history.jsonl", [{"t": 5.0, "clean": True}],
-                          full_key)
-    pairs = bench._load_pair_history(pair_key)
-    fulls = bench._load_clean_history("pair_history.jsonl", full_key)
-    assert len(pairs) == 1 and "t3" in pairs[0]
-    assert len(fulls) == 1 and fulls[0]["t"] == 5.0
-
-
-def test_query_history_pool_clean_minimum(tmp_path, monkeypatch):
-    """The board record is min over CLEAN windows only — a faster
-    contended pass must not become the record (one-sided noise can only
-    inflate, so a 'fast contended' reading would still be legitimate,
-    but the protocol keeps the record's provenance uniform)."""
-    monkeypatch.chdir(tmp_path)
-    key = {"q": "map_match", "src": "aaa", "sf": "sf0.1", "cores": 32}
-    bench._append_history("query_history.jsonl", [
-        {"sec": 5.2, "clean": True}, {"sec": 4.1, "clean": True},
-        {"sec": 3.0, "clean": False},
-    ], key)
-    hist = bench._load_clean_history("query_history.jsonl", key)
-    assert min(r["sec"] for r in hist) == 4.1
-    # a source-hash change starts a fresh pool
-    assert bench._load_clean_history("query_history.jsonl",
-                                     {**key, "src": "bbb"}) == []
-
-
-def test_board_queries_all_have_source_maps():
-    """Every board query needs a _QUERY_SRC entry (the pool key);
-    the mapped files must exist so the hash is real content."""
-    assert set(bench._BOARD_QUERIES) == set(bench._QUERY_SRC)
-    root = os.path.dirname(os.path.abspath(bench.__file__))
-    for files in bench._QUERY_SRC.values():
-        for rel in files:
-            assert os.path.exists(os.path.join(root, rel)), rel
-    for files in bench._SF1_STAGE_SRC.values():
-        for rel in files:
-            assert os.path.exists(os.path.join(root, rel)), rel
-
-
-def test_query_source_hash_stable_and_distinct():
+def test_board_queries_are_distinct_entry_queries():
     import __spark_entry__ as E
 
-    qs = E.queries()
-    h1 = bench._query_source_hash("map_match", qs["map_match"])
-    h2 = bench._query_source_hash("map_match", qs["map_match"])
-    h3 = bench._query_source_hash("cell_assign", qs["cell_assign"])
-    assert h1 == h2
-    assert h1 != h3
+    assert set(bench._BOARD_QUERIES) <= set(E.queries())
+    assert len(set(bench._BOARD_QUERIES)) == len(bench._BOARD_QUERIES)
 
 
-def test_pooled_record_clean_min_wins(tmp_path, monkeypatch):
+def test_scaling_cores_follow_cpu_count():
+    assert bench.scaling_cores(4) == (1, 4)
+    assert bench.scaling_cores(32) == (8, 32)
+
+
+def test_default_cpus_env_wins(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    assert session.default_cpus() == 7
+
+
+def test_default_cpus_falls_back_to_affinity(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    assert session.default_cpus() == 3
+
+
+def _builder_a(spark, sf_dir):
+    return "corpus A"
+
+
+def _builder_b(spark, sf_dir):
+    return "corpus B"
+
+
+def test_sf10_cache_rule(tmp_path, monkeypatch):
+    """Reuse only on the same key (package content + builder source + sf
+    name); a result carrying ``error`` is never cached."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "op.py").write_text("X = 1\n")
+    monkeypatch.setattr(bench, "_PKG", str(pkg))
     monkeypatch.chdir(tmp_path)
-    key = {"q": "x", "src": "h1", "sf": "sf0.1", "cores": 32}
-    bench._append_history("query_history.jsonl", [
-        {"sec": 5.0, "clean": False}, {"sec": 4.0, "clean": True},
-        {"sec": 3.0, "clean": False},  # contended min must NOT win
-    ], key)
-    sec, kind, n = bench._pooled_record("query_history.jsonl", key)
-    assert (sec, kind, n) == (4.0, "clean-min", 1)
+    sf_dir = str(tmp_path / "sf0.1")
+    calls = []
 
+    def measure():
+        calls.append(1)
+        return {"stage_sec": float(len(calls))}
 
-def test_pooled_record_reproducible_min(tmp_path, monkeypatch):
-    # no clean window, but >=3 samples within 10% of the minimum:
-    # the workload-provoked-steal case (NOTES.md round 7)
-    monkeypatch.chdir(tmp_path)
-    key = {"kind": "sf10_dedup", "stage": "minhash", "cores": 32,
-           "src": "h2"}
-    bench._append_history("sf10_history.jsonl", [
-        {"sec": 339.8, "clean": False}, {"sec": 320.8, "clean": False},
-        {"sec": 328.4, "clean": False},
-    ], key)
-    sec, kind, n = bench._pooled_record("sf10_history.jsonl", key)
-    assert (sec, kind, n) == (320.8, "reproducible-min", 3)
-
-
-def test_pooled_record_refuses_scattered_contended(tmp_path, monkeypatch):
-    # 3 contended samples but only 2 near the min: bursty noise shape —
-    # no record (an outlier cannot be averaged into legitimacy)
-    monkeypatch.chdir(tmp_path)
-    key = {"q": "y", "src": "h3", "sf": "sf0.1", "cores": 32}
-    bench._append_history("query_history.jsonl", [
-        {"sec": 10.0, "clean": False}, {"sec": 10.5, "clean": False},
-        {"sec": 14.0, "clean": False},
-    ], key)
-    sec, kind, n = bench._pooled_record("query_history.jsonl", key)
-    assert (sec, kind, n) == (None, None, 0)
-
-
-def test_pooled_record_two_samples_insufficient(tmp_path, monkeypatch):
-    monkeypatch.chdir(tmp_path)
-    key = {"q": "z", "src": "h4", "sf": "sf0.1", "cores": 32}
-    bench._append_history("query_history.jsonl", [
-        {"sec": 10.0, "clean": False}, {"sec": 10.1, "clean": False},
-    ], key)
-    assert bench._pooled_record("query_history.jsonl", key) == (None, None, 0)
-
-
-def test_query_source_hash_covers_entry_helpers():
-    """ADVICE r7: a query's pool key must cover the __spark_entry__
-    module-level helpers it calls (transitively), not just its own
-    source — otherwise editing a shared helper leaves stale pools."""
-    import __spark_entry__ as E
-
-    qs = E.queries()
-    # streaming_sessions reaches the shared _replay_stream helper
-    src = bench._entry_helper_sources(qs["streaming_sessions"])
-    assert b"def _replay_stream" in src
-    # deterministic across calls
-    assert src == bench._entry_helper_sources(qs["streaming_sessions"])
-    # and the full pool key folds the helper sources in: two queries
-    # sharing operator files but different helpers hash differently
-    h = bench._query_source_hash("streaming_dedup", qs["streaming_dedup"])
-    assert h == bench._query_source_hash("streaming_dedup", qs["streaming_dedup"])
-
-
-def test_entry_helper_sources_transitive(tmp_path):
-    """Reachability is transitive: q -> h1 -> h2 all contribute source."""
-    mod_path = tmp_path / "fake_entry_helpers.py"
-    mod_path.write_text(
-        "def h2():\n    return 'LEAF_MARKER'\n\n"
-        "def h1():\n    return h2()\n\n"
-        "def q():\n    return h1()\n"
+    first = bench._sf10_cached("P.json", sf_dir, (_builder_a,), measure)
+    assert first["stage_sec"] == 1.0
+    assert json.load(open(tmp_path / "BENCH" / "P.json")) == first
+    # hit: same key
+    assert bench._sf10_cached("P.json", sf_dir, (_builder_a,), measure) == first
+    assert len(calls) == 1
+    # miss: a package file changed
+    (pkg / "op.py").write_text("X = 2\n")
+    second = bench._sf10_cached("P.json", sf_dir, (_builder_a,), measure)
+    assert len(calls) == 2 and second["source_hash"] != first["source_hash"]
+    # miss: the corpus builder's source changed
+    third = bench._sf10_cached("P.json", sf_dir, (_builder_b,), measure)
+    assert len(calls) == 3 and third["source_hash"] != second["source_hash"]
+    # an error result is returned but never cached
+    broken = bench._sf10_cached(
+        "E.json", sf_dir, (_builder_a,), lambda: {"error": "boom"}
     )
-    sys.path.insert(0, str(tmp_path))
-    try:
-        import importlib
-        m = importlib.import_module("fake_entry_helpers")
-        src = bench._entry_helper_sources(m.q)
-        assert b"LEAF_MARKER" in src  # h2 reached through h1
-        assert b"def h1" in src
-    finally:
-        sys.path.remove(str(tmp_path))
-        sys.modules.pop("fake_entry_helpers", None)
-
-
-def test_pool_mature_gates_provisional_caches():
-    """ADVICE r7: a reproducible-min-backed sf10 cache is provisional —
-    reused only once its pool is deep (>=6); clean-min is authoritative
-    at any pool size."""
-    assert bench._pool_mature(
-        {"minhash_pool_kind": "clean-min", "minhash_pool": 1}, "minhash")
-    assert not bench._pool_mature(
-        {"minhash_pool_kind": "reproducible-min", "minhash_pool": 3}, "minhash")
-    assert bench._pool_mature(
-        {"minhash_pool_kind": "reproducible-min", "minhash_pool": 6}, "minhash")
-    assert not bench._pool_mature({}, "minhash")
+    assert broken["error"] == "boom"
+    assert not (tmp_path / "BENCH" / "E.json").exists()
+    # other scales are skipped without measuring
+    skipped = bench._sf10_cached(
+        "P.json", str(tmp_path / "sf0.01"), (_builder_b,), measure
+    )
+    assert "skipped" in skipped and len(calls) == 3
 
 
 def test_pair_efficiency_median_resists_single_era_collapse():
-    """VERDICT-r8 estimator change: one warm-era pair that is fastest at
-    BOTH levels must not drag the pooled headline to its own ratio. The
-    min-ratio estimator collapses onto that pair; the pair-median moves
-    only marginally."""
+    """One warm-era pair that is fastest at BOTH levels must not drag the
+    estimate to its own ratio: the pair-median moves only marginally."""
     pool = [
         {"t3": 62.0, "t12": 17.2},   # eff 0.901
         {"t3": 65.0, "t12": 18.1},   # eff 0.898
@@ -231,24 +98,19 @@ def test_pair_efficiency_median_resists_single_era_collapse():
     ]
     est = bench._pair_efficiency_estimates(pool)
     assert est["n"] == 5
-    assert abs(est["minmin"] - (48.6 / 15.25) / 4.0) < 1e-9  # collapsed
     assert est["median"] > 0.85                              # robust
     assert est["pair_effs"] == sorted(est["pair_effs"])
 
 
 def test_pair_efficiency_median_resists_cross_era_inflation():
-    """The collapse can also err HIGH: min t3 from a slow-t12 pair and
-    min t12 from another era pair up into a ratio no pair measured. The
-    median cannot exceed every per-pair reading; the change is
-    anti-cherry-picking in both directions."""
+    """A ratio of minima taken from different pairs can read higher than
+    any pair measured; the median cannot exceed every per-pair reading."""
     pool = [
         {"t3": 50.0, "t12": 16.0},   # fast t3, eff 0.781
         {"t3": 60.0, "t12": 14.0},   # fast t12, eff 1.071
         {"t3": 58.0, "t12": 16.5},   # eff 0.879
     ]
     est = bench._pair_efficiency_estimates(pool)
-    inflated = (50.0 / 14.0) / 4.0   # 0.893, measured by NO pair
-    assert abs(est["minmin"] - inflated) < 1e-9
     assert abs(est["median"] - 0.879) < 1e-3
 
 

@@ -7,9 +7,15 @@ This is the web-table graft of the reference preprocess pipeline
 (/root/reference/fedtraj/utils/preprocessing_porto.py:326-343): CSV→points
 becomes pages→mined points; the bbox filter generalizes to the polygon
 join; cell assignment is identical CellSpace arithmetic.
+
+The operator chain is written once, in ``steps``. ``flagship_frames``
+composes it lazily in memory (the bench, ``__spark_entry__.entry``);
+``pipeline_stages`` composes it through the store (``run_pipeline.py``).
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -17,46 +23,47 @@ from ..config import PORTO_GRID
 from ..operators import cells, extract, raster, spatial_join, staypoints
 from ..sources.store import TableStore, run_stages
 
+# the flagship's stages; the checkpointed pipeline also commits "collapsed"
+FLAGSHIP = ("points", "cells", "pip_join", "tiles")
+
+
+def steps(polygons: DataFrame) -> dict[str, tuple[str, Callable[[DataFrame], DataFrame]]]:
+    """stage → (the stage it reads, step building it from that stage's frame)."""
+    grid = PORTO_GRID
+    return {
+        "points": ("pages", extract.pages_to_points),
+        "cells": ("points", lambda pts: cells.with_cell(pts, grid)),
+        "collapsed": ("cells", lambda pts: staypoints.collapse_consecutive_cells(
+            pts, grid, traj="url", order=["ts_ms", "pos"]
+        )),
+        "pip_join": ("cells", lambda pts: spatial_join.point_in_polygon(
+            pts, polygons, grid, point_cols=["url", "pos", "cell_id"]
+        )),
+        "tiles": ("cells", lambda pts: raster.tile_counts(pts, grid)),
+    }
+
+
+def flagship_frames(pages: DataFrame, polygons: DataFrame) -> dict[str, DataFrame]:
+    """The FLAGSHIP stages as lazy frames over the live pages: each frame is
+    built on the frame of the stage it reads, so one cells prefix feeds
+    both sinks."""
+    frames = {"pages": pages}
+    chain = steps(polygons)
+    for name in FLAGSHIP:
+        src, step = chain[name]
+        frames[name] = step(frames[src])
+    return frames
+
 
 def pipeline_stages(pages: DataFrame, polygons: DataFrame):
     """Stage list for run_stages: each step reads its input from the store
     (so resume works) except the first, which reads the live pages frame."""
-    grid = PORTO_GRID
 
-    def s_pages(spark, store):
-        return pages
+    def from_store(src, step):
+        return lambda spark, store: step(store.load(spark, src))
 
-    def s_points(spark, store):
-        pg = store.load(spark, "pages")
-        return extract.pages_to_points(pg)
-
-    def s_cells(spark, store):
-        pts = store.load(spark, "points")
-        return cells.with_cell(pts, grid)
-
-    def s_collapsed(spark, store):
-        pts = store.load(spark, "cells")
-        return staypoints.collapse_consecutive_cells(
-            pts, grid, traj="url", order=["ts_ms", "pos"]
-        )
-
-    def s_pip(spark, store):
-        pts = store.load(spark, "cells")
-        return spatial_join.point_in_polygon(
-            pts, polygons, grid, point_cols=["url", "pos", "cell_id"]
-        )
-
-    def s_tiles(spark, store):
-        pts = store.load(spark, "cells")
-        return raster.tile_counts(pts, grid)
-
-    return [
-        ("pages", s_pages),
-        ("points", s_points),
-        ("cells", s_cells),
-        ("collapsed", s_collapsed),
-        ("pip_join", s_pip),
-        ("tiles", s_tiles),
+    return [("pages", lambda spark, store: pages)] + [
+        (name, from_store(src, step)) for name, (src, step) in steps(polygons).items()
     ]
 
 
