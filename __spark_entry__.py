@@ -146,6 +146,18 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
+def _docs_fanned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table hash-partitioned on doc_id, one partition per
+    core. It ships as ONE parquet file at test scale → one scan task; the
+    fan-out lets the Arrow signature/verify stages use every core without
+    paying a Python task's fixed cost more than once per core (at 100 TB
+    the input arrives pre-split and this repartition is the storage
+    layer's job)."""
+    return _docs(spark, sf_dir).repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
+
+
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
@@ -1141,11 +1153,7 @@ def q_measure_topk_edwp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the documents table ships as ONE parquet file at test scale → one
-    # scan task; fan it out so the Arrow signature/verify stages use every
-    # core (at 100 TB the input arrives pre-split and this repartition is
-    # the storage layer's job)
-    docs = _docs(spark, sf_dir).repartition(16, "doc_id")
+    docs = _docs_fanned(spark, sf_dir)
     sigs = dedup_ops.minhash_signatures(docs)
     cands = dedup_ops.lsh_candidates(sigs)
     return dedup_ops.ngram_jaccard_verify(docs, cands, threshold=0.5).select(
@@ -1158,7 +1166,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     components by min-label propagation (dedup.connected_components) —
     the stage that turns pairwise near-dup evidence into keep/drop
     decisions (keeper = component id = smallest doc id)."""
-    docs = _docs(spark, sf_dir).repartition(16, "doc_id")
+    docs = _docs_fanned(spark, sf_dir)
     sigs = dedup_ops.minhash_signatures(docs)
     cands = dedup_ops.lsh_candidates(sigs)
     pairs = dedup_ops.ngram_jaccard_verify(docs, cands, threshold=0.5)
@@ -1174,7 +1182,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # forces 5-bit bands whose 32 values collide a constant fraction of ANY
     # corpus — the candidate set then grows quadratically; 4 is also the
     # tighter, semantically-real near-dup threshold on this corpus)
-    docs = _docs(spark, sf_dir).repartition(16, "doc_id")
+    docs = _docs_fanned(spark, sf_dir)
     sigs = dedup_ops.simhash_signatures(docs)
     return dedup_ops.simhash_candidates(sigs, max_hamming=4).select(
         "i", "j", F.col("hamming").cast("long").alias("hamming")

@@ -89,6 +89,36 @@ def test_fingerprint_block_matches_scalar():
     assert all(text.fingerprint_py(t) == int(b) for t, b in zip(texts, blk))
 
 
+def _short_docs_and_one_long():
+    import random, string
+
+    rng = random.Random(11)
+    short = ["".join(rng.choices(string.printable + "éü漢", k=rng.randint(0, 300)))
+             for _ in range(200)]
+    return short[:100] + ["é漢x" * 170_000] + short[100:]  # ~1 MB doc mid-batch
+
+
+def test_fingerprint_block_long_tail_matches_scalar():
+    texts = _short_docs_and_one_long()
+    blk = text.fingerprint_block(texts)
+    assert [int(b) for b in blk] == [text.fingerprint_py(t) for t in texts]
+
+
+def test_fingerprint_block_memory_bounded_by_batch_bytes():
+    # a padded rows × max_len matrix allocates ~200 MB for this ~1 MB batch
+    import tracemalloc
+
+    texts = _short_docs_and_one_long()
+    total = sum(len(t.encode("utf-8")) for t in texts)
+    tracemalloc.start()
+    try:
+        text.fingerprint_block(texts)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 * total, (peak, total)
+
+
 def test_jaccard_verify_slim_path_matches_join_path(spark):
     # the broadcast-dict fast path (docs ≤ collect_max_docs) must produce
     # exactly the join path's rows — including inner-join drop semantics
@@ -177,23 +207,91 @@ def test_ann_exact_and_ivf(spark, embs):
     assert ann.recall_at_k(approx, exact, 10) == pytest.approx(1.0)
 
 
-def test_minhash_vectorized_matches_per_doc_reference(spark, docs):
-    """The batch-vectorized signature path must be bit-identical to the
-    straightforward per-document computation of the same family."""
+# hostile shingling inputs: null, empty, shorter than shingle_k, non-ASCII
+# (multi-byte windows) and multi-KB documents
+_MINHASH_EDGE_TEXTS = [
+    None, "", "a", "abcd", "é½ü", "漢字テキスト", "x" * 4096,
+    "the quick brown fox " * 300, "ünïcödé ✓ " * 500,
+]
+
+
+def _minhash_reference(texts, num_perm=64, k=5, seed=1):
+    """Per-document signatures: the min over each document's distinct
+    shingle hashes of every permutation, as signed 64-bit lists."""
     from trajlib_spark.operators.dedup import _minhash_params, _stable_shingles
 
-    sub = docs.limit(40)
-    got = {r.doc_id: r.sig for r in dedup.minhash_signatures(sub).collect()}
+    a, b = _minhash_params(num_perm, seed)
+    with np.errstate(over="ignore"):
+        return [
+            (_stable_shingles(t or "", k)[None, :] * a[:, None] + b[:, None])
+            .min(axis=1).astype(np.int64).tolist()
+            for t in texts
+        ]
+
+
+def test_minhash_block_matches_per_doc_reference():
+    from trajlib_spark.operators.dedup import _minhash_block, _minhash_params
+
+    rng = np.random.default_rng(4)
+    alphabet = list("abc déü漢")
+    texts = _MINHASH_EDGE_TEXTS + [
+        "".join(rng.choice(alphabet, rng.integers(0, 600))) for _ in range(60)
+    ]
     a, b = _minhash_params(64, seed=1)
-    old = np.seterr(over="ignore")
+    for k in (1, 5, 9):
+        sig = _minhash_block(texts, a, b, k)
+        assert sig.view(np.int64).T.tolist() == _minhash_reference(texts, k=k), k
+    assert _minhash_block([], a, b, 5).shape == (64, 0)
+
+
+def test_minhash_vectorized_matches_per_doc_reference(spark, docs):
+    """The batch-vectorized signature path must be bit-identical to the
+    straightforward per-document computation of the same family, across
+    several partitions of small Arrow batches."""
+    edge = spark.createDataFrame(
+        [(10_000 + n, t) for n, t in enumerate(_MINHASH_EDGE_TEXTS)],
+        "doc_id long, text string",
+    )
+    sub = docs.limit(40).select("doc_id", "text").unionByName(edge).repartition(3)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4")
     try:
-        for r in sub.select("doc_id", "text").collect():
-            sh = _stable_shingles(r.text or "", 5)
-            mixed = sh[None, :] * a[:, None] + b[:, None]
-            expect = mixed.min(axis=1).astype(np.int64).tolist()
-            assert got[r.doc_id] == expect, r.doc_id
+        got = {r.doc_id: r.sig for r in dedup.minhash_signatures(sub).collect()}
     finally:
-        np.seterr(**old)
+        spark.conf.set(key, prev)
+    rows = sub.collect()
+    assert len(got) == len(rows) == 40 + len(_MINHASH_EDGE_TEXTS)
+    expect = _minhash_reference([r.text for r in rows])
+    for r, e in zip(rows, expect):
+        assert got[r.doc_id] == e, r.doc_id
+
+
+@pytest.mark.parametrize("query", ["minhash_lsh", "dedup_components", "simhash"])
+def test_dedup_queries_fan_docs_out_per_core(spark, query):
+    """The dedup queries hash-partition the documents into one partition
+    per core: every extra Arrow task pays a fixed Python-worker cost."""
+    import re
+
+    import __spark_entry__ as E
+    from conftest import SF
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    mark = execs.last().executionId() if execs.size() else -1
+    E.queries()[query](spark, SF).collect()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList()
+    plans = [
+        e.physicalPlanDescription()
+        for e in map(execs.apply, range(execs.size())) if e.executionId() > mark
+    ]
+    fanouts = {
+        int(n) for p in plans
+        for n in re.findall(r"hashpartitioning\(doc_id#\d+L?, (\d+)\)", p)
+    }
+    assert fanouts == {sc.defaultParallelism}, fanouts
 
 
 def test_ivf_large_nlist_and_clustered_recall(spark):

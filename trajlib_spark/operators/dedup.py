@@ -47,20 +47,53 @@ def _shingle_bytes(text: str | None, k: int) -> bytes:
 
 def _fnv1a_windows(buf: bytes, k: int) -> np.ndarray:
     """Process-stable FNV-1a hash of every k-byte window of ``buf``,
-    vectorized across windows in k passes (python hash() of str is salted
-    per process — useless across executors)."""
-    arr = np.frombuffer(buf, dtype=np.uint8).astype(np.uint64)
+    vectorized across windows in k in-place passes (python hash() of str
+    is salted per process — useless across executors)."""
+    arr = np.frombuffer(buf, dtype=np.uint8)
     n = len(arr) - k + 1
     h = np.full(n, np.uint64(1469598103934665603), dtype=np.uint64)
     prime = np.uint64(1099511628211)
     for off in range(k):
-        h = (h ^ arr[off : off + n]) * prime
+        np.bitwise_xor(h, arr[off : off + n], out=h)
+        h *= prime
     return h
 
 
 def _stable_shingles(text: str, k: int) -> np.ndarray:
     """Sorted unique hashes of all k-byte shingle windows of ``text``."""
     return np.unique(_fnv1a_windows(_shingle_bytes(text, k), k))
+
+
+def _minhash_block(texts, a: np.ndarray, b: np.ndarray, k: int) -> np.ndarray:
+    """(len(a), len(texts)) uint64 MinHash signatures of a batch of texts:
+    row p is each document's min over its shingle hashes h of a[p]·h + b[p]
+    (wrapping), bit-identical to the per-document min over
+    ``_stable_shingles``.
+
+    All documents' bytes are hashed as one buffer. The k − 1 windows that
+    straddle each document boundary are dropped once, by index, which
+    leaves every document a contiguous run of its own windows (at least
+    one, since ``_shingle_bytes`` pads to k). Each permutation then is one
+    in-place pass over a single window-sized buffer and one
+    ``np.minimum.reduceat``, so the working set is two window-sized arrays
+    whatever the permutation count."""
+    bs = [_shingle_bytes(s, k) for s in texts]
+    sig = np.empty((len(a), len(bs)), dtype=np.uint64)
+    if not bs:
+        return sig
+    lens = np.fromiter(map(len, bs), dtype=np.int64, count=len(bs))
+    ends = np.cumsum(lens)
+    h = _fnv1a_windows(b"".join(bs), k)
+    straddle = (ends[:-1, None] - k + 1) + np.arange(k - 1)
+    h = np.delete(h, straddle.ravel())
+    seg = np.zeros(len(bs), dtype=np.int64)
+    seg[1:] = np.cumsum(lens - k + 1)[:-1]
+    buf = np.empty_like(h)
+    for p in range(len(a)):
+        np.multiply(h, a[p], out=buf)
+        buf += b[p]
+        sig[p] = np.minimum.reduceat(buf, seg)
+    return sig
 
 
 def minhash_signatures(
@@ -71,51 +104,17 @@ def minhash_signatures(
     id_col: str = "doc_id",
     seed: int = 1,
 ) -> DataFrame:
-    """(doc_id, sig array<long>) — multiply-shift row-wise min, vectorized
-    ACROSS the whole Arrow batch: all docs' bytes are concatenated once,
-    FNV-1a runs over every k-byte window in k passes, cross-document
-    windows are masked to u64::MAX, and each permutation's per-doc minima
-    come from one ``np.minimum.reduceat`` — no per-document Python loop or
+    """(doc_id, sig array<long>) — multiply-shift row-wise min, one
+    ``_minhash_block`` per Arrow batch: no per-document Python loop and no
     per-document (num_perm × n_shingles) allocation (that allocation
     dominated the sf0.1 bench at ~2 ms/doc)."""
     a, b = _minhash_params(num_perm, seed)
-    u64max = np.uint64(0xFFFFFFFFFFFFFFFF)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        old = np.seterr(over="ignore")  # uint64 wrap is the point
-        try:
-            for pdf in batches:
-                if not len(pdf):
-                    yield pd.DataFrame({id_col: pdf[id_col], "sig": []})
-                    continue
-                bs = [_shingle_bytes(s, shingle_k) for s in pdf[text]]
-                lens = np.array([len(x) for x in bs], dtype=np.int64)
-                h = _fnv1a_windows(b"".join(bs), shingle_k)
-                n_win = len(h)
-                starts = np.zeros(len(bs), dtype=np.int64)
-                starts[1:] = np.cumsum(lens)[:-1]
-                counts = lens - shingle_k + 1
-                invalid = np.zeros(n_win, dtype=bool)
-                for d in range(len(bs) - 1):  # cross-doc windows never count
-                    invalid[starts[d] + counts[d] : starts[d + 1]] = True
-                sig = np.empty((num_perm, len(bs)), dtype=np.uint64)
-                # permutations mixed in broadcast chunks (one fused pass per
-                # chunk instead of 64 full-array passes); chunk size bounds
-                # the (chunk × n_win) temporary to ~512 MB
-                chunk = max(1, min(8, int(512e6 // max(n_win * 8, 1))))
-                for p0 in range(0, num_perm, chunk):
-                    pa = a[p0 : p0 + chunk]
-                    pb = b[p0 : p0 + chunk]
-                    mixed = h[None, :] * pa[:, None] + pb[:, None]
-                    mixed[:, invalid] = u64max
-                    sig[p0 : p0 + chunk] = np.minimum.reduceat(
-                        mixed, starts, axis=1
-                    )
-                # store as signed 64-bit for the Spark LongType column
-                sigs = sig.T.astype(np.int64).tolist()
-                yield pd.DataFrame({id_col: pdf[id_col], "sig": sigs})
-        finally:
-            np.seterr(**old)
+        for pdf in batches:
+            sig = _minhash_block(pdf[text], a, b, shingle_k)
+            # stored as signed 64-bit for the Spark LongType column
+            yield pd.DataFrame({id_col: pdf[id_col], "sig": sig.view(np.int64).T.tolist()})
 
     return docs.select(id_col, text).mapInPandas(
         run, f"{id_col} long, sig array<long>"
@@ -130,7 +129,6 @@ def lsh_candidates(
     """Banded LSH: split each signature into ``bands`` bands, bucket-join on
     (band_idx, band hash), emit candidate pairs (i < j) once. The join key
     is a hash — tiny shuffle rows, the scale path."""
-    n_perm = None  # rows agree by construction
     banded = signatures.select(
         F.col(id_col),
         F.posexplode(

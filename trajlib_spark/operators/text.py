@@ -144,42 +144,69 @@ FP_BASE = 257
 FP_MOD = (1 << 61) - 1
 
 
-def fingerprint_py(text: str) -> int:
-    """Polynomial rolling hash of the whole text (base 257 mod 2^61-1)."""
-    h = 0
-    for b in text.encode("utf-8"):
+def _horner(h: int, data) -> int:
+    """Continue the rolling hash from state ``h`` over the bytes of ``data``."""
+    for b in data:
         h = (h * FP_BASE + b) % FP_MOD
     return h
 
 
+def fingerprint_py(text: str) -> int:
+    """Polynomial rolling hash of the whole text (base 257 mod 2^61-1)."""
+    return _horner(0, text.encode("utf-8"))
+
+
+# below this many unfinished documents a numpy step per byte position costs
+# more than finishing each document with the scalar loop
+FP_SCALAR_ROWS = 32
+
+
 def fingerprint_block(texts: list[str]) -> np.ndarray:
     """Vectorized ``fingerprint_py`` over a batch: the Horner chain is
-    sequential per document, so the DOC axis vectorizes — one masked
-    numpy step per byte position. Exactness: 257 = 2⁸ + 1 and M = 2⁶¹ − 1
-    is Mersenne, so with h = q·2⁵³ + r (q < 2⁸): h·2⁸ = q·2⁶¹ + r·2⁸ ≡
+    sequential per document, so the DOC axis vectorizes — one numpy step
+    per byte position. Exactness: 257 = 2⁸ + 1 and M = 2⁶¹ − 1 is
+    Mersenne, so with h = q·2⁵³ + r (q < 2⁸): h·2⁸ = q·2⁶¹ + r·2⁸ ≡
     q + r·2⁸ (mod M), and t = q + (r << 8) + h + b < 2⁶³ fits uint64;
     folding t's bit 61+ once (2⁶¹ ≡ 1) and subtracting M at most once
     lands exactly on t mod M — every per-byte state equals the scalar
     loop's ``(h·257 + b) % M`` by induction, so the hashes are
-    integer-identical."""
-    if not texts:
-        return np.empty(0, dtype=np.uint64)
+    integer-identical.
+
+    Documents are sorted longest first into one flat byte buffer, so the
+    documents still running at a position are a prefix of that order and
+    each step gathers only their bytes: memory and work are O(total
+    bytes), so one 10 MB document costs its own bytes, not rows × 10 MB.
+    Once fewer than ``FP_SCALAR_ROWS`` documents are left, each finishes
+    in the scalar loop."""
     bs = [(s or "").encode("utf-8") for s in texts]
-    lens = np.fromiter((len(b) for b in bs), dtype=np.int64, count=len(bs))
-    maxlen = int(lens.max())
-    buf = np.zeros((len(bs), maxlen), dtype=np.uint8)
-    for k, b in enumerate(bs):
-        buf[k, : len(b)] = np.frombuffer(b, dtype=np.uint8)
+    lens = np.fromiter(map(len, bs), dtype=np.int64, count=len(bs))
+    order = np.argsort(-lens, kind="stable")
+    lens = lens[order]
+    flat = np.frombuffer(b"".join(bs[i] for i in order), dtype=np.uint8)
+    starts = np.cumsum(lens) - lens
     M = np.uint64(FP_MOD)
     mask53 = np.uint64((1 << 53) - 1)
     h = np.zeros(len(bs), dtype=np.uint64)
-    for pos in range(maxlen):
-        t = (h >> np.uint64(53)) + ((h & mask53) << np.uint64(8)) + h \
-            + buf[:, pos].astype(np.uint64)
+    live = len(bs)  # documents with bytes left at ``pos``
+    pos = 0
+    while True:
+        while live and lens[live - 1] <= pos:
+            live -= 1
+        if live < FP_SCALAR_ROWS:
+            break
+        hl = h[:live]
+        t = (hl >> np.uint64(53)) + ((hl & mask53) << np.uint64(8)) + hl
+        t += flat[starts[:live] + pos]
         t = (t >> np.uint64(61)) + (t & M)
-        t = np.where(t >= M, t - M, t)
-        h = np.where(lens > pos, t, h)
-    return h
+        np.subtract(t, M, out=t, where=t >= M)
+        h[:live] = t
+        pos += 1
+    view = memoryview(flat)
+    for r in range(live):
+        h[r] = _horner(int(h[r]), view[starts[r] + pos : starts[r] + lens[r]])
+    out = np.empty_like(h)
+    out[order] = h
+    return out
 
 
 def with_fingerprint(docs: DataFrame, text: str = "text") -> DataFrame:
