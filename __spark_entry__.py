@@ -1165,7 +1165,10 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup GROUPS from the verified MinHash pair table: connected
     components by min-label propagation (dedup.connected_components) —
     the stage that turns pairwise near-dup evidence into keep/drop
-    decisions (keeper = component id = smallest doc id)."""
+    decisions (keeper = component id = smallest doc id).  The verified
+    pair graph is small (a few thousand edges at the benchmark scales),
+    so it fits the session's broadcast budget and the rounds run on the
+    driver after one bounded collect; the verify above it runs once."""
     docs = _docs_fanned(spark, sf_dir)
     sigs = dedup_ops.minhash_signatures(docs)
     cands = dedup_ops.lsh_candidates(sigs)

@@ -330,11 +330,14 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
         # pair table (~250k pairs at this scale, tight size-10 clusters).
         # Materialize the pair table FIRST (untimed — its cost is the
         # minhash stage already measured above) so the CC timing is the
-        # components stage alone, not a pipeline recompute.
+        # components stage alone, not a pipeline recompute. The graph fits
+        # the broadcast budget, so the path recorded is the driver's.
         pairs = verified.select("i", "j").localCheckpoint(eager=True)
+        cc_stats: dict = {}
         with _pilot_stage(out, "dedup_components"):
-            comp = dedup.connected_components(pairs)
+            comp = dedup.connected_components(pairs, stats=cc_stats)
             out["dedup_component_nodes"] = _run_and_count(comp)
+        out["dedup_components_path"] = cc_stats.get("path")
         spark.catalog.clearCache()
 
         # 3) measure_topk (exact grid-pruned Hausdorff) over 10× the
@@ -422,7 +425,9 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
         # a 100k-node chain, diameter 99 999 — plain propagation would
         # need one round per hop; pointer jumping
         # (dedup.connected_components jump=True) must close it in
-        # ~log2(n) rounds. Rounds and wall time recorded.
+        # ~log2(n) rounds. Rounds, path and wall time recorded: 200k
+        # directed edge rows fit the 64 MB broadcast budget, so the rounds
+        # run on the driver (dedup._components_local).
         chain = spark.range(99_999).select(
             F.col("id").alias("i"), (F.col("id") + 1).alias("j")
         ).repartition(cpus)
@@ -431,6 +436,7 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
             comp = dedup.connected_components(chain, stats=cc_stats)
             out["dedup_components_chain_nodes"] = _run_and_count(comp)
         out["dedup_components_chain_rounds"] = cc_stats.get("rounds")
+        out["dedup_components_chain_path"] = cc_stats.get("path")
         spark.catalog.clearCache()
         out["peak_jvm_rss_gb"] = _jvm_peak_rss_gb()
     return out
@@ -599,6 +605,7 @@ def sf10_dedup_pilot(sf_dir: str, cpus: int) -> dict:
                 comp = dedup.connected_components(chain, stats=cc_stats)
                 out["components_chain_nodes"], _ = _run_and_count_big(comp)
             out["components_chain_rounds"] = cc_stats.get("rounds")
+            out["components_chain_path"] = cc_stats.get("path")
             out["peak_jvm_rss_gb"] = _jvm_peak_rss_gb()
         return out
 

@@ -365,21 +365,108 @@ def test_ann_ivf_recall_clustered_golden():
         assert df["recall_r"].mean() >= 0.9
 
 
-def test_connected_components_chain_and_islands(spark):
+@pytest.fixture(params=["local", "distributed"])
+def cc_path(request, spark):
+    """Run a connected-components case on each path: the driver-side solve
+    (the session's 64 MB broadcast budget holds every test graph) and the
+    distributed rounds (broadcast budget disabled, restored afterwards).
+    Yields the path name each case asserts ran."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    if request.param == "distributed":
+        spark.conf.set(key, "-1")
+    try:
+        yield request.param
+    finally:
+        spark.conf.set(key, saved)
+
+
+def _components(pairs, path) -> dict:
+    stats: dict = {}
+    got = {r.node: r.component
+           for r in dedup.connected_components(pairs, stats=stats).collect()}
+    assert stats["path"] == path, stats
+    return got
+
+
+def test_connected_components_chain_and_islands(spark, cc_path):
     """Min-label propagation: a 4-node chain (diameter 3 — needs real
     multi-round propagation), a 2-node island, and a triangle all resolve
     to their smallest member id."""
-    from trajlib_spark.operators import dedup
-
     pairs = spark.createDataFrame(
         [(10, 11), (11, 12), (12, 13),     # chain 10-11-12-13
          (20, 21),                          # island
          (30, 31), (31, 32), (30, 32)],    # triangle
         "i long, j long",
     )
-    got = {r.node: r.component for r in dedup.connected_components(pairs).collect()}
-    assert got == {10: 10, 11: 10, 12: 10, 13: 10,
-                   20: 20, 21: 20, 30: 30, 31: 30, 32: 30}
+    assert _components(pairs, cc_path) == {10: 10, 11: 10, 12: 10, 13: 10,
+                                           20: 20, 21: 20, 30: 30, 31: 30, 32: 30}
+
+
+def test_connected_components_null_endpoint_is_no_edge(spark, cc_path):
+    """A pair with a null endpoint names no node (the verify's inner-join
+    rule): it must not put a NULL node into a component."""
+    pairs = spark.createDataFrame([(1, None), (1, 2), (None, 7)], "i long, j long")
+    assert _components(pairs, cc_path) == {1: 1, 2: 1}
+
+
+def test_connected_components_ids_near_int64_max(spark, cc_path):
+    """Hash-derived 64-bit ids: the label-sum convergence certificate must
+    not overflow (a BIGINT sum of three ids near 2⁶² is an ANSI error)."""
+    big = 2**62
+    pairs = spark.createDataFrame(
+        [(big + 1, big + 2), (big + 2, big + 3), (2**63 - 1, big)], "i long, j long"
+    )
+    assert _components(pairs, cc_path) == {
+        big + 1: big + 1, big + 2: big + 1, big + 3: big + 1,
+        big: big, 2**63 - 1: big,
+    }
+
+
+def test_connected_components_empty_and_int_ids(spark, cc_path):
+    """No edges → no rows, in one round; int ids stay int on both paths."""
+    for rows, expect, rounds in (
+        ([], {}, 1),
+        ([(5, 3), (3, 4), (9, 8)], {3: 3, 4: 3, 5: 3, 8: 8, 9: 8}, 2),
+    ):
+        stats: dict = {}
+        out = dedup.connected_components(
+            spark.createDataFrame(rows, "i int, j int"), stats=stats
+        )
+        assert out.schema.simpleString() == "struct<node:int,component:int>"
+        assert {r.node: r.component for r in out.collect()} == expect
+        assert stats == {"rounds": rounds, "path": cc_path}
+
+
+def test_connected_components_rejects_non_integer_ids(spark):
+    """The convergence certificate is an exact sum only over integer ids:
+    other id types are refused with an error naming the columns (string
+    ids used to fail inside a task on the certificate's cast)."""
+    pairs = spark.createDataFrame([("b", "a")], "i string, j string")
+    with pytest.raises(TypeError, match="'i'/'j' are string"):
+        dedup.connected_components(pairs)
+
+
+def test_connected_components_local_path_job_count(spark):
+    """The driver-side solve costs the edge table's build and ONE bounded
+    collect, not a localCheckpoint and a sum per round: ≤ 3 Spark jobs —
+    the distinct's shuffle-map stage, the persisted table's cache stage
+    (adaptive execution materializes a cached relation as its own job) and
+    the collect.  The distributed rounds on the same graph run ~36."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(k, k + 1) for k in range(30)] + [(100, 101)], "i long, j long"
+    )
+    sc.setJobGroup("cc_local_jobs", "connected_components local path")
+    try:
+        stats: dict = {}
+        dedup.connected_components(pairs, stats=stats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats["path"] == "local", stats
+    jobs = sc.statusTracker().getJobIdsForGroup("cc_local_jobs")
+    assert 0 < len(jobs) <= 3, jobs
 
 
 def test_trigram_lm_preagg_and_two_scan_mode(spark):
@@ -411,15 +498,11 @@ def test_trigram_lm_preagg_and_two_scan_mode(spark):
         assert "Aggregate" in plan[ji:], plan
 
 
-def test_connected_components_long_chain_log_rounds(spark):
+def test_connected_components_long_chain_log_rounds(spark, cc_path):
     """Pointer jumping must resolve a path-shaped component in ~log₂
     rounds: a 200-node chain (diameter 199) converges well inside the
     default max_iter=25, where plain propagation would need 199 rounds
     and now RAISES instead of returning partial labels."""
-    import pytest
-
-    from trajlib_spark.operators import dedup
-
     n = 200
     pairs = spark.createDataFrame(
         [(k, k + 1) for k in range(n - 1)], "i long, j long"
@@ -430,12 +513,15 @@ def test_connected_components_long_chain_log_rounds(spark):
         for r in dedup.connected_components(pairs, stats=stats).collect()
     }
     assert got == {k: 0 for k in range(n)}
+    assert stats["path"] == cc_path, stats
     # horizon doubles per round: ⌈log₂(199)⌉ + fixpoint-confirm + slack
     assert stats["rounds"] <= 12, stats
     # plain propagation on the same chain cannot finish in 10 rounds and
     # must refuse to return a wrong labeling
+    stats = {}
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, max_iter=10, jump=False)
+        dedup.connected_components(pairs, max_iter=10, jump=False, stats=stats)
+    assert stats == {"rounds": 10, "path": cc_path}
 
 
 def test_vocab_topk_order_and_ties(spark):
@@ -449,13 +535,11 @@ def test_vocab_topk_order_and_ties(spark):
     assert got == [("a", 3), ("b", 3), ("c", 1)]
 
 
-def test_connected_components_random_graphs_match_union_find(spark):
-    """Property check: on seeded random graphs the distributed min-label
-    propagation equals a plain python union-find (independent algorithm,
+def test_connected_components_random_graphs_match_union_find(spark, cc_path):
+    """Property check: on seeded random graphs min-label propagation, on
+    either path, equals a plain python union-find (independent algorithm,
     not a replica)."""
     import random
-
-    from trajlib_spark.operators import dedup
 
     for seed in (3, 17, 99):
         rng = random.Random(seed)
@@ -478,11 +562,7 @@ def test_connected_components_random_graphs_match_union_find(spark):
         touched = {v for e in edges for v in e}
         expect = {v: find(v) for v in touched}
         pairs = spark.createDataFrame(edges, "i long, j long")
-        got = {
-            r.node: r.component
-            for r in dedup.connected_components(pairs).collect()
-        }
-        assert got == expect, seed
+        assert _components(pairs, cc_path) == expect, seed
 
 
 def test_tfidf_top_terms_semantics(spark):

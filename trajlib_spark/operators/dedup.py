@@ -12,6 +12,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -465,57 +466,58 @@ def embedding_near_dups(
 
 # --- near-dup components ------------------------------------------------------
 
-def connected_components(
-    pairs: DataFrame, i: str = "i", j: str = "j", max_iter: int = 25,
-    jump: bool = True, stats: dict | None = None,
-) -> DataFrame:
-    """(node, component) for every node appearing in ``pairs``: component
-    = the smallest node id reachable over the undirected pair edges — the
-    stage that turns verified near-dup PAIRS into dedup GROUPS (keep
-    component == node, drop the rest).
+_INT_WIDTH = {"byte": 1, "short": 2, "integer": 4, "long": 8}
 
-    Min-label propagation to fixpoint with POINTER JUMPING: each round
-    (1) takes the min over each node's neighbors' labels (one shuffle),
-    then (2) replaces every label by its label's label (one self-join) —
-    the path-compression half of large-star/small-star.  Propagation
-    alone needs diameter rounds (a 100 k-node chain would need 100 k and
-    the r4 code would have returned NON-converged labels after max_iter);
-    with jumping the label horizon doubles per round, so rounds ≈
-    log₂(diameter) and max_iter=25 covers diameters up to ~2²⁵.  Dense
-    near-dup clusters (diameter 1-3) still converge in 2-3 rounds and
-    only pay one extra hash join per round.
 
-    Labels only decrease, so the global label sum is a convergence
-    certificate — one scalar aggregate per round, no row-level diff join;
-    exhausting max_iter without fixpoint RAISES instead of returning a
-    partial labeling.  Each round's result is an EAGER localCheckpoint:
-    the round's plan references the previous labels several times, so
-    without lineage truncation the logical plan doubles per round
-    (2^rounds nodes — the property test OOM'd the driver on a
-    diameter-15 random graph before this).  ``stats``, when given, gets
-    {"rounds": n} for pilot instrumentation."""
-    # mirror each edge via explode, not union: the union's two branches
-    # each re-ran the whole upstream pipeline (e.g. the LSH verify) in one
-    # job — one scan emits both directions (round 9, guide §2.4)
-    und = (
-        pairs.select(
-            F.explode(F.array(
-                F.struct(F.col(i).alias("a"), F.col(j).alias("b")),
-                F.struct(F.col(j).alias("a"), F.col(i).alias("b")),
-            )).alias("_e")
-        )
-        .select("_e.a", "_e.b")
-        .distinct()
-        .persist()
-    )
+def _components_local(
+    a: np.ndarray, b: np.ndarray, max_iter: int, jump: bool,
+) -> tuple[np.ndarray, np.ndarray, int, bool]:
+    """The distributed rounds of ``connected_components`` replayed on the
+    collected undirected edge table (a → b, both directions present).
+    Labels are positions in the sorted node array — an order-preserving
+    relabelling, so every round's minima, the jumps and hence the round
+    count equal the distributed run's, and the label-sum certificate is an
+    exact int64 sum of positions whatever the ids' magnitude.  Returns
+    (nodes, component ids, rounds, converged)."""
+    nodes, ai = np.unique(a, return_inverse=True)
+    order = np.argsort(ai, kind="stable")
+    nbr = np.searchsorted(nodes, b)[order]
+    # every node is some edge's a (the table is symmetric), so each
+    # position opens exactly one non-empty segment of nbr
+    starts = np.flatnonzero(np.diff(ai[order], prepend=-1))
+    label = np.arange(len(nodes))
+    cur = int(label.sum())
+    for rounds in range(1, max_iter + 1):
+        cand = label
+        if len(nodes):
+            cand = np.minimum(label, np.minimum.reduceat(label[nbr], starts))
+        if jump:
+            cand = np.minimum(cand, cand[cand])
+        label = cand
+        new = int(label.sum())
+        if new == cur:
+            return nodes, nodes[label], rounds, True
+        cur = new
+    return nodes, nodes[label], max_iter, False
+
+
+def _components_distributed(
+    und: DataFrame, max_iter: int, jump: bool,
+) -> tuple[DataFrame, int, bool]:
+    """Min-label rounds over the persisted undirected edge table; returns
+    (node, label) frame, rounds, converged."""
     labels = (
         und.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    cur = labels.agg(F.sum("label")).collect()[0][0]
-    converged = False
+
+    def label_sum(df: DataFrame):
+        # decimal: a BIGINT sum of 64-bit ids overflows (an ANSI error)
+        return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
+
+    cur = label_sum(labels)
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
@@ -544,20 +546,100 @@ def connected_components(
                 F.least(F.col("label"), F.coalesce("_l2", "label")).alias("label"),
             )
         new_labels = cand.localCheckpoint(eager=True)
-        new = new_labels.agg(F.sum("label")).collect()[0][0]
+        new = label_sum(new_labels)
         labels.unpersist()  # checkpoint blocks of the superseded round
         if pre_jump is not None:
             pre_jump.unpersist()  # the intermediate pre-jump checkpoint
         labels = new_labels
         if new == cur:
-            converged = True
-            break
+            return labels, rounds, True
         cur = new
+    return labels, rounds, False
+
+
+def connected_components(
+    pairs: DataFrame, i: str = "i", j: str = "j", max_iter: int = 25,
+    jump: bool = True, stats: dict | None = None,
+) -> DataFrame:
+    """(node, component) for every node appearing in ``pairs``: component
+    = the smallest node id reachable over the undirected pair edges — the
+    stage that turns verified near-dup PAIRS into dedup GROUPS (keep
+    component == node, drop the rest).  Ids are integers (else TypeError);
+    a pair with a null endpoint is no edge (the verify's inner-join rule:
+    an id with no row gives no row).
+
+    Min-label propagation to fixpoint with POINTER JUMPING: each round
+    (1) takes the min over each node's neighbors' labels (one shuffle),
+    then (2) replaces every label by its label's label (one self-join) —
+    the path-compression half of large-star/small-star.  Propagation
+    alone needs diameter rounds; with jumping the label horizon doubles
+    per round, so rounds ≈ log₂(diameter) and max_iter=25 covers
+    diameters up to ~2²⁵.  Dense near-dup clusters (diameter 1-3)
+    converge in 2-3 rounds.
+
+    Labels only decrease, so the global label sum is a convergence
+    certificate — one scalar aggregate per round, no row-level diff join;
+    exhausting max_iter without fixpoint RAISES instead of returning a
+    partial labeling.
+
+    Where the rounds run: the undirected edge table is built and
+    persisted once, then read with ONE collect bounded by the session's
+    broadcast budget — ``autoBroadcastJoinThreshold`` bytes over an edge
+    row's two fixed-width ids, the size Catalyst already lets the driver
+    hold for a broadcast.  A graph within it runs the same rounds in
+    numpy on the driver (``_components_local``) and comes back as a local
+    DataFrame of the input's id type; a larger one — or any graph when
+    the threshold is -1 — runs them distributed, each round an EAGER
+    localCheckpoint (without lineage truncation the plan doubles per
+    round) over the same persisted table, so the upstream pipeline runs
+    once on either path.  ``stats``, when given, gets
+    {"rounds": n, "path": "local" | "distributed"}."""
+    # mirror each edge via explode, not union: the union's two branches
+    # each re-ran the whole upstream pipeline (e.g. the LSH verify) in one
+    # job — one scan emits both directions (round 9, guide §2.4)
+    und = (
+        pairs.where(F.col(i).isNotNull() & F.col(j).isNotNull())
+        .select(
+            F.explode(F.array(
+                F.struct(F.col(i).alias("a"), F.col(j).alias("b")),
+                F.struct(F.col(j).alias("a"), F.col(i).alias("b")),
+            )).alias("_e")
+        )
+        .select("_e.a", "_e.b")
+        .distinct()
+    )
+    id_type = und.schema["a"].dataType
+    if id_type.typeName() not in _INT_WIDTH:
+        # the certificate is an exact decimal sum only over integers
+        raise TypeError(
+            f"connected_components needs integer ids; {i!r}/{j!r} are "
+            f"{id_type.simpleString()}"
+        )
+    und.persist()
+    # the driver may hold what Catalyst lets it broadcast: the session's
+    # budget in bytes (read through SQLConf, so "10m" parses; ≤ 0 turns
+    # the local path off) over an edge row's two ids, kept a JVM int
+    spark = pairs.sparkSession
+    budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    cap = min(max(budget, 0) // (2 * _INT_WIDTH[id_type.typeName()]), 2**31 - 2)
+    edges = und.limit(cap + 1).toArrow() if cap else None
+    if edges is not None and edges.num_rows <= cap:
+        nodes, comp, rounds, converged = _components_local(
+            edges.column("a").to_numpy(), edges.column("b").to_numpy(),
+            max_iter, jump,
+        )
+        result = spark.createDataFrame(pa.table({"node": nodes, "component": comp}))
+        path = "local"
+    else:
+        labels, rounds, converged = _components_distributed(und, max_iter, jump)
+        result = labels.select("node", F.col("label").alias("component"))
+        path = "distributed"
     und.unpersist()
     if stats is not None:
         stats["rounds"] = rounds
+        stats["path"] = path
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
-    return labels.select("node", F.col("label").alias("component"))
+    return result
