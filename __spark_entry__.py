@@ -149,10 +149,12 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _docs_fanned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents table hash-partitioned on doc_id, one partition per
     core. It ships as ONE parquet file at test scale → one scan task; the
-    fan-out lets the Arrow signature/verify stages use every core without
-    paying a Python task's fixed cost more than once per core (at 100 TB
-    the input arrives pre-split and this repartition is the storage
-    layer's job)."""
+    fan-out lets the Arrow signature/verify stages use every core. More
+    partitions than cores only add Python tasks, each with a fixed cost
+    before its UDF body runs: ~0.04 CPU-s in a reused worker, ~0.2 in a
+    worker's first task, which still re-reads every zip directory on the
+    path (see trajlib_spark/_pyworker.py). At 100 TB the input arrives
+    pre-split and this repartition is the storage layer's job."""
     return _docs(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )

@@ -532,3 +532,41 @@ def test_measure_topk_pruned_localized_early_exit(spark, measure):
         "query_id", "neighbor_id", "rank").collect()
     assert got == expect
     assert not _plan_has_cross_join(pruned)
+
+
+@pytest.fixture(params=["true", "false"])
+def ansi(request, spark):
+    """Run a case with ANSI mode on and off, restored afterwards."""
+    key = "spark.sql.ansi.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, request.param)
+    try:
+        yield request.param
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_symmetrize_normalize_empty_table(spark, ansi):
+    """No distances → no rows, with the schema a non-empty table gets."""
+    schema = "i long, j long, dist double"
+    full = similarity.symmetrize_normalize(spark.createDataFrame([(1, 2, 4.0)], schema))
+    empty = similarity.symmetrize_normalize(spark.createDataFrame([], schema))
+    assert empty.schema == full.schema
+    assert empty.collect() == []
+
+
+def test_symmetrize_normalize_zero_max_matches_numpy(spark, ansi):
+    """All distances 0: the reference's S / S.max() is 0/0 = NaN in numpy,
+    not an ANSI DIVIDE_BY_ZERO or a NULL."""
+    rows = [(1, 2, 0.0), (1, 3, 0.0), (2, 3, 0.0)]
+    out = similarity.symmetrize_normalize(
+        spark.createDataFrame(rows, "i long, j long, dist double")
+    )
+    got = sorted((r.i, r.j, r.dist) for r in out.collect())
+    S = np.array([d for _, _, d in rows] * 2)
+    with np.errstate(invalid="ignore"):
+        expect = S / S.max()
+    assert [(i, j) for i, j, _ in got] == sorted(
+        [(i, j) for i, j, _ in rows] + [(j, i) for i, j, _ in rows]
+    )
+    np.testing.assert_array_equal([d for _, _, d in got], expect)

@@ -136,6 +136,32 @@ def test_jaccard_verify_slim_path_matches_join_path(spark):
     assert not any(99 in (i, j) for i, j, _ in rows_s)  # missing ids dropped
 
 
+def test_jaccard_verify_gate_on_text_bytes(spark):
+    """The slim path collects the texts only while they fit the broadcast
+    budget in bytes (at the budget: slim; one byte under: join, the
+    threshold restored afterwards). Both paths give the same rows."""
+    d = _docs_with_dups(spark)
+    cands = spark.createDataFrame(  # local rows: the only join is the attach's
+        dedup.lsh_candidates(dedup.minhash_signatures(d, num_perm=64), bands=16).collect(),
+        "i long, j long",
+    )
+    nbytes = d.agg(F.sum(F.octet_length("text"))).first()[0]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    got = {}
+    for budget, path in ((saved, "slim"), (str(nbytes), "slim"), (str(nbytes - 1), "join")):
+        spark.conf.set(key, budget)
+        try:
+            out = dedup.ngram_jaccard_verify(d, cands, threshold=0.0)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            got[budget] = sorted(map(tuple, out.collect()))
+        finally:
+            spark.conf.set(key, saved)
+        assert ("Join" in plan) == (path == "join"), (budget, plan)
+    rows = got[saved]
+    assert rows and all(v == rows for v in got.values()), got
+
+
 @pytest.mark.parametrize("collect_max_docs", [100_000, 0, -1])
 def test_jaccard_verify_empty_docs(spark, collect_max_docs):
     # candidates against an empty doc table give no rows on both paths

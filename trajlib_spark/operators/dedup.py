@@ -13,8 +13,17 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+def _broadcast_budget(spark: SparkSession) -> int:
+    """Bytes the driver may collect for a driver-side path: the session's
+    ``autoBroadcastJoinThreshold``, the size Catalyst already lets the
+    driver hold for a broadcast. Read through the JVM SQLConf, so "10m"
+    parses; -1 (broadcast off) reads as 0."""
+    return max(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold(), 0)
+
 
 # --- exact dedup -------------------------------------------------------------
 
@@ -213,23 +222,30 @@ def ngram_jaccard_verify(
     with jaccard >= threshold.
 
     When the doc table is small enough to broadcast anyway
-    (≤ ``collect_max_docs`` rows — the same boundedness Catalyst's
-    broadcast join already assumed for the text attach), the texts ship
-    ONCE per executor as a broadcast dict and the kernel reads SLIM
-    (i, j) rows: the old fast path duplicated both documents onto every
+    (≤ ``collect_max_docs`` rows whose texts fit the session's broadcast
+    budget, ``autoBroadcastJoinThreshold`` bytes), the texts ship ONCE
+    per executor as a broadcast dict and the kernel reads SLIM (i, j)
+    rows: the old fast path duplicated both documents onto every
     candidate pair crossing the Arrow boundary (~13 GB serialized at
     sf1.0 for a 180 MB decision). Above the gate the proven join path
     runs unchanged (at corpus scale the attach degrades to a shuffle
-    join; a driver collect would not degrade, so it stays gated). Both
-    paths score with the same ``_jaccard_scores``; they differ only in
-    where a doc's text comes from."""
-    sc = docs.sparkSession.sparkContext
+    join; a driver collect would not degrade, so it stays gated). One
+    aggregate of the row count and the text bytes picks the path, so
+    the driver never fetches a text it will not use. Both paths score
+    with the same ``_jaccard_scores``; they differ only in where a doc's
+    text comes from."""
+    spark = docs.sparkSession
+    sc = spark.sparkContext
     slim = candidates.repartition(sc.defaultParallelism, "i", "j")
-    # one bounded job decides the gate AND fetches the texts: the docs
-    # lineage runs once, and never collects more than collect_max_docs + 1
-    rows = docs.select(id_col, text).limit(max(collect_max_docs + 1, 0)).collect()
-    if len(rows) <= collect_max_docs:
-        bmap = sc.broadcast({r[0]: r[1] for r in rows})
+    # the gate's aggregate is observed over a no-op write: one job with no
+    # exchange (a global agg() would add a shuffle stage, a job of its own)
+    gate = Observation()
+    docs.select(F.octet_length(F.col(text)).alias("b")).observe(
+        gate, F.count(F.lit(1)).alias("n"), F.sum("b").alias("bytes")
+    ).write.format("noop").mode("overwrite").save()
+    got = gate.get
+    if got["n"] <= collect_max_docs and (got["bytes"] or 0) <= _broadcast_budget(spark):
+        bmap = sc.broadcast({r[0]: r[1] for r in docs.select(id_col, text).collect()})
 
         def run_slim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             tm = bmap.value
@@ -617,11 +633,9 @@ def connected_components(
         )
     und.persist()
     # the driver may hold what Catalyst lets it broadcast: the session's
-    # budget in bytes (read through SQLConf, so "10m" parses; ≤ 0 turns
-    # the local path off) over an edge row's two ids, kept a JVM int
+    # budget over an edge row's two ids, kept a JVM int
     spark = pairs.sparkSession
-    budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    cap = min(max(budget, 0) // (2 * _INT_WIDTH[id_type.typeName()]), 2**31 - 2)
+    cap = min(_broadcast_budget(spark) // (2 * _INT_WIDTH[id_type.typeName()]), 2**31 - 2)
     edges = und.limit(cap + 1).toArrow() if cap else None
     if edges is not None and edges.num_rows <= cap:
         nodes, comp, rounds, converged = _components_local(

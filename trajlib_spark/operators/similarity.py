@@ -24,6 +24,7 @@ population σ, hence stddev_pop) before LCSS/EDR with ε = 0.25
 
 from __future__ import annotations
 
+import math
 from typing import Callable, Iterator
 
 import numpy as np
@@ -653,7 +654,9 @@ def cell_id_expr(ix: str, iy: str, grid) -> F.Column:
 def symmetrize_normalize(dists: DataFrame) -> DataFrame:
     """(S + Sᵀ) / max — union the mirrored pairs and scale by the global
     max distance (/root/reference/fedtraj/model/trainer/
-    simi_trainer.py:197-200; max over splits preprocessing_porto.py:219-221)."""
+    simi_trainer.py:197-200; max over splits preprocessing_porto.py:219-221).
+    An empty table gives an empty table; a zero max gives numpy's
+    ``S / 0.0`` (NaN for 0/0), with ANSI mode on or off."""
     # mirror via explode, not union — the union's branches each re-ran the
     # upstream distance pipeline in one job (round 9, guide §2.4)
     both = (
@@ -667,6 +670,12 @@ def symmetrize_normalize(dists: DataFrame) -> DataFrame:
         .persist()
     )  # the max agg and the normalized output share one pass
     mx = both.agg(F.max("dist")).collect()[0][0]
+    if mx is None:  # no rows
+        return both.withColumn("dist", F.col("dist").cast("double"))
+    if mx == 0:
+        # x / 0.0 as numpy divides: NaN for 0 (0·inf), -inf below; Spark's
+        # `/` raises DIVIDE_BY_ZERO under ANSI and gives NULL without it
+        return both.withColumn("dist", F.col("dist") * F.lit(math.inf))
     return both.withColumn("dist", F.col("dist") / F.lit(float(mx)))
 
 
