@@ -128,6 +128,128 @@ def test_store_uncommitted_write_is_invisible(spark):
         shutil.rmtree(root)
 
 
+def _job_count(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _store_frames(spark):
+    return {
+        "plain": (spark.range(1000).repartition(4), None),
+        "partitioned": (
+            spark.range(1000).withColumn("_k", F.col("id") % 3).repartition(4), ["_k"]
+        ),
+        "empty": (spark.range(0), None),
+    }
+
+
+@pytest.mark.parametrize("kind", ["plain", "partitioned"])
+def test_store_commit_runs_only_its_data_write(spark, tmp_path, kind):
+    from trajlib_spark.sources.store import TableStore
+
+    df, partition_by = _store_frames(spark)[kind]
+    store = TableStore(str(tmp_path / "store"))
+    save = _job_count(spark, lambda: store.save(df, "t", partition_by=partition_by))
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    plain = _job_count(spark, lambda: writer.parquet(str(tmp_path / "plain")))
+    assert save == plain
+
+
+def test_store_save_leaves_no_persisted_rdd(spark, tmp_path):
+    from trajlib_spark.sources.store import TableStore
+
+    store = TableStore(str(tmp_path / "store"))
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    store.save(spark.range(100).repartition(4), "t")
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+@pytest.mark.parametrize("kind", ["plain", "partitioned", "empty"])
+def test_store_lineage_matches_written_files(spark, tmp_path, kind):
+    """One lineage row per non-empty file Spark reads back, in path order,
+    with that file's row count; the manifest holds their sum."""
+    import json
+    import os
+
+    from trajlib_spark.sources.store import TableStore
+
+    df, partition_by = _store_frames(spark)[kind]
+    store = TableStore(str(tmp_path / "store"))
+    store.save(df, kind, partition_by=partition_by)
+
+    per_file = (
+        spark.read.parquet(str(tmp_path / "store" / kind / "data"))
+        .groupBy(F.input_file_name().alias("f")).count().orderBy("f").collect()
+    )
+    want = [r["count"] for r in per_file]
+    lin = store.lineage(spark).where(F.col("stage") == kind).orderBy("partition_id")
+    rows = lin.collect()
+    assert [r["partition_id"] for r in rows] == list(range(len(want)))
+    assert [r["row_count"] for r in rows] == want
+    assert all(r["committed_at"] is not None for r in rows)
+    with open(os.path.join(store.root, kind, "_manifest.json")) as f:
+        assert json.load(f)["row_count"] == sum(want) == df.count()
+    if kind == "empty":
+        assert want == [] and store.lineage(spark).count() == 0
+    else:
+        assert len(want) > 1
+
+
+def test_store_lineage_reads_files_of_both_writers(spark, tmp_path):
+    """A _lineage dir holding a file written through Spark (bigint
+    partition_id, int wall_ms: the types of the Spark-job store) and one the
+    store writes with pyarrow reads in one call with the declared schema."""
+    from pyspark.sql.types import StructType
+
+    from trajlib_spark.sources.store import LINEAGE_SCHEMA, TableStore
+
+    root = str(tmp_path / "store")
+    spark.range(2).select(
+        F.lit("old").alias("run_id"), F.lit("s0").alias("stage"),
+        F.col("id").alias("partition_id"),
+        F.array(F.lit("in.parquet")).alias("input_files"),
+        F.lit(7).cast("long").alias("row_count"), F.lit(12).alias("wall_ms"),
+        F.current_timestamp().alias("committed_at"),
+    ).write.mode("append").parquet(f"{root}/_lineage")
+    store = TableStore(root)
+    store.save(spark.range(0, 5, 1, 1), "s1")
+
+    lin = store.lineage(spark)
+    assert lin.schema == StructType.fromDDL(LINEAGE_SCHEMA)
+    rows = lin.collect()
+    got = sorted((r.stage, r.partition_id, r.row_count, r.wall_ms) for r in rows)
+    assert got[:2] == [("s0", 0, 7, 12), ("s0", 1, 7, 12)]
+    assert [g[:3] for g in got[2:]] == [("s1", 0, 5)]
+    assert all(r.committed_at is not None for r in rows)
+
+
+def test_store_lineage_skips_stray_temp_file(spark, tmp_path):
+    """A lineage file whose publish never finished keeps its hidden
+    ``.part-*`` name; Spark and pyarrow readers both skip it."""
+    import pyarrow.parquet as pq
+
+    from trajlib_spark.sources.store import TableStore
+
+    store = TableStore(str(tmp_path / "store"))
+    store.save(spark.range(10).repartition(2), "t")
+    ldir = tmp_path / "store" / "_lineage"
+    (ldir / ".part-deadbeef.parquet").write_bytes(b"PAR1 torn write")
+    assert store.lineage(spark).count() == 2
+    assert pq.read_table(str(ldir)).num_rows == 2
+
+
 def test_streaming_sessionizer(spark, tmp_path):
     import pandas as pd
 

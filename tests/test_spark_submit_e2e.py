@@ -40,6 +40,26 @@ def _submit(cwd: str, store: str, resume: bool = True) -> dict:
     return json.loads(line)
 
 
+def _check_lineage(store: str, stages: dict):
+    """Committed snapshots + per-partition lineage rows exist in the store
+    (north rule: partition_id / input_files / row_count per stage): each
+    stage's partition ids are dense from 0 and its row counts sum to its
+    manifest's. Read with pyarrow: no Spark session in this test process."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(os.path.join(store, "_lineage")).to_pandas()
+    assert {"stage", "partition_id", "row_count"} <= set(tbl.columns)
+    assert set(stages) <= set(tbl["stage"]), sorted(set(tbl["stage"]))
+    assert (tbl["row_count"] > 0).all() and len(tbl) >= len(stages)
+    for table in stages:
+        with open(os.path.join(store, table, "_manifest.json")) as f:
+            manifest = json.load(f)
+        rows = tbl[tbl["stage"] == table]
+        assert sorted(rows["partition_id"]) == list(range(len(rows))), table
+        assert rows["row_count"].sum() == manifest["row_count"], table
+    return tbl.sort_values(["stage", "partition_id"], ignore_index=True)
+
+
 @pytest.mark.skipif(
     not os.path.exists(SPARK_SUBMIT), reason="spark-submit not on PATH"
 )
@@ -56,19 +76,9 @@ def test_spark_submit_py_files_roundtrip(tmp_path):
     assert stages and all(v == "computed" for v in stages.values()), stages
     assert "tiles" in stages
 
-    # committed snapshots + per-partition lineage rows exist in the store
-    # (north rule: partition_id / input_files / row_count per stage);
-    # read with pyarrow — no Spark session in this test process
-    import pyarrow.parquet as pq
+    lineage = _check_lineage(store, stages)
 
-    ldir = os.path.join(store, "_lineage")
-    tbl = pq.read_table(ldir).to_pandas()
-    assert {"stage", "partition_id", "row_count"} <= set(tbl.columns)
-    assert set(stages) <= set(tbl["stage"]), sorted(set(tbl["stage"]))
-    assert (tbl["row_count"] >= 0).all() and len(tbl) >= len(stages)
-    for table in stages:
-        assert os.path.exists(os.path.join(store, table, "_manifest.json"))
-
-    # second driver process resumes: every stage skipped
+    # second driver process resumes: every stage skipped, lineage untouched
     second = _submit(cwd, store)
     assert all(v == "skipped" for v in second["stages"].values()), second
+    assert _check_lineage(store, stages).equals(lineage)
