@@ -149,7 +149,8 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _docs_fanned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents table hash-partitioned on doc_id, one partition per
     core. It ships as ONE parquet file at test scale → one scan task; the
-    fan-out lets the Arrow signature/verify stages use every core. More
+    fan-out lets the Arrow signature stages use every core (the verify
+    spreads its own slim pairs, so it reads the plain table). More
     partitions than cores only add Python tasks, each with a fixed cost
     before its UDF body runs: ~0.04 CPU-s in a reused worker, ~0.2 in a
     worker's first task, which still re-reads every zip directory on the
@@ -1155,12 +1156,13 @@ def q_measure_topk_edwp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_fanned(spark, sf_dir)
-    sigs = dedup_ops.minhash_signatures(docs)
+    # MinHash runs on the fanned-out docs; the verify reads the plain
+    # table, so its byte gate and text collect do not each re-run the
+    # fan-out shuffle
+    sigs = dedup_ops.minhash_signatures(_docs_fanned(spark, sf_dir))
     cands = dedup_ops.lsh_candidates(sigs)
-    return dedup_ops.ngram_jaccard_verify(docs, cands, threshold=0.5).select(
-        "i", "j", _RND("jaccard", 6).alias("jaccard_r")
-    )
+    verified = dedup_ops.ngram_jaccard_verify(_docs(spark, sf_dir), cands, threshold=0.5)
+    return verified.select("i", "j", _RND("jaccard", 6).alias("jaccard_r"))
 
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1170,11 +1172,11 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     decisions (keeper = component id = smallest doc id).  The verified
     pair graph is small (a few thousand edges at the benchmark scales),
     so it fits the session's broadcast budget and the rounds run on the
-    driver after one bounded collect; the verify above it runs once."""
-    docs = _docs_fanned(spark, sf_dir)
-    sigs = dedup_ops.minhash_signatures(docs)
+    driver after one bounded collect; the verify above it runs once.
+    As in minhash_lsh, only MinHash reads the fanned-out docs."""
+    sigs = dedup_ops.minhash_signatures(_docs_fanned(spark, sf_dir))
     cands = dedup_ops.lsh_candidates(sigs)
-    pairs = dedup_ops.ngram_jaccard_verify(docs, cands, threshold=0.5)
+    pairs = dedup_ops.ngram_jaccard_verify(_docs(spark, sf_dir), cands, threshold=0.5)
     cc = dedup_ops.connected_components(pairs.select("i", "j"))
     return cc.select(
         F.col("node").cast("long").alias("doc_id"),
@@ -1425,20 +1427,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Rotation policy (VERDICT r3 item 2) for a driver capped at 50 rows:
-    # every query's evidence must stay ≤ 1 round old, so the queries whose
-    # latest green row is OLDEST come first. The registry is exactly 60
-    # queries (consolidated 69→60 in r5, VERDICT r4 item 2).
-    # r8 order (VERDICT r7 #1): (a) the 10 queries whose latest row is
-    # r06 (the r07 cap cut them); (b) queries CHANGED this round —
-    # walks.py's auto gate now branch-decides via a bounded count and
-    # its skipgram guard raises on duplicate (walk_id, pos) (VERDICT r7
-    # #1/#2), so cell_walks + walk_skipgrams re-prove themselves; (c)
-    # unchanged r07-green queries, the last 10 of which the cap cuts
-    # (their r07 rows stay exactly one round old — the tail is the
-    # group that led the r7 registry, i.e. the most recently re-proven).
+    # The order matters: a driver capped at 50 rows runs the first 50.
     return {
-        # --- (a) latest row is r06 (rotated out by the r07 cap) ---
         "video_frames": q_video_frames,
         "symmetrize_norm": q_symmetrize_norm,
         "fed_split": q_fed_split,
@@ -1449,10 +1439,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_running": q_events_running,
         "top_customers": q_top_customers,
         "pricing_summary": q_pricing_summary,
-        # --- (b) changed this round (operators/walks.py gate + guard) ---
         "cell_walks": q_cell_walks,
         "walk_skipgrams": q_walk_skipgrams,
-        # --- (c) unchanged, green in r07 ---
         "pages_points": q_pages_points,
         "porto_clean": q_porto_clean,
         "porto_points": q_porto_points,
@@ -1491,8 +1479,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_fingerprint": q_fingerprint,
         "vocab_topk": q_vocab_topk,
         "tfidf_topterms": q_tfidf_topterms,
-        # --- overflow tail (position > 50): all green in r07, unchanged —
-        # a 50-row cap leaves their evidence exactly one round old
         "pip_join": q_pip_join,
         "knn": q_knn,
         "tile_pyramid": q_tile_pyramid,

@@ -31,3 +31,33 @@ def docs(spark):
 @pytest.fixture(scope="session")
 def embs(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+
+
+class PairPath(str):
+    """A ``pairs.score_pairs`` path name: "broadcast" (the payload fits the
+    session's broadcast budget and ships as an id-keyed lookup) or "join"
+    (``autoBroadcastJoinThreshold`` -1, the payload attached by joins)."""
+
+    def ran_in(self, df) -> bool:
+        """Whether ``df``'s executed plan scored its pairs on this path:
+        a kernel pass, with the payload's attach columns on the join path
+        and none on the broadcast path (cached plans print their inner
+        plan, so a persisted score counts)."""
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan, plan
+        return ("_payload_" in plan) == (self == "join")
+
+
+@pytest.fixture(params=["broadcast", "join"])
+def pair_path(request, spark):
+    """Run a pair-scorer case on each ``score_pairs`` path: the session's
+    64 MB broadcast budget (every test payload fits) and the join path
+    (threshold -1, restored afterwards)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    if request.param == "join":
+        spark.conf.set(key, "-1")
+    try:
+        yield PairPath(request.param)
+    finally:
+        spark.conf.set(key, saved)

@@ -286,6 +286,64 @@ def test_multi_measure_join_matches_single_measure_joins(spark, points):
         )
 
 
+def _polyline_dict(polys) -> dict:
+    return {r.traj_id: np.column_stack([r.xs, r.ys]) for r in polys.collect()}
+
+
+def test_multi_measure_join_on_both_paths(spark, points, pair_path):
+    """similarity_join / multi_measure_join score the same pairs to the
+    same values whether the polylines are broadcast or joined."""
+    from trajlib_spark.kernels import dp_distances as dpk
+
+    polys = similarity.collect_polylines(points.where(F.col("traj_id") < 5))
+    both = similarity.normalize_polylines(polys, out_cols=("xs_n", "ys_n"))
+    out = similarity.multi_measure_join(
+        both, measures={"lcss": ("lcss", 0.25), "frechet": ("frechet", 0.0)},
+        coord_cols={"lcss": ("xs_n", "ys_n")},
+    )
+    assert pair_path.ran_in(out)
+    raw = _polyline_dict(polys)
+    normed = _polyline_dict(similarity.normalize_polylines(polys))
+    got = sorted(map(tuple, out.select("i", "j", "lcss", "frechet").collect()))
+    ids = sorted(raw)
+    assert [(i, j) for i, j, *_ in got] == [(a, b) for a in ids for b in ids if a < b]
+    for i, j, lc, fr in got:
+        assert lc == pytest.approx(dpk.lcss_distance_vec(normed[i], normed[j], 0.25), rel=1e-12)
+        assert fr == pytest.approx(dpk.discrete_frechet(raw[i], raw[j]), rel=1e-12)
+
+
+@pytest.mark.parametrize("path_kind", ["brute", "grid", "eps_match"])
+def test_measure_topk_on_both_paths(spark, points, pair_path, path_kind):
+    """Each measure_topk path (broadcast scan, grid ring rounds, ε-match
+    cells) ranks the same neighbours at the same distances on either
+    score_pairs path: the top-k of a scalar scan over every db row."""
+    from trajlib_spark.kernels import dp_distances as dpk
+
+    measure, kwargs = {
+        "brute": ("frechet", {}),
+        "grid": ("hausdorff", {"grid": G, "ring": 2}),
+        "eps_match": ("lcss", {}),
+    }[path_kind]
+    polys = similarity.collect_polylines(points.where(F.col("traj_id") < 24))
+    if measure == "lcss":
+        polys = similarity.normalize_polylines(polys)
+    polys = polys.cache()
+    qs = polys.where(F.col("traj_id") % 6 == 0)
+    out = similarity.measure_topk(polys, qs, measure, k=4, **kwargs)
+    assert pair_path.ran_in(out)
+    lines = _polyline_dict(polys)
+    kern = similarity._KERNELS[measure]
+    expect = []
+    for q in sorted(t for t in lines if t % 6 == 0):
+        ranked = sorted((kern(lines[q], lines[t], 0.25), t) for t in lines if t != q)
+        expect += [(q, t, r + 1, pytest.approx(d, rel=1e-12))
+                   for r, (d, t) in enumerate(ranked[:4])]
+    got = out.orderBy("query_id", "rank").select(
+        "query_id", "neighbor_id", "rank", "dist").collect()
+    assert [tuple(r) for r in got] == expect
+    polys.unpersist()
+
+
 @pytest.mark.parametrize("call", [
     "similarity_join", "multi_measure_join",
     "measure_topk", "measure_topk_brute", "measure_topk_grid",
@@ -313,8 +371,8 @@ def test_unknown_measure_rejected_when_plan_is_built(spark, call):
 
 def test_multi_measure_join_single_kernel_pass(spark, points):
     """PLANS.md claim, machine-checked: the multi-measure join runs ONE
-    Arrow kernel pass (one MapInPandas node) and joins the polyline table
-    twice (left/right side), never once per measure."""
+    Arrow kernel pass (one MapInPandas node) over one polyline payload,
+    never one per measure."""
     sub = points.where(F.col("traj_id") < 6)
     both = similarity.normalize_polylines(
         similarity.collect_polylines(sub), out_cols=("xs_n", "ys_n")
@@ -330,6 +388,18 @@ def test_multi_measure_join_single_kernel_pass(spark, points):
     # blocked pair space stays an equi-join (the unblocked form is an
     # intentional upper-triangular crossJoin and is not used by queries)
     assert not _plan_has_cross_join(out)
+
+
+def test_global_row_number_leaves_session_cache_as_found(spark):
+    """Each call ranks an eager local checkpoint: three calls number their
+    rows 0..n-1 and add no entry to the session's CacheManager."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    for k in range(3):
+        d, n = segment.global_row_number(spark.range(100 + k), ("id",))
+        rows = sorted((r.id, r._rn0) for r in d.collect())
+        assert n == 100 + k and rows == [(v, v) for v in range(n)]
+    assert cm.numCachedEntries() == before
 
 
 def test_federated_split_positional(spark):

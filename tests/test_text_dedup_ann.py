@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import PairPath
 from trajlib_spark.operators import ann, dedup, text
 
 
@@ -120,16 +121,22 @@ def test_fingerprint_block_memory_bounded_by_batch_bytes():
 
 
 def test_jaccard_verify_slim_path_matches_join_path(spark):
-    # the broadcast-dict fast path (docs ≤ collect_max_docs) must produce
-    # exactly the join path's rows — including inner-join drop semantics
-    # for candidate ids with no doc row
+    # the broadcast-lookup path (the texts fit the broadcast budget) must
+    # produce exactly the join path's rows (threshold -1) — including
+    # inner-join drop semantics for candidate ids with no doc row
     d = _docs_with_dups(spark)
     sigs = dedup.minhash_signatures(d, num_perm=64)
     cands = dedup.lsh_candidates(sigs, bands=16).unionByName(
         spark.createDataFrame([(1, 99), (98, 99)], "i long, j long")
     )
     slim = dedup.ngram_jaccard_verify(d, cands, threshold=0.0)
-    join = dedup.ngram_jaccard_verify(d, cands, threshold=0.0, collect_max_docs=0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        join = dedup.ngram_jaccard_verify(d, cands, threshold=0.0)
+    finally:
+        spark.conf.set(key, saved)
     rows_s = sorted(map(tuple, slim.collect()))
     rows_j = sorted(map(tuple, join.collect()))
     assert rows_s == rows_j and rows_s  # identical, non-empty
@@ -162,18 +169,67 @@ def test_jaccard_verify_gate_on_text_bytes(spark):
     assert rows and all(v == rows for v in got.values()), got
 
 
-@pytest.mark.parametrize("collect_max_docs", [100_000, 0, -1])
-def test_jaccard_verify_empty_docs(spark, collect_max_docs):
+def test_jaccard_verify_empty_docs(spark, pair_path):
     # candidates against an empty doc table give no rows on both paths
-    # (an empty table passes the row gate even at 0; -1 forces the join path)
+    # (an empty table fits any budget; -1 forces the join path)
     d = spark.createDataFrame([], "doc_id long, text string")
     cands = spark.createDataFrame([(1, 2), (2, 3)], "i long, j long")
-    out = dedup.ngram_jaccard_verify(
-        d, cands, threshold=0.0, collect_max_docs=collect_max_docs
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert ("Join" in plan) == (collect_max_docs < 0), plan
+    out = dedup.ngram_jaccard_verify(d, cands, threshold=0.0)
+    assert pair_path.ran_in(out)
     assert out.collect() == []
+    assert out.dtypes == [("i", "bigint"), ("j", "bigint"), ("jaccard", "double")]
+
+
+def test_jaccard_verify_on_both_paths(spark, pair_path):
+    """The verify's rows equal a scalar set-Jaccard over the planted docs
+    on either path: int candidate ids come back as long, pairs with a
+    missing doc give no row, and the threshold keeps ≥."""
+    d = _docs_with_dups(spark)
+    texts = {r.doc_id: r.text for r in d.collect()}
+    cand = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (1, 99)]
+    cands = spark.createDataFrame(cand, "i int, j int")
+    out = dedup.ngram_jaccard_verify(d, cands, threshold=0.3)
+    assert pair_path.ran_in(out)
+    assert out.dtypes == [("i", "bigint"), ("j", "bigint"), ("jaccard", "double")]
+    expect = []
+    for i, j in cand:
+        if i in texts and j in texts:
+            a = set(dedup._stable_shingles(texts[i], 5).tolist())
+            b = set(dedup._stable_shingles(texts[j], 5).tolist())
+            jac = len(a & b) / len(a | b)
+            if jac >= 0.3:
+                expect.append((i, j, pytest.approx(jac, rel=1e-15)))
+    assert sorted(map(tuple, out.collect())) == expect
+    assert len(expect) == 3  # the dup and the two near-dup pairs
+
+
+def test_dedup_components_verify_runs_two_jobs(spark, monkeypatch):
+    """The board's dedup_components query passes the verify the plain
+    documents frame, so the verify's call runs two Spark jobs (the byte
+    gate and the payload collect); a docs frame with its own fan-out
+    shuffle re-runs that shuffle in each."""
+    import __spark_entry__ as E
+    from conftest import SF
+
+    sc = spark.sparkContext
+    jobs = []
+    verify = dedup.ngram_jaccard_verify
+
+    def counted(*args, **kwargs):
+        group = f"board_verify_{len(jobs)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = verify(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        assert PairPath("broadcast").ran_in(out)
+        return out
+
+    monkeypatch.setattr(E.dedup_ops, "ngram_jaccard_verify", counted)
+    assert E.q_dedup_components(spark, SF).count() > 0
+    assert jobs == [2], jobs
 
 
 def test_minhash_estimates_jaccard(spark):
@@ -347,6 +403,34 @@ def test_train_centroids_deterministic_across_partitioning(spark, embs):
     c1 = ann.train_centroids(embs.repartition(7), n_list=8)
     c2 = ann.train_centroids(embs.coalesce(1), n_list=8)
     assert np.array_equal(c1, c2)
+
+
+def test_embedding_near_dups_on_both_paths(spark, pair_path):
+    """Planted exact and near duplicates come back with the cosine of the
+    Catalyst fold (one IEEE multiply-add per dimension from 0.0) on either
+    path, each pair once although it collides in several tables."""
+    rng = np.random.default_rng(5)
+    vecs = {k: rng.normal(size=8) for k in range(12)}
+    vecs[20] = vecs[3].copy()
+    vecs[21] = vecs[5] + rng.normal(scale=0.01, size=8)
+    df = spark.createDataFrame(
+        [(k, [float(x) for x in v]) for k, v in vecs.items()],
+        "vec_id long, embedding array<double>",
+    )
+    out = dedup.embedding_near_dups(df, threshold=0.95, n_tables=6)
+    assert pair_path.ran_in(out)
+
+    def fold(a, b):
+        dot = na = nb = 0.0
+        for x, y in zip(a, b):
+            dot += x * y
+            na += x * x
+            nb += y * y
+        return dot / (np.sqrt(na) * np.sqrt(nb))
+
+    got = sorted(map(tuple, out.collect()))
+    assert [(i, j) for i, j, _ in got] == [(3, 20), (5, 21)]
+    assert all(c == fold(vecs[i], vecs[j]) for i, j, c in got), got
 
 
 def test_embedding_near_dups_multi_table_recall(spark):

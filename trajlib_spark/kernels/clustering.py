@@ -74,17 +74,7 @@ def dbscan_precomputed(dist: np.ndarray, eps: float, min_samples: int) -> np.nda
     return labels
 
 
-# --- cluster aggregates and greedy merge -------------------------------------
-
-def cluster_centroid(midpoints: np.ndarray) -> tuple[float, float]:
-    """Mean of segment midpoints (clustering.py:28-39)."""
-    return float(midpoints[:, 0].mean()), float(midpoints[:, 1].mean())
-
-
-def cluster_radius(midpoints: np.ndarray, centroid: tuple[float, float]) -> float:
-    """Max midpoint distance to centroid (clustering.py:41-50)."""
-    return float(np.hypot(midpoints[:, 0] - centroid[0], midpoints[:, 1] - centroid[1]).max())
-
+# --- greedy merge ------------------------------------------------------------
 
 def greedy_merge(centroids: list[tuple[float, float]], eps: float) -> list[list[int]]:
     """Single-pass greedy disjoint merge of cluster indices

@@ -13,16 +13,10 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _broadcast_budget(spark: SparkSession) -> int:
-    """Bytes the driver may collect for a driver-side path: the session's
-    ``autoBroadcastJoinThreshold``, the size Catalyst already lets the
-    driver hold for a broadcast. Read through the JVM SQLConf, so "10m"
-    parses; -1 (broadcast off) reads as 0."""
-    return max(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold(), 0)
+from .pairs import broadcast_budget, score_pairs
 
 
 # --- exact dedup -------------------------------------------------------------
@@ -195,20 +189,6 @@ def _jaccard_scores(ii: np.ndarray, jj: np.ndarray, shingles_of) -> pd.DataFrame
     return pd.DataFrame({"i": ii, "j": jj, "jaccard": jac})
 
 
-def _shingle_cache(text_of, k: int):
-    """id → shingle hashes, memoized for one task (docs repeat across the
-    task's batches, not just within one batch)."""
-    cache: dict[int, np.ndarray] = {}
-
-    def shingles_of(key: int) -> np.ndarray:
-        v = cache.get(key)
-        if v is None:
-            cache[key] = v = _stable_shingles(text_of(key), k)
-        return v
-
-    return shingles_of
-
-
 def ngram_jaccard_verify(
     docs: DataFrame,
     candidates: DataFrame,
@@ -216,77 +196,27 @@ def ngram_jaccard_verify(
     shingle_k: int = 5,
     text: str = "text",
     id_col: str = "doc_id",
-    collect_max_docs: int = 100_000,
 ) -> DataFrame:
     """Exact shingle-set Jaccard on candidate pairs only → (i, j, jaccard)
-    with jaccard >= threshold.
+    with jaccard >= threshold, ids as long.
 
-    When the doc table is small enough to broadcast anyway
-    (≤ ``collect_max_docs`` rows whose texts fit the session's broadcast
-    budget, ``autoBroadcastJoinThreshold`` bytes), the texts ship ONCE
-    per executor as a broadcast dict and the kernel reads SLIM (i, j)
-    rows: the old fast path duplicated both documents onto every
-    candidate pair crossing the Arrow boundary (~13 GB serialized at
-    sf1.0 for a 180 MB decision). Above the gate the proven join path
-    runs unchanged (at corpus scale the attach degrades to a shuffle
-    join; a driver collect would not degrade, so it stays gated). One
-    aggregate of the row count and the text bytes picks the path, so
-    the driver never fetches a text it will not use. Both paths score
-    with the same ``_jaccard_scores``; they differ only in where a doc's
-    text comes from."""
-    spark = docs.sparkSession
-    sc = spark.sparkContext
-    slim = candidates.repartition(sc.defaultParallelism, "i", "j")
-    # the gate's aggregate is observed over a no-op write: one job with no
-    # exchange (a global agg() would add a shuffle stage, a job of its own)
-    gate = Observation()
-    docs.select(F.octet_length(F.col(text)).alias("b")).observe(
-        gate, F.count(F.lit(1)).alias("n"), F.sum("b").alias("bytes")
-    ).write.format("noop").mode("overwrite").save()
-    got = gate.get
-    if got["n"] <= collect_max_docs and (got["bytes"] or 0) <= _broadcast_budget(spark):
-        bmap = sc.broadcast({r[0]: r[1] for r in docs.select(id_col, text).collect()})
+    The candidates stay slim (i, j) rows and ``pairs.score_pairs`` brings
+    each its two texts: as a broadcast id → text lookup when the texts fit
+    the session's broadcast budget, else by a join after the pairs are
+    spread. Carrying both documents on every candidate row would move
+    ~13 GB across the Arrow boundary at sf1.0 for a 180 MB decision."""
+    shingles: dict = {}  # id → sorted shingle hashes; one copy per task
 
-        def run_slim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            tm = bmap.value
-            ids = np.fromiter(tm.keys(), dtype=np.int64, count=len(tm))
-            shingles_of = _shingle_cache(tm.__getitem__, shingle_k)
-            for pdf in batches:
-                ii = pdf["i"].to_numpy()
-                jj = pdf["j"].to_numpy()
-                # inner-join semantics of the join path: drop pairs whose
-                # id has no doc row (candidate tables derived from the same
-                # docs never hit this)
-                ok = np.isin(ii, ids) & np.isin(jj, ids)
-                if ok.any():
-                    yield _jaccard_scores(ii[ok], jj[ok], shingles_of)
+    def kernel(ii: np.ndarray, jj: np.ndarray, payload_of) -> pd.DataFrame:
+        for ids, side in ((ii, "i"), (jj, "j")):
+            for d, t in zip(ids, payload_of(side, text)):
+                if d not in shingles:
+                    shingles[d] = _stable_shingles(t, shingle_k)
+        return _jaccard_scores(ii, jj, shingles.__getitem__)
 
-        out = slim.mapInPandas(run_slim, "i long, j long, jaccard double")
-        return out.where(F.col("jaccard") >= threshold)
-
-    left = docs.select(F.col(id_col).alias("i"), F.col(text).alias("t_i"))
-    right = docs.select(F.col(id_col).alias("j"), F.col(text).alias("t_j"))
-    # the python kernel's cost is per PAIR, not per byte: AQE would coalesce
-    # this small-byte shuffle to 1-2 partitions and serialize the kernel —
-    # spread the pairs across the cluster explicitly. Round 9: repartition
-    # the SLIM (i, j) table and attach the texts afterwards — the old plan
-    # repartitioned after the joins and shuffled every candidate pair with
-    # both documents aboard (at sf1.0: ~7 GB moved to place a 180 MB
-    # decision; guide §2.3 "project before the exchange").
-    joined = slim.join(left, "i").join(right, "j")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        texts: dict[int, str | None] = {}  # the current batch's id → text
-        shingles_of = _shingle_cache(texts.__getitem__, shingle_k)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            texts.clear()
-            texts.update(zip(pdf["i"], pdf["t_i"]))
-            texts.update(zip(pdf["j"], pdf["t_j"]))
-            yield _jaccard_scores(pdf["i"].to_numpy(), pdf["j"].to_numpy(), shingles_of)
-
-    out = joined.mapInPandas(run, "i long, j long, jaccard double")
+    slim = candidates.select(F.col("i").cast("long"), F.col("j").cast("long"))
+    payload = docs.select(id_col, text)
+    out = score_pairs(payload, payload, id_col, kernel, "jaccard double")(slim)
     return out.where(F.col("jaccard") >= threshold)
 
 
@@ -348,16 +278,14 @@ def simhash_candidates(
             ])
         ).alias("band_idx", "band_val"),
     )
-    # Round 9: the signature rides THROUGH the band join (8 bytes/row), so
-    # the hamming filter runs inline on the join's probe output — the old
-    # plan shuffled every raw bucket pair into a distinct and then re-joined
-    # the signature table twice (at sf1.0: ~196M bucket-pair rows through a
-    # distinct + two joins, for ~15k surviving pairs). A hot band value
-    # (thousands of near-identical docs in one 12-bit bucket) is a single
-    # join key AQE cannot split, so the left side is salted on a
-    # deterministic hash of the id and the right side explodes the salt
-    # range (guide §2.5): each bucket's quadratic probe work spreads over
-    # SALT partitions, each (i, j) pair still meets exactly once per band.
+    # The signature rides THROUGH the band join (8 bytes/row), so the
+    # hamming filter runs on the join's probe output and only surviving
+    # pairs reach the distinct (at sf1.0, ~196M bucket pairs for ~15k
+    # survivors). A hot band value (thousands of near-identical docs in
+    # one 12-bit bucket) is a single join key AQE cannot split, so the
+    # left side is salted on a deterministic hash of the id and the right
+    # side explodes the salt range: each bucket's quadratic probe work
+    # spreads over SALT partitions, each pair still meets once per band.
     salt_n = 16
     a = banded.select(
         F.col(id_col).alias("i"), F.col("simhash").alias("h_i"),
@@ -393,8 +321,9 @@ def embedding_near_dups(
     ``n_tables`` INDEPENDENT random-hyperplane sign sketches (a pair within
     angle θ collides in one table w.p. (1−θ/π)^n_planes; independent tables
     raise recall to 1−(1−p)^T — a single sketch misses any pair that
-    differs in ≥1 bit), verified exactly with zip_with/aggregate —
-    Catalyst-only verification, bucket equi-joins only."""
+    differs in ≥1 bit), then each distinct candidate pair verified exactly
+    by ``pairs.score_pairs`` with the vectors as its payload — bucket
+    equi-joins over slim rows only."""
     dim = len(embs.select(vec_col).first()[0])
     rng = np.random.default_rng(seed)
     # sequential per-table draws, stacked (identical values to drawing
@@ -424,60 +353,40 @@ def embedding_near_dups(
     sk = embs.select(id_col, vec_col).mapInPandas(
         sketch_batch, f"{fields}, _buckets array<long>"
     ).persist()
-    # one row per (table, bucket) — candidates are the union of per-table
-    # bucket self-joins, deduped before the exact verify
-    banded = sk.select(
-        id_col, vec_col,
-        F.posexplode("_buckets").alias("table_idx", "bucket"),
-    )
-    a = banded.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v_i"),
-                      "table_idx", "bucket")
-    b = banded.select(F.col(id_col).alias("j"), F.col(vec_col).alias("v_j"),
-                      "table_idx", "bucket")
-
-    # Round 9: the exact cosine verify moved from an interpreted Catalyst
-    # aggregate/zip_with fold (measured ~0.5 ms per evaluation — it
-    # dominated the operator) to an Arrow batch scorer replaying the fold's
-    # exact IEEE op order: per-dimension multiply-add from a 0.0 seed for
-    # the dot and both norms, then the same dot/(n_i*n_j) division — numpy
-    # ufuncs are unfused, so every rounding step matches and the cosine is
-    # bit-identical. The threshold filter stays Catalyst; it now fires
-    # BEFORE the pair dedup, so only survivors reach the distinct (the old
-    # plan shuffled every candidate pair with both vectors through
-    # dropDuplicates). Multi-table duplicates of a pair compute the same
-    # cosine and the distinct collapses them as before.
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Vi = np.array(list(pdf["v_i"].to_numpy()), dtype=np.float64)
-            Vj = np.array(list(pdf["v_j"].to_numpy()), dtype=np.float64)
-            dot = np.zeros(len(pdf))
-            ni = np.zeros(len(pdf))
-            nj = np.zeros(len(pdf))
-            for d in range(Vi.shape[1]):
-                dot += Vi[:, d] * Vj[:, d]
-                ni += Vi[:, d] * Vi[:, d]
-                nj += Vj[:, d] * Vj[:, d]
-            cos = dot / (np.sqrt(ni) * np.sqrt(nj))
-            yield pd.DataFrame(
-                {"i": pdf["i"].to_numpy(), "j": pdf["j"].to_numpy(),
-                 "cosine": cos}
-            )
-
-    scored = (
-        a.join(b, ["table_idx", "bucket"])
+    # one slim row per (table, bucket) — candidates are the union of
+    # per-table bucket self-joins, deduped before the exact verify so a
+    # pair colliding in several tables is scored once
+    banded = sk.select(id_col, F.posexplode("_buckets").alias("table_idx", "bucket"))
+    cands = (
+        banded.select(F.col(id_col).cast("long").alias("i"), "table_idx", "bucket")
+        .join(banded.select(F.col(id_col).cast("long").alias("j"), "table_idx", "bucket"),
+              ["table_idx", "bucket"])
         .where(F.col("i") < F.col("j"))
-        .select("i", "j", "v_i", "v_j")
-        .mapInPandas(score, "i long, j long, cosine double")
-    )
-    return (
-        scored.where(F.col("cosine") >= threshold)
-        .select("i", "j", "cosine")
+        .select("i", "j")
         .distinct()
     )
+
+    # The exact cosine is an Arrow batch kernel replaying the Catalyst
+    # aggregate/zip_with fold's IEEE op order: per-dimension multiply-add
+    # from a 0.0 seed for the dot and both norms, then dot/(n_i*n_j).
+    # numpy ufuncs are unfused, so every rounding step matches and the
+    # cosine is bit-identical to the fold, at a fraction of its
+    # interpreted per-row cost.
+    def kernel(ii: np.ndarray, jj: np.ndarray, payload_of) -> pd.DataFrame:
+        Vi = np.array(list(payload_of("i", vec_col)), dtype=np.float64)
+        Vj = np.array(list(payload_of("j", vec_col)), dtype=np.float64)
+        dot = np.zeros(len(ii))
+        ni = np.zeros(len(ii))
+        nj = np.zeros(len(ii))
+        for d in range(Vi.shape[1]):
+            dot += Vi[:, d] * Vj[:, d]
+            ni += Vi[:, d] * Vi[:, d]
+            nj += Vj[:, d] * Vj[:, d]
+        return pd.DataFrame({"i": ii, "j": jj, "cosine": dot / (np.sqrt(ni) * np.sqrt(nj))})
+
+    payload = sk.select(id_col, vec_col)
+    scored = score_pairs(payload, payload, id_col, kernel, "cosine double")(cands)
+    return scored.where(F.col("cosine") >= threshold)
 
 
 # --- near-dup components ------------------------------------------------------
@@ -610,9 +519,8 @@ def connected_components(
     round) over the same persisted table, so the upstream pipeline runs
     once on either path.  ``stats``, when given, gets
     {"rounds": n, "path": "local" | "distributed"}."""
-    # mirror each edge via explode, not union: the union's two branches
-    # each re-ran the whole upstream pipeline (e.g. the LSH verify) in one
-    # job — one scan emits both directions (round 9, guide §2.4)
+    # mirror each edge via explode, not union: a union's two branches
+    # would each re-run the whole upstream pipeline (e.g. the verify)
     und = (
         pairs.where(F.col(i).isNotNull() & F.col(j).isNotNull())
         .select(
@@ -635,7 +543,7 @@ def connected_components(
     # the driver may hold what Catalyst lets it broadcast: the session's
     # budget over an edge row's two ids, kept a JVM int
     spark = pairs.sparkSession
-    cap = min(_broadcast_budget(spark) // (2 * _INT_WIDTH[id_type.typeName()]), 2**31 - 2)
+    cap = min(broadcast_budget(spark) // (2 * _INT_WIDTH[id_type.typeName()]), 2**31 - 2)
     edges = und.limit(cap + 1).toArrow() if cap else None
     if edges is not None and edges.num_rows <= cap:
         nodes, comp, rounds, converged = _components_local(

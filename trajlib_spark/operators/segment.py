@@ -121,7 +121,9 @@ def global_row_number(
     per-partition offsets computed from a tiny count-per-partition job.
     This is the two-pass zipWithIndex pattern — every stage is
     partition-parallel, so it holds at any N. Returns (df + out column,
-    total row count). Deterministic when the order keys are unique."""
+    total row count). Deterministic when the order keys are unique. Row
+    numbers and counts read one eager local checkpoint, whose blocks go
+    with the frame (the session's cache is left as it was)."""
     P = num_partitions or max(
         df.sparkSession.sparkContext.defaultParallelism,
         int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
@@ -129,20 +131,13 @@ def global_row_number(
     d = df.repartitionByRange(P, *[F.col(c) for c in order]).withColumn(
         "_pid", F.spark_partition_id()
     )
-    d = d.persist()
-    counts = {r["_pid"]: r["cnt"] for r in d.groupBy("_pid").agg(
-        F.count(F.lit(1)).alias("cnt")).collect()}
-    offsets, acc = {}, 0
+    d = d.localCheckpoint(eager=True)
+    counts = dict(d.groupBy("_pid").count().collect())
+    kv, acc = [], 0
     for pid in sorted(counts):
-        offsets[pid] = acc
+        kv += [F.lit(pid), F.lit(acc)]
         acc += counts[pid]
-    if offsets:
-        kv = []
-        for pid, off in offsets.items():
-            kv.extend([F.lit(pid), F.lit(off)])
-        off_expr = F.element_at(F.create_map(*kv), F.col("_pid"))
-    else:
-        off_expr = F.lit(0)
+    off_expr = F.element_at(F.create_map(*kv), F.col("_pid")) if kv else F.lit(0)
     w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order])
     return (
         d.withColumn(out, (off_expr + F.row_number().over(w) - 1).cast("long"))

@@ -4,17 +4,17 @@ a multiprocessing pool (/root/reference/fedtraj/utils/
 preprocessing_porto.py:269-322).
 
 Plan shape:
-- build the (i, j) pair table with ``a.id < b.id`` (upper triangle only,
-  the reference's halving trick as a join condition);
-- attach both polylines (two hash joins; at scale, block the pair space
-  by a coarse cell prefix so only spatially-plausible pairs join);
-- evaluate the kernels per Arrow batch via mapInPandas (never a dense
+- build the slim (i, j) pair table with ``a.id < b.id`` (upper triangle
+  only, the reference's halving trick as a join condition; at scale,
+  block the pair space by a coarse cell prefix so only
+  spatially-plausible pairs join);
+- score it with ``pairs.score_pairs``, which brings each pair its two
+  polylines and evaluates the kernels per Arrow batch (never a dense
   matrix — the pair table is the output).
 
 Every pair scorer — similarity_join, multi_measure_join and the three
-measure_topk paths (brute, grid ring, ε-match) — ends in the same batch
-pass, ``_kernel_pass``; each caller only builds and partitions its pair
-table.
+measure_topk paths (brute, grid ring, ε-match) — runs the same kernel,
+``_measure_scorer``; each caller only builds its slim pair table.
 
 Normalization matches the reference: per-axis population-σ z-score over
 ALL points of the dataset (preprocessing_porto.py:232-252 — numpy std is
@@ -25,7 +25,7 @@ population σ, hence stddev_pop) before LCSS/EDR with ε = 0.25
 from __future__ import annotations
 
 import math
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..config import LCSS_EDR_EPS
 from ..kernels import dp_distances as dpk
+from .pairs import score_pairs
 
 
 def collect_polylines(
@@ -160,25 +161,19 @@ def _eval_pairs(measure, eps, xi, yi, xj, yj) -> np.ndarray:
     return dists
 
 
-def _respread(pairs: DataFrame) -> DataFrame:
-    """Hash-spread the pair table over every core before a kernel pass: the
-    kernels cost per PAIR (tens of ms for EDwP), while AQE sizes partitions
-    by BYTES and would coalesce a few-MB pair table onto 1-2 cores."""
-    return pairs.repartition(pairs.sparkSession.sparkContext.defaultParallelism, "i", "j")
-
-
-def _kernel_pass(
-    pairs: DataFrame,
+def _measure_scorer(
+    left: DataFrame,
+    right: DataFrame,
+    key: str,
     measures: dict[str, tuple[str, float]],
     coord_cols: dict[str, tuple[str, str]] | None = None,
-) -> DataFrame:
-    """The one Arrow batch pass every pair scorer runs: (i, j, <xc>_i, <yc>_i,
-    <xc>_j, <yc>_j, ...) → (i, j, <out>...), one double column per entry of
-    ``measures`` (out_col → (measure_name, eps)), each read from the
-    coordinate columns ``coord_cols`` names for it (default ("xs", "ys")).
-    Measure names are checked here, while the plan is built, so a bad name
-    raises on the call instead of inside a Python worker at action time.
-    The caller owns the partitioning of ``pairs``."""
+) -> Callable[[DataFrame], DataFrame]:
+    """The one kernel every pair scorer runs, as a ``pairs.score_pairs``
+    over the polyline payloads ``left`` / ``right`` keyed by ``key``: one
+    double column per entry of ``measures`` (out_col → (measure_name,
+    eps)), read from the coordinate columns ``coord_cols`` names for it
+    (default ("xs", "ys")). Measure names are checked while the plan is
+    built, not inside a Python worker at action time."""
     coord_cols = coord_cols or {}
     for out, (m, _e) in measures.items():
         if m not in _KERNELS:
@@ -189,23 +184,19 @@ def _kernel_pass(
         (out, m, eps, coord_cols.get(out, ("xs", "ys")))
         for out, (m, eps) in measures.items()
     ]
-    arr_cols = sorted({f"{c}_{side}" for *_, xy in specs for c in xy for side in "ij"})
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"i": pdf["i"], "j": pdf["j"]}
-            for name, m, eps, (xc, yc) in specs:
-                out[name] = _eval_pairs(
-                    m, eps,
-                    pdf[f"{xc}_i"].to_numpy(), pdf[f"{yc}_i"].to_numpy(),
-                    pdf[f"{xc}_j"].to_numpy(), pdf[f"{yc}_j"].to_numpy(),
-                )
-            yield pd.DataFrame(out)
+    def kernel(ii: np.ndarray, jj: np.ndarray, payload_of) -> pd.DataFrame:
+        out = {"i": ii, "j": jj}
+        for name, m, eps, (xc, yc) in specs:
+            out[name] = _eval_pairs(
+                m, eps, payload_of("i", xc), payload_of("i", yc),
+                payload_of("j", xc), payload_of("j", yc),
+            )
+        return pd.DataFrame(out)
 
-    i_type = dict(pairs.dtypes)["i"]
-    schema = ", ".join([f"i {i_type}", f"j {i_type}"]
-                       + [f"{name} double" for name in measures])
-    return pairs.select("i", "j", *arr_cols).mapInPandas(run, schema)
+    return score_pairs(
+        left, right, key, kernel, ", ".join(f"{name} double" for name in measures)
+    )
 
 
 def similarity_join(
@@ -238,7 +229,7 @@ def multi_measure_join(
     utils/preprocessing_porto.py:269-322); here the pair table is built,
     shuffled, and polyline-joined ONCE, and a single Arrow batch pass runs
     every kernel per pair — at 100 TB that divides the dominant cost (the
-    two polyline hash joins + the pair shuffle) by the number of measures.
+    polyline attach + the pair shuffle) by the number of measures.
 
     ``measures``: out_col → (measure_name, eps).  ``coord_cols``:
     out_col → (xs_col, ys_col) when a measure reads a different coordinate
@@ -249,14 +240,8 @@ def multi_measure_join(
     if pairs is None:
         pairs = pair_table(polys.select(id_col, *( [block_col] if block_col else [] )),
                            id_col, block_col)
-    left = polys.select(
-        F.col(id_col).alias("i"), *[F.col(c).alias(f"{c}_i") for c in arr_cols]
-    )
-    right = polys.select(
-        F.col(id_col).alias("j"), *[F.col(c).alias(f"{c}_j") for c in arr_cols]
-    )
-    joined = pairs.select("i", "j").join(left, "i").join(right, "j")
-    return _kernel_pass(_respread(joined), measures, coord_cols)
+    payload = polys.select(id_col, *arr_cols)
+    return _measure_scorer(payload, payload, id_col, measures, coord_cols)(pairs)
 
 
 def _traj_anchor(
@@ -290,6 +275,49 @@ def _traj_anchor(
         "a_ix": cell_ops.x_idx(F.col("_ax"), F.col("_ay"), grid),
         "a_iy": cell_ops.y_idx(F.col("_ax"), F.col("_ay"), grid),
     })
+
+
+def _anchored(db_polys, query_polys, id_col, grid, q_radius):
+    """(db anchors "j", query anchors "i", max db radius, ``q_radius`` of
+    the query radii), both anchor tables persisted. ONE scalar job reads
+    both radii (side-tagged union agg) and materializes both caches, so
+    every later plan hits warm blocks. An empty side gives None (float(None)
+    would crash; the NULL aggregate doubles as the emptiness probe)."""
+    db_a = _traj_anchor(db_polys, "j", grid, id_col=id_col).persist()
+    q_a = _traj_anchor(query_polys, "i", grid, id_col=id_col).persist()
+    rd, rq = (
+        db_a.select(F.lit(True).alias("_d"), "radius")
+        .unionByName(q_a.select(F.lit(False).alias("_d"), "radius"))
+        .agg(F.max(F.when(F.col("_d"), F.col("radius"))),
+             q_radius(F.when(~F.col("_d"), F.col("radius"))))
+        .collect()[0]
+    )
+    if rd is None or rq is None:
+        db_a.unpersist()
+        q_a.unpersist()
+        return None
+    return db_a, q_a, float(rd), float(rq)
+
+
+def _neighbor_scorer(
+    queries: DataFrame, db: DataFrame, measure: str, eps: float
+) -> Callable[[DataFrame], DataFrame]:
+    """(i, j) → (query_id, neighbor_id, dist), the polylines of query "i"
+    and db "j" rows as the payloads."""
+    score = _measure_scorer(
+        queries.select(F.col("i").alias("id"), "xs", "ys"),
+        db.select(F.col("j").alias("id"), "xs", "ys"),
+        "id", {"dist": (measure, eps)},
+    )
+    return lambda pairs: score(pairs).withColumnsRenamed(
+        {"i": "query_id", "j": "neighbor_id"})
+
+
+def _no_neighbors(db_polys: DataFrame, id_col: str) -> DataFrame:
+    t = dict(db_polys.dtypes)[id_col]
+    return db_polys.sparkSession.createDataFrame(
+        [], f"query_id {t}, neighbor_id {t}, dist double"
+    )
 
 
 # Measures bounded below by the set-to-set minimum distance, which the
@@ -330,113 +358,57 @@ def _lcss_edr_topk(
     Non-candidates provably score exactly 1.0, so the top-k tail is filled
     from the smallest non-candidate neighbor ids via a rank-bounded join
     against the globally ranked db-id table — fully distributed (no
-    driver-side id collect, no literal-array plan node; ADVICE r3), never
-    a crossJoin node, never the full corpus per query."""
+    driver-side id collect, no literal-array plan node), never a crossJoin
+    node, never the full corpus per query."""
     from pyspark.sql import Window
 
     sqrt2 = 2.0 ** 0.5
-    db_a = _traj_anchor(db_polys, "j", id_col=id_col).persist()
-    q_a = _traj_anchor(query_polys, "i", id_col=id_col).persist()
-    # ONE scalar job for both radius maxima (side-tagged union agg); it also
-    # materializes both anchor caches, so every later plan hits warm blocks
-    r_row = (
-        db_a.select(F.lit(True).alias("_d"), "radius")
-        .unionByName(q_a.select(F.lit(False).alias("_d"), "radius"))
-        .agg(
-            F.max(F.when(F.col("_d"), F.col("radius"))).alias("rd"),
-            F.max(F.when(~F.col("_d"), F.col("radius"))).alias("rq"),
-        )
-        .collect()[0]
-    )
-    r_dmax_v, r_qmax_v = r_row["rd"], r_row["rq"]
-    if r_dmax_v is None or r_qmax_v is None:
-        # empty side → empty result (float(None) would crash below;
-        # ADVICE r3). The NULL aggregate doubles as the emptiness probe —
-        # no separate isEmpty job.
-        id_type = dict(db_polys.dtypes)[id_col]
-        empty = db_polys.sparkSession.createDataFrame(
-            [], f"query_id {id_type}, neighbor_id {id_type}, dist double"
-        )
-        db_a.unpersist()
-        q_a.unpersist()
-        return topk(empty)
-    r_dmax, r_qmax = float(r_dmax_v), float(r_qmax_v)
+    anchored = _anchored(db_polys, query_polys, id_col, None, F.max)
+    if anchored is None:
+        return topk(_no_neighbors(db_polys, id_col))
+    db_a, q_a, r_dmax, r_qmax = anchored
     match_r = eps * sqrt2
     # δ trades ring size (query fan-out) against cell occupancy; ~6 rings
     # keeps the fan ≤ ~13², and a larger δ only ADDS candidates (exactness
     # never depends on δ)
     delta = max(eps, (match_r + r_qmax + r_dmax) / 6.0)
-    db_cells = db_a.select(
-        "j",
-        F.floor(F.col("_ax") / delta).alias("cx"),
-        F.floor(F.col("_ay") / delta).alias("cy"),
-    )
-    db_lines = db_a.select("j", F.col("xs").alias("xs_j"), F.col("ys").alias("ys_j"))
-    q_lines = q_a.select("i", F.col("xs").alias("xs_i"), F.col("ys").alias("ys_i"))
+    fx, fy = F.floor(F.col("_ax") / delta), F.floor(F.col("_ay") / delta)
+    db_cells = db_a.select("j", fx.alias("cx"), fy.alias("cy"))
     # ring covers d₂(anchors) < ε√2 + r_q + r_dmax: Chebyshev cell distance
     # ≤ d₂/δ + 1, hence ceil(T/δ) + 1 rings suffice
     ring = F.ceil(
         (F.lit(match_r + r_dmax) + F.col("radius")) / F.lit(delta)
     ).cast("int") + F.lit(1)
+    span = F.sequence(-F.col("_ring"), F.col("_ring"))
     fan = (
         q_a.select("i", "_ax", "_ay", ring.alias("_ring"))
-        .withColumn("dx", F.explode(F.sequence(-F.col("_ring"), F.col("_ring"))))
-        .withColumn("dy", F.explode(F.sequence(-F.col("_ring"), F.col("_ring"))))
-        .select(
-            "i",
-            (F.floor(F.col("_ax") / delta) + F.col("dx")).alias("cx"),
-            (F.floor(F.col("_ay") / delta) + F.col("dy")).alias("cy"),
-        )
+        .withColumn("dx", F.explode(span)).withColumn("dy", F.explode(span))
+        .select("i", (fx + F.col("dx")).alias("cx"), (fy + F.col("dy")).alias("cy"))
     )
-    cand = (
-        fan.join(db_cells, ["cx", "cy"])
-        .where(F.col("i") != F.col("j"))
-        .select("i", "j")
-        .persist()
-    )
-    # shuffle the SLIM pair ids by j and co-partition the db polylines on
-    # the same key (explicit numPartitions keeps AQE from coalescing the
-    # kernel's parallelism away); the bounded query side broadcasts. No
-    # exchange ever carries a polyline-laden pair row (round 9, guide
-    # §2.3/§8: move the 16-byte decision, attach the payload where it
-    # lands).
-    par = cand.sparkSession.sparkContext.defaultParallelism
-    pairs = (
-        cand.repartition(par, "j")
-        .join(db_lines.repartition(par, "j"), "j")
-        .join(F.broadcast(q_lines), "i")
-    )
-    scored = _kernel_pass(pairs, {"dist": (measure, eps)}).withColumnsRenamed(
-        {"i": "query_id", "j": "neighbor_id"}
-    ).persist()
+    cand = fan.join(db_cells, ["cx", "cy"]).where(F.col("i") != F.col("j")).select("i", "j")
+    cand = cand.persist()
+    # the candidate join moves slim (i, j) rows; the scorer brings the
+    # polylines
+    scored = _neighbor_scorer(q_a, db_a, measure, eps)(cand).persist()
 
     # queries already exact: ≥ k candidates scoring strictly < 1.0 (then no
     # dist-1.0 filler can enter their top-k)
-    strict = scored.where(F.col("dist") < 1.0).groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("_ns")
-    )
+    strict = scored.where(F.col("dist") < 1.0).groupBy("query_id").count()
     needy = q_a.select(F.col("i").alias("query_id")).join(
-        strict.where(F.col("_ns") >= k), "query_id", "left_anti"
-    )
+        strict.where(F.col("count") >= k), "query_id", "left_anti")
     # per needy query the only db ids EXCLUDED from filling are its
     # candidates (already scored) and itself: among the k + n_excl
     # smallest db ids at most n_excl are excluded, so the k smallest
     # non-excluded ids — exactly the ones that can enter a 1.0-tied
     # top-k under the (dist, neighbor_id) order — are guaranteed inside
     # that prefix. One rank-bounded join, no driver-side id collect.
-    n_excl = (
-        needy.join(
-            cand.select(F.col("i").alias("query_id"), "j"), "query_id", "left"
-        )
-        .groupBy("query_id")
-        .agg((F.count("j") + F.lit(1)).alias("_ne"))
-        .persist()
-    )
+    cand_q = cand.withColumnRenamed("i", "query_id")
+    n_excl = needy.join(cand_q, "query_id", "left").groupBy("query_id").agg(
+        (F.count("j") + F.lit(1)).alias("_ne")).persist()
     # ONE scalar job: materializes scored (the kernel pass) through the
-    # strict→needy chain, fills the n_excl cache, and its NULL/means-empty
-    # max doubles as the "any needy queries at all?" probe — the r4 plan's
-    # scored.count() + needy.isEmpty() + max(_ne) jobs folded into it
-    # (VERDICT r4 #1: the +47% sf0.1 fixed cost was exactly these jobs).
+    # strict→needy chain, fills the n_excl cache, and its NULL max doubles
+    # as the "any needy queries at all?" probe (a count, an isEmpty and a
+    # max would each be a job of fixed cost)
     ne_max = n_excl.agg(F.max("_ne")).collect()[0][0]
     fillers = None
     if ne_max is not None:
@@ -459,11 +431,7 @@ def _lcss_edr_topk(
         fillers = (
             fill_keys.join(F.broadcast(prefix), "_rn0")
             .where(F.col("query_id") != F.col("j"))
-            .join(
-                cand.select(F.col("i").alias("query_id"), "j"),
-                ["query_id", "j"],
-                "left_anti",
-            )
+            .join(cand_q, ["query_id", "j"], "left_anti")
             .withColumn("_fr", F.row_number().over(wf))
             .where(F.col("_fr") <= k)
             .select("query_id", F.col("j").alias("neighbor_id"), F.lit(1.0).alias("dist"))
@@ -475,11 +443,9 @@ def _lcss_edr_topk(
     if fillers is not None:
         out = scored.unionByName(fillers)
     result = topk(out)
-    # the final plan reads only the two bounded caches — scored (the
-    # kernel output, one row per candidate pair) and fillers (≤ k rows per
-    # needy query, materialized above) — so the larger intermediates
-    # release their blocks now instead of leaking (ADVICE r3); nothing in
-    # the caller's execution re-derives them
+    # the final plan reads only the two bounded caches — scored (one row
+    # per candidate pair) and fillers (≤ k rows per needy query) — so the
+    # larger intermediates release their blocks now instead of leaking
     for df in (db_a, q_a, cand, n_excl):
         df.unpersist()
     return result
@@ -500,22 +466,17 @@ def measure_topk(
     /root/reference/fedtraj/model/trainer/fed_trainer.py:445-452) →
     (query_id, neighbor_id, rank, dist).
 
-    With ``grid`` and a metric measure (Fréchet / Hausdorff, both ≥ the
-    set-to-set minimum distance): exact grid-pruned path. Each trajectory
-    gets an anchor cell (MBR center) + radius; candidates come from a
-    k-ring equi-join on anchor cells; a query is provably exact when its
-    kth distance ≤ R·min_unit − r_q − max_db_radius; unfinished queries
-    re-fan at 2R, 4R, … until the ring covers the grid — never a cross
-    join against the full corpus (the reference instead caps its db at
-    10 000, fed_trainer.py:447; the engine needs no cap).
+    With ``grid`` and a metric measure (``_METRIC_MEASURES``): exact
+    grid-pruned path. Each trajectory gets an anchor cell (MBR center) +
+    radius; candidates come from a k-ring equi-join on anchor cells; a
+    query is provably exact when its kth distance ≤ R·min_unit − r_q −
+    max_db_radius; unfinished queries re-fan at 2R, 4R, … until the ring
+    covers the grid — never a cross join against the full corpus (the
+    reference instead caps its db at 10 000, fed_trainer.py:447).
 
-    ε-match measures (normalized LCSS / EDR): exact cell-blocked path —
-    non-candidates provably score 1.0, see _lcss_edr_topk (``brute=True``
-    forces the broadcast-scan fallback, kept for parity testing).
-
-    Every supported measure therefore has a bounded exact path; the
-    broadcast query × db fallback remains only for ``grid=None`` or
-    ``brute=True`` (parity testing)."""
+    ε-match measures (normalized LCSS / EDR): exact cell-blocked path,
+    see _lcss_edr_topk. The broadcast query × db scan runs only for
+    ``grid=None`` or ``brute=True`` (kept for parity testing)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
@@ -530,67 +491,36 @@ def measure_topk(
         return _lcss_edr_topk(db_polys, query_polys, measure, k, eps, id_col, topk)
 
     if grid is None or measure not in _METRIC_MEASURES or brute:
-        q = query_polys.select(
-            F.col(id_col).alias("i"), F.col("xs").alias("xs_i"), F.col("ys").alias("ys_i")
-        )
-        db = db_polys.select(
-            F.col(id_col).alias("j"), F.col("xs").alias("xs_j"), F.col("ys").alias("ys_j")
-        )
-        joined = F.broadcast(q).crossJoin(db).where(F.col("i") != F.col("j"))
-        return topk(_kernel_pass(_respread(joined), {"dist": (measure, eps)})
-                    .withColumnsRenamed({"i": "query_id", "j": "neighbor_id"}))
+        q = query_polys.select(F.col(id_col).alias("i"), "xs", "ys")
+        db = db_polys.select(F.col(id_col).alias("j"), "xs", "ys")
+        score = _neighbor_scorer(q, db, measure, eps)
+        pairs = F.broadcast(q.select("i")).crossJoin(db.select("j"))
+        return topk(score(pairs.where(F.col("i") != F.col("j"))))
 
-    db_anchored = _traj_anchor(
-        db_polys.select(id_col, "xs", "ys"), "j", grid, id_col=id_col
-    ).persist()
-    q_all = _traj_anchor(
-        query_polys.select(id_col, "xs", "ys"), "i", grid, id_col=id_col
-    ).persist()
-    # one scalar job for both radius extrema (side-tagged union agg); also
-    # materializes both anchor caches (VERDICT r4 #1 fixed-cost fold)
-    r_row = (
-        db_anchored.select(F.lit(True).alias("_d"), "radius")
-        .unionByName(q_all.select(F.lit(False).alias("_d"), "radius"))
-        .agg(
-            F.max(F.when(F.col("_d"), F.col("radius"))).alias("rd"),
-            F.min(F.when(~F.col("_d"), F.col("radius"))).alias("rq"),
-        )
-        .collect()[0]
-    )
-    r_dmax_v, r_qmin_v = r_row["rd"], r_row["rq"]
-    if r_dmax_v is None or r_qmin_v is None:
-        # empty side → empty result (float(None) would crash; ADVICE r3);
-        # the NULL aggregate doubles as the emptiness probe
-        id_type = dict(db_polys.dtypes)[id_col]
-        db_anchored.unpersist()
-        q_all.unpersist()
-        return topk(db_polys.sparkSession.createDataFrame(
-            [], f"query_id {id_type}, neighbor_id {id_type}, dist double"
-        ))
-    r_dmax, r_qmin = float(r_dmax_v), float(r_qmin_v)
+    anchored = _anchored(db_polys, query_polys, id_col, grid, F.min)
+    if anchored is None:
+        return topk(_no_neighbors(db_polys, id_col))
+    db_anchored, q_all, r_dmax, r_qmin = anchored
     db_cells = db_anchored.select(
         "j", cell_id_expr("a_ix", "a_iy", grid).alias("cell_id")
     )
-    db_lines = db_anchored.select(
-        "j", F.col("xs").alias("xs_j"), F.col("ys").alias("ys_j")
-    )
-    q_lines = q_all.select("i", F.col("xs").alias("xs_i"), F.col("ys").alias("ys_i"))
+    # one scorer for every round: the polylines are gated (and broadcast)
+    # once, not once per ring
+    score = _neighbor_scorer(q_all, db_anchored, measure, eps)
 
     cover = max(grid.x_size, grid.y_size)
     min_unit = min(grid.x_unit, grid.y_unit)
     # smallest ring whose exactness bound CAN be positive: below it every
     # round's kernel work is wasted (whole-extent trajectories degrade
     # gracefully to one full equi-join round — still never a cross join)
-    import math as _math
-
-    r_floor = int(_math.ceil((r_dmax + r_qmin) / min_unit)) + 1
+    r_floor = int(math.ceil((r_dmax + r_qmin) / min_unit)) + 1
     r = min(max(ring or 4, r_floor), cover)
     remaining = q_all.select("i", "a_ix", "a_iy", "radius")
     results = []
     while True:
         seq = F.sequence(F.lit(-r), F.lit(r))
-        # fan SLIM rows only (id + cell); polylines re-attach after the
-        # cell join — never replicate the arrays (2r+1)² times
+        # fan SLIM rows only (id + cell): the scorer brings the polylines,
+        # so the arrays are never replicated (2r+1)² times
         fan = (
             remaining.withColumn("dx", F.explode(seq))
             .withColumn("dy", F.explode(seq))
@@ -606,13 +536,8 @@ def measure_topk(
             fan.join(db_cells, "cell_id")
             .where(F.col("i") != F.col("j"))
             .select("i", "j")
-            .join(q_lines, "i")
-            .join(db_lines, "j")
         )
-        scored = _kernel_pass(_respread(pairs), {"dist": (measure, eps)}).withColumnsRenamed(
-            {"i": "query_id", "j": "neighbor_id"}
-        )
-        ranked = topk(scored).persist()
+        ranked = topk(score(pairs)).persist()
         if r >= cover:
             results.append(ranked)
             break

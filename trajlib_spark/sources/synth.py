@@ -184,8 +184,3 @@ def pip_crossing_case(px: str, py: str, e: str = "e") -> str:
         f"ELSE false END"
     )
 
-
-def synthetic_polygon_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    nation.createOrReplaceTempView("ts_synth_nation")
-    return spark.sql(polygon_edges_sql(nation="ts_synth_nation"))
