@@ -38,12 +38,23 @@ class PairPath(str):
     session's broadcast budget and ships as an id-keyed lookup) or "join"
     (``autoBroadcastJoinThreshold`` -1, the payload attached by joins)."""
 
+    since: int | None = None  # SQL executions before the case (fixture)
+
     def ran_in(self, df) -> bool:
         """Whether ``df``'s executed plan scored its pairs on this path:
         a kernel pass, with the payload's attach columns on the join path
         and none on the broadcast path (cached plans print their inner
-        plan, so a persisted score counts)."""
+        plan, so a persisted score counts). A checkpointed score reads an
+        existing RDD and ran in a query of its own, so when ``df``'s plan
+        has no kernel pass the plans of the queries run since the fixture
+        began are read instead."""
         plan = df._jdf.queryExecution().executedPlan().toString()
+        if "MapInPandas" not in plan and self.since is not None:
+            store = df.sparkSession._jsparkSession.sharedState().statusStore()
+            runs = store.executionsList(self.since, store.executionsCount() - self.since)
+            plan = "\n".join(
+                runs.apply(k).physicalPlanDescription() for k in range(runs.size())
+            )
         assert "MapInPandas" in plan, plan
         return ("_payload_" in plan) == (self == "join")
 
@@ -57,7 +68,9 @@ def pair_path(request, spark):
     saved = spark.conf.get(key)
     if request.param == "join":
         spark.conf.set(key, "-1")
+    path = PairPath(request.param)
+    path.since = spark._jsparkSession.sharedState().statusStore().executionsCount()
     try:
-        yield PairPath(request.param)
+        yield path
     finally:
         spark.conf.set(key, saved)

@@ -7,10 +7,11 @@ edwp.py and rdp.py on fixed seeded random walks), plus property tests.
 from __future__ import annotations
 
 import math
+from unittest import mock
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from trajlib_spark.kernels import clustering as ck
@@ -173,15 +174,6 @@ def test_edwp_vectorized_bitwise_equal(seed, na, nb):
     assert dpk.edwp_distance_vec(a, b) == dpk.edwp_distance(a, b)
 
 
-@given(st.integers(0, 5_000), st.integers(0, 20), st.integers(0, 20))
-@settings(max_examples=30, deadline=None)
-def test_lcss_edr_vectorized_equal(seed, na, nb):
-    a, b = walk(seed, max(na, 0) or 0), walk(seed + 3, max(nb, 0) or 0)
-    a, b = a[:na], b[:nb]
-    assert dpk.lcss_distance_vec(a, b, 40.0) == dpk.lcss_distance(a, b, 40.0)
-    assert dpk.edr_distance_vec(a, b, 40.0) == dpk.edr_distance(a, b, 40.0)
-
-
 @pytest.mark.parametrize("seed", range(8))
 def test_parallel_distance_matches_reference_formula(seed):
     """trajclus.py:52-72 semantics, verified against an independent inline
@@ -212,32 +204,69 @@ def test_parallel_distance_matches_reference_formula(seed):
         assert parallel_distance(l1, l2) == pytest.approx(expect, rel=1e-12)
 
 
-# --- round-9 pair-blocked DP kernels ---------------------------------------
+# --- LCSS / EDR batch kernels ----------------------------------------------
 
-@given(st.integers(0, 2**32 - 1))
-@settings(max_examples=40, deadline=None)
-def test_blocked_lcss_edr_equal_scalar(seed):
-    """lcss/edr_distance_block vectorize the integer DP across the pair
-    axis; every per-pair value must equal the scalar kernel bit-for-bit
-    (same recurrence, same float division at the end)."""
+def _ragged_batch(seed: int, lens: list[tuple[int, int]]):
+    """Object arrays (xi, yi, xj, yj) of per-pair coordinate arrays, as an
+    Arrow batch hands them to the kernels."""
     rng = np.random.default_rng(seed)
-    n = int(rng.integers(1, 24))
-    m = int(rng.integers(1, 24))
-    P = int(rng.integers(1, 7))
-    T1 = (rng.random((P, n, 2)) - 0.5) * 3
-    T2 = (rng.random((P, m, 2)) - 0.5) * 3
-    eps = float(rng.choice([0.1, 0.25, 0.5]))
-    bl = dpk.lcss_distance_block(T1, T2, eps)
-    be = dpk.edr_distance_block(T1, T2, eps)
-    for p in range(P):
-        assert bl[p] == dpk.lcss_distance_vec(T1[p], T2[p], eps)
-        assert be[p] == dpk.edr_distance_vec(T1[p], T2[p], eps)
+    cols = [np.empty(len(lens), dtype=object) for _ in range(4)]
+    for p, (n, m) in enumerate(lens):
+        a = (rng.random((n, 2)) - 0.5) * 3
+        b = (rng.random((m, 2)) - 0.5) * 3
+        cols[0][p], cols[1][p] = a[:, 0].copy(), a[:, 1].copy()
+        cols[2][p], cols[3][p] = b[:, 0].copy(), b[:, 1].copy()
+    return cols
 
 
-def test_blocked_lcss_edr_empty_sides():
-    e = np.empty((3, 0, 2))
-    f = np.ones((3, 4, 2))
-    assert (dpk.lcss_distance_block(e, f, 0.25) == 1.0).all()
-    assert (dpk.lcss_distance_block(f, e, 0.25) == 1.0).all()
-    assert (dpk.edr_distance_block(e, f, 0.25) == 1.0).all()
-    assert (dpk.edr_distance_block(e, e, 0.25) == 0.0).all()
+_LEN = st.one_of(st.sampled_from([0, 1]), st.integers(2, 24), st.integers(129, 140))
+
+
+@given(
+    st.integers(0, 2**32 - 1),
+    st.lists(st.tuples(_LEN, _LEN), min_size=0, max_size=10),
+    st.sampled_from([0.1, 0.25, 0.5]),
+    st.sampled_from([None, 300, 3_000]),
+)
+@example(0, [(130, 131)] * 64, 0.25, None)  # > _CHUNK_CELLS: two chunks
+@settings(max_examples=30, deadline=None)
+def test_lcss_edr_batch_kernels_equal_scalar(seed, lens, eps, chunk_cells):
+    """lcss_distances / edr_distances pad each chunk of a ragged batch to
+    its own max (n, m) and run the DP across the pair axis; every value
+    must equal the scalar kernel bit for bit, empty sides included. A
+    small chunk bound splits the batch into many chunks."""
+    xi, yi, xj, yj = _ragged_batch(seed, lens)
+    with mock.patch.object(dpk, "_CHUNK_CELLS", chunk_cells or dpk._CHUNK_CELLS):
+        lc = dpk.lcss_distances(xi, yi, xj, yj, eps)
+        ed = dpk.edr_distances(xi, yi, xj, yj, eps)
+    assert lc.dtype == ed.dtype == np.float64 and lc.shape == ed.shape == (len(lens),)
+    for p in range(len(lens)):
+        t1 = np.column_stack([xi[p], yi[p]]).reshape(-1, 2)
+        t2 = np.column_stack([xj[p], yj[p]]).reshape(-1, 2)
+        assert lc[p] == dpk.lcss_distance(t1, t2, eps)
+        assert ed[p] == dpk.edr_distance(t1, t2, eps)
+
+
+def test_lcss_edr_batch_memory_bounded_by_chunk():
+    """Peak memory follows the chunk bound, not the batch: 4,000 pairs
+    peak at most ~1.5× what 400 pairs of the same lengths do (plus the
+    input's bytes), where a whole-batch padded DP would take 10×."""
+    import tracemalloc
+
+    side = int((dpk._CHUNK_CELLS / 200) ** 0.5)  # 400 pairs ≈ two chunks
+    peaks = {}
+    for P in (400, 4_000):
+        xi, yi, xj, yj = _ragged_batch(P, [(side, side - 1)] * P)
+        inputs = sum(a.nbytes for col in (xi, yi, xj, yj) for a in col)
+        for kern in (dpk.lcss_distances, dpk.edr_distances):
+            tracemalloc.start()
+            try:
+                kern(xi, yi, xj, yj, 0.25)
+                peak = tracemalloc.get_traced_memory()[1]
+            finally:
+                tracemalloc.stop()
+            peaks[P, kern.__name__] = (peak, inputs)
+    for name in ("lcss_distances", "edr_distances"):
+        small, _ = peaks[400, name]
+        big, inputs = peaks[4_000, name]
+        assert big <= 1.5 * small + inputs, (name, big, small, inputs)

@@ -275,8 +275,8 @@ def test_multi_measure_join_matches_single_measure_joins(spark, points):
     pairs = [(a, b) for a in ids for b in ids if a < b]
     assert list(multi.index) == pairs
     reference = {
-        "lcss": lambda a, b: dpk.lcss_distance_vec(normed[a], normed[b], 0.25),
-        "edr": lambda a, b: dpk.edr_distance_vec(normed[a], normed[b], 0.25),
+        "lcss": lambda a, b: dpk.lcss_distance(normed[a], normed[b], 0.25),
+        "edr": lambda a, b: dpk.edr_distance(normed[a], normed[b], 0.25),
         "frechet": lambda a, b: dpk.discrete_frechet(raw[a], raw[b]),
         "hausdorff": lambda a, b: dpk.hausdorff_distance(raw[a], raw[b]),
     }
@@ -308,7 +308,7 @@ def test_multi_measure_join_on_both_paths(spark, points, pair_path):
     ids = sorted(raw)
     assert [(i, j) for i, j, *_ in got] == [(a, b) for a in ids for b in ids if a < b]
     for i, j, lc, fr in got:
-        assert lc == pytest.approx(dpk.lcss_distance_vec(normed[i], normed[j], 0.25), rel=1e-12)
+        assert lc == pytest.approx(dpk.lcss_distance(normed[i], normed[j], 0.25), rel=1e-12)
         assert fr == pytest.approx(dpk.discrete_frechet(raw[i], raw[j]), rel=1e-12)
 
 
@@ -319,10 +319,10 @@ def test_measure_topk_on_both_paths(spark, points, pair_path, path_kind):
     score_pairs path: the top-k of a scalar scan over every db row."""
     from trajlib_spark.kernels import dp_distances as dpk
 
-    measure, kwargs = {
-        "brute": ("frechet", {}),
-        "grid": ("hausdorff", {"grid": G, "ring": 2}),
-        "eps_match": ("lcss", {}),
+    measure, kern, kwargs = {
+        "brute": ("frechet", dpk.discrete_frechet, {}),
+        "grid": ("hausdorff", dpk.hausdorff_distance, {"grid": G, "ring": 2}),
+        "eps_match": ("lcss", lambda a, b: dpk.lcss_distance(a, b, 0.25), {}),
     }[path_kind]
     polys = similarity.collect_polylines(points.where(F.col("traj_id") < 24))
     if measure == "lcss":
@@ -332,10 +332,9 @@ def test_measure_topk_on_both_paths(spark, points, pair_path, path_kind):
     out = similarity.measure_topk(polys, qs, measure, k=4, **kwargs)
     assert pair_path.ran_in(out)
     lines = _polyline_dict(polys)
-    kern = similarity._KERNELS[measure]
     expect = []
     for q in sorted(t for t in lines if t % 6 == 0):
-        ranked = sorted((kern(lines[q], lines[t], 0.25), t) for t in lines if t != q)
+        ranked = sorted((kern(lines[q], lines[t]), t) for t in lines if t != q)
         expect += [(q, t, r + 1, pytest.approx(d, rel=1e-12))
                    for r, (d, t) in enumerate(ranked[:4])]
     got = out.orderBy("query_id", "rank").select(
@@ -399,6 +398,52 @@ def test_global_row_number_leaves_session_cache_as_found(spark):
         d, n = segment.global_row_number(spark.range(100 + k), ("id",))
         rows = sorted((r.id, r._rn0) for r in d.collect())
         assert n == 100 + k and rows == [(v, v) for v in range(n)]
+    assert cm.numCachedEntries() == before
+
+
+def test_symmetrize_normalize_leaves_session_cache_as_found(spark):
+    """The mirrored frame is a lazy local checkpoint: three calls on new
+    inputs normalize correctly and add no entry to the session's
+    CacheManager."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    for k in range(3):
+        d = spark.createDataFrame([(1, 2, 4.0 + k), (2, 3, 2.0)], "i long, j long, dist double")
+        got = sorted(map(tuple, similarity.symmetrize_normalize(d).collect()))
+        mx = 4.0 + k
+        assert got == [(1, 2, 1.0), (2, 1, 1.0), (2, 3, 2.0 / mx), (3, 2, 2.0 / mx)]
+    assert cm.numCachedEntries() == before
+
+
+def test_eps_match_topk_leaves_session_cache_as_found(spark):
+    """The ε-match top-k's scored pairs and its 1.0 fillers are lazy local
+    checkpoints: two calls on new inputs, each with needy queries (two
+    far clusters, k above a cluster's size), rank like a scalar scan and
+    add no entry to the session's CacheManager."""
+    from trajlib_spark.kernels import dp_distances as dpk
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    for call in range(2):
+        rng = np.random.default_rng(call)
+        lines = {
+            t: rng.random((int(rng.integers(2, 6)), 2)) * 0.4 + (10.0 if t > 3 else 0.0)
+            for t in range(1, 7)
+        }
+        polys = spark.createDataFrame(
+            [(t, a[:, 0].tolist(), a[:, 1].tolist()) for t, a in lines.items()],
+            "traj_id long, xs array<double>, ys array<double>",
+        )
+        out = similarity.measure_topk(polys, polys, "lcss", k=4)
+        expect = []
+        for q in sorted(lines):
+            ranked = sorted(
+                (dpk.lcss_distance(lines[q], lines[t], 0.25), t) for t in lines if t != q
+            )
+            expect += [(q, t, r + 1, d) for r, (d, t) in enumerate(ranked[:4])]
+        got = out.orderBy("query_id", "rank").select(
+            "query_id", "neighbor_id", "rank", "dist").collect()
+        assert [tuple(r) for r in got] == expect
     assert cm.numCachedEntries() == before
 
 

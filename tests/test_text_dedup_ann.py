@@ -433,6 +433,33 @@ def test_embedding_near_dups_on_both_paths(spark, pair_path):
     assert all(c == fold(vecs[i], vecs[j]) for i, j, c in got), got
 
 
+def test_embedding_near_dups_empty_table(spark):
+    """No embeddings → no pairs, with the (i, j, cosine) schema."""
+    df = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    out = dedup.embedding_near_dups(df)
+    assert out.dtypes == [("i", "bigint"), ("j", "bigint"), ("cosine", "double")]
+    assert out.collect() == []
+
+
+def test_embedding_near_dups_leaves_session_cache_as_found(spark):
+    """The sketch frame is a lazy local checkpoint: two calls on new
+    inputs find their planted duplicate and add no entry to the session's
+    CacheManager."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    for call in range(2):
+        rng = np.random.default_rng(call)
+        vecs = [rng.normal(size=8) for _ in range(10)]
+        vecs.append(vecs[2].copy())
+        df = spark.createDataFrame(
+            [(k, [float(x) for x in v]) for k, v in enumerate(vecs)],
+            "vec_id long, embedding array<double>",
+        )
+        got = [(r.i, r.j) for r in dedup.embedding_near_dups(df, threshold=0.999).collect()]
+        assert got == [(2, 10)]
+    assert cm.numCachedEntries() == before
+
+
 def test_embedding_near_dups_multi_table_recall(spark):
     """Multiple independent hyperplane tables recover planted near-dup
     pairs that a single sketch misses (recall 1-(1-p)^T)."""

@@ -40,8 +40,9 @@ from trajlib_spark.kernels.clustering import (  # noqa: E402
 from trajlib_spark.kernels.dp_distances import (  # noqa: E402
     discrete_frechet,
     edwp_distance_vec,
+    edr_distance,
     hausdorff_distance,
-    lcss_distance_vec,
+    lcss_distance,
 )
 from trajlib_spark.kernels.rdp import rdp_mask  # noqa: E402
 from trajlib_spark.kernels.traclus import cut_segments, traclus_mask  # noqa: E402
@@ -244,7 +245,7 @@ def g_similarity_lcss(sf_dir: str) -> pd.DataFrame:
         for t, tr in polylines(pts).items()
     }
     rows = [
-        (i, j, (spark_round(lcss_distance_vec(pls[i], pls[j], 0.25), 6) + 0e0))
+        (i, j, (spark_round(lcss_distance(pls[i], pls[j], 0.25), 6) + 0e0))
         for i, j in _block_pairs(list(pls), lambda t: t % 5)
     ]
     return pd.DataFrame(rows, columns=["i", "j", "dist_r"]).astype(
@@ -264,8 +265,6 @@ def _pair_frame(sf_dir: str, kern, digits: int) -> pd.DataFrame:
 
 
 def g_similarity_edr(sf_dir: str) -> pd.DataFrame:
-    from trajlib_spark.kernels.dp_distances import edr_distance_vec
-
     pts = load_points(sf_dir)
     mx, sx = pts["x"].mean(), pts["x"].std(ddof=0)
     my, sy = pts["y"].mean(), pts["y"].std(ddof=0)
@@ -274,7 +273,7 @@ def g_similarity_edr(sf_dir: str) -> pd.DataFrame:
         for t, tr in polylines(pts).items()
     }
     rows = [
-        (i, j, (spark_round(edr_distance_vec(pls[i], pls[j], 0.25), 6) + 0e0))
+        (i, j, (spark_round(edr_distance(pls[i], pls[j], 0.25), 6) + 0e0))
         for i, j in _block_pairs(list(pls), lambda t: t % 5)
     ]
     return pd.DataFrame(rows, columns=["i", "j", "dist_r"]).astype(
@@ -363,8 +362,6 @@ def g_similarity_all(sf_dir: str) -> pd.DataFrame:
     """LCSS + EDR (z-scored, eps=0.25) and Fréchet + Hausdorff (raw) per
     fed-blocked pair — the merged oracle of the four single-measure
     queries (VERDICT r4 #2), same kernels and rounding."""
-    from trajlib_spark.kernels.dp_distances import edr_distance_vec
-
     pts = load_points(sf_dir)
     mx, sx = pts["x"].mean(), pts["x"].std(ddof=0)
     my, sy = pts["y"].mean(), pts["y"].std(ddof=0)
@@ -376,8 +373,8 @@ def g_similarity_all(sf_dir: str) -> pd.DataFrame:
     rows = [
         (
             i, j,
-            (spark_round(lcss_distance_vec(norm[i], norm[j], 0.25), 6) + 0e0),
-            (spark_round(edr_distance_vec(norm[i], norm[j], 0.25), 6) + 0e0),
+            (spark_round(lcss_distance(norm[i], norm[j], 0.25), 6) + 0e0),
+            (spark_round(edr_distance(norm[i], norm[j], 0.25), 6) + 0e0),
             (spark_round(discrete_frechet(raw[i], raw[j]), 3) + 0e0),
             (spark_round(hausdorff_distance(raw[i], raw[j]), 3) + 0e0),
         )
@@ -432,7 +429,7 @@ def g_measure_topk_lcss(sf_dir: str, k: int = 5, every: int = 30) -> pd.DataFram
     rows = []
     for q in sorted(t for t in pls if t % every == 0):
         scored = sorted(
-            (lcss_distance_vec(pls[q], pls[j], 0.25), j) for j in pls if j != q
+            (lcss_distance(pls[q], pls[j], 0.25), j) for j in pls if j != q
         )
         for r, (d, j) in enumerate(scored[:k], start=1):
             rows.append((q, j, r, (spark_round(d, 6) + 0e0)))

@@ -75,101 +75,90 @@ def edr_distance(t1: np.ndarray, t2: np.ndarray, eps: float) -> float:
     return float(prev[m]) / max(n, m)
 
 
-def _match_matrix(t1: np.ndarray, t2: np.ndarray, eps: float) -> np.ndarray:
-    return (np.abs(t1[:, None, 0] - t2[None, :, 0]) < eps) & (
-        np.abs(t1[:, None, 1] - t2[None, :, 1]) < eps
-    )
+# --- LCSS / EDR over a ragged batch ----------------------------------------
+
+# DP cells (pairs × (n+1) × (m+1)) per chunk: bounds the padded DP and
+# match temporaries (~10 bytes a cell) whatever the batch size
+_CHUNK_CELLS = 1 << 20
 
 
-def lcss_distance_vec(t1: np.ndarray, t2: np.ndarray, eps: float) -> float:
-    """Anti-diagonal LCS DP (integer-exact, equals lcss_distance):
-    D[i,j] = max(D[i-1,j], D[i,j-1], D[i-1,j-1] + match)."""
-    n, m = len(t1), len(t2)
-    if n == 0 or m == 0:
-        return 1.0
-    match = _match_matrix(t1, t2, eps).astype(np.int64)
-    D = np.zeros((n + 1, m + 1), dtype=np.int64)
-    for d in range(2, n + m + 1):
-        i = np.arange(max(1, d - m), min(n, d - 1) + 1)
-        j = d - i
-        D[i, j] = np.maximum(
-            np.maximum(D[i - 1, j], D[i, j - 1]),
-            D[i - 1, j - 1] + match[i - 1, j - 1],
-        )
-    return 1.0 - float(D[n, m]) / min(n, m)
+def _eps_match_dp(xi, yi, xj, yj, eps: float, edr: bool):
+    """(D[n_p, m_p], n_p, m_p) as [P] arrays for ragged object arrays of
+    per-pair coordinate arrays: D is the LCS length (``edr=False``) or the
+    Levenshtein cost (``edr=True``) under the scalar kernels' Chebyshev-ε
+    match. Pairs are taken in arrival order in chunks of at most
+    ``_CHUNK_CELLS`` cells (one pair at least), each padded to its own
+    max (n, m); the integer anti-diagonal recurrence runs across the pair
+    axis. Cell (n_p, m_p) reads only cells with i ≤ n_p and j ≤ m_p, so
+    the padding never reaches a result."""
+    P = len(xi)
+    ns = np.fromiter((len(a) for a in xi), dtype=np.int64, count=P)
+    ms = np.fromiter((len(a) for a in xj), dtype=np.int64, count=P)
+    out = np.empty(P, dtype=np.int64)
+    s = 0
+    while s < P:
+        n, m, e = ns[s], ms[s], s + 1
+        while e < P:
+            n2, m2 = max(n, ns[e]), max(m, ms[e])
+            if (e + 1 - s) * (n2 + 1) * (m2 + 1) > _CHUNK_CELLS:
+                break
+            n, m, e = n2, m2, e + 1
+        out[s:e] = _padded_dp(xi[s:e], yi[s:e], xj[s:e], yj[s:e],
+                              ns[s:e], ms[s:e], int(n), int(m), eps, edr)
+        s = e
+    return out, ns, ms
 
 
-def lcss_distance_block(T1: np.ndarray, T2: np.ndarray, eps: float) -> np.ndarray:
-    """LCSS for a BLOCK of pairs at once: T1 [P, n, 2] vs T2 [P, m, 2]
-    (equal lengths within the block) → [P] distances. Same anti-diagonal
-    integer DP as lcss_distance_vec with the pair axis vectorized — the
-    recurrence is integer-exact, so the per-pair results are identical;
-    the win is amortizing the ~6 numpy calls per diagonal over P pairs
-    instead of paying them per pair (round 9)."""
-    P, n, _ = T1.shape
-    m = T2.shape[1]
-    if n == 0 or m == 0:
-        return np.ones(P)
-    match = (
-        (np.abs(T1[:, :, None, 0] - T2[:, None, :, 0]) < eps)
-        & (np.abs(T1[:, :, None, 1] - T2[:, None, :, 1]) < eps)
-    ).astype(np.int32)
+def _padded_dp(xi, yi, xj, yj, ns, ms, n, m, eps, edr) -> np.ndarray:
+    P = len(ns)
+
+    def pad(arrs, lens, width):
+        A = np.zeros((P, width))
+        if width:
+            A[np.arange(width) < lens[:, None]] = np.concatenate(list(arrs))
+        return A
+
+    ax, ay, bx, by = pad(xi, ns, n), pad(yi, ns, n), pad(xj, ms, m), pad(yj, ms, m)
+    t = ax[:, :, None] - bx[:, None, :]
+    match = np.abs(t, out=t) < eps
+    np.subtract(ay[:, :, None], by[:, None, :], out=t)
+    match &= np.abs(t, out=t) < eps
+    del t
     D = np.zeros((P, n + 1, m + 1), dtype=np.int32)
+    if edr:
+        D[:, 0, :] = np.arange(m + 1, dtype=np.int32)
+        D[:, :, 0] = np.arange(n + 1, dtype=np.int32)
+        match = ~match  # EDR's diagonal step pays a miss; LCS's gains a match
     for d in range(2, n + m + 1):
         i = np.arange(max(1, d - m), min(n, d - 1) + 1)
         j = d - i
-        D[:, i, j] = np.maximum(
-            np.maximum(D[:, i - 1, j], D[:, i, j - 1]),
-            D[:, i - 1, j - 1] + match[:, i - 1, j - 1],
-        )
-    return 1.0 - D[:, n, m].astype(np.float64) / min(n, m)
+        if edr:
+            D[:, i, j] = np.minimum(
+                np.minimum(D[:, i - 1, j] + 1, D[:, i, j - 1] + 1),
+                D[:, i - 1, j - 1] + match[:, i - 1, j - 1],
+            )
+        else:
+            D[:, i, j] = np.maximum(
+                np.maximum(D[:, i - 1, j], D[:, i, j - 1]),
+                D[:, i - 1, j - 1] + match[:, i - 1, j - 1],
+            )
+    return D[np.arange(P), ns, ms]
 
 
-def edr_distance_block(T1: np.ndarray, T2: np.ndarray, eps: float) -> np.ndarray:
-    """EDR for a BLOCK of equal-length pairs (see lcss_distance_block) —
-    integer-exact, identical per-pair results to edr_distance_vec."""
-    P, n, _ = T1.shape
-    m = T2.shape[1]
-    if n == 0 and m == 0:
-        return np.zeros(P)
-    if n == 0 or m == 0:
-        return np.ones(P)
-    miss = 1 - (
-        (np.abs(T1[:, :, None, 0] - T2[:, None, :, 0]) < eps)
-        & (np.abs(T1[:, :, None, 1] - T2[:, None, :, 1]) < eps)
-    ).astype(np.int32)
-    D = np.zeros((P, n + 1, m + 1), dtype=np.int32)
-    D[:, 0, :] = np.arange(m + 1, dtype=np.int32)
-    D[:, :, 0] = np.arange(n + 1, dtype=np.int32)
-    for d in range(2, n + m + 1):
-        i = np.arange(max(1, d - m), min(n, d - 1) + 1)
-        j = d - i
-        D[:, i, j] = np.minimum(
-            np.minimum(D[:, i - 1, j] + 1, D[:, i, j - 1] + 1),
-            D[:, i - 1, j - 1] + miss[:, i - 1, j - 1],
-        )
-    return D[:, n, m].astype(np.float64) / max(n, m)
+def lcss_distances(xi, yi, xj, yj, eps: float) -> np.ndarray:
+    """lcss_distance for every pair of a ragged batch (object arrays of
+    coordinate arrays) → [P], bit-identical to the scalar kernel."""
+    lcs, ns, ms = _eps_match_dp(xi, yi, xj, yj, eps, edr=False)
+    short = np.minimum(ns, ms)
+    return np.where(short > 0, 1.0 - lcs / np.maximum(short, 1), 1.0)
 
 
-def edr_distance_vec(t1: np.ndarray, t2: np.ndarray, eps: float) -> float:
-    """Anti-diagonal EDR DP (integer-exact, equals edr_distance)."""
-    n, m = len(t1), len(t2)
-    if n == 0 and m == 0:
-        return 0.0
-    if n == 0 or m == 0:
-        return 1.0
-    miss = 1 - _match_matrix(t1, t2, eps).astype(np.int64)
-    D = np.zeros((n + 1, m + 1), dtype=np.int64)
-    D[0, :] = np.arange(m + 1)
-    D[:, 0] = np.arange(n + 1)
-    for d in range(2, n + m + 1):
-        i = np.arange(max(1, d - m), min(n, d - 1) + 1)
-        j = d - i
-        D[i, j] = np.minimum(
-            np.minimum(D[i - 1, j] + 1, D[i, j - 1] + 1),
-            D[i - 1, j - 1] + miss[i - 1, j - 1],
-        )
-    return float(D[n, m]) / max(n, m)
+def edr_distances(xi, yi, xj, yj, eps: float) -> np.ndarray:
+    """edr_distance for every pair of a ragged batch → [P], bit-identical
+    to the scalar kernel."""
+    cost, ns, ms = _eps_match_dp(xi, yi, xj, yj, eps, edr=True)
+    long = np.maximum(ns, ms)
+    return np.where(long > 0, cost / np.maximum(long, 1), 0.0)
 
 
 # --- discrete Fréchet ------------------------------------------------------
@@ -441,10 +430,3 @@ def edwp_distance_vec(t1: np.ndarray, t2: np.ndarray) -> float:
         row_ey[i, j] = np.where(take_col, col_ins_y, t1[i - 1, 1])
 
     return float(value[n - 1, m - 1])
-
-
-KERNELS = {
-    "edwp": edwp_distance_vec,
-    "frechet": discrete_frechet,
-    "hausdorff": hausdorff_distance,
-}

@@ -324,7 +324,10 @@ def embedding_near_dups(
     differs in ≥1 bit), then each distinct candidate pair verified exactly
     by ``pairs.score_pairs`` with the vectors as its payload — bucket
     equi-joins over slim rows only."""
-    dim = len(embs.select(vec_col).first()[0])
+    first = embs.select(vec_col).first()
+    if first is None:
+        return embs.sparkSession.createDataFrame([], "i long, j long, cosine double")
+    dim = len(first[0])
     rng = np.random.default_rng(seed)
     # sequential per-table draws, stacked (identical values to drawing
     # inside a per-table loop — the oracle generator replicates this)
@@ -350,9 +353,12 @@ def embedding_near_dups(
             yield pdf
 
     fields = ", ".join(f"{n} {t}" for n, t in embs.select(id_col, vec_col).dtypes)
+    # a lazy local checkpoint, not persist(): the first job that reads it
+    # fills its blocks, and the ContextCleaner frees them once the result
+    # is unreachable instead of leaving a CacheManager entry per call
     sk = embs.select(id_col, vec_col).mapInPandas(
         sketch_batch, f"{fields}, _buckets array<long>"
-    ).persist()
+    ).localCheckpoint(eager=False)
     # one slim row per (table, bucket) — candidates are the union of
     # per-table bucket self-joins, deduped before the exact verify so a
     # pair colliding in several tables is scored once

@@ -104,61 +104,25 @@ def pair_table(
     return joined.where(F.col("i") < F.col("j"))
 
 
+def _per_pair(kern: Callable) -> Callable:
+    """Batch form of a per-pair kernel over (t1, t2) point arrays."""
+    def batch(xi, yi, xj, yj, eps) -> np.ndarray:
+        return np.array([
+            kern(np.column_stack([a, b]), np.column_stack([c, d]))
+            for a, b, c, d in zip(xi, yi, xj, yj)
+        ], dtype=np.float64)
+    return batch
+
+
+# measure → batch kernel (xi, yi, xj, yj, eps) → [P] distances over one
+# Arrow batch's object arrays of per-pair coordinate arrays
 _KERNELS: dict[str, Callable] = {
-    "edwp": lambda t1, t2, eps: dpk.edwp_distance_vec(t1, t2),
-    "lcss": lambda t1, t2, eps: dpk.lcss_distance_vec(t1, t2, eps),
-    "edr": lambda t1, t2, eps: dpk.edr_distance_vec(t1, t2, eps),
-    "frechet": lambda t1, t2, eps: dpk.discrete_frechet(t1, t2),
-    "hausdorff": lambda t1, t2, eps: dpk.hausdorff_distance(t1, t2),
+    "lcss": dpk.lcss_distances,
+    "edr": dpk.edr_distances,
+    "edwp": _per_pair(dpk.edwp_distance_vec),
+    "frechet": _per_pair(dpk.discrete_frechet),
+    "hausdorff": _per_pair(dpk.hausdorff_distance),
 }
-
-# measures with a pair-BLOCKED kernel (integer DP vectorized across the
-# pair axis — per-pair results identical to the scalar kernels; round 9)
-_BLOCK_KERNELS: dict[str, Callable] = {
-    "lcss": dpk.lcss_distance_block,
-    "edr": dpk.edr_distance_block,
-}
-_BLOCK_MAX = 2048  # bounds the (P, n, m) DP/match temporaries
-
-
-def _eval_pairs(measure, eps, xi, yi, xj, yj) -> np.ndarray:
-    """[P] distances for object arrays of per-pair coordinate arrays.
-    lcss/edr run the blocked integer-DP kernel over runs of identical
-    (len_i, len_j) — identical values to the per-pair kernels, ~the
-    diagonal-step numpy overhead amortized over the block; every other
-    measure keeps the per-pair kernel loop."""
-    P = len(xi)
-    dists = np.empty(P)
-    blk = _BLOCK_KERNELS.get(measure)
-    if blk is None:
-        kern = _KERNELS[measure]
-        for r in range(P):
-            dists[r] = kern(
-                np.column_stack([xi[r], yi[r]]),
-                np.column_stack([xj[r], yj[r]]), eps,
-            )
-        return dists
-    ns = np.fromiter((len(a) for a in xi), dtype=np.int64, count=P)
-    ms = np.fromiter((len(a) for a in xj), dtype=np.int64, count=P)
-    order = np.lexsort((ms, ns))
-    s = 0
-    while s < P:
-        n0, m0 = ns[order[s]], ms[order[s]]
-        e = s
-        while (e < P and e - s < _BLOCK_MAX
-               and ns[order[e]] == n0 and ms[order[e]] == m0):
-            e += 1
-        rows = order[s:e]
-        T1 = np.empty((len(rows), n0, 2))
-        T2 = np.empty((len(rows), m0, 2))
-        for k, r in enumerate(rows):
-            T1[k, :, 0] = xi[r]
-            T1[k, :, 1] = yi[r]
-            T2[k, :, 0] = xj[r]
-            T2[k, :, 1] = yj[r]
-        dists[rows] = blk(T1, T2, eps)
-        s = e
-    return dists
 
 
 def _measure_scorer(
@@ -181,16 +145,16 @@ def _measure_scorer(
                 f"unknown measure {m!r} for {out!r}; one of {sorted(_KERNELS)}"
             )
     specs = [
-        (out, m, eps, coord_cols.get(out, ("xs", "ys")))
+        (out, _KERNELS[m], eps, coord_cols.get(out, ("xs", "ys")))
         for out, (m, eps) in measures.items()
     ]
 
     def kernel(ii: np.ndarray, jj: np.ndarray, payload_of) -> pd.DataFrame:
         out = {"i": ii, "j": jj}
-        for name, m, eps, (xc, yc) in specs:
-            out[name] = _eval_pairs(
-                m, eps, payload_of("i", xc), payload_of("i", yc),
-                payload_of("j", xc), payload_of("j", yc),
+        for name, kern, eps, (xc, yc) in specs:
+            out[name] = kern(
+                payload_of("i", xc), payload_of("i", yc),
+                payload_of("j", xc), payload_of("j", yc), eps,
             )
         return pd.DataFrame(out)
 
@@ -332,7 +296,7 @@ def _no_neighbors(db_polys: DataFrame, id_col: str) -> DataFrame:
 _METRIC_MEASURES = frozenset({"frechet", "hausdorff", "edwp"})
 
 # Measures whose per-point match predicate is Chebyshev-ε (|dx|<ε ∧ |dy|<ε,
-# dp_distances._match_matrix): a pair with NO matching point pair scores
+# dp_distances.lcss_distance): a pair with NO matching point pair scores
 # EXACTLY 1.0 (LCSS: LCS length 0 → 1 − 0/min = 1; EDR: all-miss
 # Levenshtein → max(m,n)/max(m,n) = 1), so candidates are exactly the
 # pairs whose anchors are within ε√2 + r_q + r_d — everything else can be
@@ -388,8 +352,11 @@ def _lcss_edr_topk(
     cand = fan.join(db_cells, ["cx", "cy"]).where(F.col("i") != F.col("j")).select("i", "j")
     cand = cand.persist()
     # the candidate join moves slim (i, j) rows; the scorer brings the
-    # polylines
-    scored = _neighbor_scorer(q_a, db_a, measure, eps)(cand).persist()
+    # polylines. scored and fillers are lazy local checkpoints: the
+    # returned plan reads their blocks, and the ContextCleaner frees them
+    # once it is unreachable (a persist() would stay in the CacheManager)
+    scored = _neighbor_scorer(q_a, db_a, measure, eps)(cand)
+    scored = scored.localCheckpoint(eager=False)
 
     # queries already exact: ≥ k candidates scoring strictly < 1.0 (then no
     # dist-1.0 filler can enter their top-k)
@@ -435,7 +402,7 @@ def _lcss_edr_topk(
             .withColumn("_fr", F.row_number().over(wf))
             .where(F.col("_fr") <= k)
             .select("query_id", F.col("j").alias("neighbor_id"), F.lit(1.0).alias("dist"))
-            .persist()
+            .localCheckpoint(eager=False)
         )
         fillers.count()  # materialize while cand/needy caches are warm
 
@@ -443,7 +410,7 @@ def _lcss_edr_topk(
     if fillers is not None:
         out = scored.unionByName(fillers)
     result = topk(out)
-    # the final plan reads only the two bounded caches — scored (one row
+    # the final plan reads only the two bounded checkpoints — scored (one row
     # per candidate pair) and fillers (≤ k rows per needy query) — so the
     # larger intermediates release their blocks now instead of leaking
     for df in (db_a, q_a, cand, n_excl):
@@ -592,8 +559,9 @@ def symmetrize_normalize(dists: DataFrame) -> DataFrame:
             )).alias("_e")
         )
         .select("_e.i", "_e.j", "_e.dist")
-        .persist()
-    )  # the max agg and the normalized output share one pass
+        .localCheckpoint(eager=False)
+    )  # the max agg and the normalized output share one pass, and the
+    # ContextCleaner frees the blocks once the result is unreachable
     mx = both.agg(F.max("dist")).collect()[0][0]
     if mx is None:  # no rows
         return both.withColumn("dist", F.col("dist").cast("double"))
