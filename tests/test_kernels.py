@@ -247,6 +247,57 @@ def test_lcss_edr_batch_kernels_equal_scalar(seed, lens, eps, chunk_cells):
         assert ed[p] == dpk.edr_distance(t1, t2, eps)
 
 
+def _batch_of(pairs):
+    """Object arrays (xi, yi, xj, yj) for a list of (t1, t2) point arrays."""
+    cols = [np.empty(len(pairs), dtype=object) for _ in range(4)]
+    for p, (t1, t2) in enumerate(pairs):
+        t1, t2 = np.asarray(t1).reshape(-1, 2), np.asarray(t2).reshape(-1, 2)
+        cols[0][p], cols[1][p] = t1[:, 0].copy(), t1[:, 1].copy()
+        cols[2][p], cols[3][p] = t2[:, 0].copy(), t2[:, 1].copy()
+    return cols
+
+
+@given(st.integers(0, 5_000), st.integers(0, 20), st.integers(0, 20))
+@settings(max_examples=30, deadline=None)
+def test_lcss_edr_vectorized_equal(seed, na, nb):
+    """A one-pair batch of random walks (lengths 0..20) scores exactly as
+    the scalar kernels do."""
+    a, b = walk(seed, na), walk(seed + 3, nb)
+    batch = _batch_of([(a, b)])
+    assert dpk.lcss_distances(*batch, 40.0)[0] == dpk.lcss_distance(a, b, 40.0)
+    assert dpk.edr_distances(*batch, 40.0)[0] == dpk.edr_distance(a, b, 40.0)
+
+
+@given(st.integers(0, 2**32 - 1))
+@settings(max_examples=40, deadline=None)
+def test_blocked_lcss_edr_equal_scalar(seed):
+    """An equal-length batch runs the DP across the pair axis; every
+    per-pair value must equal the scalar kernel bit-for-bit (same
+    recurrence, same float division at the end)."""
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(1, 24))
+    m = int(rng.integers(1, 24))
+    P = int(rng.integers(1, 7))
+    T1 = (rng.random((P, n, 2)) - 0.5) * 3
+    T2 = (rng.random((P, m, 2)) - 0.5) * 3
+    eps = float(rng.choice([0.1, 0.25, 0.5]))
+    batch = _batch_of(list(zip(T1, T2)))
+    bl = dpk.lcss_distances(*batch, eps)
+    be = dpk.edr_distances(*batch, eps)
+    for p in range(P):
+        assert bl[p] == dpk.lcss_distance(T1[p], T2[p], eps)
+        assert be[p] == dpk.edr_distance(T1[p], T2[p], eps)
+
+
+def test_blocked_lcss_edr_empty_sides():
+    e = np.empty((0, 2))
+    f = np.ones((4, 2))
+    assert (dpk.lcss_distances(*_batch_of([(e, f)] * 3), 0.25) == 1.0).all()
+    assert (dpk.lcss_distances(*_batch_of([(f, e)] * 3), 0.25) == 1.0).all()
+    assert (dpk.edr_distances(*_batch_of([(e, f)] * 3), 0.25) == 1.0).all()
+    assert (dpk.edr_distances(*_batch_of([(e, e)] * 3), 0.25) == 0.0).all()
+
+
 def test_lcss_edr_batch_memory_bounded_by_chunk():
     """Peak memory follows the chunk bound, not the batch: 4,000 pairs
     peak at most ~1.5× what 400 pairs of the same lengths do (plus the
