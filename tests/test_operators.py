@@ -416,10 +416,11 @@ def test_symmetrize_normalize_leaves_session_cache_as_found(spark):
 
 
 def test_eps_match_topk_leaves_session_cache_as_found(spark):
-    """The ε-match top-k's scored pairs and its 1.0 fillers are lazy local
-    checkpoints: two calls on new inputs, each with needy queries (two
-    far clusters, k above a cluster's size), rank like a scalar scan and
-    add no entry to the session's CacheManager."""
+    """The ε-match top-k persists nothing (its anchors are lazy local
+    checkpoints, the rest of its plan is lazy): two calls on new inputs,
+    each with queries that need 1.0 fillers (two far clusters, k above a
+    cluster's size), rank like a scalar scan and add no entry to the
+    session's CacheManager."""
     from trajlib_spark.kernels import dp_distances as dpk
 
     cm = spark._jsparkSession.sharedState().cacheManager()
@@ -443,6 +444,63 @@ def test_eps_match_topk_leaves_session_cache_as_found(spark):
             expect += [(q, t, r + 1, d) for r, (d, t) in enumerate(ranked[:4])]
         got = out.orderBy("query_id", "rank").select(
             "query_id", "neighbor_id", "rank", "dist").collect()
+        assert [tuple(r) for r in got] == expect
+    assert cm.numCachedEntries() == before
+
+
+def test_grid_ring_topk_leaves_session_cache_as_found(spark):
+    """The grid-ring top-k's anchors, per-round ranks and remaining
+    queries are lazy local checkpoints: three Hausdorff calls on new
+    inputs, over several ring rounds, rank like a scalar scan and add no
+    entry to the session's CacheManager."""
+    from trajlib_spark.kernels import dp_distances as dpk
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    for call in range(3):
+        rng = np.random.default_rng(call)
+        lines = {}
+        for t in range(12):
+            a = rng.random(2) * [G.x_max - G.x_min - 1000, G.y_max - G.y_min - 1000]
+            lines[t] = (a + [G.x_min + 500, G.y_min + 500]
+                        + rng.normal(0.0, 50.0, (int(rng.integers(2, 6)), 2)))
+        polys = spark.createDataFrame(
+            [(t, a[:, 0].tolist(), a[:, 1].tolist()) for t, a in lines.items()],
+            "traj_id long, xs array<double>, ys array<double>",
+        )
+        out = similarity.measure_topk(polys, polys, "hausdorff", k=2, grid=G, ring=1)
+        expect = []
+        for q in sorted(lines):
+            ranked = sorted(
+                (dpk.hausdorff_distance(lines[q], lines[t]), t) for t in lines if t != q
+            )
+            expect += [(q, t, r + 1) for r, (_d, t) in enumerate(ranked[:2])]
+        got = out.orderBy("query_id", "rank").select(
+            "query_id", "neighbor_id", "rank").collect()
+        assert [tuple(r) for r in got] == expect
+    assert cm.numCachedEntries() == before
+
+
+def test_knn_join_leaves_session_cache_as_found(spark):
+    """knn_join's per-round ranks are lazy local checkpoints: three calls
+    on new inputs, over several ring rounds, match a numpy scan and add
+    no entry to the session's CacheManager."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    for call in range(3):
+        rng = np.random.default_rng(call)
+        xy = rng.random((40, 2)) * [G.x_max - G.x_min, G.y_max - G.y_min] + [G.x_min, G.y_min]
+        pts = spark.createDataFrame(
+            [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
+            "point_id long, x double, y double",
+        )
+        out = knn.knn_join(pts, pts.where(F.col("point_id") < 4), G, k=3, ring=1)
+        got = out.orderBy("query_id", "rank").select("query_id", "neighbor_id").collect()
+        expect = []
+        for q in range(4):
+            d = ((xy - xy[q]) ** 2).sum(1)
+            expect += [(q, int(n)) for _d, n in sorted(
+                (float(d[m]), m) for m in range(len(xy)) if m != q)[:3]]
         assert [tuple(r) for r in got] == expect
     assert cm.numCachedEntries() == before
 
@@ -570,17 +628,30 @@ def test_measure_topk_eps_match_bounded_matches_brute(spark, points, measure):
     assert got == expect
 
 
-@pytest.mark.parametrize("measure", ["lcss", "edr"])
-def test_measure_topk_eps_match_filler_tail(spark, measure):
-    """Clustered corpus where k exceeds the within-cluster candidate count:
-    every query needs dist-1.0 fillers (smallest non-candidate ids), which
-    must reproduce the brute ranking exactly."""
+def _filler_case(measure: str, k: int, sparse: bool):
+    tag = "" if (k, sparse) == (8, False) else f"-k{k}" + ("-sparse" if sparse else "")
+    return pytest.param(measure, k, sparse, id=measure + tag)
+
+
+@pytest.mark.parametrize("measure, k, sparse", [
+    _filler_case(m, k, sparse)
+    for m in ("lcss", "edr")
+    for k, sparse in ((8, False), (1, False), (61, False), (8, True))
+])
+def test_measure_topk_eps_match_filler_tail(spark, measure, k, sparse):
+    """Clustered corpus (10 clusters of 6): from k = 6 on, every query
+    needs dist-1.0 fillers, the smallest non-candidate ids, which must
+    reproduce the brute ranking exactly. k = 61 is above the 60-row db,
+    and the sparse case numbers trajectories tid·7919 + 3, so the k+1
+    smallest db ids are not 0..k."""
     rng = np.random.RandomState(7)
     rows = []
     for c in range(10):
         cx, cy = c * 50.0, (c % 3) * 40.0
         for t in range(6):
             tid = c * 6 + t
+            if sparse:
+                tid = tid * 7919 + 3
             for p in range(8):
                 rows.append(
                     (tid, p * 1000, p,
@@ -591,17 +662,63 @@ def test_measure_topk_eps_match_filler_tail(spark, measure):
         rows, "traj_id long, ts_ms long, point_id long, x double, y double"
     )
     polys = similarity.collect_polylines(pts).cache()
-    qs = polys.where(F.col("traj_id") % 6 == 0)
-    bounded = similarity.measure_topk(polys, qs, measure, k=8)
+    qs = polys.where((F.col("traj_id") - (3 if sparse else 0)) % 6 == 0)
+    bounded = similarity.measure_topk(polys, qs, measure, k=k)
     assert not _plan_has_cross_join(bounded)
-    brute = similarity.measure_topk(polys, qs, measure, k=8, brute=True)
+    brute = similarity.measure_topk(polys, qs, measure, k=k, brute=True)
     got = bounded.orderBy("query_id", "rank").select(
         "query_id", "neighbor_id", "rank", "dist").collect()
     expect = brute.orderBy("query_id", "rank").select(
         "query_id", "neighbor_id", "rank", "dist").collect()
     assert got == expect
+    assert len(got) == 10 * min(k, 59)
     # the filler regime really happened: some top-k rows sit at exactly 1.0
-    assert any(r.dist == 1.0 for r in got)
+    assert any(r.dist == 1.0 for r in got) == (k >= 6)
+    polys.unpersist()
+
+
+@pytest.mark.parametrize("k", [1, 3, 6])
+def test_measure_topk_eps_match_edr_empty_polylines(spark, k):
+    """EDR scores two empty polylines 0.0. An empty polyline has no
+    MBR anchor, so the ε-match path anchors it at the origin with radius
+    0: the empty pair is a candidate and ranks like the brute scan, also
+    in a db of empty polylines only."""
+    schema = "traj_id long, xs array<double>, ys array<double>"
+    mixed = spark.createDataFrame([
+        (1, [0.0, 0.1], [0.0, 0.1]), (2, [], []), (3, [5.0, 5.1], [5.0, 5.2]),
+        (4, [0.05], [0.0]), (5, [], []), (6, [9.0, 9.0, 9.1], [3.0, 3.1, 3.0]),
+    ], schema)
+    for polys in (mixed, mixed.where(F.size("xs") == 0)):
+        bounded = similarity.measure_topk(polys, polys, "edr", k=k)
+        brute = similarity.measure_topk(polys, polys, "edr", k=k, brute=True)
+        got = bounded.orderBy("query_id", "rank").select(
+            "query_id", "neighbor_id", "rank", "dist").collect()
+        expect = brute.orderBy("query_id", "rank").select(
+            "query_id", "neighbor_id", "rank", "dist").collect()
+        assert got == expect
+        assert (2, 5, 1, 0.0) in [tuple(r) for r in got]
+
+
+def test_eps_match_topk_job_budget(spark, points):
+    """The ε-match top-k call runs only the anchors' radius aggregate and
+    score_pairs' gate and lookup collect; with a no-op sink over its
+    result the whole query stays within 10 Spark jobs."""
+    pts = points.where(F.col("traj_id") < 40)
+    polys = similarity.normalize_polylines(similarity.collect_polylines(pts)).cache()
+    polys.count()
+    qs = polys.where(F.col("traj_id") % 8 == 0)
+    sc = spark.sparkContext
+    group = "eps_match_topk_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        similarity.measure_topk(polys, qs, "lcss", k=5).write.format("noop").mode(
+            "overwrite").save()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        polys.unpersist()
+    assert jobs <= 10
 
 
 @pytest.mark.parametrize("measure", ["lcss", "hausdorff"])

@@ -112,10 +112,18 @@ def knn_join(
         if exclude_self:
             cand = cand.where(F.col("neighbor_id") != F.col("query_id"))
         # The big candidate join runs exactly once per round: top-k shrinks
-        # it to queries × k rows, which are persisted, and both the
-        # exactness check and the next round's query set derive from that
-        # small table.
-        return _topk(cand.select("query_id", "neighbor_id", "dist_sq"), k, "query_id").persist()
+        # it to queries × k rows, flagged with each query's row count and
+        # kth distance by a window over the top-k's own partitioning, as a
+        # lazy local checkpoint (the ContextCleaner frees it once the result
+        # is unreachable). Both the exactness check and the next round's
+        # query set derive from that small table.
+        wq = Window.partitionBy("query_id")
+        return _topk(
+            cand.select("query_id", "neighbor_id", "dist_sq"), k, "query_id"
+        ).withColumns({
+            "_found": F.count(F.lit(1)).over(wq),
+            "_kth": F.max("dist_sq").over(wq),
+        }).localCheckpoint(eager=False)
 
     # Iterative ring doubling (no cross join ever): start at the
     # density-derived R; queries whose exactness bound fails re-fan at 2R,
@@ -127,19 +135,14 @@ def knn_join(
     results = []
     r = ring
     while True:
-        ranked = ranked_for(remaining, r)
+        flagged = ranked_for(remaining, r)
         if r >= cover:
-            results.append(ranked)
+            results.append(flagged.drop("_found", "_kth"))
             break
-        # Exactness: kth candidate within the guaranteed horizon — a window
-        # over the already-ranked rows, no self-join. Any point outside the
-        # R-window is > R·min_unit away.
+        # Exactness: kth candidate within the guaranteed horizon, read from
+        # the flags on the already-ranked rows, no self-join. Any point
+        # outside the R-window is > R·min_unit away.
         horizon_sq = float(r * min(grid.x_unit, grid.y_unit)) ** 2
-        wq = Window.partitionBy("query_id")
-        flagged = ranked.withColumns({
-            "_found": F.count(F.lit(1)).over(wq),
-            "_kth": F.max("dist_sq").over(wq),
-        })
         # strict <: a point just outside the R-window can sit at exactly
         # R·min_unit, tie the kth distance, and win the (dist, id)
         # tiebreak — a tie is not provably exact (ADVICE r2; same rule as

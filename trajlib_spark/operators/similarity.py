@@ -215,9 +215,13 @@ def _traj_anchor(
     radius = max point distance to the anchor — all Catalyst array
     arithmetic, one pass over the nested polyline. With ``grid`` the
     anchor's cell indices are attached too (the metric-measure ring path);
-    without it the raw anchor coordinates serve the ε-match δ-cell path."""
+    without it the raw anchor coordinates serve the ε-match δ-cell path,
+    where an empty polyline anchors at the origin with radius 0: it stays
+    a candidate of every other empty polyline, which EDR scores 0.0."""
     ax = (F.array_min("xs") + F.array_max("xs")) / 2
     ay = (F.array_min("ys") + F.array_max("ys")) / 2
+    if grid is None:
+        ax, ay = F.coalesce(ax, F.lit(0.0)), F.coalesce(ay, F.lit(0.0))
     d = polys.select(F.col(id_col).alias(id_alias), "xs", "ys").withColumns(
         {"_ax": ax, "_ay": ay}
     )
@@ -230,9 +234,9 @@ def _traj_anchor(
             )
         )
     )
-    d = d.withColumn("radius", radius)
     if grid is None:
-        return d
+        return d.withColumn("radius", F.coalesce(radius, F.lit(0.0)))
+    d = d.withColumn("radius", radius)
     from . import cells as cell_ops
 
     return d.withColumns({
@@ -243,12 +247,13 @@ def _traj_anchor(
 
 def _anchored(db_polys, query_polys, id_col, grid, q_radius):
     """(db anchors "j", query anchors "i", max db radius, ``q_radius`` of
-    the query radii), both anchor tables persisted. ONE scalar job reads
-    both radii (side-tagged union agg) and materializes both caches, so
-    every later plan hits warm blocks. An empty side gives None (float(None)
+    the query radii). Both anchor tables are lazy local checkpoints that
+    ONE scalar job (a side-tagged union agg reading both radii) fills, so
+    every later plan reads their blocks, and the ContextCleaner frees them
+    once the result is unreachable. An empty side gives None (float(None)
     would crash; the NULL aggregate doubles as the emptiness probe)."""
-    db_a = _traj_anchor(db_polys, "j", grid, id_col=id_col).persist()
-    q_a = _traj_anchor(query_polys, "i", grid, id_col=id_col).persist()
+    db_a = _traj_anchor(db_polys, "j", grid, id_col=id_col).localCheckpoint(eager=False)
+    q_a = _traj_anchor(query_polys, "i", grid, id_col=id_col).localCheckpoint(eager=False)
     rd, rq = (
         db_a.select(F.lit(True).alias("_d"), "radius")
         .unionByName(q_a.select(F.lit(False).alias("_d"), "radius"))
@@ -257,8 +262,6 @@ def _anchored(db_polys, query_polys, id_col, grid, q_radius):
         .collect()[0]
     )
     if rd is None or rq is None:
-        db_a.unpersist()
-        q_a.unpersist()
         return None
     return db_a, q_a, float(rd), float(rq)
 
@@ -315,15 +318,26 @@ def _lcss_edr_topk(
 ) -> DataFrame:
     """Exact top-k for the ε-match measures WITHOUT a full-corpus scan.
 
-    Single-shot candidate generation in the (z-scored) coordinate space:
-    each trajectory gets an anchor (MBR center) + radius; db anchors land
-    in one δ-cell each, query anchors fan a Chebyshev ring sized to cover
-    ε√2 + r_q + max(r_db); candidate pairs come from the cell equi-join.
-    Non-candidates provably score exactly 1.0, so the top-k tail is filled
-    from the smallest non-candidate neighbor ids via a rank-bounded join
-    against the globally ranked db-id table — fully distributed (no
-    driver-side id collect, no literal-array plan node), never a crossJoin
-    node, never the full corpus per query."""
+    Candidates: in the (z-scored) coordinate space each trajectory gets an
+    anchor (MBR center) and a radius; db anchors land in one δ-cell each,
+    query anchors fan a Chebyshev ring sized to cover ε√2 + r_q + max(r_db),
+    and the candidate pairs come from the cell equi-join. Every other pair
+    has no matching point pair and scores exactly 1.0.
+
+    The 1.0 tail: let s be the number of a query q's candidates scoring
+    < 1.0 (its strict ids). If s ≥ k no 1.0 row enters its top-k; else the
+    top-k is those s rows, then the k − s smallest ids of db ∖ strict ∖ {q}
+    at 1.0 (a candidate scoring exactly 1.0 ties a non-candidate). P, the
+    k+1 smallest db ids, minus strict and q keeps ≥ k − s ids and is a
+    prefix of that set in id order, so the fillers q × (P ∖ {q}) at 1.0
+    hold the tail whatever the candidate counts. The scored rows and the
+    fillers are unioned keeping the min dist per pair (LCSS and EDR are
+    ≤ 1.0, so a scored row wins over its filler).
+
+    The plan is lazy and has no cross join: the fan, the candidate join
+    and the fillers are equi-joins (P is ranked by a window over its ≤ k+1
+    rows and broadcast on the rank). The only actions in the call are the
+    anchors' radius aggregate and ``score_pairs``' gate and lookup."""
     from pyspark.sql import Window
 
     sqrt2 = 2.0 ** 0.5
@@ -350,72 +364,23 @@ def _lcss_edr_topk(
         .select("i", (fx + F.col("dx")).alias("cx"), (fy + F.col("dy")).alias("cy"))
     )
     cand = fan.join(db_cells, ["cx", "cy"]).where(F.col("i") != F.col("j")).select("i", "j")
-    cand = cand.persist()
-    # the candidate join moves slim (i, j) rows; the scorer brings the
-    # polylines. scored and fillers are lazy local checkpoints: the
-    # returned plan reads their blocks, and the ContextCleaner frees them
-    # once it is unreachable (a persist() would stay in the CacheManager)
+    # the candidate join moves slim (i, j) rows; the scorer brings the polylines
     scored = _neighbor_scorer(q_a, db_a, measure, eps)(cand)
-    scored = scored.localCheckpoint(eager=False)
 
-    # queries already exact: ≥ k candidates scoring strictly < 1.0 (then no
-    # dist-1.0 filler can enter their top-k)
-    strict = scored.where(F.col("dist") < 1.0).groupBy("query_id").count()
-    needy = q_a.select(F.col("i").alias("query_id")).join(
-        strict.where(F.col("count") >= k), "query_id", "left_anti")
-    # per needy query the only db ids EXCLUDED from filling are its
-    # candidates (already scored) and itself: among the k + n_excl
-    # smallest db ids at most n_excl are excluded, so the k smallest
-    # non-excluded ids — exactly the ones that can enter a 1.0-tied
-    # top-k under the (dist, neighbor_id) order — are guaranteed inside
-    # that prefix. One rank-bounded join, no driver-side id collect.
-    cand_q = cand.withColumnRenamed("i", "query_id")
-    n_excl = needy.join(cand_q, "query_id", "left").groupBy("query_id").agg(
-        (F.count("j") + F.lit(1)).alias("_ne")).persist()
-    # ONE scalar job: materializes scored (the kernel pass) through the
-    # strict→needy chain, fills the n_excl cache, and its NULL max doubles
-    # as the "any needy queries at all?" probe (a count, an isEmpty and a
-    # max would each be a job of fixed cost)
-    ne_max = n_excl.agg(F.max("_ne")).collect()[0][0]
-    fillers = None
-    if ne_max is not None:
-        from .segment import global_row_number
-
-        db_rank, _n_db = global_row_number(db_a.select("j"), ("j",))
-        # rank-bounded EQUI join (explode each needy query's rank range
-        # 0..n_excl+k−1 and hash-join on the rank — a nested-loop-free
-        # plan); per-query fan = its own candidate count + k, the same
-        # volume the candidate join already carried. The broadcast side is
-        # the rank prefix 0..max(n_excl)+k−1, NOT the whole ranked corpus
-        # (the scalar agg above bounds it).
-        p_max = k + int(ne_max)
-        prefix = db_rank.where(F.col("_rn0") < F.lit(p_max))
-        fill_keys = n_excl.withColumn(
-            "_rn0",
-            F.explode(F.sequence(F.lit(0), F.col("_ne") + F.lit(k - 1))),
-        )
-        wf = Window.partitionBy("query_id").orderBy("j")
-        fillers = (
-            fill_keys.join(F.broadcast(prefix), "_rn0")
-            .where(F.col("query_id") != F.col("j"))
-            .join(cand_q, ["query_id", "j"], "left_anti")
-            .withColumn("_fr", F.row_number().over(wf))
-            .where(F.col("_fr") <= k)
-            .select("query_id", F.col("j").alias("neighbor_id"), F.lit(1.0).alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        fillers.count()  # materialize while cand/needy caches are warm
-
-    out = scored
-    if fillers is not None:
-        out = scored.unionByName(fillers)
-    result = topk(out)
-    # the final plan reads only the two bounded checkpoints — scored (one row
-    # per candidate pair) and fillers (≤ k rows per needy query) — so the
-    # larger intermediates release their blocks now instead of leaking
-    for df in (db_a, q_a, cand, n_excl):
-        df.unpersist()
-    return result
+    prefix = (
+        db_a.select("j").orderBy("j").limit(k + 1)
+        .withColumn("_r", F.row_number().over(Window.orderBy("j")))
+    )
+    fillers = (
+        q_a.select(F.col("i").alias("query_id"),
+                   F.explode(F.sequence(F.lit(1), F.lit(k + 1))).alias("_r"))
+        .join(F.broadcast(prefix), "_r")
+        .where(F.col("query_id") != F.col("j"))
+        .select("query_id", F.col("j").alias("neighbor_id"), F.lit(1.0).alias("dist"))
+    )
+    best = scored.unionByName(fillers).groupBy("query_id", "neighbor_id").agg(
+        F.min("dist").alias("dist"))
+    return topk(best)
 
 
 def measure_topk(
@@ -441,8 +406,11 @@ def measure_topk(
     covers the grid — never a cross join against the full corpus (the
     reference instead caps its db at 10 000, fed_trainer.py:447).
 
-    ε-match measures (normalized LCSS / EDR): exact cell-blocked path,
-    see _lcss_edr_topk. The broadcast query × db scan runs only for
+    ε-match measures (normalized LCSS / EDR): exact cell-blocked path.
+    Only anchor-cell candidates are scored; every other pair scores
+    exactly 1.0, so the tail comes from the k+1 smallest db ids, which
+    always hold the 1.0 rows a query's top-k can need (see
+    _lcss_edr_topk). The broadcast query × db scan runs only for
     ``grid=None`` or ``brute=True`` (kept for parity testing)."""
     from pyspark.sql import Window
 
@@ -504,7 +472,9 @@ def measure_topk(
             .where(F.col("i") != F.col("j"))
             .select("i", "j")
         )
-        ranked = topk(score(pairs)).persist()
+        # lazy local checkpoints, not persist(): the ContextCleaner frees
+        # a round's tables once the result no longer reaches them
+        ranked = topk(score(pairs)).localCheckpoint(eager=False)
         if r >= cover:
             results.append(ranked)
             break
@@ -522,14 +492,10 @@ def measure_topk(
         ).drop("_found", "_kth", "r_q")
         results.append(exact)
         exact_ids = exact.select("query_id").distinct()
-        prev_remaining = remaining
-        remaining = prev_remaining.join(
+        remaining = remaining.join(
             F.broadcast(exact_ids.withColumnRenamed("query_id", "i")), "i", "left_anti"
-        ).persist()
-        empty = remaining.isEmpty()  # materializes the new round's table …
-        if prev_remaining is not q_all:
-            prev_remaining.unpersist()  # … so the superseded one can go
-        if empty:
+        ).localCheckpoint(eager=False)
+        if remaining.isEmpty():
             break
         r = min(4 * r, cover)
 
