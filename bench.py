@@ -726,34 +726,21 @@ def _sf10_topk_inputs(spark, sf_dir: str, copies: int = 100):
 
 def _ring_candidates(polys, qs, ring: int) -> int:
     """First-round candidate-pair count of measure_topk's grid-pruned
-    path — the anchor-cell k-ring equi-join (operators/similarity.py,
-    measure_topk's `fan`/`pairs` round-1 plan), built from the operator's
-    own anchor helpers. Untimed probe metadata: the number the linear-
+    path — the shared ring loop's anchor-cell k-ring equi-join
+    (operators/knn.py, ``ring_pairs``), built from the operator's own
+    anchor helper. Untimed probe metadata: the number the linear-
     scaling claim is made on (a quadratic candidate blow-up would show
     here long before it showed in wall time)."""
+    from trajlib_spark.operators import knn
     from trajlib_spark.operators import similarity as sim
 
-    db_a = sim._traj_anchor(polys.select("traj_id", "xs", "ys"), "j", G)
-    q_a = sim._traj_anchor(qs.select("traj_id", "xs", "ys"), "i", G)
-    db_cells = db_a.select(
-        "j", sim.cell_id_expr("a_ix", "a_iy", G).alias("cell_id")
-    )
-    seq = F.sequence(F.lit(-ring), F.lit(ring))
-    fan = (
-        q_a.select("i", "a_ix", "a_iy")
-        .withColumn("dx", F.explode(seq))
-        .withColumn("dy", F.explode(seq))
-        .withColumn("c_ix", F.col("a_ix") + F.col("dx"))
-        .withColumn("c_iy", F.col("a_iy") + F.col("dy"))
-        .where(
-            (F.col("c_ix") >= 0) & (F.col("c_ix") < F.lit(G.x_size))
-            & (F.col("c_iy") >= 0) & (F.col("c_iy") < F.lit(G.y_size))
-        )
-        .select("i", sim.cell_id_expr("c_ix", "c_iy", G).alias("cell_id"))
-    )
-    return (
-        fan.join(db_cells, "cell_id").where(F.col("i") != F.col("j")).count()
-    )
+    db_a = sim._traj_anchor(polys.select("traj_id", "xs", "ys"), "neighbor_id")
+    q_a = sim._traj_anchor(qs.select("traj_id", "xs", "ys"), "query_id")
+    return knn.ring_pairs(
+        q_a.select("query_id", F.col("_ax").alias("qx"), F.col("_ay").alias("qy")),
+        db_a.select("neighbor_id", F.col("_ax").alias("nx"), F.col("_ay").alias("ny")),
+        G, ring,
+    ).count()
 
 
 def sf10_topk_pilot(sf_dir: str, cpus: int) -> dict:

@@ -40,7 +40,7 @@ def test_topk_corpus_structure(spark):
 
     # compact: every MBR radius collapses to ~250 m (0.02 × the raw
     # 11-13 km) — the regime where ring-8 pruning has content
-    a = sim._traj_anchor(polys.select("traj_id", "xs", "ys"), "j", G)
+    a = sim._traj_anchor(polys.select("traj_id", "xs", "ys"), "j")
     rmax = a.agg(F.max("radius")).collect()[0][0]
     assert rmax < 400.0, rmax
 

@@ -253,6 +253,42 @@ def test_simhash_near_dup(spark):
     assert (4, 5) not in out or out.get((4, 5), 64) >= out[(1, 3)]
 
 
+def _planted_dup_docs(spark, call):
+    """Documents of random words, doc 3 a copy of doc 1 with its first
+    word changed: new texts on every call."""
+    rng = np.random.default_rng(call)
+    words = [f"w{n}" for n in range(400)]
+    texts = [" ".join(rng.choice(words, 40)) for _ in range(6)]
+    texts[3] = "changed " + texts[1].split(" ", 1)[1]
+    return spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+
+def test_lsh_candidates_leaves_session_cache_as_found(spark):
+    """The candidate pair table is an eager local checkpoint, not a
+    persist(): two calls on new documents find their planted near-dup and
+    add no entry to the session's CacheManager."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    for call in range(2):
+        sigs = dedup.minhash_signatures(_planted_dup_docs(spark, call), num_perm=64)
+        got = {(r.i, r.j) for r in dedup.lsh_candidates(sigs, bands=16).collect()}
+        assert (1, 3) in got
+    assert cm.numCachedEntries() == before
+
+
+def test_simhash_candidates_leaves_session_cache_as_found(spark):
+    """The signatures feeding the banded self-join are a lazy local
+    checkpoint, not a persist(): two calls on new documents find their
+    planted near-dup and add no entry to the session's CacheManager."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    for call in range(2):
+        sigs = dedup.simhash_signatures(_planted_dup_docs(spark, call))
+        got = {(r.i, r.j) for r in dedup.simhash_candidates(sigs, max_hamming=20).collect()}
+        assert (1, 3) in got
+    assert cm.numCachedEntries() == before
+
+
 def test_embedding_near_dups_planted(spark):
     rng = np.random.default_rng(3)
     base = rng.normal(size=16)

@@ -5,6 +5,8 @@ codegen and fuses with the parquet scan.
 Reference semantics (/root/reference/fedtraj/utils/cellspace.py):
 - cell id layout ``i_x * y_size + i_y`` (:26-27)
 - out-of-MBR points snap to the MBR center (:39-43) — quirk reproduced
+  for cell assignment; ``edge_idx`` is the clamp-to-edge index that
+  polygon coverage and the kNN ring certificates use instead
 - truncation order ``int(x - x_min) // x_unit`` (:47-48): integer cast of
   the offset *before* the unit division. For the non-negative offsets that
   remain after clamping this equals ``floor(floor(x - x_min) / x_unit)``,
@@ -55,6 +57,21 @@ def x_idx(x: Column, y: Column, grid: GridConfig) -> Column:
 
 def y_idx(x: Column, y: Column, grid: GridConfig) -> Column:
     return _idx(clamp_y(x, y, grid), grid.y_min, grid.y_unit)
+
+
+def edge_idx(x: Column, y: Column, grid: GridConfig) -> tuple[Column, Column]:
+    """(i_x, i_y) of the point clamped onto the MBR edge, each clipped to
+    [0, size − 1]: the truncation of ``x_idx`` for in-MBR points, and the
+    nearest edge cell for the rest. Projection onto the MBR never
+    lengthens a distance, so with the integer units ``GridConfig`` keeps,
+    two points whose indices differ by more than r on an axis are more
+    than r·unit apart, on or off the grid."""
+    def one(v: Column, v_min: float, v_max: float, unit: float, size: int) -> Column:
+        clamped = F.greatest(F.lit(v_min), F.least(F.lit(v_max), v))
+        return F.least(F.lit(size - 1), F.greatest(F.lit(0), _idx(clamped, v_min, unit)))
+
+    return (one(x, grid.x_min, grid.x_max, grid.x_unit, grid.x_size),
+            one(y, grid.y_min, grid.y_max, grid.y_unit, grid.y_size))
 
 
 def cell_id_from_idx(i_x: Column, i_y: Column, grid: GridConfig) -> Column:

@@ -152,14 +152,16 @@ def lsh_candidates(
     banded = banded.persist()
     a = banded.select(F.col(id_col).alias("i"), "band_idx", "bucket")
     b = banded.select(F.col(id_col).alias("j"), "band_idx", "bucket")
+    # the (small) pair table is filled by one eager local checkpoint while
+    # banded is hot; the ContextCleaner frees its blocks once the result
+    # is unreachable, where a persist() stayed in the session cache
     cands = (
         a.join(b, ["band_idx", "bucket"])
         .where(F.col("i") < F.col("j"))
         .select("i", "j")
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    cands.count()  # materialize the (small) pair table while banded is hot
     banded.unpersist()  # release the big banded blocks (ADVICE r2)
     return cands
 
@@ -268,7 +270,9 @@ def simhash_candidates(
         n_bands = min(64, max_hamming + 1)
     width = 64 // n_bands
     mask = (1 << width) - 1
-    sigs = sigs.persist()  # feeds both sides of the banded self-join
+    # feeds both sides of the banded self-join; a lazy local checkpoint,
+    # filled by the first job that reads it, not a persist() left cached
+    sigs = sigs.localCheckpoint(eager=False)
     banded = sigs.select(
         F.col(id_col), F.col("simhash"),
         F.posexplode(

@@ -1,55 +1,146 @@
-"""Exact kNN join via k-ring cell expansion with a distance-bounded
-guarantee and a brute-force fallback for under-filled queries.
+"""Exact kNN joins by ring expansion over the clamp-to-edge cell grid.
 
-Plan (survey §4.2 / north-rule "kNN via H3 k-ring expansion with a
-distance-bounded refine pass"):
+``ring_topk`` is the one exact top-k loop of the engine: ``knn_join``
+runs it over points with squared Euclidean distance, and the grid path
+of ``similarity.measure_topk`` over polyline anchors with a trajectory
+measure. Plan (survey §4.2 / north-rule "kNN via H3 k-ring expansion with
+a distance-bounded refine pass"):
 
-1. Queries fan out to every cell in their Chebyshev-radius-R window
-   (two explode(sequence(...)) — linear codegen, no giant case trees).
-2. Equi-join candidates on cell_id (hash join; AQE skew-join splits hot
-   cells), compute squared distance, keep top-k per query by
-   (dist², neighbor_id) — deterministic total order.
-3. **Exactness guarantee**: any point outside the R-window is at least
-   R·unit meters away, so a query whose kth candidate lies within R·unit
-   is provably exact. The (rare) remainder is re-resolved by brute force
-   and unioned back.
+1. Both sides are indexed by their clamp-to-edge cell (``cells.edge_idx``):
+   a coordinate is clamped onto the grid's MBR before it is binned, and
+   projection onto the MBR never lengthens a distance. So a db row whose
+   cell lies outside a query's Chebyshev window of radius R is more than
+   R·unit away from the query, for every input, on or off the grid.
+2. Each query fans out to the cells of its R-window clipped to the grid
+   (two explode(sequence(...)) — linear codegen, no giant case trees) and
+   equi-joins the db rows on cell id (hash join; AQE skew-join splits hot
+   cells). The caller's scorer scores the candidates, and ``rank_topk``
+   keeps the top k per query by (dist, neighbor_id), a deterministic
+   total order.
+3. **Certificate**: a query with k candidates whose kth distance is below
+   the caller's ``bound(R)`` — the least distance a row outside the
+   window can have — is exact and leaves. The rest re-fan at 4R, 16R, …
+   until the window covers the grid, where every candidate set is the
+   whole db. No cross join is ever planned.
 
 Top-k semantics mirror the reference's bounded min-heap kNN
 (/root/reference/fedtraj/model/trainer/fed_trainer.py:437-443); the k-ring
 primitive generalizes neighbour_cellids
 (/root/reference/fedtraj/utils/cellspace.py:55-67).
 
-Scale: candidate volume ≈ queries × (2R+1)² × density-per-cell. R is chosen
-from the measured density so the expected candidate count per query is a
-small multiple of k. The fallback cross-join is bounded by the tail of the
-density distribution; its row count is observable via the returned plan.
+Scale: candidate volume ≈ queries × (2R+1)² × density-per-cell. For points,
+R is chosen from the measured density so the expected candidate count per
+query is a small multiple of k.
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
+from typing import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import GridConfig
 from . import cells
 
+# ring radius factor between rounds; every factor gives exact results, a
+# larger one fewer rounds (Spark jobs) for more candidates in the last
+_GROWTH = 4
+# pick_ring_radius' inflation of the density estimate
+_SAFETY = 1.6
 
-def pick_ring_radius(n_points: int, grid: GridConfig, k: int, safety: float = 1.6) -> int:
+
+def pick_ring_radius(n_points: int, grid: GridConfig, k: int) -> int:
     """Radius R (in cells) such that the expected k-th neighbor falls inside
     the window: solve π r² λ = k for r with λ = points per m², inflate by
-    ``safety``, convert to cells."""
+    ``_SAFETY``, convert to cells."""
     area = (grid.x_max - grid.x_min) * (grid.y_max - grid.y_min)
     lam = max(n_points, 1) / area
-    r_m = math.sqrt((k + 1) / (math.pi * lam)) * safety
+    r_m = math.sqrt((k + 1) / (math.pi * lam)) * _SAFETY
     r_cells = int(math.ceil(r_m / min(grid.x_unit, grid.y_unit)))
     return max(1, min(r_cells, 24))
 
 
-def _topk(cand: DataFrame, k: int, query_id: str) -> DataFrame:
-    w = Window.partitionBy(query_id).orderBy("dist_sq", "neighbor_id")
-    return cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+def rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The rows of ``scored`` (query_id, neighbor_id, dist, …) ranked
+    1..k per query by (dist, neighbor_id), as a ``rank`` column."""
+    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def ring_pairs(queries: DataFrame, db: DataFrame, grid: GridConfig, r: int) -> DataFrame:
+    """Every (query, db row) pair whose clamp-to-edge cells are within
+    Chebyshev distance ``r``, self-pairs excluded → the columns of both
+    sides. ``queries`` carry (query_id, qx, qy, …), ``db``
+    (neighbor_id, nx, ny, …)."""
+    q_ix, q_iy = cells.edge_idx(F.col("qx"), F.col("qy"), grid)
+    n_ix, n_iy = cells.edge_idx(F.col("nx"), F.col("ny"), grid)
+
+    def window(i: Column, size: int) -> Column:
+        return F.explode(F.sequence(F.greatest(i - r, F.lit(0)), F.least(i + r, F.lit(size - 1))))
+
+    fan = (
+        queries.withColumn("_cx", window(q_ix, grid.x_size))
+        .withColumn("_cy", window(q_iy, grid.y_size))
+        .withColumn("cell_id", cells.cell_id_from_idx(F.col("_cx"), F.col("_cy"), grid))
+        .drop("_cx", "_cy")
+    )
+    db_cells = db.withColumn("cell_id", cells.cell_id_from_idx(n_ix, n_iy, grid))
+    return (
+        fan.join(db_cells, "cell_id")
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .drop("cell_id")
+    )
+
+
+def ring_topk(
+    queries: DataFrame,
+    db: DataFrame,
+    grid: GridConfig,
+    k: int,
+    r0: int,
+    score: Callable[[DataFrame], DataFrame],
+    bound: Callable[[int], Column],
+) -> DataFrame:
+    """Exact top-k neighbors of every query → (query_id, neighbor_id,
+    dist, rank), by ring expansion from radius ``r0``.
+
+    ``score`` maps ``ring_pairs`` rows to (query_id, neighbor_id, dist).
+    ``bound(r)`` is a column over the query's columns: a distance every db
+    row outside its r-window scores at least, given that such a row is
+    more than r·unit away. A query is certified when its kth distance is
+    strictly below it — a row just outside could tie the kth distance and
+    win the (dist, neighbor_id) tiebreak."""
+    cover = max(grid.x_size, grid.y_size)  # window ⊇ grid from any cell
+    remaining, results, r = queries, [], min(r0, cover)
+    wq = Window.partitionBy("query_id")
+    while True:
+        ranked = rank_topk(score(ring_pairs(remaining, db, grid, r)), k)
+        if r >= cover:
+            results.append(ranked)
+            break
+        # The candidate join runs once per round: the certificate is a
+        # flag on the top-k rows, computed over the top-k's own
+        # partitioning inside a lazy local checkpoint (the ContextCleaner
+        # frees it once the result is unreachable), and both this round's
+        # exact rows and the next round's queries read it.
+        bounds = remaining.select("query_id", bound(r).alias("_bound"))
+        flagged = ranked.join(F.broadcast(bounds), "query_id").withColumn(
+            "_exact",
+            (F.count(F.lit(1)).over(wq) == k) & (F.max("dist").over(wq) < F.col("_bound")),
+        ).localCheckpoint(eager=False)
+        exact = flagged.where("_exact")
+        results.append(exact.drop("_bound", "_exact"))
+        remaining = remaining.join(
+            F.broadcast(exact.where(F.col("rank") == 1).select("query_id")),
+            "query_id", "left_anti",
+        ).localCheckpoint(eager=False)
+        if remaining.isEmpty():
+            break
+        r = min(_GROWTH * r, cover)
+    return reduce(DataFrame.unionAll, results)
 
 
 def knn_join(
@@ -58,109 +149,29 @@ def knn_join(
     grid: GridConfig,
     k: int,
     ring: int | None = None,
-    exclude_self: bool = True,
     id_col: str = "point_id",
     x: str = "x",
     y: str = "y",
 ) -> DataFrame:
-    """→ (query_id, neighbor_id, rank, dist_sq). Exact under the R-window
-    guarantee; under-filled queries fall back to brute force."""
+    """→ (query_id, neighbor_id, dist_sq, rank): each query's k nearest
+    other points, exact for every input (``ring_topk`` from a radius
+    picked from the point density unless ``ring`` is given)."""
     if ring is None:
         ring = pick_ring_radius(points.count(), grid, k)
-
-    pts = points.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(x).alias("nx"),
-        F.col(y).alias("ny"),
+    db = points.select(
+        F.col(id_col).alias("neighbor_id"), F.col(x).alias("nx"), F.col(y).alias("ny")
     )
-    pts = pts.withColumns({
-        "n_ix": cells.x_idx(F.col("nx"), F.col("ny"), grid),
-        "n_iy": cells.y_idx(F.col("nx"), F.col("ny"), grid),
-    }).withColumn("cell_id", cells.cell_id_from_idx(F.col("n_ix"), F.col("n_iy"), grid))
-
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(x).alias("qx"),
-        F.col(y).alias("qy"),
+        F.col(id_col).alias("query_id"), F.col(x).alias("qx"), F.col(y).alias("qy")
     )
-    q = q.withColumns({
-        "q_ix": cells.x_idx(F.col("qx"), F.col("qy"), grid),
-        "q_iy": cells.y_idx(F.col("qx"), F.col("qy"), grid),
-    })
-
     dist_sq = (F.col("nx") - F.col("qx")) ** 2 + (F.col("ny") - F.col("qy")) ** 2
-
-    def ranked_for(queries_df: DataFrame, r: int) -> DataFrame:
-        seq = F.sequence(F.lit(-r), F.lit(r))
-        fan = (
-            queries_df.withColumn("dx", F.explode(seq))
-            .withColumn("dy", F.explode(seq))
-            .withColumn("c_ix", F.col("q_ix") + F.col("dx"))
-            .withColumn("c_iy", F.col("q_iy") + F.col("dy"))
-            .where(
-                (F.col("c_ix") >= 0)
-                & (F.col("c_ix") < F.lit(grid.x_size))
-                & (F.col("c_iy") >= 0)
-                & (F.col("c_iy") < F.lit(grid.y_size))
-            )
-            .withColumn("cell_id", cells.cell_id_from_idx(F.col("c_ix"), F.col("c_iy"), grid))
-            .select("query_id", "qx", "qy", "cell_id")
-        )
-        cand = fan.join(pts.select("neighbor_id", "nx", "ny", "cell_id"), "cell_id").withColumn(
-            "dist_sq", dist_sq
-        )
-        if exclude_self:
-            cand = cand.where(F.col("neighbor_id") != F.col("query_id"))
-        # The big candidate join runs exactly once per round: top-k shrinks
-        # it to queries × k rows, flagged with each query's row count and
-        # kth distance by a window over the top-k's own partitioning, as a
-        # lazy local checkpoint (the ContextCleaner frees it once the result
-        # is unreachable). Both the exactness check and the next round's
-        # query set derive from that small table.
-        wq = Window.partitionBy("query_id")
-        return _topk(
-            cand.select("query_id", "neighbor_id", "dist_sq"), k, "query_id"
-        ).withColumns({
-            "_found": F.count(F.lit(1)).over(wq),
-            "_kth": F.max("dist_sq").over(wq),
-        }).localCheckpoint(eager=False)
-
-    # Iterative ring doubling (no cross join ever): start at the
-    # density-derived R; queries whose exactness bound fails re-fan at 2R,
-    # 4R, … until the window provably covers the whole grid, at which point
-    # every candidate set is the full cell-joined corpus and the top-k is
-    # exact by construction.
-    cover = max(grid.x_size, grid.y_size)  # window ⊇ grid from any anchor
-    remaining = q
-    results = []
-    r = ring
-    while True:
-        flagged = ranked_for(remaining, r)
-        if r >= cover:
-            results.append(flagged.drop("_found", "_kth"))
-            break
-        # Exactness: kth candidate within the guaranteed horizon, read from
-        # the flags on the already-ranked rows, no self-join. Any point
-        # outside the R-window is > R·min_unit away.
-        horizon_sq = float(r * min(grid.x_unit, grid.y_unit)) ** 2
-        # strict <: a point just outside the R-window can sit at exactly
-        # R·min_unit, tie the kth distance, and win the (dist, id)
-        # tiebreak — a tie is not provably exact (ADVICE r2; same rule as
-        # measure_topk's certificate)
-        exact = flagged.where(
-            (F.col("_found") == k) & (F.col("_kth") < F.lit(horizon_sq))
-        ).drop("_found", "_kth")
-        results.append(exact)
-        exact_ids = exact.select("query_id").distinct()
-        remaining = remaining.join(F.broadcast(exact_ids), "query_id", "left_anti")
-        if remaining.isEmpty():
-            break
-        r = min(2 * r, cover)
-
-    out = results[0]
-    for part in results[1:]:
-        out = out.unionAll(part)
-    return out
+    unit = min(grid.x_unit, grid.y_unit)
+    out = ring_topk(
+        q, db, grid, k, ring,
+        score=lambda pairs: pairs.select("query_id", "neighbor_id", dist_sq.alias("dist")),
+        bound=lambda r: F.lit(float(r * unit) ** 2),
+    )
+    return out.withColumnRenamed("dist", "dist_sq")
 
 
 def hit_ratio(pred_topk: DataFrame, true_topk: DataFrame, k: int) -> float:

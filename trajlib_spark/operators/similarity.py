@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..config import LCSS_EDR_EPS
 from ..kernels import dp_distances as dpk
+from .knn import rank_topk, ring_topk
 from .pairs import score_pairs
 
 
@@ -208,20 +209,15 @@ def multi_measure_join(
     return _measure_scorer(payload, payload, id_col, measures, coord_cols)(pairs)
 
 
-def _traj_anchor(
-    polys: DataFrame, id_alias: str, grid=None, id_col: str = "traj_id"
-) -> DataFrame:
-    """(id, xs, ys, _ax, _ay, radius[, a_ix, a_iy]): anchor = MBR center,
-    radius = max point distance to the anchor — all Catalyst array
-    arithmetic, one pass over the nested polyline. With ``grid`` the
-    anchor's cell indices are attached too (the metric-measure ring path);
-    without it the raw anchor coordinates serve the ε-match δ-cell path,
-    where an empty polyline anchors at the origin with radius 0: it stays
-    a candidate of every other empty polyline, which EDR scores 0.0."""
-    ax = (F.array_min("xs") + F.array_max("xs")) / 2
-    ay = (F.array_min("ys") + F.array_max("ys")) / 2
-    if grid is None:
-        ax, ay = F.coalesce(ax, F.lit(0.0)), F.coalesce(ay, F.lit(0.0))
+def _traj_anchor(polys: DataFrame, id_alias: str, id_col: str = "traj_id") -> DataFrame:
+    """(id, xs, ys, _ax, _ay, radius): anchor = MBR center, radius = max
+    point distance to the anchor — all Catalyst array arithmetic, one pass
+    over the nested polyline. An empty polyline anchors at the origin with
+    radius 0: on the ε-match path it stays a candidate of every other
+    empty polyline, which EDR scores 0.0; the metric measures score it inf
+    against anything, above every ring bound."""
+    ax = F.coalesce((F.array_min("xs") + F.array_max("xs")) / 2, F.lit(0.0))
+    ay = F.coalesce((F.array_min("ys") + F.array_max("ys")) / 2, F.lit(0.0))
     d = polys.select(F.col(id_col).alias(id_alias), "xs", "ys").withColumns(
         {"_ax": ax, "_ay": ay}
     )
@@ -234,26 +230,18 @@ def _traj_anchor(
             )
         )
     )
-    if grid is None:
-        return d.withColumn("radius", F.coalesce(radius, F.lit(0.0)))
-    d = d.withColumn("radius", radius)
-    from . import cells as cell_ops
-
-    return d.withColumns({
-        "a_ix": cell_ops.x_idx(F.col("_ax"), F.col("_ay"), grid),
-        "a_iy": cell_ops.y_idx(F.col("_ax"), F.col("_ay"), grid),
-    })
+    return d.withColumn("radius", F.coalesce(radius, F.lit(0.0)))
 
 
-def _anchored(db_polys, query_polys, id_col, grid, q_radius):
+def _anchored(db_polys, query_polys, id_col, q_radius):
     """(db anchors "j", query anchors "i", max db radius, ``q_radius`` of
     the query radii). Both anchor tables are lazy local checkpoints that
     ONE scalar job (a side-tagged union agg reading both radii) fills, so
     every later plan reads their blocks, and the ContextCleaner frees them
     once the result is unreachable. An empty side gives None (float(None)
     would crash; the NULL aggregate doubles as the emptiness probe)."""
-    db_a = _traj_anchor(db_polys, "j", grid, id_col=id_col).localCheckpoint(eager=False)
-    q_a = _traj_anchor(query_polys, "i", grid, id_col=id_col).localCheckpoint(eager=False)
+    db_a = _traj_anchor(db_polys, "j", id_col=id_col).localCheckpoint(eager=False)
+    q_a = _traj_anchor(query_polys, "i", id_col=id_col).localCheckpoint(eager=False)
     rd, rq = (
         db_a.select(F.lit(True).alias("_d"), "radius")
         .unionByName(q_a.select(F.lit(False).alias("_d"), "radius"))
@@ -314,7 +302,6 @@ def _lcss_edr_topk(
     k: int,
     eps: float,
     id_col: str,
-    topk: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
     """Exact top-k for the ε-match measures WITHOUT a full-corpus scan.
 
@@ -341,9 +328,9 @@ def _lcss_edr_topk(
     from pyspark.sql import Window
 
     sqrt2 = 2.0 ** 0.5
-    anchored = _anchored(db_polys, query_polys, id_col, None, F.max)
+    anchored = _anchored(db_polys, query_polys, id_col, F.max)
     if anchored is None:
-        return topk(_no_neighbors(db_polys, id_col))
+        return rank_topk(_no_neighbors(db_polys, id_col), k)
     db_a, q_a, r_dmax, r_qmax = anchored
     match_r = eps * sqrt2
     # δ trades ring size (query fan-out) against cell occupancy; ~6 rings
@@ -380,7 +367,7 @@ def _lcss_edr_topk(
     )
     best = scored.unionByName(fillers).groupBy("query_id", "neighbor_id").agg(
         F.min("dist").alias("dist"))
-    return topk(best)
+    return rank_topk(best, k)
 
 
 def measure_topk(
@@ -399,12 +386,13 @@ def measure_topk(
     (query_id, neighbor_id, rank, dist).
 
     With ``grid`` and a metric measure (``_METRIC_MEASURES``): exact
-    grid-pruned path. Each trajectory gets an anchor cell (MBR center) +
-    radius; candidates come from a k-ring equi-join on anchor cells; a
-    query is provably exact when its kth distance ≤ R·min_unit − r_q −
-    max_db_radius; unfinished queries re-fan at 2R, 4R, … until the ring
-    covers the grid — never a cross join against the full corpus (the
-    reference instead caps its db at 10 000, fed_trainer.py:447).
+    grid-pruned path, ``knn.ring_topk`` over the trajectories' anchors
+    (MBR centers). A db trajectory whose anchor is outside a query's
+    R-window is more than R·min_unit from its anchor, so it scores more
+    than R·min_unit − max_db_radius − r_q; a query whose kth distance is
+    below that is exact, and the rest re-fan at growing rings until the
+    ring covers the grid — never a cross join against the full corpus
+    (the reference instead caps its db at 10 000, fed_trainer.py:447).
 
     ε-match measures (normalized LCSS / EDR): exact cell-blocked path.
     Only anchor-cell candidates are scored; every other pair scores
@@ -412,101 +400,40 @@ def measure_topk(
     always hold the 1.0 rows a query's top-k can need (see
     _lcss_edr_topk). The broadcast query × db scan runs only for
     ``grid=None`` or ``brute=True`` (kept for parity testing)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-
-    def topk(scored: DataFrame) -> DataFrame:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-        )
-
     if measure in _EPS_MATCH_MEASURES and not brute:
-        return _lcss_edr_topk(db_polys, query_polys, measure, k, eps, id_col, topk)
+        return _lcss_edr_topk(db_polys, query_polys, measure, k, eps, id_col)
 
     if grid is None or measure not in _METRIC_MEASURES or brute:
         q = query_polys.select(F.col(id_col).alias("i"), "xs", "ys")
         db = db_polys.select(F.col(id_col).alias("j"), "xs", "ys")
         score = _neighbor_scorer(q, db, measure, eps)
         pairs = F.broadcast(q.select("i")).crossJoin(db.select("j"))
-        return topk(score(pairs.where(F.col("i") != F.col("j"))))
+        return rank_topk(score(pairs.where(F.col("i") != F.col("j"))), k)
 
-    anchored = _anchored(db_polys, query_polys, id_col, grid, F.min)
+    anchored = _anchored(db_polys, query_polys, id_col, F.min)
     if anchored is None:
-        return topk(_no_neighbors(db_polys, id_col))
-    db_anchored, q_all, r_dmax, r_qmin = anchored
-    db_cells = db_anchored.select(
-        "j", cell_id_expr("a_ix", "a_iy", grid).alias("cell_id")
-    )
+        return rank_topk(_no_neighbors(db_polys, id_col), k)
+    db_a, q_a, r_dmax, r_qmin = anchored
     # one scorer for every round: the polylines are gated (and broadcast)
     # once, not once per ring
-    score = _neighbor_scorer(q_all, db_anchored, measure, eps)
-
-    cover = max(grid.x_size, grid.y_size)
+    score = _neighbor_scorer(q_a, db_a, measure, eps)
     min_unit = min(grid.x_unit, grid.y_unit)
-    # smallest ring whose exactness bound CAN be positive: below it every
-    # round's kernel work is wasted (whole-extent trajectories degrade
-    # gracefully to one full equi-join round — still never a cross join)
+    # smallest ring whose bound CAN be positive: below it every round's
+    # kernel work is wasted (whole-extent trajectories degrade gracefully
+    # to one full equi-join round — still never a cross join)
     r_floor = int(math.ceil((r_dmax + r_qmin) / min_unit)) + 1
-    r = min(max(ring or 4, r_floor), cover)
-    remaining = q_all.select("i", "a_ix", "a_iy", "radius")
-    results = []
-    while True:
-        seq = F.sequence(F.lit(-r), F.lit(r))
-        # fan SLIM rows only (id + cell): the scorer brings the polylines,
-        # so the arrays are never replicated (2r+1)² times
-        fan = (
-            remaining.withColumn("dx", F.explode(seq))
-            .withColumn("dy", F.explode(seq))
-            .withColumn("c_ix", F.col("a_ix") + F.col("dx"))
-            .withColumn("c_iy", F.col("a_iy") + F.col("dy"))
-            .where(
-                (F.col("c_ix") >= 0) & (F.col("c_ix") < F.lit(grid.x_size))
-                & (F.col("c_iy") >= 0) & (F.col("c_iy") < F.lit(grid.y_size))
-            )
-            .select("i", cell_id_expr("c_ix", "c_iy", grid).alias("cell_id"))
-        )
-        pairs = (
-            fan.join(db_cells, "cell_id")
-            .where(F.col("i") != F.col("j"))
-            .select("i", "j")
-        )
-        # lazy local checkpoints, not persist(): the ContextCleaner frees
-        # a round's tables once the result no longer reaches them
-        ranked = topk(score(pairs)).localCheckpoint(eager=False)
-        if r >= cover:
-            results.append(ranked)
-            break
-        wq = Window.partitionBy("query_id")
-        qr = remaining.select(F.col("i").alias("query_id"), F.col("radius").alias("r_q"))
-        flagged = ranked.join(F.broadcast(qr), "query_id").withColumns({
-            "_found": F.count(F.lit(1)).over(wq),
-            "_kth": F.max("dist").over(wq),
-        })
-        # strict <: an excluded pair could tie the kth distance exactly and
-        # win the (dist, neighbor_id) tiebreak, so a tie is not provably exact
-        bound = F.lit(float(r * min_unit) - r_dmax) - F.col("r_q")
-        exact = flagged.where(
-            (F.col("_found") == k) & (F.col("_kth") < bound)
-        ).drop("_found", "_kth", "r_q")
-        results.append(exact)
-        exact_ids = exact.select("query_id").distinct()
-        remaining = remaining.join(
-            F.broadcast(exact_ids.withColumnRenamed("query_id", "i")), "i", "left_anti"
-        ).localCheckpoint(eager=False)
-        if remaining.isEmpty():
-            break
-        r = min(4 * r, cover)
-
-    out = results[0]
-    for part in results[1:]:
-        out = out.unionAll(part)
-    return out
-
-
-def cell_id_expr(ix: str, iy: str, grid) -> F.Column:
-    return (F.col(ix) * F.lit(grid.y_size) + F.col(iy)).cast("long")
+    # the ring fans SLIM rows (ids and anchors): the scorer brings the
+    # polylines, so the arrays are never replicated (2r+1)² times
+    return ring_topk(
+        q_a.select(F.col("i").alias("query_id"), F.col("_ax").alias("qx"),
+                   F.col("_ay").alias("qy"), F.col("radius").alias("r_q")),
+        db_a.select(F.col("j").alias("neighbor_id"), F.col("_ax").alias("nx"),
+                    F.col("_ay").alias("ny")),
+        grid, k, max(ring or 4, r_floor),
+        score=lambda pairs: score(pairs.select(
+            F.col("query_id").alias("i"), F.col("neighbor_id").alias("j"))),
+        bound=lambda r: F.lit(float(r * min_unit) - r_dmax) - F.col("r_q"),
+    )
 
 
 def symmetrize_normalize(dists: DataFrame) -> DataFrame:

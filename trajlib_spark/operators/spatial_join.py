@@ -31,14 +31,6 @@ from ..config import GridConfig
 from . import cells
 
 
-def _bounded_idx(v: Column, v_min: float, v_max: float, unit: float, size: int) -> Column:
-    """Grid index of a coordinate clamped to the MBR edge (coverage clamps
-    to the boundary — unlike point assignment, which snaps to center)."""
-    clamped = F.greatest(F.lit(v_min), F.least(F.lit(v_max), v))
-    idx = F.floor(F.floor(clamped - F.lit(v_min)) / F.lit(unit)).cast("long")
-    return F.least(F.lit(size - 1), F.greatest(F.lit(0), idx))
-
-
 def polygon_covering_cells(polygons: DataFrame, grid: GridConfig) -> DataFrame:
     """(geo_id, cell_id, coord): every grid cell whose MBR intersects the
     polygon's bounding box. coord is carried along so the refine phase
@@ -46,13 +38,17 @@ def polygon_covering_cells(polygons: DataFrame, grid: GridConfig) -> DataFrame:
     pts = F.flatten(F.col("coord"))
     xs = F.transform(pts, lambda p: p[0])
     ys = F.transform(pts, lambda p: p[1])
+    # coverage clamps the bounding box to the MBR edge (point assignment
+    # snaps out-of-MBR points to the center instead)
+    ix_lo, iy_lo = cells.edge_idx(F.array_min(xs), F.array_min(ys), grid)
+    ix_hi, iy_hi = cells.edge_idx(F.array_max(xs), F.array_max(ys), grid)
     df = polygons.select(
         "geo_id",
         "coord",
-        _bounded_idx(F.array_min(xs), grid.x_min, grid.x_max, grid.x_unit, grid.x_size).alias("ix_lo"),
-        _bounded_idx(F.array_max(xs), grid.x_min, grid.x_max, grid.x_unit, grid.x_size).alias("ix_hi"),
-        _bounded_idx(F.array_min(ys), grid.y_min, grid.y_max, grid.y_unit, grid.y_size).alias("iy_lo"),
-        _bounded_idx(F.array_max(ys), grid.y_min, grid.y_max, grid.y_unit, grid.y_size).alias("iy_hi"),
+        ix_lo.alias("ix_lo"),
+        ix_hi.alias("ix_hi"),
+        iy_lo.alias("iy_lo"),
+        iy_hi.alias("iy_hi"),
     )
     df = df.select(
         "geo_id",

@@ -984,7 +984,7 @@ FROM exploded
 
 
 def _bidx_sql(v: str, vmin: float, vmax: float, unit: float, size: int) -> str:
-    """SQL twin of spatial_join._bounded_idx (clamp to MBR edge)."""
+    """SQL twin of one axis of cells.edge_idx (clamp to MBR edge)."""
     return (
         f"least({size - 1}, greatest(0, CAST(floor(floor("
         f"greatest({_L(vmin)}, least({_L(vmax)}, {v})) - {_L(vmin)}"
