@@ -393,19 +393,13 @@ def q_cell_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's own config — node2vec_.py:19-29): 2 deterministic uniform
     walks of 12 positions from every cell the points table touches.
     The torch SGD embedding stays a documented non-goal; this is the
-    data-pipeline half, LIVE-SQL-oracled (the walk unrolls to 11 chained
-    adjacency joins with an integer hash chooser in both engines).
-    impl='arrow' is passed explicitly: the cell graph is grid-bounded BY
-    CONSTRUCTION, so the auto-mode edge-count guard job is a known
-    answer (bit-identical to the catalyst chain either way — pytest
-    pins it, and the DuckDB oracle replays the chain)."""
+    data-pipeline half, LIVE-SQL-oracled (the oracle unrolls the walk into
+    11 chained adjacency joins with the same integer hash chooser)."""
     from trajlib_spark.operators import walks as walks_ops
 
     pairs = cell_ops.neighbour_cell_pairs(spark, G)
     starts = _points_cells(spark, sf_dir).select("cell_id").distinct()
-    return walks_ops.node2vec_walks(
-        pairs, starts, walk_length=12, walks_per_node=2, impl="arrow"
-    )
+    return walks_ops.node2vec_walks(pairs, starts, walk_length=12, walks_per_node=2)
 
 
 def q_walk_skipgrams(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -397,21 +397,27 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
         # walks_per_node 10, context 10) — the 49-join walk chain and the
         # slice-bounded skip-gram fan at their real shape. Walks are
         # checkpointed untimed-out of the skip-gram window so the two
-        # stages attribute separately.
-        with _pilot_stage(out, "walks50"):
-            walks50 = walk_ops.node2vec_walks(
-                pairs, starts, walk_length=50, walks_per_node=10,
-                impl="catalyst",
-            )
-            # checkpoint IS the timed materialization of the 49-join chain;
-            # the count then reads the checkpoint blocks, not a re-run
-            w50 = walks50.localCheckpoint(eager=True)
+        # stages attribute separately. The chain is the path for a graph
+        # over the broadcast budget, so the budget is off while it is
+        # built and run.
+        threshold = "spark.sql.autoBroadcastJoinThreshold"
+        saved = spark.conf.get(threshold)
+        spark.conf.set(threshold, "-1")
+        try:
+            with _pilot_stage(out, "walks50"):
+                walks50 = walk_ops.node2vec_walks(
+                    pairs, starts, walk_length=50, walks_per_node=10)
+                # checkpoint IS the timed materialization of the 49-join
+                # chain; the count then reads the checkpoint blocks
+                w50 = walks50.localCheckpoint(eager=True)
+        finally:
+            spark.conf.set(threshold, saved)
         out["walks50_rows"] = int(w50.count())
-        # the broadcast-adjacency Arrow fast path at the same shape
-        # (bit-identical walks; the right plan for metadata-scale graphs)
+        # the broadcast-adjacency Arrow path at the same shape (the cell
+        # graph fits the default budget; bit-identical walks)
         with _pilot_stage(out, "walks50_arrow"):
             wa = walk_ops.node2vec_walks(pairs, starts, walk_length=50,
-                                         walks_per_node=10, impl="arrow")
+                                         walks_per_node=10)
             out["walks50_arrow_rows"], _ = _run_and_count_big(wa)
         with _pilot_stage(out, "skipgrams50"):
             sg = walk_ops.skipgram_pairs(w50, window=10)
@@ -423,8 +429,7 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
 
         # 7) connected components in the pathological path-shaped regime:
         # a 100k-node chain, diameter 99 999 — plain propagation would
-        # need one round per hop; pointer jumping
-        # (dedup.connected_components jump=True) must close it in
+        # need one round per hop; pointer jumping must close it in
         # ~log2(n) rounds. Rounds, path and wall time recorded: 200k
         # directed edge rows fit the 64 MB broadcast budget, so the rounds
         # run on the driver (dedup._components_local).

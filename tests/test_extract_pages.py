@@ -55,11 +55,23 @@ def test_pages_to_points_bbox_and_cadence(spark):
     assert multi[1].ts_ms - multi[0].ts_ms == 15000
 
 
+def _mined_py(pg):
+    """(url, pos, ts_ms, lon, lat) of every mention, mined by
+    ``mine_coordinates_py`` over the collected pages, before the bbox."""
+    pdf = pg.select("url", "warc_ts", "text").toPandas()
+    base_ms = (pdf["warc_ts"].astype("int64") // 10**6).to_numpy()
+    return [
+        (u, k, int(t) + 15000 * k, lon, lat)
+        for u, t, txt in zip(pdf["url"], base_ms, pdf["text"])
+        for k, (lat, lon) in enumerate(extract.mine_coordinates_py(txt or ""))
+    ]
+
+
 def test_decoys_filtered(spark):
     pg = pages_src.generate_pages(spark, 500)
-    raw = extract.pages_to_points(pg, bbox_filter=False)
-    filt = extract.pages_to_points(pg, bbox_filter=True)
-    assert raw.count() > filt.count()  # decoy pages exist and are dropped
+    raw = len(_mined_py(pg))
+    filt = extract.pages_to_points(pg).count()
+    assert raw > filt  # decoy pages exist and are dropped
 
 
 def test_skew_hotspot(spark):
@@ -90,18 +102,20 @@ def test_generate_pages_partition_layout_invariant(spark):
 
 
 def test_jvm_and_arrow_miners_agree(spark):
-    """The codegen miner and the pandas-UDF twin give the same rows, bit
-    for bit, decoy pages included."""
+    """The codegen miner gives the rows of the canonical python miner, bit
+    for bit, with the strict bbox applied in python: decoy mentions are
+    dropped and every other mention keeps its position and timestamp."""
     pg = pages_src.generate_pages(spark, 2000, skew=True)
-    cols = ["url", "pos", "ts_ms", "lon", "lat", "x", "y"]
-
-    def rows(method):
-        pts = extract.pages_to_points(pg, bbox_filter=False, method=method)
-        return sorted(tuple(r) for r in pts.select(*cols).collect())
-
-    jvm, arrow = rows("jvm"), rows("arrow")
-    assert len(jvm) > 0
-    assert jvm == arrow
+    mined = _mined_py(pg)
+    want = sorted(
+        r for r in mined
+        if MIN_LON < r[3] < MAX_LON and MIN_LAT < r[4] < MAX_LAT
+    )
+    pts = extract.pages_to_points(pg)
+    assert pts.columns == ["url", "pos", "ts_ms", "lon", "lat", "x", "y"]
+    jvm = sorted(tuple(r) for r in pts.select("url", "pos", "ts_ms", "lon", "lat").collect())
+    assert len(jvm) > 0 and len(want) < len(mined)
+    assert jvm == want
 
 
 def test_point_prefix_plan_shape(spark):

@@ -644,9 +644,8 @@ def test_connected_components_local_path_job_count(spark):
 
 def test_trigram_lm_preagg_and_two_scan_mode(spark):
     """The scoring join must read per-(doc, trigram) COUNTS, not the raw
-    occurrence stream (VERDICT r4 #4), in both cache modes, with the
-    k-weighted mean equal to the plain mean of the old per-occurrence
-    formula."""
+    occurrence stream, with the k-weighted mean equal to the plain mean of
+    the per-occurrence formula."""
     import math
 
     from trajlib_spark.operators import text as T
@@ -659,16 +658,38 @@ def test_trigram_lm_preagg_and_two_scan_mode(spark):
         0: (2, round(math.log(2 / 4), 6) + 0.0),
         1: (2, round((math.log(1 / 4) + math.log(1 / 4)) / 2, 6) + 0.0),
     }
-    for cache in (True, False):
-        out = T.trigram_lm_score(docs, cache_trigrams=cache)
-        got = {r.doc_id: (r.n_trigrams, r.lm_score_r) for r in out.collect()}
-        assert got == expect, cache
-        # the join's build side is the model aggregate and its stream side
-        # is the per-doc count aggregate: an Aggregate node must sit BELOW
-        # the join in the optimized plan (i.e. after it in tree print)
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        ji = plan.index("Join")
-        assert "Aggregate" in plan[ji:], plan
+    out = T.trigram_lm_score(docs)
+    got = {r.doc_id: (r.n_trigrams, r.lm_score_r) for r in out.collect()}
+    assert got == expect
+    # the join's build side is the model aggregate over the per-doc count
+    # table: an Aggregate node must sit BELOW the join in the optimized
+    # plan (i.e. after it in tree print)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    ji = plan.index("Join")
+    assert "Aggregate" in plan[ji:], plan
+
+
+def test_trigram_lm_score_leaves_session_cache_as_found(spark):
+    """The per-doc count table is an eager local checkpoint and the model
+    is not cached: two calls on new 2-document frames score like the
+    closed form and add no entry to the session's CacheManager."""
+    import math
+
+    from trajlib_spark.operators import text as T
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    for call in range(2):
+        a, b = "xyz"[call], "pqr"[call]
+        docs = spark.createDataFrame(
+            [(0, a * 4), (1, a + b + a + b)], "doc_id long, text string"
+        )
+        # doc0 -> aaa ×2; doc1 -> aba, bab; total 4
+        got = {r.doc_id: (r.n_trigrams, r.lm_score_r)
+               for r in T.trigram_lm_score(docs).collect()}
+        assert got == {0: (2, round(math.log(2 / 4), 6) + 0.0),
+                       1: (2, round(math.log(1 / 4), 6) + 0.0)}
+    assert cm.numCachedEntries() == before
 
 
 def test_connected_components_long_chain_log_rounds(spark, cc_path):
@@ -689,12 +710,13 @@ def test_connected_components_long_chain_log_rounds(spark, cc_path):
     assert stats["path"] == cc_path, stats
     # horizon doubles per round: ⌈log₂(199)⌉ + fixpoint-confirm + slack
     assert stats["rounds"] <= 12, stats
-    # plain propagation on the same chain cannot finish in 10 rounds and
-    # must refuse to return a wrong labeling
+    # three rounds reach a label horizon of 2, 6 and 14 hops (2·(h + 1)
+    # per round), short of the chain's 199: exhausting max_iter must
+    # refuse to return a wrong labeling
     stats = {}
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, max_iter=10, jump=False, stats=stats)
-    assert stats == {"rounds": 10, "path": cc_path}
+        dedup.connected_components(pairs, max_iter=3, stats=stats)
+    assert stats == {"rounds": 3, "path": cc_path}
 
 
 def test_vocab_topk_order_and_ties(spark):

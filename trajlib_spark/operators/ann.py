@@ -86,11 +86,11 @@ def cosine_topk(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
     metric: str = "cosine",
 ) -> DataFrame:
     """→ (query_id, neighbor_id, rank, cosine); rank by (score, neighbor_id)
-    for a deterministic total order. metric ∈ {cosine, l2, l1} — l1 is the
+    for a deterministic total order, and a query is never its own neighbor
+    (a corpus row with the query's id is skipped). metric ∈ {cosine, l2, l1} — l1 is the
     reference's embedding-distance-matrix metric (cdist p=1).
 
     Shape (round 9): the old plan cross-joined the broadcast query set
@@ -114,7 +114,6 @@ def cosine_topk(
     qn = _seq_sq_norms(QM)
     kk = int(k)
     mtr = metric
-    excl = exclude_self
 
     def run(batches):
         import pandas as pd
@@ -139,8 +138,7 @@ def cosine_topk(
                 else:
                     scores = _pair_scores(CM, QM, "l1")
                     key = scores.copy()
-                if excl:
-                    key[nids[:, None] == qids[None, :]] = np.inf
+                key[nids[:, None] == qids[None, :]] = np.inf
                 oq, on, osc = _emit_topk(scores, key, nids, qids, kk)
                 outs.append(pd.DataFrame(
                     {"query_id": oq, "neighbor_id": on, "cosine": osc}
@@ -232,12 +230,12 @@ def ivf_topk(
     n_probe: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """IVF approximate top-k: corpus rows live in their nearest-centroid
     list; queries probe their n_probe nearest lists; exact cosine + window
     top-k inside the probed union — scanned (and now scored) fraction stays
-    ~n_probe/n_list of the corpus.
+    ~n_probe/n_list of the corpus. As in ``cosine_topk``, a query is never
+    its own neighbor.
 
     Shape (round 9): probes for the bounded query set come from the same
     nearest_lists_py reduction, run once on the driver; corpus rows cross
@@ -263,7 +261,6 @@ def ivf_topk(
     probed_by = [np.nonzero((probes == li).any(axis=1))[0]
                  for li in range(len(C))]
     kk = int(k)
-    excl = exclude_self
 
     def run(batches):
         import pandas as pd
@@ -293,8 +290,7 @@ def ivf_topk(
                     dots = _pair_scores(CM[rsel], QM[qcols], "cosine")
                     scores = dots / (qn[qcols][None, :] * cn[rsel][:, None])
                     key = -scores
-                    if excl:
-                        key[nids[rsel][:, None] == qids[qcols][None, :]] = np.inf
+                    key[nids[rsel][:, None] == qids[qcols][None, :]] = np.inf
                     oq, on, osc = _emit_topk(
                         scores, key, nids[rsel], qids, kk, qcols=qcols
                     )

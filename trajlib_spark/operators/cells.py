@@ -118,28 +118,18 @@ def cell_mbr(i_x: Column, i_y: Column, grid: GridConfig) -> Column:
     )
 
 
-def kring_offsets(k: int, include_center: bool = True) -> list[tuple[int, int]]:
-    """Chebyshev ring of radius k; k=1 without center = the reference's
-    8-neighborhood (cellspace.py:55-67)."""
-    return [
-        (dx, dy)
-        for dx in range(-k, k + 1)
-        for dy in range(-k, k + 1)
-        if include_center or not (dx == 0 and dy == 0)
-    ]
-
-
-def kring_cell_ids(i_x: Column, i_y: Column, grid: GridConfig, k: int,
-                   include_center: bool = True) -> Column:
-    """Array of boundary-clipped cell ids in the k-ring window around
-    (i_x, i_y). Pure expression — explode it to fan out a kNN candidate
-    join. Out-of-grid neighbors are dropped (boundary clipping,
-    cellspace.py:59-60)."""
+def kring_cell_ids(i_x: Column, i_y: Column, grid: GridConfig, k: int) -> Column:
+    """Array of boundary-clipped cell ids in the Chebyshev window of radius
+    k around (i_x, i_y), the center included (k=1 is the reference's
+    8-neighborhood plus the center, cellspace.py:55-67). Pure expression —
+    explode it to fan out a kNN candidate join. Out-of-grid neighbors are
+    dropped (boundary clipping, cellspace.py:59-60)."""
     cells = []
-    for dx, dy in kring_offsets(k, include_center):
-        nx, ny = i_x + F.lit(dx), i_y + F.lit(dy)
-        ok = (nx >= 0) & (nx < F.lit(grid.x_size)) & (ny >= 0) & (ny < F.lit(grid.y_size))
-        cells.append(F.when(ok, cell_id_from_idx(nx, ny, grid)))
+    for dx in range(-k, k + 1):
+        for dy in range(-k, k + 1):
+            nx, ny = i_x + F.lit(dx), i_y + F.lit(dy)
+            ok = (nx >= 0) & (nx < F.lit(grid.x_size)) & (ny >= 0) & (ny < F.lit(grid.y_size))
+            cells.append(F.when(ok, cell_id_from_idx(nx, ny, grid)))
     return F.array_compact(F.array(*cells))
 
 

@@ -16,7 +16,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .pairs import broadcast_budget, score_pairs
+from .pairs import collect_within_budget, score_pairs
 
 
 # --- exact dedup -------------------------------------------------------------
@@ -401,11 +401,8 @@ def embedding_near_dups(
 
 # --- near-dup components ------------------------------------------------------
 
-_INT_WIDTH = {"byte": 1, "short": 2, "integer": 4, "long": 8}
-
-
 def _components_local(
-    a: np.ndarray, b: np.ndarray, max_iter: int, jump: bool,
+    a: np.ndarray, b: np.ndarray, max_iter: int,
 ) -> tuple[np.ndarray, np.ndarray, int, bool]:
     """The distributed rounds of ``connected_components`` replayed on the
     collected undirected edge table (a → b, both directions present).
@@ -426,9 +423,7 @@ def _components_local(
         cand = label
         if len(nodes):
             cand = np.minimum(label, np.minimum.reduceat(label[nbr], starts))
-        if jump:
-            cand = np.minimum(cand, cand[cand])
-        label = cand
+        label = np.minimum(cand, cand[cand])
         new = int(label.sum())
         if new == cur:
             return nodes, nodes[label], rounds, True
@@ -437,7 +432,7 @@ def _components_local(
 
 
 def _components_distributed(
-    und: DataFrame, max_iter: int, jump: bool,
+    und: DataFrame, max_iter: int,
 ) -> tuple[DataFrame, int, bool]:
     """Min-label rounds over the persisted undirected edge table; returns
     (node, label) frame, rounds, converged."""
@@ -464,27 +459,20 @@ def _components_distributed(
             .groupBy("node")
             .agg(F.min("label").alias("label"))
         )
-        pre_jump = None
-        if jump:
-            # pointer jump: label ← min(label, label(label)). label is
-            # always a node of the same component (it entered via an edge
-            # or a previous jump), so the jump target exists in cand and
-            # reachability is preserved while path distances halve.
-            # Checkpoint first — the self-join reads cand twice and would
-            # otherwise re-run the neighbor-min stage both times.
-            pre_jump = cand.localCheckpoint(eager=True)
-            hop = pre_jump.select(
-                F.col("node").alias("label"), F.col("label").alias("_l2")
-            )
-            cand = pre_jump.join(hop, "label", "left").select(
-                "node",
-                F.least(F.col("label"), F.coalesce("_l2", "label")).alias("label"),
-            )
-        new_labels = cand.localCheckpoint(eager=True)
+        # pointer jump: label ← min(label, label(label)). label is always
+        # a node of the same component (it entered via an edge or a
+        # previous jump), so the jump target exists in cand and
+        # reachability is preserved while path distances halve.
+        # Checkpoint first — the self-join reads cand twice and would
+        # otherwise re-run the neighbor-min stage both times.
+        pre_jump = cand.localCheckpoint(eager=True)
+        hop = pre_jump.select(F.col("node").alias("label"), F.col("label").alias("_l2"))
+        new_labels = pre_jump.join(hop, "label", "left").select(
+            "node", F.least(F.col("label"), F.coalesce("_l2", "label")).alias("label"),
+        ).localCheckpoint(eager=True)
         new = label_sum(new_labels)
         labels.unpersist()  # checkpoint blocks of the superseded round
-        if pre_jump is not None:
-            pre_jump.unpersist()  # the intermediate pre-jump checkpoint
+        pre_jump.unpersist()  # the intermediate pre-jump checkpoint
         labels = new_labels
         if new == cur:
             return labels, rounds, True
@@ -494,7 +482,7 @@ def _components_distributed(
 
 def connected_components(
     pairs: DataFrame, i: str = "i", j: str = "j", max_iter: int = 25,
-    jump: bool = True, stats: dict | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``pairs``: component
     = the smallest node id reachable over the undirected pair edges — the
@@ -519,10 +507,8 @@ def connected_components(
 
     Where the rounds run: the undirected edge table is built and
     persisted once, then read with ONE collect bounded by the session's
-    broadcast budget — ``autoBroadcastJoinThreshold`` bytes over an edge
-    row's two fixed-width ids, the size Catalyst already lets the driver
-    hold for a broadcast.  A graph within it runs the same rounds in
-    numpy on the driver (``_components_local``) and comes back as a local
+    broadcast budget (``pairs.collect_within_budget``).  A graph within
+    it runs the same rounds in numpy on the driver (``_components_local``) and comes back as a local
     DataFrame of the input's id type; a larger one — or any graph when
     the threshold is -1 — runs them distributed, each round an EAGER
     localCheckpoint (without lineage truncation the plan doubles per
@@ -543,27 +529,22 @@ def connected_components(
         .distinct()
     )
     id_type = und.schema["a"].dataType
-    if id_type.typeName() not in _INT_WIDTH:
+    if id_type.typeName() not in ("byte", "short", "integer", "long"):
         # the certificate is an exact decimal sum only over integers
         raise TypeError(
             f"connected_components needs integer ids; {i!r}/{j!r} are "
             f"{id_type.simpleString()}"
         )
     und.persist()
-    # the driver may hold what Catalyst lets it broadcast: the session's
-    # budget over an edge row's two ids, kept a JVM int
-    spark = pairs.sparkSession
-    cap = min(broadcast_budget(spark) // (2 * _INT_WIDTH[id_type.typeName()]), 2**31 - 2)
-    edges = und.limit(cap + 1).toArrow() if cap else None
-    if edges is not None and edges.num_rows <= cap:
+    edges = collect_within_budget(und)
+    if edges is not None:
         nodes, comp, rounds, converged = _components_local(
-            edges.column("a").to_numpy(), edges.column("b").to_numpy(),
-            max_iter, jump,
+            edges.column("a").to_numpy(), edges.column("b").to_numpy(), max_iter,
         )
-        result = spark.createDataFrame(pa.table({"node": nodes, "component": comp}))
+        result = und.sparkSession.createDataFrame(pa.table({"node": nodes, "component": comp}))
         path = "local"
     else:
-        labels, rounds, converged = _components_distributed(und, max_iter, jump)
+        labels, rounds, converged = _components_distributed(und, max_iter)
         result = labels.select("node", F.col("label").alias("component"))
         path = "distributed"
     und.unpersist()

@@ -84,79 +84,42 @@ def mine_coordinates_py(text: str) -> list[tuple[float, float]]:
     return [(float(a), float(b)) for a, b in COORD_RE.findall(text)]
 
 
-def pages_to_points(
-    pages: DataFrame,
-    text_col: str = "text",
-    bbox_filter: bool = True,
-    project: bool = True,
-    method: str = "jvm",
-) -> DataFrame:
-    """(url, pos, ts_ms, lon, lat[, x, y]): one row per in-bbox coordinate
-    mention.
+def pages_to_points(pages: DataFrame, text_col: str = "text") -> DataFrame:
+    """(url, pos, ts_ms, lon, lat, x, y): one row per in-bbox coordinate
+    mention, Mercator-projected.
 
-    method='jvm' (default, the hot path): regexp_extract_all +
-    posexplode — the whole mining stage stays inside whole-stage codegen,
-    no Python boundary at all. method='arrow' is the pandas-UDF twin
-    (same output, equality-tested) kept for parity with the pure-python
-    canonical miner. Everything downstream (bbox predicate, 15-s cadence
-    timestamps, Mercator projection) is pure Catalyst either way."""
-    if method == "jvm":
-        pat = r"(-?\d{1,3}\.\d{6}), (-?\d{1,3}\.\d{6})"
-        pts = (
-            pages.select(
-                "url",
-                F.unix_millis(F.col("warc_ts").cast("timestamp")).alias("base_ms"),
-                F.posexplode(
-                    F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0))
-                ).alias("pos", "mention"),
-            )
-            .select(
-                "url",
-                "base_ms",
-                "pos",
-                F.substring_index("mention", ", ", 1).cast("double").alias("lat"),
-                F.substring_index("mention", ", ", -1).cast("double").alias("lon"),
-            )
+    The whole stage is Catalyst and stays inside whole-stage codegen:
+    ``regexp_extract_all`` + ``posexplode`` mine the mentions (the same
+    rows as ``mine_coordinates_py``, equality-tested), then the 15-s
+    cadence timestamps, the strict bbox predicate and the projection."""
+    pts = (
+        pages.select(
+            "url",
+            F.unix_millis(F.col("warc_ts").cast("timestamp")).alias("base_ms"),
+            F.posexplode(
+                F.regexp_extract_all(F.col(text_col), F.lit(COORD_RE.pattern), F.lit(0))
+            ).alias("pos", "mention"),
         )
-    elif method == "arrow":
-
-        def mine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                urls, base_ms, poss, lats, lons = [], [], [], [], []
-                ts_ms = (pdf["warc_ts"].astype("int64") // 10**6).to_numpy()
-                for u, t, txt in zip(pdf["url"], ts_ms, pdf[text_col]):
-                    for k, (la, lo) in enumerate(mine_coordinates_py(txt or "")):
-                        urls.append(u)
-                        base_ms.append(int(t))
-                        poss.append(k)
-                        lats.append(la)
-                        lons.append(lo)
-                yield pd.DataFrame(
-                    {"url": urls, "base_ms": base_ms, "pos": poss,
-                     "lat": lats, "lon": lons}
-                )
-
-        pts = pages.select("url", "warc_ts", text_col).mapInPandas(
-            mine, "url string, base_ms long, pos int, lat double, lon double"
+        .select(
+            "url",
+            "base_ms",
+            "pos",
+            F.substring_index("mention", ", ", 1).cast("double").alias("lat"),
+            F.substring_index("mention", ", ", -1).cast("double").alias("lon"),
         )
-    else:
-        raise ValueError("method must be 'jvm' or 'arrow'")
-
-    pts = pts.select(
-        "url",
-        "pos",
-        (F.col("base_ms") + F.col("pos") * F.lit(15000)).alias("ts_ms"),
-        "lon",
-        "lat",
-    )
-    if bbox_filter:
+        .select(
+            "url",
+            "pos",
+            (F.col("base_ms") + F.col("pos") * F.lit(15000)).alias("ts_ms"),
+            "lon",
+            "lat",
+        )
         # strict inequalities, exactly like the reference's inrange
-        pts = pts.where(
+        .where(
             (F.col("lon") > F.lit(MIN_LON))
             & (F.col("lon") < F.lit(MAX_LON))
             & (F.col("lat") > F.lit(MIN_LAT))
             & (F.col("lat") < F.lit(MAX_LAT))
         )
-    if project:
-        pts = pts.withColumns({"x": merc_x(F.col("lon")), "y": merc_y(F.col("lat"))})
-    return pts
+    )
+    return pts.withColumns({"x": merc_x(F.col("lon")), "y": merc_y(F.col("lat"))})

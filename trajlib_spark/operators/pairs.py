@@ -25,6 +25,7 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, StringType
@@ -39,6 +40,28 @@ def broadcast_budget(spark: SparkSession) -> int:
     driver hold for a broadcast. Read through the JVM SQLConf, so "10m"
     parses; -1 (broadcast off) reads as 0."""
     return max(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold(), 0)
+
+
+def collect_within_budget(frame: DataFrame) -> pa.Table | None:
+    """``frame`` as one Arrow table if its rows fit the broadcast budget,
+    else None. The columns must be fixed-width, so a row's bytes come from
+    the schema, and the frame is read once: cap = budget // row bytes
+    (kept a JVM int), then ``limit(cap + 1)``. A frame over the budget
+    costs up to the budget's bytes read and dropped; a threshold of -1
+    reads nothing."""
+    row_bytes = 0
+    for f in frame.schema.fields:
+        if f.dataType.typeName() not in _WIDTH:
+            raise TypeError(
+                f"column {f.name!r} has type {f.dataType.simpleString()}; "
+                "a budgeted collect needs fixed-width columns"
+            )
+        row_bytes += _WIDTH[f.dataType.typeName()]
+    cap = min(broadcast_budget(frame.sparkSession) // row_bytes, 2**31 - 2)
+    if not cap:
+        return None
+    tbl = frame.limit(cap + 1).toArrow()
+    return tbl if tbl.num_rows <= cap else None
 
 
 def _row_bytes(frame: DataFrame, key: str) -> F.Column:

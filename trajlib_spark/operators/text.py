@@ -404,42 +404,26 @@ def _per_doc_token_counts(
 
 def trigram_lm_score(
     docs: DataFrame, text: str = "text", id_col: str = "doc_id",
-    cache_trigrams: bool = True,
 ) -> DataFrame:
     """Statistical quality scoring: mean character-trigram log-probability
     under a model trained on the corpus itself — the relational core of
     perplexity-style quality filters (KenLM-class scoring without the
-    external model: P(tri) = corpus count / corpus total).
+    external model: P(tri) = corpus count / corpus total). Output:
+    (doc_id, n_trigrams, lm_score_r), the score rounded to 6 dp so a 1-ulp
+    ln() divergence between engines cannot change what an oracle sees.
 
-    Scale shape: trigrams come from a pure-Catalyst position explode
-    (sequence + substring, no UDF), then collapse immediately to
-    per-(doc, trigram) COUNTS — the model is a partial re-aggregate of
-    that table, and the scoring join runs over it too, so repeated
-    trigrams in a document join the model once, not once per occurrence
-    (VERDICT r4 #4; the score becomes the k-weighted mean, identical
-    values). The model table is vocabulary-bounded (≤ charset³ rows,
-    here ASCII ≈ bounded thousands) and broadcastable.
-
-    ``cache_trigrams=True`` persists the per-doc count table so the
-    corpus is scanned once (cache ≈ distinct-(doc,tri) rows, already
-    smaller than the raw trigram stream by the repetition factor);
-    ``False`` selects the two-scan mode — nothing but the model is kept,
-    the right trade when even the count table dwarfs cluster memory at
-    extreme corpus scale. Output: (doc_id, n_trigrams, lm_score_r),
-    score rounded to 6 dp so a 1-ulp ln() divergence between engines
-    cannot change what an oracle sees.
-
-    Round 9: the per-(doc, trigram) count table comes from a vectorized
-    Arrow pass (_per_doc_trigram_counts) instead of a Catalyst position
-    explode + first-level hash aggregate — the explode materialized one
-    row per character of the corpus through a 15M-row aggregation at
-    sf1.0 for the same integer counts. Everything float (the ln() scoring
-    join and both final aggregates) is untouched Catalyst."""
-    per_doc = _per_doc_trigram_counts(docs, text=text, id_col=id_col)
-    if cache_trigrams:
-        per_doc = per_doc.persist()
-    model = per_doc.groupBy("tri").agg(F.sum("_k").alias("cnt")).persist()
-    total = model.agg(F.sum("cnt")).collect()[0][0]
+    The per-(doc, trigram) count table comes from one vectorized Arrow
+    pass (``_per_doc_trigram_counts``) and is an eager local checkpoint,
+    so the corpus is read once and nothing stays in the session's cache.
+    The model is a re-aggregate of that table (vocabulary-bounded,
+    broadcast), and the scoring join reads the counts, so a trigram
+    repeated in a document joins the model once; the score is the
+    k-weighted mean. Everything float (the ln() scoring join and both
+    final aggregates) is Catalyst."""
+    per_doc = _per_doc_trigram_counts(docs, text=text, id_col=id_col).localCheckpoint(
+        eager=True)
+    model = per_doc.groupBy("tri").agg(F.sum("_k").alias("cnt"))
+    total = per_doc.agg(F.sum("_k")).collect()[0][0]
     scored = per_doc.join(F.broadcast(model), "tri").select(
         id_col,
         "_k",

@@ -8,18 +8,21 @@ the data-pipeline half of that operator — generated here distributed and
 deterministically; the SGD embedding training itself stays a documented
 non-goal (torch is not in this environment, SURVEY §7.3).
 
-Plan shape: the undirected adjacency gets a per-source neighbor ordinal
-(row_number by dst) and a degree column; each walk step is one equi-join
-of the walk frontier against the adjacency on (src, chosen ordinal),
-where the choice is a deterministic integer hash of (walk_id, step) mod
-degree — no RNG state, any executor layout reproduces the same walks.
-walk_length − 1 joins total; every stage is partition-parallel.
+Each step picks the neighbor whose ordinal (rank by dst among the
+source's neighbors) equals a deterministic integer hash of (walk_id,
+step) mod degree — no RNG state, any executor layout reproduces the same
+walks. A graph within the broadcast budget walks in one Arrow pass over a
+broadcast adjacency; a larger one as walk_length − 1 equi-joins of the
+walk frontier against the indexed adjacency (see node2vec_walks).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .pairs import collect_within_budget
 
 # deterministic chooser: pmod(walk_id·A + step·B + C, M) stays far inside
 # int64 for any realistic walk_id (≤ ~9e5 · A)
@@ -59,67 +62,29 @@ def node2vec_walks(
     walk_length: int = 12,
     walks_per_node: int = 2,
     node_col: str = "cell_id",
-    impl: str = "auto",
-    max_broadcast_edges: int = 4_000_000,
 ) -> DataFrame:
     """→ (walk_id, pos, cell_id): ``walks_per_node`` uniform walks of
     ``walk_length`` positions from every start node (p = q = 1, the
     reference's config). walk_id = node·walks_per_node + w. A walk that
-    hits a dead end (degree-0 node) is DROPPED entirely — all impls
-    agree on this (the join chain loses the row at the failed step; the
-    arrow/python paths enforce the same rule), so the bit-identical
-    claim below holds on any graph, dead ends included.
+    hits a dead end (degree-0 node) is dropped entirely, on either path.
 
-    ``impl='catalyst'`` chains walk_length−1 broadcast map-side joins —
-    fully general, but each step is a scheduled stage, so long walks pay
-    ~linear fixed cost (the sf1 pilot measured ~1.6 s/step at length
-    50). ``impl='arrow'`` broadcasts the adjacency (sorted-neighbor
-    dict) and generates every walk in ONE Arrow pass over the start-node
-    partitions — bit-identical output (same integer hash chooser), the
-    right plan when the graph is metadata-scale (bounded by the grid,
-    not the data), which the cell graph always is (6.7–25× at the
-    reference walk shape, VERDICT r5). ``impl='auto'`` (default)
-    decides the branch with a CollectLimit-bounded COUNT over the
-    edge-list plan — a scalar, so the catalyst verdict ("too big")
-    ships zero rows to the driver (VERDICT r7 #1: the previous bounded
-    Row-collect materialized up to ``max_broadcast_edges``+1 driver
-    Rows precisely on data-scale graphs). Only the arrow branch
-    re-evaluates, once, via Arrow ``toPandas`` — that plan is ≤ the
-    bound by construction, so the re-evaluation is the cheap
-    CollectLimit shape and the single-expensive-evaluation property
-    (ADVICE r6) is preserved. The grid cell graph is always far below
-    the bound; data-scale graphs that would blow the broadcast stay on
-    the chain (whose per-step joins re-read the — typically stored —
-    edge list)."""
-    if impl == "auto":
-        # Branch decision: a CollectLimit-bounded COUNT — scalar result,
-        # no driver row materialization (VERDICT r7 #1: the previous
-        # bounded Row-collect put up to max_broadcast_edges+1 Python Row
-        # objects on the driver precisely when the answer was "too big").
-        # The catalyst branch therefore evaluates the edge-list plan once
-        # (this count) and never ships a row to the driver. The arrow
-        # branch re-evaluates once more via Arrow toPandas — but that
-        # plan is ≤ max_broadcast_edges rows BY CONSTRUCTION, so the
-        # second evaluation is the cheap CollectLimit shape, and Arrow
-        # batches cut per-row transfer overhead ~10× vs Row objects.
-        probe = pairs.select("src_cell", "dst_cell").limit(max_broadcast_edges + 1)
-        if probe.count() <= max_broadcast_edges:
-            return _walks_arrow(
-                pairs, start_nodes, walk_length, walks_per_node, node_col,
-                edge_pdf=probe.toPandas(),
-            )
-        impl = "catalyst"
-    if impl == "arrow":
-        return _walks_arrow(pairs, start_nodes, walk_length, walks_per_node, node_col)
-    if impl != "catalyst":
-        raise ValueError(f"impl must be auto | catalyst | arrow, got {impl!r}")
-    # broadcasting the adjacency turns all walk_length−1 joins into
-    # map-side hash joins that pipeline in one linear chain. The path
-    # accumulates as an ARRAY column and explodes once at the end — a
-    # per-step union would re-evaluate each prefix chain (O(L²) joins
-    # total). A walk reaching a degree-0 node vanishes at that step's
-    # inner join — the dropped-walk rule documented above.
-    adj = F.broadcast(indexed_adjacency(pairs).persist())
+    The path follows the session's broadcast budget. The edge list is read
+    once, by ``pairs.collect_within_budget``; if it fits, the adjacency
+    (sorted neighbor lists) is broadcast and every walk is generated in ONE
+    Arrow pass over the start nodes. The cell graph is grid-bounded, so it
+    fits at the default threshold. Otherwise, or with the threshold at -1,
+    the walks run as a chain of walk_length − 1 equi-joins of the frontier
+    against the indexed adjacency, planned as Catalyst chooses and with
+    nothing cached. Both paths emit the same rows: the same sorted-neighbor
+    order and the same integer hash chooser."""
+    edges = collect_within_budget(pairs.select("src_cell", "dst_cell"))
+    if edges is not None:
+        return _walks_arrow(edges, start_nodes, walk_length, walks_per_node, node_col)
+    # The path accumulates as an ARRAY column and explodes once at the
+    # end — a per-step union would re-evaluate each prefix chain (O(L²)
+    # joins total). A walk reaching a degree-0 node vanishes at that
+    # step's inner join — the dropped-walk rule above.
+    adj = indexed_adjacency(pairs).withColumnRenamed("src", "cur")
     starts = start_nodes.select(F.col(node_col).cast("long").alias("cur"))
     frontier = starts.select(
         F.explode(
@@ -132,7 +97,7 @@ def node2vec_walks(
     ).withColumn("path", F.array("cur"))
     for step in range(1, walk_length):
         frontier = (
-            frontier.join(adj.withColumnRenamed("src", "cur"), "cur")
+            frontier.join(adj, "cur")
             .where(F.col("ordinal") == _chooser(F.col("walk_id"), step) % F.col("degree"))
             .select(
                 "walk_id",
@@ -146,34 +111,28 @@ def node2vec_walks(
 
 
 def _walks_arrow(
-    pairs: DataFrame,
+    edges: pa.Table,
     start_nodes: DataFrame,
     walk_length: int,
     walks_per_node: int,
     node_col: str,
-    edge_pdf=None,
 ) -> DataFrame:
-    """One-pass walk generation over a broadcast adjacency — see
-    node2vec_walks(impl='arrow'). The adjacency collect is bounded by the
-    GRAPH (metadata-scale for the grid cell graph), never by the data;
-    auto mode passes its already-collected ``edge_pdf`` (an Arrow-built
-    pandas frame) so the expensive edge-list evaluation never repeats."""
+    """One-pass walk generation over the broadcast adjacency built from
+    the collected ``edges`` table (src, dst)."""
     import pandas as pd
 
     adj: dict[int, list[int]] = {}
-    if edge_pdf is None:
-        edge_pdf = pairs.select("src_cell", "dst_cell").toPandas()
-    for s, d in zip(edge_pdf.iloc[:, 0].to_numpy(), edge_pdf.iloc[:, 1].to_numpy()):
-        s, d = int(s), int(d)
+    for s, d in zip(edges.column(0).to_pylist(), edges.column(1).to_pylist()):
         adj.setdefault(s, []).append(d)
         adj.setdefault(d, []).append(s)
     for k in adj:
         adj[k].sort()
-    bcast = pairs.sparkSession.sparkContext.broadcast(adj)
+    spark = start_nodes.sparkSession
+    bcast = spark.sparkContext.broadcast(adj)
     starts = start_nodes.select(F.col(node_col).cast("long").alias("node"))
     # respread: the walk cost is per START NODE; AQE would coalesce the
     # tiny start table onto a couple of cores
-    starts = starts.repartition(starts.sparkSession.sparkContext.defaultParallelism)
+    starts = starts.repartition(spark.sparkContext.defaultParallelism)
 
     def gen(batches):
         adjv = bcast.value
@@ -294,31 +253,3 @@ def skipgram_pairs(
         )
     )
 
-
-def walks_py(pairs_rows, start_nodes, walk_length=12, walks_per_node=2):
-    """Single-process replica of node2vec_walks for oracles/tests: same
-    adjacency ordering (sorted neighbor list) and the same (walk_id, step)
-    hash — pure-python ints."""
-    adj: dict[int, list[int]] = {}
-    for s, d in pairs_rows:
-        adj.setdefault(int(s), []).append(int(d))
-        adj.setdefault(int(d), []).append(int(s))
-    for k in adj:
-        adj[k] = sorted(adj[k])
-    rows = []
-    for node in start_nodes:
-        for w in range(walks_per_node):
-            wid = int(node) * walks_per_node + w
-            cur = int(node)
-            path = [cur]
-            for step in range(1, walk_length):
-                nbrs = adj.get(cur, [])
-                if not nbrs:
-                    break
-                h = (wid * _HASH_A + step * _HASH_B + _HASH_C) % _HASH_M
-                cur = nbrs[h % len(nbrs)]
-                path.append(cur)
-            if len(path) < walk_length:
-                continue  # dead-ended walk dropped — same rule as both
-            rows.extend((wid, p, c) for p, c in enumerate(path))
-    return rows
