@@ -294,10 +294,9 @@ def q_traj_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_segment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Combined segment distance d1 + d2 (endpoint + angular,
     clustering.py:57-83) over whole-trajectory chords, blocked by
-    fed_id = traj_id % 5 (federation semantics). The pair table and
-    distance expressions come from _segment_pair_d (shared with
-    q_symmetrize_norm — VERDICT r3 cleanup: the block was duplicated
-    verbatim here)."""
+    fed_id = traj_id % 5 (federation semantics). The pair table comes from
+    _segment_pair_d (shared with q_symmetrize_norm), its distance terms
+    from cluster.segment_distance_terms (shared with q_silhouette)."""
     j, d1, d2 = _segment_pair_d(spark, sf_dir)
     return j.select(
         F.col("a.traj_id").alias("i"),
@@ -337,17 +336,7 @@ def _segment_pair_d(spark: SparkSession, sf_dir: str):
     b = ends.alias("b")
     j = a.join(b, (F.col("a.fed_id") == F.col("b.fed_id"))
                & (F.col("a.traj_id") < F.col("b.traj_id")))
-    d1 = (
-        F.sqrt((F.col("b.sx") - F.col("a.sx")) ** 2 + (F.col("b.sy") - F.col("a.sy")) ** 2)
-        + F.sqrt((F.col("b.ex") - F.col("a.ex")) ** 2 + (F.col("b.ey") - F.col("a.ey")) ** 2)
-    )
-    ang_a = F.atan2(F.col("a.ey") - F.col("a.sy"), F.col("a.ex") - F.col("a.sx"))
-    ang_b = F.atan2(F.col("b.ey") - F.col("b.sy"), F.col("b.ex") - F.col("b.sx"))
-    diff = F.abs(ang_a - ang_b)
-    diff = F.when(diff > F.lit(3.141592653589793), F.lit(6.283185307179586) - diff).otherwise(diff)
-    len_a = F.sqrt((F.col("a.ex") - F.col("a.sx")) ** 2 + (F.col("a.ey") - F.col("a.sy")) ** 2)
-    len_b = F.sqrt((F.col("b.ex") - F.col("b.sx")) ** 2 + (F.col("b.ey") - F.col("b.sy")) ** 2)
-    d2 = F.abs(F.sin(diff)) * F.greatest(len_a, len_b)
+    d1, d2 = cluster_ops.segment_distance_terms(("sx", "sy", "ex", "ey"))
     return j, d1, d2
 
 
@@ -779,12 +768,12 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-query kNN quality bundle: the reference's rank metric (count of
-    corpus vectors at L2 distance ≤ the designated true match's) and the
-    per-query hit count between cosine top-10 and L2 top-10 neighbor sets
-    (consolidates the former hit_ratio / rank_metric queries, VERDICT r4
-    #2 — per-query hits are strictly stronger evidence than the single
-    global ratio, and the full L2 ranking is computed once for both)."""
+    """Per-query kNN quality bundle: the reference's rank metric
+    (similarity.rank_metric: count of corpus vectors at L2 distance ≤ the
+    designated true match's) and the per-query hit count between cosine
+    top-10 and L2 top-10 neighbor sets — per-query hits are strictly
+    stronger evidence than the reference's single global hit ratio, and
+    the full L2 ranking is computed once for both."""
     embs = _embs(spark, sf_dir)
     qs = embs.where(F.col("vec_id") % 50 == 0)
     d = knn_like_l2_topk(embs, qs, k=10**9)  # full ranking, shared
@@ -799,14 +788,11 @@ def q_knn_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus contains exact-duplicate vectors; compare on rounded d2 so
     # both engines resolve those ties identically despite different
     # summation orders
-    rank = (
-        d.join(target, "query_id")
-        .groupBy("query_id")
-        .agg(
-            F.sum(
-                F.when(_RND("d2", 6) <= _RND("target_d2", 6), 1).otherwise(0)
-            ).alias("rank")
-        )
+    rank = simi_ops.rank_metric(
+        d.join(target, "query_id").select(
+            "query_id", _RND("d2", 6).alias("dist"), _RND("target_d2", 6).alias("target")
+        ),
+        query="query_id", target_dist="target",
     )
     return rank.join(hits, "query_id", "left").select(
         "query_id", "rank", F.coalesce("hits10", F.lit(0)).alias("hits10")
@@ -938,37 +924,20 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("a.fed_id") == F.col("b.fed_id"))
         & (F.col("a.segment_id") != F.col("b.segment_id")),
     )
-    d1 = (
-        F.sqrt((F.col("b.start_x") - F.col("a.start_x")) ** 2
-               + (F.col("b.start_y") - F.col("a.start_y")) ** 2)
-        + F.sqrt((F.col("b.end_x") - F.col("a.end_x")) ** 2
-                 + (F.col("b.end_y") - F.col("a.end_y")) ** 2)
-    )
-    ang_a = F.atan2(F.col("a.end_y") - F.col("a.start_y"), F.col("a.end_x") - F.col("a.start_x"))
-    ang_b = F.atan2(F.col("b.end_y") - F.col("b.start_y"), F.col("b.end_x") - F.col("b.start_x"))
-    diff = F.abs(ang_a - ang_b)
-    diff = F.when(diff > F.lit(3.141592653589793), F.lit(6.283185307179586) - diff).otherwise(diff)
-    len_a = F.sqrt((F.col("a.end_x") - F.col("a.start_x")) ** 2
-                   + (F.col("a.end_y") - F.col("a.start_y")) ** 2)
-    len_b = F.sqrt((F.col("b.end_x") - F.col("b.start_x")) ** 2
-                   + (F.col("b.end_y") - F.col("b.start_y")) ** 2)
-    d2 = F.abs(F.sin(diff)) * F.greatest(len_a, len_b)
-    d3 = F.sqrt(
-        F.aggregate(
-            F.zip_with("a.emb", "b.emb", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    d1, d2 = cluster_ops.segment_distance_terms(("start_x", "start_y", "end_x", "end_y"))
+    d3 = cluster_ops.embedding_distance("emb")
     pair_dists = pairs.select(
         F.col("a.segment_id").alias("i"),
         F.col("b.segment_id").alias("j"),
         (d1 + d2 + d3).alias("dist"),
     )
-    sil = cluster_ops.silhouette_distributed(
-        labeled, pair_dists, id_col="segment_id", label_col="label"
-    )
-    n = segs.count()
+    try:
+        sil = cluster_ops.silhouette_distributed(
+            labeled, pair_dists, id_col="segment_id", label_col="label"
+        )
+        n = segs.count()
+    finally:
+        segs.unpersist()  # every read of segs is one of the actions above
     return spark.createDataFrame(
         [(n, (round(sil, 4) + 0e0))], "n long, silhouette_r double"
     )
@@ -982,39 +951,33 @@ def q_cluster_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     radius / size recomputed over ALL member segments, like merge_clus →
     Cluster(all_segments) (:93-95) and the final report loop (:223-227).
     The merge itself runs on #clusters rows (the reference's aggregation
-    step is equally centralized); member stats are recomputed distributed."""
+    step is equally centralized); member stats are recomputed distributed,
+    by the same cluster_aggregates grouped by global_cluster."""
     segs = _cluster_input_segments(spark, sf_dir).persist()
     labeled = cluster_ops.cluster_segments(segs, eps=4000.0, min_samples=2).persist()
-    agg = cluster_ops.cluster_aggregates(labeled, segs)
-    mapping = cluster_ops.federated_merge(agg, eps=20000.0)
-    mids = labeled.where(F.col("label") != -1).join(
-        segs.select(
-            "fed_id", "segment_id",
-            ((F.col("start_x") + F.col("end_x")) / 2).alias("mid_x"),
-            ((F.col("start_y") + F.col("end_y")) / 2).alias("mid_y"),
-        ),
-        ["fed_id", "segment_id"],
-    )
-    m = mids.join(F.broadcast(mapping), ["fed_id", "label"])
-    cent = m.groupBy("global_cluster").agg(
-        F.count(F.lit(1)).alias("size"),
-        F.avg("mid_x").alias("cx"),
-        F.avg("mid_y").alias("cy"),
-    )
-    rad = m.join(F.broadcast(cent), "global_cluster").groupBy("global_cluster").agg(
-        F.max(
-            F.sqrt(
-                F.pow(F.col("mid_x") - F.col("cx"), F.lit(2.0))
-                + F.pow(F.col("mid_y") - F.col("cy"), F.lit(2.0))
-            )
-        ).alias("radius")
-    )
-    return cent.join(rad, "global_cluster").select(
-        F.col("global_cluster").cast("long").alias("global_cluster"),
-        "size",
-        _RND("cx", 2).alias("centroid_x_r"),
-        _RND("cy", 2).alias("centroid_y_r"),
-        _RND("radius", 2).alias("radius_r"),
+    try:
+        agg = cluster_ops.cluster_aggregates(labeled, segs)
+        mapping = cluster_ops.federated_merge(agg, eps=20000.0)
+        merged = cluster_ops.cluster_aggregates(
+            labeled.join(F.broadcast(mapping), ["fed_id", "label"]), segs,
+            by=("global_cluster",),
+        )
+        # one row per merged cluster, read here so that both caches are
+        # released before the query returns
+        rows = merged.select(
+            F.col("global_cluster").cast("long").alias("global_cluster"),
+            "size",
+            _RND("centroid_x", 2).alias("centroid_x_r"),
+            _RND("centroid_y", 2).alias("centroid_y_r"),
+            _RND("radius", 2).alias("radius_r"),
+        ).collect()
+    finally:
+        labeled.unpersist()
+        segs.unpersist()
+    return spark.createDataFrame(
+        rows,
+        "global_cluster long, size long, centroid_x_r double, "
+        "centroid_y_r double, radius_r double",
     )
 
 

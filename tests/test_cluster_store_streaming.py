@@ -77,6 +77,76 @@ def test_cluster_pipeline(spark):
     assert got == pytest.approx(expected, rel=1e-9)
 
 
+def test_segment_distance_terms_match_numpy_kernel(spark):
+    """The Catalyst segment distance that segment_pairs, symmetrize_norm and
+    silhouette run (cluster.segment_distance_terms + embedding_distance)
+    equals the DBSCAN kernel's numpy matrix on random segments,
+    zero-length, parallel and antiparallel ones included."""
+    from trajlib_spark.kernels import clustering as ck
+    from trajlib_spark.operators import cluster
+
+    rng = np.random.default_rng(18)
+    n = 14
+    starts = rng.uniform(-1e4, 1e4, size=(n, 2))
+    ends = starts + rng.uniform(-800.0, 800.0, size=(n, 2))
+    ends[1] = starts[1]  # zero-length
+    starts[2] = ends[2] = (3.0, -7.0)  # zero-length
+    starts[3] = ends[3] = (3.0, -7.0)  # the same point again
+    shift = np.array([250.0, -40.0])
+    starts[4], ends[4] = starts[0] + shift, ends[0] + shift  # parallel to 0
+    starts[5], ends[5] = starts[0], starts[0] + 2.0 * (ends[0] - starts[0])  # collinear
+    starts[6], ends[6] = ends[0] - shift, starts[0] - shift  # antiparallel to 0
+    starts[7], ends[7] = ends[0], starts[0]  # 0 reversed
+    starts[8], ends[8] = (0.0, 0.0), (100.0, 0.0)  # antiparallel along an axis
+    starts[9], ends[9] = (0.0, 50.0), (-100.0, 50.0)
+    embs = rng.normal(size=(n, 4))
+    embs[3] = embs[2]
+    segs = spark.createDataFrame(
+        [(k, *map(float, starts[k]), *map(float, ends[k]), list(map(float, embs[k])))
+         for k in range(n)],
+        "segment_id long, start_x double, start_y double, end_x double, "
+        "end_y double, emb array<double>",
+    )
+    d1, d2 = cluster.segment_distance_terms(("start_x", "start_y", "end_x", "end_y"))
+    d3 = cluster.embedding_distance("emb")
+    got = segs.alias("a").crossJoin(segs.alias("b")).select(
+        F.col("a.segment_id").alias("i"), F.col("b.segment_id").alias("j"),
+        (d1 + d2 + d3).alias("d"),
+    ).collect()
+    want = ck.segment_distance_matrix(starts, ends, embs)
+    assert len(got) == n * n
+    for r in got:
+        assert r.d == pytest.approx(want[r.i, r.j], rel=1e-12), (r.i, r.j)
+    assert {r.d for r in got if r.i == r.j} == {0.0}
+    assert next(r.d for r in got if (r.i, r.j) == (2, 3)) == 0.0
+
+
+def _session_cache_state(spark) -> tuple[int, int]:
+    """(CacheManager entries, persistent RDDs) after a Python and a JVM GC."""
+    import gc
+
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.numCachedEntries(), spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("query", ["silhouette", "cluster_merge"])
+def test_cluster_query_leaves_session_cache_as_found(spark, query):
+    """The query releases what it caches: after it runs and a GC, the
+    session holds no more CacheManager entries and persistent RDDs than
+    before it (fewer, if an earlier test's unreachable frames were freed
+    meanwhile)."""
+    import __spark_entry__ as E
+    from conftest import SF
+
+    before = _session_cache_state(spark)
+    rows = E.queries()[query](spark, SF).collect()
+    assert rows
+    after = _session_cache_state(spark)
+    assert after[0] <= before[0] and after[1] <= before[1], (before, after)
+
+
 def test_store_resume_and_lineage(spark):
     from trajlib_spark.sources.store import TableStore, run_stages
 
@@ -314,8 +384,6 @@ def test_multimodal_plumbing(spark):
     # 'fake' payloads are not a real codec → the real decoder refuses them
     with pytest.raises(Exception, match="NotImplementedError|codec"):
         multimodal.decode_features(media, decoder="real").collect()
-    frames = multimodal.sample_frames(media, every_n=3)
-    assert frames.count() > 0
 
 
 def test_multimodal_real_codecs_roundtrip():
@@ -421,13 +489,11 @@ def test_salted_count_equivalence(spark, points):
     assert plain == salted
 
 
-def test_hot_keys_and_salting(spark):
+def test_salted_count(spark):
     from trajlib_spark.operators import skew
 
     rows = [(1,)] * 900 + [(k,) for k in range(2, 102)]
     df = spark.createDataFrame(rows, "k long")
-    hot = [r.k for r in skew.hot_keys(df, "k", threshold_frac=0.5).collect()]
-    assert hot == [1]
     out = {r.k: r.cnt for r in skew.salted_count(df, ["k"], salt=8).collect()}
     assert out[1] == 900 and out[50] == 1
 

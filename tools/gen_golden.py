@@ -538,7 +538,7 @@ def _labels_for_block(seg: pd.DataFrame, eps: float = 50000.0) -> tuple[np.ndarr
     starts = seg[["start_x", "start_y"]].to_numpy()
     ends = seg[["end_x", "end_y"]].to_numpy()
     embs = np.stack(seg["emb"].to_numpy())
-    dist = segment_distance_matrix(starts, ends, embs, 1.0, 1.0, 1.0)
+    dist = segment_distance_matrix(starts, ends, embs)
     return dist, dbscan_precomputed(dist, eps, 2)
 
 

@@ -57,7 +57,6 @@ LCSS_EDR_EPS = 0.25
 DBSCAN_EPS = 1000.0
 DBSCAN_MIN_SAMPLES = 2
 FED_MERGE_EPS = 3.0
-DIST_ALPHA = DIST_BETA = DIST_GAMMA = 1.0
 
 # Web-Mercator constants (/root/reference/fedtraj/utils/tool_funcs.py:101-115).
 DEG2RAD = 0.017453292519943295

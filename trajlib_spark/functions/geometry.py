@@ -4,7 +4,6 @@ Reference semantics:
 - l2_distance: /root/reference/fedtraj/utils/tool_funcs.py:52-53
 - haversine (non-standard Earth radius 6 367 000 m): tool_funcs.py:56-72
 - radian (bearing in [0, 2π), rounded to 3 decimals): tool_funcs.py:76-97
-- minmax_norm: tool_funcs.py:32-33
 """
 
 from __future__ import annotations
@@ -53,7 +52,3 @@ def bearing_radian(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Co
     # + 0.0 normalizes a possible IEEE -0.0 to +0.0 (byte-parity with the
     # DuckDB oracle, which applies the matching `round(...) + 0e0`).
     return F.round(r, 3) + F.lit(0.0)
-
-
-def minmax_norm(v: Column, minv: Column, maxv: Column) -> Column:
-    return (v - minv) / (maxv - minv) + F.lit(1.0)

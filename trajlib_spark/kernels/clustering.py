@@ -3,7 +3,7 @@ label semantics), the reference's combined segment distance, the greedy
 federated centroid merge, and silhouette scoring.
 
 Reference semantics (/root/reference/clustering.py):
-- combined distance d = α·d1 + β·d2 + γ·d3 (:77-83) with
+- combined distance d = d1 + d2 + d3 (:77-83, α = β = γ = 1) with
   d1 = endpoint distance sum, d2 = |sin Δangle|·max(len), d3 = L2 on
   embeddings (:57-74)
 - DBSCAN(eps=1000, min_samples=2, metric='precomputed') (:98-122)
@@ -25,9 +25,6 @@ def segment_distance_matrix(
     starts: np.ndarray,
     ends: np.ndarray,
     embs: np.ndarray,
-    alpha: float = 1.0,
-    beta: float = 1.0,
-    gamma: float = 1.0,
 ) -> np.ndarray:
     """Dense combined distance for ONE shard's segments (shards are small by
     construction — the federation bound; clustering.py:98-107 vectorized)."""
@@ -42,7 +39,7 @@ def segment_distance_matrix(
     d2 = np.abs(np.sin(diff)) * np.maximum(seg_len[:, None], seg_len[None, :])
     de = embs[:, None, :] - embs[None, :, :]
     d3 = np.sqrt((de * de).sum(axis=2))
-    out = alpha * d1 + beta * d2 + gamma * d3
+    out = d1 + d2 + d3
     np.fill_diagonal(out, 0.0)
     return out
 

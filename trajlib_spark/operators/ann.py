@@ -1,13 +1,15 @@
 """Similarity search over an embedding column (array<float>).
 
-- ``cosine_topk``: exact brute-force cosine top-k — the correctness
-  baseline. The bounded query set is scored against each corpus Arrow
-  batch in numpy with the Catalyst fold's exact IEEE op order; only
-  chunk-local top-k candidates reach the final rank window.
+- ``cosine_topk``: exact brute-force top-k — the correctness baseline.
 - ``ivf_topk``: the scale path — k-means-style inverted-file partitioning
   (centroids trained on a sample at the driver, assignments and scoring
   fully distributed). Probing n_probe nearest centroids bounds the scanned
   and scored fraction to ~n_probe/n_list of the corpus.
+
+Both are one scan, ``_scan_topk``: the bounded query set is scored against
+each corpus Arrow batch in numpy with the Catalyst fold's exact IEEE op
+order, and only chunk-local top-k candidates reach the final rank window.
+The exact top-k is the scan with a single list that every query probes.
 """
 
 from __future__ import annotations
@@ -63,48 +65,47 @@ def _collect_queries(
 
 def _emit_topk(
     scores: np.ndarray, key: np.ndarray, nids: np.ndarray, qids: np.ndarray,
-    k: int, qcols: np.ndarray | None = None,
+    k: int, qcols: np.ndarray,
 ):
     """Rows (query_id, neighbor_id, score) of every chunk-local candidate
     that can still reach the global top-k: the k best per query by ``key``
     (ascending) PLUS every row tying the kth key — ties at the boundary
     are resolved by neighbor_id only in the final window, so all of them
-    must survive the chunk prune. key == +inf marks excluded pairs."""
+    must survive the chunk prune. key == +inf marks excluded pairs;
+    column c of ``key`` is query ``qids[qcols[c]]``."""
     b = key.shape[0]
     kk = min(k, b)
     ordk = np.argsort(key, axis=0, kind="stable")[:kk, :]
     kth = np.take_along_axis(key, ordk[kk - 1 : kk, :], axis=0)
     mask = (key <= kth) & np.isfinite(key)
     rows, cols = np.nonzero(mask)
-    out_q = qids[qcols[cols]] if qcols is not None else qids[cols]
-    return out_q, nids[rows], scores[rows, cols]
+    return qids[qcols[cols]], nids[rows], scores[rows, cols]
 
 
-def cosine_topk(
+def _scan_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    metric: str = "cosine",
+    id_col: str,
+    vec_col: str,
+    metric: str,
+    centroids: np.ndarray | None = None,
+    n_probe: int = 0,
 ) -> DataFrame:
-    """→ (query_id, neighbor_id, rank, cosine); rank by (score, neighbor_id)
-    for a deterministic total order, and a query is never its own neighbor
-    (a corpus row with the query's id is skipped). metric ∈ {cosine, l2, l1} — l1 is the
-    reference's embedding-distance-matrix metric (cdist p=1).
+    """The one embedding scan behind ``cosine_topk`` and ``ivf_topk`` →
+    (query_id, neighbor_id, rank, cosine).
 
-    Shape (round 9): the old plan cross-joined the broadcast query set
-    against the corpus and evaluated an interpreted aggregate/zip_with
-    fold per PAIR — Q·N fold evaluations plus a Q·N-row sort. Now the
-    bounded query set is collected once (what the broadcast already
-    shipped), corpus rows cross the Arrow boundary ONCE, and each task
-    scores its batch against the query matrix in numpy with the identical
-    IEEE op order (see _pair_scores), emitting only chunk-local top-k
-    candidates (ties at the kth key included). The final rank is still
-    the same Catalyst row_number window, now over ~chunks·Q·k candidate
-    rows instead of Q·N."""
-    if metric not in ("cosine", "l2", "l1"):
-        raise ValueError("metric must be cosine | l2 | l1")
+    The bounded query set is collected once. Corpus rows cross the Arrow
+    boundary once; each task cuts its batch into 4096-row chunks, puts
+    every chunk row in an inverted list and scores each list's rows only
+    against the queries that probe that list, with the Catalyst fold's
+    IEEE op order (_pair_scores). A corpus row with the query's own id is
+    skipped. Only chunk-local top-k candidates (kth-key ties included)
+    reach the final row_number window, ranked by (score, neighbor_id).
+
+    Without ``centroids`` there is one list, which every query probes:
+    the exact scan. With them, a row's list is its nearest centroid and a
+    query probes its ``n_probe`` nearest, both from nearest_lists_py."""
     spark = corpus.sparkSession
     qids, QM = _collect_queries(queries, id_col, vec_col)
     if len(qids) == 0:
@@ -112,8 +113,18 @@ def cosine_topk(
             [], "query_id long, neighbor_id long, rank int, cosine double"
         )
     qn = _seq_sq_norms(QM)
+    if centroids is None:
+        C = None
+        probed_by = [np.arange(len(qids))]
+    else:
+        C = np.ascontiguousarray(centroids, dtype=np.float64)
+        probes = np.vstack([  # (Q, n_probe) list ids, 256-row temp bound
+            nearest_lists_py(QM[i : i + 256], C, n_probe)
+            for i in range(0, len(QM), 256)
+        ])
+        probed_by = [np.nonzero((probes == li).any(axis=1))[0]
+                     for li in range(len(C))]
     kk = int(k)
-    mtr = metric
 
     def run(batches):
         import pandas as pd
@@ -127,22 +138,35 @@ def cosine_topk(
             for lo in range(0, len(pdf), 4096):
                 CM = np.array(list(vecs[lo : lo + 4096]), dtype=np.float64)
                 nids = nids_all[lo : lo + 4096]
-                if mtr == "cosine":
-                    dots = _pair_scores(CM, QM, "cosine")
-                    cn = _seq_sq_norms(CM)
-                    scores = dots / (qn[None, :] * cn[:, None])
-                    key = -scores
-                elif mtr == "l2":
-                    scores = np.sqrt(_pair_scores(CM, QM, "l2"))
-                    key = scores.copy()
+                if C is None:
+                    lists = np.zeros(len(CM), dtype=np.int64)
                 else:
-                    scores = _pair_scores(CM, QM, "l1")
-                    key = scores.copy()
-                key[nids[:, None] == qids[None, :]] = np.inf
-                oq, on, osc = _emit_topk(scores, key, nids, qids, kk)
-                outs.append(pd.DataFrame(
-                    {"query_id": oq, "neighbor_id": on, "cosine": osc}
-                ))
+                    # 256-row slices bound the (rows, n_list, dim) temp;
+                    # the reduction is independent per row
+                    lists = np.concatenate([
+                        nearest_lists_py(CM[i : i + 256], C, 1)[:, 0]
+                        for i in range(0, len(CM), 256)
+                    ])
+                cn = _seq_sq_norms(CM) if metric == "cosine" else None
+                for li in np.unique(lists):
+                    qcols = probed_by[li]
+                    if len(qcols) == 0:
+                        continue
+                    rsel = np.nonzero(lists == li)[0]
+                    raw = _pair_scores(CM[rsel], QM[qcols], metric)
+                    if metric == "cosine":
+                        scores = raw / (qn[qcols][None, :] * cn[rsel][:, None])
+                        key = -scores
+                    else:
+                        scores = np.sqrt(raw) if metric == "l2" else raw
+                        key = scores.copy()
+                    key[nids[rsel][:, None] == qids[qcols][None, :]] = np.inf
+                    oq, on, osc = _emit_topk(
+                        scores, key, nids[rsel], qids, kk, qcols=qcols
+                    )
+                    outs.append(pd.DataFrame(
+                        {"query_id": oq, "neighbor_id": on, "cosine": osc}
+                    ))
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
@@ -164,15 +188,34 @@ def cosine_topk(
     )
 
 
+def cosine_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    metric: str = "cosine",
+) -> DataFrame:
+    """Exact top-k → (query_id, neighbor_id, rank, cosine); rank by (score,
+    neighbor_id) for a deterministic total order, and a query is never its
+    own neighbor. metric ∈ {cosine, l2, l1} — l1 is the reference's
+    embedding-distance-matrix metric (cdist p=1). One ``_scan_topk`` over a
+    single list: every corpus row is scored against every query in numpy,
+    never as a per-pair Catalyst fold over a cross join."""
+    if metric not in ("cosine", "l2", "l1"):
+        raise ValueError("metric must be cosine | l2 | l1")
+    return _scan_topk(corpus, queries, k, id_col, vec_col, metric)
+
+
 SAMPLE_HASH_MULT = 2654435761
 SAMPLE_HASH_MOD = 999999937
+CENTROID_ITERS = 8  # Lloyd iterations of train_centroids
 
 
 def train_centroids(
     corpus: DataFrame,
     n_list: int = 64,
     sample: int = 4096,
-    iters: int = 8,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     seed: int = 11,
@@ -200,7 +243,7 @@ def train_centroids(
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     rng = np.random.default_rng(seed)
     cent = X[rng.choice(len(X), min(n_list, len(X)), replace=False)]
-    for _ in range(iters):
+    for _ in range(CENTROID_ITERS):
         sims = X @ cent.T
         assign = sims.argmax(axis=1)
         for ci in range(len(cent)):
@@ -231,93 +274,22 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF approximate top-k: corpus rows live in their nearest-centroid
-    list; queries probe their n_probe nearest lists; exact cosine + window
-    top-k inside the probed union — scanned (and now scored) fraction stays
-    ~n_probe/n_list of the corpus. As in ``cosine_topk``, a query is never
-    its own neighbor.
-
-    Shape (round 9): probes for the bounded query set come from the same
-    nearest_lists_py reduction, run once on the driver; corpus rows cross
-    the Arrow boundary once, each task assigns its batch's list ids
-    (nearest_lists_py, identical values to the old _with_lists pass) and
-    scores each list's rows ONLY against the queries probing that list,
-    with the Catalyst-fold IEEE op order (_pair_scores). The old plan
-    evaluated an interpreted aggregate/zip_with fold per candidate pair
-    after a probe equi-join that shuffled the vectors. The final rank is
-    the unchanged row_number window over chunk-local top-k survivors."""
-    spark = corpus.sparkSession
-    C = np.ascontiguousarray(centroids, dtype=np.float64)
-    qids, QM = _collect_queries(queries, id_col, vec_col)
-    if len(qids) == 0:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine double"
-        )
-    qn = _seq_sq_norms(QM)
-    probes = np.vstack([  # (Q, n_probe) list ids, 256-row temp bound
-        nearest_lists_py(QM[i : i + 256], C, n_probe)
-        for i in range(0, len(QM), 256)
-    ])
-    probed_by = [np.nonzero((probes == li).any(axis=1))[0]
-                 for li in range(len(C))]
-    kk = int(k)
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nids_all = pdf[id_col].to_numpy(dtype=np.int64)
-            vecs = pdf[vec_col].to_numpy()
-            outs = []
-            for lo in range(0, len(pdf), 4096):
-                CM = np.array(list(vecs[lo : lo + 4096]), dtype=np.float64)
-                nids = nids_all[lo : lo + 4096]
-                # 256-row slices bound the (rows, n_list, dim) temp exactly
-                # like the old _with_lists chunking; values are identical
-                # (the reduction is independent per row)
-                lists = np.concatenate([
-                    nearest_lists_py(CM[i : i + 256], C, 1)[:, 0]
-                    for i in range(0, len(CM), 256)
-                ])
-                cn = _seq_sq_norms(CM)
-                for li in np.unique(lists):
-                    qcols = probed_by[li]
-                    if len(qcols) == 0:
-                        continue
-                    rsel = np.nonzero(lists == li)[0]
-                    dots = _pair_scores(CM[rsel], QM[qcols], "cosine")
-                    scores = dots / (qn[qcols][None, :] * cn[rsel][:, None])
-                    key = -scores
-                    key[nids[rsel][:, None] == qids[qcols][None, :]] = np.inf
-                    oq, on, osc = _emit_topk(
-                        scores, key, nids[rsel], qids, kk, qcols=qcols
-                    )
-                    outs.append(pd.DataFrame(
-                        {"query_id": oq, "neighbor_id": on, "cosine": osc}
-                    ))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    cand = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .repartition(spark.sparkContext.defaultParallelism, id_col)
-        .mapInPandas(run, "query_id long, neighbor_id long, cosine double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    """IVF approximate cosine top-k: corpus rows live in their
+    nearest-centroid list; queries probe their n_probe nearest lists; exact
+    cosine + window top-k inside the probed union, so the scored fraction
+    stays ~n_probe/n_list of the corpus. As in ``cosine_topk``, a query is
+    never its own neighbor; both are one ``_scan_topk``."""
+    return _scan_topk(
+        corpus, queries, k, id_col, vec_col, "cosine",
+        centroids=centroids, n_probe=n_probe,
     )
 
 
 def recall_by_query(approx: DataFrame, exact: DataFrame, k: int) -> DataFrame:
     """(query_id, n_hit, recall) per query: |approx ∩ exact| within the
     top-k, over the exact neighbor count — the DataFrame-valued recall
-    certification (recall_at_k collapses it to one scalar). Two bounded
-    aggregates + one semi-join; no new scan of the corpus."""
+    certification. Two bounded aggregates + one semi-join; no new scan of
+    the corpus."""
     a = approx.where(F.col("rank") <= k).select("query_id", "neighbor_id")
     e = exact.where(F.col("rank") <= k).select("query_id", "neighbor_id")
     hits = (
@@ -334,11 +306,3 @@ def recall_by_query(approx: DataFrame, exact: DataFrame, k: int) -> DataFrame:
             (F.coalesce(F.col("n_hit"), F.lit(0)) / F.col("n_exact")).alias("recall"),
         )
     )
-
-
-def recall_at_k(approx: DataFrame, exact: DataFrame, k: int) -> float:
-    a = approx.where(F.col("rank") <= k).select("query_id", "neighbor_id")
-    e = exact.where(F.col("rank") <= k).select("query_id", "neighbor_id")
-    inter = a.join(e, ["query_id", "neighbor_id"]).count()
-    denom = e.count()
-    return inter / denom if denom else 0.0

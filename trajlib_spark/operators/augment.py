@@ -9,7 +9,8 @@ parallelism, unlike the reference's global RNG.
 
 - time_shift: p_i ← ¾·p_i + ¼·p_{i+1}, drops last (functions.py:109-126)
 - scaling: shrink toward the chord midpoint by rate (functions.py:129-151)
-- translate: rigid shift by (cos θ, sin θ)·d (functions.py:92-107)
+- translate: rigid shift by a random (cos θ, sin θ)·d, d < CELL_SIZE — an
+  ``apply_stochastic`` op (functions.py:92-107)
 - shift: truncated-Gaussian jitter per coordinate (μ0 σ0.5 ×100 bounds ±100,
   tool_funcs.py:36-43; functions.py:39-54)
 - mask: delete ⌊l·ratio⌋ random points (functions.py:57-71)
@@ -49,14 +50,6 @@ def scaling(xs: Column, ys: Column, rate: float) -> tuple[Column, Column]:
         mid = (F.element_at(arr, 1) * F.lit(0.5) + F.element_at(arr, -1) * F.lit(0.5))
         return F.transform(arr, lambda v: v * F.lit(rate) + mid * F.lit(1.0 - rate))
     return scale(xs), scale(ys)
-
-
-def translate(xs: Column, ys: Column, angle: float, dist: float) -> tuple[Column, Column]:
-    dx, dy = float(np.cos(angle) * dist), float(np.sin(angle) * dist)
-    return (
-        F.transform(xs, lambda v: v + F.lit(dx)),
-        F.transform(ys, lambda v: v + F.lit(dy)),
-    )
 
 
 # --- seeded stochastic (Arrow UDF) -------------------------------------------

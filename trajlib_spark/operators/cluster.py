@@ -1,7 +1,8 @@
-"""Federated segment clustering: per-shard DBSCAN (grouped pandas UDF over
-the shard's pair matrix — shards are small by construction, which is the
-federation semantics), DataFrame cluster aggregates, and the driver-side
-greedy centroid merge.
+"""Federated segment clustering: the segment distance as Catalyst columns
+(the board's segment pairs and silhouette), per-shard DBSCAN (grouped
+pandas UDF over the shard's pair matrix — shards are small by
+construction, which is the federation semantics), DataFrame cluster
+aggregates, and the driver-side greedy centroid merge.
 
 Reference: /root/reference/clustering.py —
 - local_clustering (:98-122): DBSCAN(eps=1000, min_samples=2,
@@ -22,28 +23,53 @@ reference's aggregation step.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import (
-    DBSCAN_EPS,
-    DBSCAN_MIN_SAMPLES,
-    DIST_ALPHA,
-    DIST_BETA,
-    DIST_GAMMA,
-    FED_MERGE_EPS,
-)
+from ..config import DBSCAN_EPS, DBSCAN_MIN_SAMPLES, FED_MERGE_EPS
 from ..kernels import clustering as ck
+
+
+def segment_distance_terms(ends: tuple[str, str, str, str]) -> tuple[Column, Column]:
+    """The reference's segment distance terms (clustering.py:57-74) as
+    Catalyst columns between the two sides ``a`` and ``b`` of a self-join:
+    d1 = sum of the start-start and end-end distances, d2 = |sin Δangle| ·
+    the longer length. ``ends`` names each side's (start_x, start_y,
+    end_x, end_y) columns. With ``embedding_distance``'s d3 they make the
+    combined distance that ``kernels.clustering.segment_distance_matrix``
+    computes in numpy for one shard."""
+    asx, asy, aex, aey = (F.col(f"a.{c}") for c in ends)
+    bsx, bsy, bex, bey = (F.col(f"b.{c}") for c in ends)
+    d1 = (
+        F.sqrt((bsx - asx) ** 2 + (bsy - asy) ** 2)
+        + F.sqrt((bex - aex) ** 2 + (bey - aey) ** 2)
+    )
+    ang_a = F.atan2(aey - asy, aex - asx)
+    ang_b = F.atan2(bey - bsy, bex - bsx)
+    diff = F.abs(ang_a - ang_b)
+    diff = F.when(diff > F.lit(3.141592653589793), F.lit(6.283185307179586) - diff).otherwise(diff)
+    len_a = F.sqrt((aex - asx) ** 2 + (aey - asy) ** 2)
+    len_b = F.sqrt((bex - bsx) ** 2 + (bey - bsy) ** 2)
+    d2 = F.abs(F.sin(diff)) * F.greatest(len_a, len_b)
+    return d1, d2
+
+
+def embedding_distance(emb: str) -> Column:
+    """d3: the L2 distance between the ``emb`` arrays of self-join sides
+    ``a`` and ``b`` (clustering.py:57-74)."""
+    return F.sqrt(
+        F.aggregate(
+            F.zip_with(f"a.{emb}", f"b.{emb}", lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+    )
 
 
 def cluster_segments(
     segments: DataFrame,
     eps: float = DBSCAN_EPS,
     min_samples: int = DBSCAN_MIN_SAMPLES,
-    alpha: float = DIST_ALPHA,
-    beta: float = DIST_BETA,
-    gamma: float = DIST_GAMMA,
-    fed: str = "fed_id",
 ) -> DataFrame:
     """segments: (fed_id, segment_id, start_x, start_y, end_x, end_y,
     emb array<double>) → (fed_id, segment_id, label); label -1 = noise.
@@ -57,37 +83,42 @@ def cluster_segments(
         starts = pdf[["start_x", "start_y"]].to_numpy()
         ends = pdf[["end_x", "end_y"]].to_numpy()
         embs = np.stack(pdf["emb"].to_numpy()) if len(pdf) else np.zeros((0, 0))
-        dist = ck.segment_distance_matrix(starts, ends, embs, alpha, beta, gamma)
+        dist = ck.segment_distance_matrix(starts, ends, embs)
         labels = ck.dbscan_precomputed(dist, eps, min_samples)
         return pd.DataFrame(
             {
-                "fed_id": pdf[fed].to_numpy(),
+                "fed_id": pdf["fed_id"].to_numpy(),
                 "segment_id": pdf["segment_id"].to_numpy(),
                 "label": labels,
             }
         )
 
-    return segments.groupBy(fed).applyInPandas(
+    return segments.groupBy("fed_id").applyInPandas(
         run, "fed_id int, segment_id long, label long"
     )
 
 
-def cluster_aggregates(labeled: DataFrame, segments: DataFrame) -> DataFrame:
-    """Per (fed_id, label ≠ -1): size, centroid (mean of midpoints), radius
-    (max midpoint→centroid distance) — two-phase aggregation, all Catalyst."""
+def cluster_aggregates(
+    labeled: DataFrame, segments: DataFrame, by: tuple[str, ...] = ("fed_id", "label")
+) -> DataFrame:
+    """Per cluster ``by`` over the segments with label ≠ -1: size, centroid
+    (mean of midpoints), radius (max midpoint→centroid distance) — two-phase
+    aggregation, all Catalyst. The per-shard clusters group by (fed_id,
+    label); the merged ones by the ``global_cluster`` that
+    ``federated_merge`` maps them to."""
     segs = segments.select(
         "fed_id", "segment_id",
         ((F.col("start_x") + F.col("end_x")) / 2).alias("mid_x"),
         ((F.col("start_y") + F.col("end_y")) / 2).alias("mid_y"),
     )
     j = labeled.where(F.col("label") != -1).join(segs, ["fed_id", "segment_id"])
-    cent = j.groupBy("fed_id", "label").agg(
+    cent = j.groupBy(*by).agg(
         F.count(F.lit(1)).alias("size"),
         F.avg("mid_x").alias("centroid_x"),
         F.avg("mid_y").alias("centroid_y"),
     )
-    back = j.join(cent, ["fed_id", "label"])
-    rad = back.groupBy("fed_id", "label").agg(
+    back = j.join(cent, list(by))
+    rad = back.groupBy(*by).agg(
         F.max(
             F.sqrt(
                 F.pow(F.col("mid_x") - F.col("centroid_x"), F.lit(2.0))
@@ -95,7 +126,7 @@ def cluster_aggregates(labeled: DataFrame, segments: DataFrame) -> DataFrame:
             )
         ).alias("radius")
     )
-    return cent.join(rad, ["fed_id", "label"])
+    return cent.join(rad, list(by))
 
 
 def federated_merge(

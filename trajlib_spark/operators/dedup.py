@@ -32,6 +32,8 @@ def exact_duplicates(docs: DataFrame, text: str = "text", id_col: str = "doc_id"
 
 # --- shingling + MinHash ------------------------------------------------------
 
+SHINGLE_K = 5  # byte-shingle width of every signature and the Jaccard verify
+
 def _minhash_params(num_perm: int, seed: int = 1) -> tuple[np.ndarray, np.ndarray]:
     """Multiply-shift style mixing family on Z_2^64: x → a·x + b with odd a
     (wrapping uint64) is a bijection, so per-row minima estimate Jaccard
@@ -103,7 +105,6 @@ def _minhash_block(texts, a: np.ndarray, b: np.ndarray, k: int) -> np.ndarray:
 def minhash_signatures(
     docs: DataFrame,
     num_perm: int = 64,
-    shingle_k: int = 5,
     text: str = "text",
     id_col: str = "doc_id",
     seed: int = 1,
@@ -116,7 +117,7 @@ def minhash_signatures(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            sig = _minhash_block(pdf[text], a, b, shingle_k)
+            sig = _minhash_block(pdf[text], a, b, SHINGLE_K)
             # stored as signed 64-bit for the Spark LongType column
             yield pd.DataFrame({id_col: pdf[id_col], "sig": sig.view(np.int64).T.tolist()})
 
@@ -195,7 +196,6 @@ def ngram_jaccard_verify(
     docs: DataFrame,
     candidates: DataFrame,
     threshold: float = 0.8,
-    shingle_k: int = 5,
     text: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -213,7 +213,7 @@ def ngram_jaccard_verify(
         for ids, side in ((ii, "i"), (jj, "j")):
             for d, t in zip(ids, payload_of(side, text)):
                 if d not in shingles:
-                    shingles[d] = _stable_shingles(t, shingle_k)
+                    shingles[d] = _stable_shingles(t, SHINGLE_K)
         return _jaccard_scores(ii, jj, shingles.__getitem__)
 
     slim = candidates.select(F.col("i").cast("long"), F.col("j").cast("long"))
@@ -226,7 +226,6 @@ def ngram_jaccard_verify(
 
 def simhash_signatures(
     docs: DataFrame,
-    shingle_k: int = 5,
     text: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -237,7 +236,7 @@ def simhash_signatures(
         for pdf in batches:
             out = []
             for s in pdf[text]:
-                sh = _stable_shingles(s or "", shingle_k)
+                sh = _stable_shingles(s or "", SHINGLE_K)
                 if len(sh) == 0:
                     out.append(0)
                     continue
@@ -312,18 +311,19 @@ def simhash_candidates(
 
 # --- embedding-cosine near-dup --------------------------------------------------
 
+N_PLANES = 12  # hyperplanes per sign-sketch table (a 12-bit bucket key)
+
 def embedding_near_dups(
     embs: DataFrame,
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_planes: int = 12,
     n_tables: int = 4,
     seed: int = 7,
 ) -> DataFrame:
     """(i, j, cosine) pairs with cosine >= threshold. Candidates from
     ``n_tables`` INDEPENDENT random-hyperplane sign sketches (a pair within
-    angle θ collides in one table w.p. (1−θ/π)^n_planes; independent tables
+    angle θ collides in one table w.p. (1−θ/π)^N_PLANES; independent tables
     raise recall to 1−(1−p)^T — a single sketch misses any pair that
     differs in ≥1 bit), then each distinct candidate pair verified exactly
     by ``pairs.score_pairs`` with the vectors as its payload — bucket
@@ -335,22 +335,22 @@ def embedding_near_dups(
     rng = np.random.default_rng(seed)
     # sequential per-table draws, stacked (identical values to drawing
     # inside a per-table loop — the oracle generator replicates this)
-    planes = np.vstack([rng.normal(size=(n_planes, dim)) for _ in range(n_tables)])
+    planes = np.vstack([rng.normal(size=(N_PLANES, dim)) for _ in range(n_tables)])
 
     def sketch_batch(batches):
         # Arrow-batched sign sketches over the broadcast plane matrix: an
-        # inline-literal Catalyst expression would be n_tables·n_planes
+        # inline-literal Catalyst expression would be n_tables·N_PLANES
         # aggregate-HOFs with dim literals each — seconds of codegen per
         # plan. Pure-numpy reduction (no BLAS threading) keeps the bucket
         # values reproducible outside Spark for the oracle.
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
+        weights = (1 << np.arange(N_PLANES)).astype(np.int64)
         for pdf in batches:
             vecs = pdf[vec_col].to_numpy()
             buckets = []
             for lo in range(0, len(pdf), 1024):
                 X = np.stack(vecs[lo : lo + 1024]).astype(np.float64)
                 bits = (X[:, None, :] * planes[None, :, :]).sum(axis=2) > 0
-                per_table = bits.reshape(len(X), n_tables, n_planes)
+                per_table = bits.reshape(len(X), n_tables, N_PLANES)
                 buckets.extend((per_table * weights).sum(axis=2).tolist())
             pdf = pdf.copy()
             pdf["_buckets"] = buckets

@@ -172,13 +172,3 @@ def knn_join(
         bound=lambda r: F.lit(float(r * unit) ** 2),
     )
     return out.withColumnRenamed("dist", "dist_sq")
-
-
-def hit_ratio(pred_topk: DataFrame, true_topk: DataFrame, k: int) -> float:
-    """|topk(pred) ∩ topk(true)| / (k · #queries) — the reference's
-    hitting_ratio (/root/reference/fedtraj/model/trainer/simi_trainer.py:565-593)."""
-    p = pred_topk.where(F.col("rank") <= k).select("query_id", "neighbor_id")
-    t = true_topk.where(F.col("rank") <= k).select("query_id", "neighbor_id")
-    inter = p.join(t, ["query_id", "neighbor_id"]).count()
-    n_q = t.select("query_id").distinct().count()
-    return inter / (k * n_q) if n_q else 0.0

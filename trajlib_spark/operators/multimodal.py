@@ -274,17 +274,6 @@ def decode_features(
     return media.mapInPandas(run, "media_id long, kind string, feat array<float>")
 
 
-def sample_frames(media: DataFrame, every_n: int = 5) -> DataFrame:
-    """Frame-sampling plumbing: explode frame indices 0..n_frames-1, keep
-    every n-th — pure Catalyst; the per-frame decode hangs off
-    decode_features."""
-    return media.select(
-        "media_id",
-        "kind",
-        F.explode(F.sequence(F.lit(0), F.col("meta.n_frames") - 1)).alias("frame_idx"),
-    ).where(F.col("frame_idx") % every_n == 0)
-
-
 # --- raw video (uncompressed frame stack) ------------------------------------
 
 def encode_rawvid(frames: np.ndarray) -> bytes:

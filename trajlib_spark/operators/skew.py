@@ -1,7 +1,7 @@
 """Explicit skew handling for hot cells (north rule: "skewed hot cells are
 handled with salted repartitioning and explicit AQE hints").
 
-Three layers, outermost first:
+Two layers, outermost first:
 
 1. AQE (session.py turns on adaptive + skewJoin) — splits skewed
    shuffle-join partitions at runtime; covers equi-joins.
@@ -9,30 +9,12 @@ Three layers, outermost first:
    partial aggregation alone can't fix (e.g. collect_list-style aggs where
    map-side combine doesn't shrink data): shard each key into
    ``salt`` sub-keys, aggregate per (key, salt), then merge per key.
-3. ``rebalance_hint`` / ``skew_join_hint`` — explicit Catalyst hints for
-   plans the caller knows are skewed (the documented
-   "/*+ REPARTITION */-style" escape hatch).
-
-The hot-cell pre-pass (``hot_keys``) identifies keys above a frequency
-threshold so callers can salt only those (cheap count, pushdown-friendly).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def hot_keys(df: DataFrame, key: str, threshold_frac: float = 0.01) -> DataFrame:
-    """Keys holding more than threshold_frac of all rows (the skew
-    pre-pass). One aggregation; broadcastable result."""
-    total = df.count()
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") > threshold_frac * total)
-        .select(key)
-    )
 
 
 def with_salt(df: DataFrame, salt: int, col_name: str = "_salt") -> DataFrame:
@@ -68,14 +50,3 @@ def salted_count(df: DataFrame, keys: list[str], salt: int = 16) -> DataFrame:
         [F.sum("_c").alias("cnt")],
         salt=salt,
     )
-
-
-def rebalance_hint(df: DataFrame, *cols: str) -> DataFrame:
-    """AQE rebalance hint — splits skewed partitions on write/exchange."""
-    return df.hint("rebalance", *cols) if cols else df.hint("rebalance")
-
-
-def skew_join_hint(df: DataFrame, *cols: str) -> DataFrame:
-    """Explicit SKEW hint wrapper (AQE skewJoin handles most cases; this
-    forces the treatment when statistics mislead it)."""
-    return df.hint("skew", *cols) if cols else df
