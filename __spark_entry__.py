@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-from trajlib_spark.config import PORTO_GRID, SESSION_GAP_S
+from trajlib_spark.config import PORTO_GRID
 
 from trajlib_spark.operators import ann as ann_ops
 
@@ -184,25 +184,20 @@ def q_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return raster_ops.tile_counts(_points(spark, sf_dir), G, zooms=(0, 1, 2, 3)).select(
+    return raster_ops.tile_counts(_points(spark, sf_dir), G).select(
         F.col("zoom").cast("long").alias("zoom"), "i_x", "i_y", "cell_id", "cnt"
     )
 
 
 def q_stay_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = stay_ops.collapse_consecutive_cells(
-        _points_cells(spark, sf_dir), G, traj="traj_id", order=["ts_ms", "point_id"]
-    )
+    out = stay_ops.collapse_consecutive_cells(_points_cells(spark, sf_dir), G)
     return out.select(
         "traj_id", F.col("seq").cast("long").alias("seq"), "point_id", "cell_id"
     )
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = stay_ops.sessionize(
-        _points(spark, sf_dir), traj="traj_id", ts_ms="ts_ms",
-        order_tiebreak="point_id", gap_s=SESSION_GAP_S, min_points=2,
-    )
+    s = stay_ops.sessionize(_points(spark, sf_dir), min_points=2)
     return s.groupBy("traj_id", F.col("session_idx").cast("long").alias("session_idx")).agg(
         F.count(F.lit(1)).alias("n_points"),
         F.min("ts_ms").alias("start_ms"),
@@ -238,7 +233,7 @@ def q_point_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-joined on point_id (2 extra Exchanges for identical values)."""
     pts = _points(spark, sf_dir)
     both = feat_ops.kinematics(
-        feat_ops.spatial_features(pts, G, traj="traj_id", order=["ts_ms", "point_id"])
+        feat_ops.spatial_features(pts, G)
     )
     return both.select(
         "point_id",
@@ -400,7 +395,7 @@ def q_walk_skipgrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trajlib_spark.operators import walks as walks_ops
 
     walks = q_cell_walks(spark, sf_dir)
-    pairs = walks_ops.skipgram_pairs(walks, window=10)
+    pairs = walks_ops.skipgram_pairs(walks)
     return pairs.groupBy(
         F.col("center").alias("center_cell"), F.col("context").alias("context_cell")
     ).agg(F.count(F.lit(1)).alias("n_pairs"))
@@ -411,7 +406,7 @@ def q_traj_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trajlib_spark.data_model import cal_all_trajs
 
     pts = _points(spark, sf_dir)
-    nested = cal_all_trajs(pts, attrs=("lon", "lat"))
+    nested = cal_all_trajs(pts)
     return nested.select(
         "traj_id",
         F.col("n_points").cast("long").alias("n_points"),
@@ -510,14 +505,14 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     heavy-hitter extraction before tokenizer training). Catalyst plans the
     orderBy+limit as TakeOrderedAndProject — per-partition top-k heaps,
     no global sort."""
-    return text_ops.vocab_topk(_docs(spark, sf_dir), k=100)
+    return text_ops.vocab_topk(_docs(spark, sf_dir))
 
 
 def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-5 TF-IDF terms (smoothed idf) — the relevance/
     quality primitive a training-data pipeline uses for keyword profiling
     and near-topic filtering."""
-    return text_ops.tfidf_top_terms(_docs(spark, sf_dir), k=5)
+    return text_ops.tfidf_top_terms(_docs(spark, sf_dir))
 
 
 def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -594,8 +589,7 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _replay_stream(
         spark,
         [ev, *dummies],
-        lambda s: streaming_sessions(s, key="user_id", ts="ts", gap_s=360,
-                                     watermark="30 minutes"),
+        streaming_sessions,
         "user_id long, ts timestamp",
     )
     return out.select(
@@ -638,8 +632,7 @@ def q_streaming_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _replay_stream(
         spark,
         [ev, *dummies],
-        lambda s: streaming_tile_counts(s, G, ts="ts", window="1 minute",
-                                        watermark="10 minutes"),
+        lambda s: streaming_tile_counts(s, G),
         "x double, y double, ts timestamp",
     )
     return out.select(
@@ -696,9 +689,6 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-2 repeats are dropped by cross-batch STATE, the semantics the
     memory-sink pytest could not show the driver.  Survivors are oracled
     as rank-1 rows per hash under (batch, ts, doc_id) order in DuckDB."""
-    import tempfile
-    import uuid
-
     from trajlib_spark.streaming.dedup import streaming_exact_dedup
 
     d = _docs(spark, sf_dir).select("doc_id", "text")
@@ -711,40 +701,17 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2_rep = d.where((F.col("doc_id") < 300) & (F.col("doc_id") % 3 == 0)).select(
         "doc_id", "text", (F.lit(_SDEDUP_BASE + 600) + F.col("doc_id")).alias("ts_s")
     )
-    b2 = b2_new.unionAll(b2_rep)
-
-    tmp = tempfile.mkdtemp(prefix="sdedup_")
-    src = os.path.join(tmp, "src")
-
-    def emit(batch_df, mode):
-        (
-            batch_df.orderBy("ts_s", "doc_id")
-            .withColumn("ts", F.timestamp_seconds("ts_s"))
-            .drop("ts_s")
-            .coalesce(1)
-            .write.mode(mode)
-            .parquet(src)
-        )
-
-    emit(b1, "overwrite")
-    stream = spark.readStream.schema("doc_id long, text string, ts timestamp").parquet(src)
-    name = f"sdedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_exact_dedup(stream, ts="ts", text="text", watermark="30 minutes")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
+    batches = [
+        b.orderBy("ts_s", "doc_id").withColumn("ts", F.timestamp_seconds("ts_s")).drop("ts_s")
+        for b in (b1, b2_new.unionAll(b2_rep))
+    ]
+    out = _replay_stream(
+        spark,
+        batches,
+        lambda s: streaming_exact_dedup(s, watermark="30 minutes"),
+        "doc_id long, text string, ts timestamp",
     )
-    try:
-        q.processAllAvailable()  # micro-batch 1: intra-batch dedup
-        emit(b2, "append")
-        q.processAllAvailable()  # micro-batch 2: stateful cross-batch dedup
-    finally:
-        q.stop()
-    shutil.rmtree(tmp, ignore_errors=True)
-    return spark.table(name).select("doc_id", "text_hash")
+    return out.select("doc_id", "text_hash")
 
 
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -834,7 +801,7 @@ def q_segment_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_rdp_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = segment_ops.simplify_trajectories(_points(spark, sf_dir), epsilon=100.0)
+    out = segment_ops.simplify_trajectories(_points(spark, sf_dir))
     return out.where(F.col("rdp_keep")).select("traj_id", "point_id")
 
 
@@ -849,7 +816,7 @@ def q_similarity_edwp(spark: SparkSession, sf_dir: str) -> DataFrame:
     polys = simi_ops.collect_polylines(
         pts.select("traj_id", "fed_id", "ts_ms", "point_id", "x", "y")
     ).join(pts.select("traj_id", "fed_id").distinct(), "traj_id")
-    d = simi_ops.similarity_join(polys, "edwp", block_col="fed_id")
+    d = simi_ops.multi_measure_join(polys, {"dist": ("edwp", 0.0)}, block_col="fed_id")
     return d.select("i", "j", _RND("dist", 3).alias("dist_r"))
 
 
@@ -933,7 +900,7 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         sil = cluster_ops.silhouette_distributed(
-            labeled, pair_dists, id_col="segment_id", label_col="label"
+            labeled, pair_dists, label_col="label"
         )
         n = segs.count()
     finally:
@@ -1017,9 +984,7 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted = exact.unionAll(near).withColumn(
         "vec_id", F.col("vec_id") + F.lit(100000)
     )
-    out = dedup_ops.embedding_near_dups(
-        embs.unionAll(salted), threshold=0.95
-    )
+    out = dedup_ops.embedding_near_dups(embs.unionAll(salted))
     return out.select("i", "j", _RND("cosine", 6).alias("cosine_r"))
 
 
@@ -1059,7 +1024,7 @@ def q_newsimi_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for variant in ("downsample", "distort"):
         q, db = newsimi.newsimi_datasets(
-            polys, n_query=10, n_db=25, variant=variant, rate=0.3, salt=0
+            polys, n_query=10, n_db=25, variant=variant, rate=0.3
         )
         parts.append(
             _newsimi_summary(q, db).select(F.lit(variant).alias("variant"), "*")
@@ -1201,7 +1166,7 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_fed_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional N-way federated shard assignment (np.array_split order)."""
     trajs = _points(spark, sf_dir).select("traj_id").distinct()
-    return segment_ops.federated_split(trajs, 5, order=("traj_id",)).select(
+    return segment_ops.federated_split(trajs, 5).select(
         "traj_id", F.col("fed_id").cast("long").alias("fed_id")
     )
 
@@ -1286,7 +1251,7 @@ def q_media_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     fake = multimodal.decode_features(
-        multimodal.make_media_table(spark, 200), decoder="fake", resize_to=8
+        multimodal.make_media_table(spark, 200), decoder="fake"
     )
     ppm = multimodal.make_media_table(spark, 80, "image", payload_format="ppm")
     bmp = multimodal.make_media_table(spark, 60, "image", payload_format="bmp")
@@ -1294,7 +1259,7 @@ def q_media_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = ppm.unionAll(
         bmp.withColumn("media_id", F.col("media_id") + 1000)
     ).unionAll(wav.withColumn("media_id", F.col("media_id") + 2000))
-    real = multimodal.decode_features(media, decoder="real", resize_to=8)
+    real = multimodal.decode_features(media, decoder="real")
     return summarize(fake, "fake").unionAll(summarize(real, "real"))
 
 
@@ -1306,7 +1271,7 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trajlib_spark.operators import multimodal
 
     media = multimodal.make_media_table(spark, 60, "video", payload_format="rawvid")
-    feats = multimodal.video_frame_features(media, n_samples=4)
+    feats = multimodal.video_frame_features(media)
     return feats.select(
         "media_id", "frame_idx",
         _RND(

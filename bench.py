@@ -420,7 +420,7 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
                                          walks_per_node=10)
             out["walks50_arrow_rows"], _ = _run_and_count_big(wa)
         with _pilot_stage(out, "skipgrams50"):
-            sg = walk_ops.skipgram_pairs(w50, window=10)
+            sg = walk_ops.skipgram_pairs(w50)
             out["skipgrams50_rows"], out["skipgrams50_skew_splits"] = (
                 _run_and_count_big(sg)
             )

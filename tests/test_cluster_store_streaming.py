@@ -335,7 +335,7 @@ def test_streaming_sessionizer(spark, tmp_path):
     spark.createDataFrame(pdf).write.parquet(src)
     stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
     q = (
-        streaming_sessions(stream, gap_s=360)
+        streaming_sessions(stream)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("sess_out")
@@ -351,7 +351,7 @@ def test_streaming_sessionizer(spark, tmp_path):
     assert all(r.n_points >= 1 for r in out)
 
 
-def test_augment_semantics(spark):
+def test_augment_semantics(spark, monkeypatch):
     from trajlib_spark.operators import augment
 
     polys = spark.createDataFrame(
@@ -365,20 +365,23 @@ def test_augment_semantics(spark):
     r3 = polys.select(xs3.alias("x3")).collect()[0]
     # midpoint of chord = (10, 5); x: v*0.5 + 10*0.5
     assert r3.x3 == [5.0, 10.0, 15.0]
-    masked = augment.apply_stochastic(polys, "mask", mask_ratio=0.34).collect()[0]
+    monkeypatch.setattr(augment, "MASK_RATIO", 0.34)
+    masked = augment.apply_stochastic(polys, "mask").collect()[0]
     assert len(masked.xs) == 2  # 3 - int(3*0.34)=2
-    sub = augment.apply_stochastic(polys, "subset", subset_ratio=0.67).collect()[0]
+    monkeypatch.setattr(augment, "SUBSET_RATIO", 0.67)
+    sub = augment.apply_stochastic(polys, "subset").collect()[0]
     assert len(sub.xs) == 2
     twice = augment.apply_stochastic(polys, "shift").collect()
     again = augment.apply_stochastic(polys, "shift").collect()
     assert twice == again  # seeded determinism
 
 
-def test_multimodal_plumbing(spark):
+def test_multimodal_plumbing(spark, monkeypatch):
     from trajlib_spark.operators import multimodal
 
+    monkeypatch.setattr(multimodal, "RESIZE_TO", 4)
     media = multimodal.make_media_table(spark, 10)
-    feats = multimodal.decode_features(media, decoder="fake", resize_to=4)
+    feats = multimodal.decode_features(media, decoder="fake")
     rows = feats.collect()
     assert len(rows) == 10 and all(len(r.feat) == 16 for r in rows)
     # 'fake' payloads are not a real codec → the real decoder refuses them
@@ -386,29 +389,32 @@ def test_multimodal_plumbing(spark):
         multimodal.decode_features(media, decoder="real").collect()
 
 
-def test_multimodal_real_codecs_roundtrip():
+def test_multimodal_real_codecs_roundtrip(monkeypatch):
     import numpy as np
     from trajlib_spark.operators import multimodal as M
+
+    monkeypatch.setattr(M, "SAMPLE_RATE", 8000)
 
     rng = np.random.default_rng(4)
     rgb = rng.integers(0, 256, size=(13, 17, 3), dtype=np.uint8)
     assert np.array_equal(M.decode_ppm(M.encode_ppm(rgb)), rgb)
     assert np.array_equal(M.decode_bmp(M.encode_bmp(rgb)), rgb)
     samples = (rng.normal(size=1000) * 5000).astype(np.int16)
-    got, rate = M.decode_wav(M.encode_wav(samples, 8000))
+    got, rate = M.decode_wav(M.encode_wav(samples))
     assert rate == 8000 and np.array_equal(got, samples)
     frames = rng.integers(0, 256, size=(7, 11, 9), dtype=np.uint8)
     assert np.array_equal(M.decode_rawvid(M.encode_rawvid(frames)), frames)
 
 
-def test_video_frame_sampling(spark):
+def test_video_frame_sampling(spark, monkeypatch):
     """RV01 frame-sample: one row per sampled frame with uniformly-spaced
     deterministic indices, features matching a local decode."""
     import numpy as np
     from trajlib_spark.operators import multimodal as M
 
     media = M.make_media_table(spark, 10, "video", payload_format="rawvid")
-    out = M.video_frame_features(media, n_samples=4, resize_to=4).collect()
+    monkeypatch.setattr(M, "RESIZE_TO", 4)
+    out = M.video_frame_features(media).collect()
     rows = {(r.media_id, r.frame_idx): r.feat for r in out}
     local = {r[0]: r for r in (M._media_row(i, "video", "rawvid") for i in range(10))}
     count = 0
@@ -426,7 +432,7 @@ def test_video_frame_sampling(spark):
     assert count == len(rows)
 
 
-def test_video_frame_sampling_short_clip(spark):
+def test_video_frame_sampling_short_clip(spark, monkeypatch):
     """A clip SHORTER than n_samples yields one row per frame with
     distinct, whole-clip-spanning indices (ADVICE r3: the old
     //n_samples divisor emitted frame 0 twice and never the tail)."""
@@ -434,13 +440,14 @@ def test_video_frame_sampling_short_clip(spark):
     import pandas as pd
     from trajlib_spark.operators import multimodal as M
 
+    monkeypatch.setattr(M, "RESIZE_TO", 2)
     frames = np.arange(2 * 6 * 6, dtype=np.uint8).reshape(2, 6, 6)
     payload = M.encode_rawvid(frames)
     media = spark.createDataFrame(
         pd.DataFrame({"media_id": [7], "payload": [payload]})
     )
     out = sorted(
-        M.video_frame_features(media, n_samples=4, resize_to=2).collect(),
+        M.video_frame_features(media).collect(),
         key=lambda r: r.frame_idx,
     )
     assert [r.frame_idx for r in out] == [0, 1]
@@ -452,13 +459,15 @@ def test_video_frame_sampling_short_clip(spark):
         )
 
 
-def test_multimodal_real_decode_features(spark):
+def test_multimodal_real_decode_features(spark, monkeypatch):
     import numpy as np
     from trajlib_spark.operators import multimodal as M
 
+    monkeypatch.setattr(M, "RESIZE_TO", 4)
+
     for fmt, kind in (("ppm", "image"), ("bmp", "image"), ("wav", "audio")):
         media = M.make_media_table(spark, 6, kind=kind, payload_format=fmt)
-        rows = M.decode_features(media, decoder="real", resize_to=4).collect()
+        rows = M.decode_features(media, decoder="real").collect()
         assert len(rows) == 6 and all(len(r.feat) == 16 for r in rows)
         # distributed result equals the local decode of the same payload
         local = {r.media_id: r for r in media.collect()}
@@ -480,10 +489,10 @@ def test_salted_count_equivalence(spark, points):
     from trajlib_spark.operators import raster
     from trajlib_spark.config import PORTO_GRID
 
-    plain = raster.tile_counts(points, PORTO_GRID, zooms=(0, 2)).orderBy(
+    plain = raster.tile_counts(points, PORTO_GRID).orderBy(
         "zoom", "i_x", "i_y"
     ).collect()
-    salted = raster.tile_counts(points, PORTO_GRID, zooms=(0, 2), salt=8).orderBy(
+    salted = raster.tile_counts(points, PORTO_GRID, salt=8).orderBy(
         "zoom", "i_x", "i_y"
     ).collect()
     assert plain == salted
@@ -557,11 +566,14 @@ def test_trajlib_pipelines_end_to_end(spark, points):
         shutil.rmtree(root)
 
 
-def test_streaming_tile_counts(spark, tmp_path):
+def test_streaming_tile_counts(spark, tmp_path, monkeypatch):
     import pandas as pd
 
     from trajlib_spark.config import PORTO_GRID
+    from trajlib_spark.streaming import tiles
     from trajlib_spark.streaming.tiles import streaming_tile_counts
+
+    monkeypatch.setattr(tiles, "WATERMARK", "0 seconds")
 
     g = PORTO_GRID
     x0, y0 = g.x_min + 5.0, g.y_min + 5.0
@@ -577,7 +589,7 @@ def test_streaming_tile_counts(spark, tmp_path):
     spark.createDataFrame(pdf).write.parquet(src)
     stream = spark.readStream.schema("ts timestamp, x double, y double").parquet(src)
     q = (
-        streaming_tile_counts(stream, g, window="1 minute", watermark="0 seconds")
+        streaming_tile_counts(stream, g)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("tiles_out")
@@ -645,35 +657,3 @@ def test_streaming_exact_dedup(spark, tmp_path):
         assert r.doc_id in groups[r.text]
     batch = batch_dedup.exact_duplicates(spark.createDataFrame(pdf)).collect()
     assert len(batch) == len(out)
-
-
-def test_streaming_signature_dedup(spark, tmp_path):
-    """Near-dup gate: documents sharing the (precomputed) signature band
-    collapse to one survivor within the horizon; distinct bands pass."""
-    import pandas as pd
-
-    from trajlib_spark.streaming.dedup import streaming_signature_dedup
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [0, 1, 2, 3],
-            "sig_band": [7, 7, 9, 7],
-            "ts": pd.to_datetime([0, 1000, 2000, 3000], unit="ms"),
-        }
-    )
-    src = str(tmp_path / "sig_src")
-    spark.createDataFrame(pdf).write.parquet(src)
-    stream = spark.readStream.schema("doc_id long, sig_band long, ts timestamp").parquet(src)
-    q = (
-        streaming_signature_dedup(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sigdedup_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.sql("SELECT sig_band FROM sigdedup_out").collect()
-    assert sorted(r.sig_band for r in out) == [7, 9]

@@ -31,12 +31,19 @@ def _local_candidates(pts_xy, edge_xy, max_dist=vk.MAX_DIST_M):
     return ce, cd
 
 
+def _road_grid(monkeypatch, n):
+    """An n × n road grid in place of the N_ROWS × N_COLS default."""
+    monkeypatch.setattr(roads, "N_ROWS", n)
+    monkeypatch.setattr(roads, "N_COLS", n)
+
+
 @pytest.mark.parametrize("seed", [0, 3, 11])
-def test_viterbi_equals_brute_force(seed):
+def test_viterbi_equals_brute_force(seed, monkeypatch):
     """DP == exhaustive max over all state sequences on a small fixture
     (including chain resets from candidate-less points)."""
     rng = np.random.RandomState(seed)
-    node_xy, edge_nodes, edge_xy = roads.road_grid_arrays(G, 5, 5)
+    _road_grid(monkeypatch, 5)
+    node_xy, edge_nodes, edge_xy = roads.road_grid_arrays(G)
     # a walk hugging road edges + one far-away outlier to force a reset
     picks = rng.randint(0, len(edge_xy), size=6)
     t = rng.rand(6)[:, None]
@@ -53,10 +60,11 @@ def test_viterbi_equals_brute_force(seed):
     assert got[3] == -1
 
 
-def test_transitions_prefer_connected_edges():
+def test_transitions_prefer_connected_edges(monkeypatch):
     """Equidistant candidates: the matcher picks the edge CONNECTED to the
     previous state over a disconnected one."""
-    node_xy, edge_nodes, edge_xy = roads.road_grid_arrays(G, 4, 4)
+    _road_grid(monkeypatch, 4)
+    node_xy, edge_nodes, edge_xy = roads.road_grid_arrays(G)
     # point 0 exactly on edge 0; point 1 equidistant from edge sharing a
     # node with 0 and from a far-in-index disconnected edge
     e0 = 0
@@ -116,11 +124,12 @@ def test_map_match_plan_shape(spark, points):
     assert "BroadcastHashJoin" in plan
 
 
-def test_edge_connections_join(spark):
+def test_edge_connections_join(spark, monkeypatch):
     """Connectivity self-join == the reference's O(n²) definition
     (map_match.py:163-173) on the matched edge set."""
-    _, edge_nodes, _ = roads.road_grid_arrays(G, 4, 4)
-    edges = roads.road_edges(spark, G, 4, 4)
+    _road_grid(monkeypatch, 4)
+    _, edge_nodes, _ = roads.road_grid_arrays(G)
+    edges = roads.road_edges(spark, G)
     matched = spark.createDataFrame(
         [(1, 0, 0), (1, 1, 3), (1, 2, 12), (1, 3, -1)],
         "traj_id long, point_id long, edge_id long",

@@ -105,11 +105,18 @@ def test_knn_exact_vs_numpy(spark, points):
         assert got == expect, qid
 
 
-def test_knn_forced_fallback(spark, points):
+def _start_ring(monkeypatch, ring):
+    """Start knn_join's ring expansion at ``ring`` cells instead of the
+    radius pick_ring_radius derives from the point density."""
+    monkeypatch.setattr(knn, "pick_ring_radius", lambda n_points, grid, k: ring)
+
+
+def test_knn_forced_fallback(spark, points, monkeypatch):
     # ring=1 with sparse points forces several ring rounds; still exact
     sub = points.limit(50).cache()
     qs = sub.limit(5)
-    out = knn.knn_join(sub, qs, G, k=10, ring=1)
+    _start_ring(monkeypatch, 1)
+    out = knn.knn_join(sub, qs, G, k=10)
     assert out.groupBy("query_id").count().agg(F.min("count")).collect()[0][0] == 10
 
 
@@ -128,7 +135,7 @@ def _edge_points(rng, n_per_edge):
 
 
 @pytest.mark.parametrize("k,ring", [(1, 1), (3, None)])
-def test_knn_join_exact_off_grid(spark, k, ring):
+def test_knn_join_exact_off_grid(spark, monkeypatch, k, ring):
     """The ring certificate holds for rows off the grid: points inside, on
     and outside every MBR edge get the same neighbours as a numpy scan (an
     out-of-MBR point used to be indexed at the centre cell, where the
@@ -138,7 +145,9 @@ def test_knn_join_exact_off_grid(spark, k, ring):
         [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
         "point_id long, x double, y double",
     )
-    out = knn.knn_join(pts, pts, G, k=k, ring=ring)
+    if ring is not None:
+        _start_ring(monkeypatch, ring)
+    out = knn.knn_join(pts, pts, G, k=k)
     got = out.orderBy("query_id", "rank").select(
         "query_id", "neighbor_id", "rank", "dist_sq").collect()
     expect = []
@@ -154,7 +163,7 @@ def test_knn_join_exact_off_grid(spark, k, ring):
 def test_measure_topk_grid_exact_off_grid(spark, measure):
     """Grid-ring measure_topk is exact for trajectories whose anchors lie
     inside, on and outside the MBR edges: the same rows as a scalar scan
-    and as ``brute=True``."""
+    and as the broadcast scan ``_brute_topk``."""
     from trajlib_spark.kernels import dp_distances as dpk
 
     rng = np.random.default_rng(9)
@@ -169,7 +178,7 @@ def test_measure_topk_grid_exact_off_grid(spark, measure):
     cols = ("query_id", "neighbor_id", "rank", "dist")
     pruned = similarity.measure_topk(polys, polys, measure, k=2, grid=G, ring=1)
     got = pruned.orderBy("query_id", "rank").select(*cols).collect()
-    brute = similarity.measure_topk(polys, polys, measure, k=2, brute=True)
+    brute = similarity._brute_topk(polys, polys, measure, k=2)
     assert got == brute.orderBy("query_id", "rank").select(*cols).collect()
     expect = []
     for q in sorted(lines):
@@ -266,7 +275,7 @@ def test_pip_duplicate_geo_id_rows_stay_apart(spark, points):
 
 
 def test_raster_roundtrip_and_pyramid(spark, points):
-    tc = raster.tile_counts(points, G, zooms=(0, 1, 2))
+    tc = raster.tile_counts(points, G).where(F.col("zoom") <= 2)
     # pyramid consistency: direct assignment on the zoom-2 grid == rollup
     g2 = G.at_zoom(2)
     direct = (
@@ -305,7 +314,7 @@ def test_similarity_operator_matches_kernel(spark, points):
 
     sub = points.where(F.col("traj_id") < 3)
     polys = similarity.collect_polylines(sub)
-    d = similarity.similarity_join(polys, "frechet").toPandas()
+    d = similarity.multi_measure_join(polys, {"dist": ("frechet", 0.0)}).toPandas()
     pls = {r.traj_id: np.column_stack([r.xs, r.ys]) for r in polys.collect()}
     for row in d.itertuples(index=False):
         assert row.dist == pytest.approx(
@@ -357,7 +366,7 @@ def _polyline_dict(polys) -> dict:
 
 
 def test_multi_measure_join_on_both_paths(spark, points, pair_path):
-    """similarity_join / multi_measure_join score the same pairs to the
+    """multi_measure_join scores the same pairs to the
     same values whether the polylines are broadcast or joined."""
     from trajlib_spark.kernels import dp_distances as dpk
 
@@ -410,8 +419,7 @@ def test_measure_topk_on_both_paths(spark, points, pair_path, path_kind):
 
 
 @pytest.mark.parametrize("call", [
-    "similarity_join", "multi_measure_join",
-    "measure_topk", "measure_topk_brute", "measure_topk_grid",
+    "multi_measure_join", "measure_topk", "measure_topk_brute", "measure_topk_grid",
 ])
 def test_unknown_measure_rejected_when_plan_is_built(spark, call):
     """A bad measure name raises ValueError naming it and the valid set on
@@ -421,12 +429,10 @@ def test_unknown_measure_rejected_when_plan_is_built(spark, call):
         [(1, [0.0, 1.0], [0.0, 1.0]), (2, [5.0, 6.0], [5.0, 6.0])], schema
     )
     calls = {
-        "similarity_join": lambda: similarity.similarity_join(polys, "nope"),
         "multi_measure_join": lambda: similarity.multi_measure_join(
             polys, {"d": ("nope", 0.0)}),
         "measure_topk": lambda: similarity.measure_topk(polys, polys, "nope", k=5),
-        "measure_topk_brute": lambda: similarity.measure_topk(
-            polys, polys, "nope", k=5, brute=True),
+        "measure_topk_brute": lambda: similarity._brute_topk(polys, polys, "nope", k=5),
         "measure_topk_grid": lambda: similarity.measure_topk(
             polys, polys, "nope", k=5, grid=G),
     }
@@ -547,10 +553,11 @@ def test_grid_ring_topk_leaves_session_cache_as_found(spark):
     assert cm.numCachedEntries() == before
 
 
-def test_knn_join_leaves_session_cache_as_found(spark):
+def test_knn_join_leaves_session_cache_as_found(spark, monkeypatch):
     """knn_join's per-round ranks are lazy local checkpoints: three calls
     on new inputs, over several ring rounds, match a numpy scan and add
     no entry to the session's CacheManager."""
+    _start_ring(monkeypatch, 1)
     cm = spark._jsparkSession.sharedState().cacheManager()
     before = cm.numCachedEntries()
     for call in range(3):
@@ -560,7 +567,7 @@ def test_knn_join_leaves_session_cache_as_found(spark):
             [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
             "point_id long, x double, y double",
         )
-        out = knn.knn_join(pts, pts.where(F.col("point_id") < 4), G, k=3, ring=1)
+        out = knn.knn_join(pts, pts.where(F.col("point_id") < 4), G, k=3)
         got = out.orderBy("query_id", "rank").select("query_id", "neighbor_id").collect()
         expect = []
         for q in range(4):
@@ -637,12 +644,13 @@ def _plan_has_cross_join(df) -> bool:
     return "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def test_knn_ring_doubling_no_cross_join(spark, points):
+def test_knn_ring_doubling_no_cross_join(spark, points, monkeypatch):
     """Sparse/skewed density: under-filled queries re-fan at 4R, 16R, …
     instead of falling back to an unbounded cross join (VERDICT r1 item 5)."""
     sub = points.limit(50).cache()
     qs = sub.limit(5)
-    out = knn.knn_join(sub, qs, G, k=10, ring=1)
+    _start_ring(monkeypatch, 1)
+    out = knn.knn_join(sub, qs, G, k=10)
     assert not _plan_has_cross_join(out)
     pdf = out.toPandas()
     assert (pdf.groupby("query_id")["rank"].max() == 10).all()
@@ -686,7 +694,7 @@ def test_measure_topk_eps_match_bounded_matches_brute(spark, points, measure):
     qs = polys.where(F.col("traj_id") % 8 == 0)
     bounded = similarity.measure_topk(polys, qs, measure, k=5)
     assert not _plan_has_cross_join(bounded)
-    brute = similarity.measure_topk(polys, qs, measure, k=5, brute=True)
+    brute = similarity._brute_topk(polys, qs, measure, k=5)
     got = bounded.orderBy("query_id", "rank").select(
         "query_id", "neighbor_id", "rank").collect()
     expect = brute.orderBy("query_id", "rank").select(
@@ -731,7 +739,7 @@ def test_measure_topk_eps_match_filler_tail(spark, measure, k, sparse):
     qs = polys.where((F.col("traj_id") - (3 if sparse else 0)) % 6 == 0)
     bounded = similarity.measure_topk(polys, qs, measure, k=k)
     assert not _plan_has_cross_join(bounded)
-    brute = similarity.measure_topk(polys, qs, measure, k=k, brute=True)
+    brute = similarity._brute_topk(polys, qs, measure, k=k)
     got = bounded.orderBy("query_id", "rank").select(
         "query_id", "neighbor_id", "rank", "dist").collect()
     expect = brute.orderBy("query_id", "rank").select(
@@ -756,7 +764,7 @@ def test_measure_topk_eps_match_edr_empty_polylines(spark, k):
     ], schema)
     for polys in (mixed, mixed.where(F.size("xs") == 0)):
         bounded = similarity.measure_topk(polys, polys, "edr", k=k)
-        brute = similarity.measure_topk(polys, polys, "edr", k=k, brute=True)
+        brute = similarity._brute_topk(polys, polys, "edr", k=k)
         got = bounded.orderBy("query_id", "rank").select(
             "query_id", "neighbor_id", "rank", "dist").collect()
         expect = brute.orderBy("query_id", "rank").select(

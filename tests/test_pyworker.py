@@ -82,7 +82,8 @@ docs = spark.createDataFrame(
     [(i, "near duplicate document number %d" % i) for i in range(20)],
     "doc_id long, text string",
 )
-dedup.minhash_signatures(docs, num_perm=8).count()  # an engine Arrow UDF
+dedup.NUM_PERM = 8
+dedup.minhash_signatures(docs).count()  # an engine Arrow UDF
 
 
 def probe(batches):

@@ -66,8 +66,8 @@ def test_exact_duplicates(spark):
 
 def test_minhash_lsh_finds_near_dup(spark):
     d = _docs_with_dups(spark)
-    sigs = dedup.minhash_signatures(d, num_perm=64)
-    cands = dedup.lsh_candidates(sigs, bands=16)
+    sigs = dedup.minhash_signatures(d)
+    cands = dedup.lsh_candidates(sigs)
     ver = dedup.ngram_jaccard_verify(d, cands, threshold=0.6)
     pairs = {(r.i, r.j) for r in ver.collect()}
     assert (1, 2) in pairs and (1, 3) in pairs or (2, 3) in pairs
@@ -125,8 +125,8 @@ def test_jaccard_verify_slim_path_matches_join_path(spark):
     # produce exactly the join path's rows (threshold -1) — including
     # inner-join drop semantics for candidate ids with no doc row
     d = _docs_with_dups(spark)
-    sigs = dedup.minhash_signatures(d, num_perm=64)
-    cands = dedup.lsh_candidates(sigs, bands=16).unionByName(
+    sigs = dedup.minhash_signatures(d)
+    cands = dedup.lsh_candidates(sigs).unionByName(
         spark.createDataFrame([(1, 99), (98, 99)], "i long, j long")
     )
     slim = dedup.ngram_jaccard_verify(d, cands, threshold=0.0)
@@ -149,7 +149,7 @@ def test_jaccard_verify_gate_on_text_bytes(spark):
     threshold restored afterwards). Both paths give the same rows."""
     d = _docs_with_dups(spark)
     cands = spark.createDataFrame(  # local rows: the only join is the attach's
-        dedup.lsh_candidates(dedup.minhash_signatures(d, num_perm=64), bands=16).collect(),
+        dedup.lsh_candidates(dedup.minhash_signatures(d)).collect(),
         "i long, j long",
     )
     nbytes = d.agg(F.sum(F.octet_length("text"))).first()[0]
@@ -232,9 +232,11 @@ def test_dedup_components_verify_runs_two_jobs(spark, monkeypatch):
     assert jobs == [2], jobs
 
 
-def test_minhash_estimates_jaccard(spark):
+def test_minhash_estimates_jaccard(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "NUM_PERM", 128)
     d = _docs_with_dups(spark)
-    sigs = {r.doc_id: np.array(r.sig) for r in dedup.minhash_signatures(d, num_perm=128).collect()}
+    sigs = {r.doc_id: np.array(r.sig) for r in dedup.minhash_signatures(d).collect()}
+    assert all(len(v) == 128 for v in sigs.values())
     est = (sigs[1] == sigs[3]).mean()
     ver = dedup.ngram_jaccard_verify(
         d, spark.createDataFrame([(1, 3)], "i long, j long"), threshold=0.0
@@ -270,8 +272,8 @@ def test_lsh_candidates_leaves_session_cache_as_found(spark):
     cm = spark._jsparkSession.sharedState().cacheManager()
     before = cm.numCachedEntries()
     for call in range(2):
-        sigs = dedup.minhash_signatures(_planted_dup_docs(spark, call), num_perm=64)
-        got = {(r.i, r.j) for r in dedup.lsh_candidates(sigs, bands=16).collect()}
+        sigs = dedup.minhash_signatures(_planted_dup_docs(spark, call))
+        got = {(r.i, r.j) for r in dedup.lsh_candidates(sigs).collect()}
         assert (1, 3) in got
     assert cm.numCachedEntries() == before
 
@@ -289,7 +291,8 @@ def test_simhash_candidates_leaves_session_cache_as_found(spark):
     assert cm.numCachedEntries() == before
 
 
-def test_embedding_near_dups_planted(spark):
+def test_embedding_near_dups_planted(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "NEAR_DUP_COSINE", 0.98)
     rng = np.random.default_rng(3)
     base = rng.normal(size=16)
     rows = []
@@ -299,7 +302,7 @@ def test_embedding_near_dups_planted(spark):
     rows.append((100, [float(x) for x in base]))
     rows.append((101, [float(x) for x in (base + rng.normal(scale=0.01, size=16))]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {(r.i, r.j) for r in dedup.embedding_near_dups(df, threshold=0.98).collect()}
+    out = {(r.i, r.j) for r in dedup.embedding_near_dups(df).collect()}
     assert (100, 101) in out
 
 
@@ -413,7 +416,7 @@ def test_dedup_queries_fan_docs_out_per_core(spark, query):
     assert fanouts == {sc.defaultParallelism}, fanouts
 
 
-def test_ivf_large_nlist_and_clustered_recall(spark):
+def test_ivf_large_nlist_and_clustered_recall(spark, monkeypatch):
     """n_list in the hundreds must not blow codegen (assignment is an
     Arrow-batched argmax, VERDICT r1 item 6), and on clustered data the
     documented n_probe reaches recall ≥ 0.9."""
@@ -426,12 +429,13 @@ def test_ivf_large_nlist_and_clustered_recall(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
     qs = df.where("vec_id % 100 = 0")
     # smoke: n_list larger than any inline-expression limit
-    cents_big = ann.train_centroids(df, n_list=512, sample=1280)
+    monkeypatch.setattr(ann, "CENTROID_SAMPLE", 1280)
+    cents_big = ann.train_centroids(df, n_list=512)
     big = ann.ivf_topk(df, qs, k=5, centroids=cents_big, n_probe=8)
     assert big.count() > 0
     # recall on the realistic clustered corpus at documented n_probe=8
     exact = ann.cosine_topk(df, qs, k=10)
-    cents = ann.train_centroids(df, n_list=32, sample=1280)
+    cents = ann.train_centroids(df, n_list=32)
     approx = ann.ivf_topk(df, qs, k=10, centroids=cents, n_probe=8)
     # every query has 10 exact neighbours, so the mean is the pooled recall
     rec = ann.recall_by_query(approx, exact, 10).toPandas()
@@ -444,7 +448,7 @@ def test_train_centroids_deterministic_across_partitioning(spark, embs):
     assert np.array_equal(c1, c2)
 
 
-def test_embedding_near_dups_on_both_paths(spark, pair_path):
+def test_embedding_near_dups_on_both_paths(spark, pair_path, monkeypatch):
     """Planted exact and near duplicates come back with the cosine of the
     Catalyst fold (one IEEE multiply-add per dimension from 0.0) on either
     path, each pair once although it collides in several tables."""
@@ -456,7 +460,8 @@ def test_embedding_near_dups_on_both_paths(spark, pair_path):
         [(k, [float(x) for x in v]) for k, v in vecs.items()],
         "vec_id long, embedding array<double>",
     )
-    out = dedup.embedding_near_dups(df, threshold=0.95, n_tables=6)
+    monkeypatch.setattr(dedup, "N_TABLES", 6)
+    out = dedup.embedding_near_dups(df)
     assert pair_path.ran_in(out)
 
     def fold(a, b):
@@ -480,10 +485,11 @@ def test_embedding_near_dups_empty_table(spark):
     assert out.collect() == []
 
 
-def test_embedding_near_dups_leaves_session_cache_as_found(spark):
+def test_embedding_near_dups_leaves_session_cache_as_found(spark, monkeypatch):
     """The sketch frame is a lazy local checkpoint: two calls on new
     inputs find their planted duplicate and add no entry to the session's
     CacheManager."""
+    monkeypatch.setattr(dedup, "NEAR_DUP_COSINE", 0.999)
     cm = spark._jsparkSession.sharedState().cacheManager()
     before = cm.numCachedEntries()
     for call in range(2):
@@ -494,12 +500,12 @@ def test_embedding_near_dups_leaves_session_cache_as_found(spark):
             [(k, [float(x) for x in v]) for k, v in enumerate(vecs)],
             "vec_id long, embedding array<double>",
         )
-        got = [(r.i, r.j) for r in dedup.embedding_near_dups(df, threshold=0.999).collect()]
+        got = [(r.i, r.j) for r in dedup.embedding_near_dups(df).collect()]
         assert got == [(2, 10)]
     assert cm.numCachedEntries() == before
 
 
-def test_embedding_near_dups_multi_table_recall(spark):
+def test_embedding_near_dups_multi_table_recall(spark, monkeypatch):
     """Multiple independent hyperplane tables recover planted near-dup
     pairs that a single sketch misses (recall 1-(1-p)^T)."""
     rng = np.random.default_rng(9)
@@ -511,10 +517,11 @@ def test_embedding_near_dups_multi_table_recall(spark):
         rows.append((2 * k + 1, [float(x) for x in base + rng.normal(scale=0.02, size=24)]))
         planted.append((2 * k, 2 * k + 1))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    single = {(r.i, r.j) for r in dedup.embedding_near_dups(
-        df, threshold=0.98, n_tables=1).collect()}
-    multi = {(r.i, r.j) for r in dedup.embedding_near_dups(
-        df, threshold=0.98, n_tables=6).collect()}
+    monkeypatch.setattr(dedup, "NEAR_DUP_COSINE", 0.98)
+    monkeypatch.setattr(dedup, "N_TABLES", 1)
+    single = {(r.i, r.j) for r in dedup.embedding_near_dups(df).collect()}
+    monkeypatch.setattr(dedup, "N_TABLES", 6)
+    multi = {(r.i, r.j) for r in dedup.embedding_near_dups(df).collect()}
     hits_single = sum(p in single for p in planted)
     hits_multi = sum(p in multi for p in planted)
     assert hits_multi >= hits_single
@@ -695,10 +702,10 @@ def test_trigram_lm_score_leaves_session_cache_as_found(spark):
     assert cm.numCachedEntries() == before
 
 
-def test_connected_components_long_chain_log_rounds(spark, cc_path):
+def test_connected_components_long_chain_log_rounds(spark, cc_path, monkeypatch):
     """Pointer jumping must resolve a path-shaped component in ~log₂
     rounds: a 200-node chain (diameter 199) converges well inside the
-    default max_iter=25, where plain propagation would need 199 rounds
+    round limit MAX_ROUNDS = 25, where plain propagation would need 199 rounds
     and now RAISES instead of returning partial labels."""
     n = 200
     pairs = spark.createDataFrame(
@@ -714,21 +721,23 @@ def test_connected_components_long_chain_log_rounds(spark, cc_path):
     # horizon doubles per round: ⌈log₂(199)⌉ + fixpoint-confirm + slack
     assert stats["rounds"] <= 12, stats
     # three rounds reach a label horizon of 2, 6 and 14 hops (2·(h + 1)
-    # per round), short of the chain's 199: exhausting max_iter must
-    # refuse to return a wrong labeling
+    # per round), short of the chain's 199: exhausting the round limit
+    # must refuse to return a wrong labeling
     stats = {}
+    monkeypatch.setattr(dedup, "MAX_ROUNDS", 3)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, max_iter=3, stats=stats)
+        dedup.connected_components(pairs, stats=stats)
     assert stats == {"rounds": 3, "path": cc_path}
 
 
-def test_vocab_topk_order_and_ties(spark):
+def test_vocab_topk_order_and_ties(spark, monkeypatch):
     from trajlib_spark.operators import text as T
 
     docs = spark.createDataFrame(
         [(0, "b b a a c"), (1, "B a d")], "doc_id long, text string"
     )
-    got = [(r.token, r.n_occurrences) for r in T.vocab_topk(docs, k=3).collect()]
+    monkeypatch.setattr(T, "VOCAB_TOPK", 3)
+    got = [(r.token, r.n_occurrences) for r in T.vocab_topk(docs).collect()]
     # a:3, b:3 (case-folded), c:1, d:1 — count desc then token asc
     assert got == [("a", 3), ("b", 3), ("c", 1)]
 
@@ -775,7 +784,7 @@ def test_tfidf_top_terms_semantics(spark):
         "doc_id long, text string",
     )
     out = {(r.doc_id, r.token): (r.tf, r.df, r.tfidf_r, r.term_rank)
-           for r in T.tfidf_top_terms(docs, k=2).collect()}
+           for r in T.tfidf_top_terms(docs).collect()}
     # doc 0: 'common' tf=2 df=3, 'rare' tf=1 df=1
     idf = lambda df: math.log(4.0 / (df + 1.0)) + 1.0
     assert out[(0, "common")][2] == round(2 * idf(3), 6) + 0.0

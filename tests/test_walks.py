@@ -272,14 +272,15 @@ def test_walks_follow_edges_and_are_deterministic(spark, pairs):
             assert v in adj[u], (wid, u, v)
 
 
-def test_skipgram_pairs_match_replica(spark, pairs):
+def test_skipgram_pairs_match_replica(spark, pairs, monkeypatch):
     """(center, context) generation: every ordered pair within ±window,
     center ≠ context, exactly once per (walk, position pair)."""
+    monkeypatch.setattr(walks, "SKIPGRAM_WINDOW", 3)
     starts = spark.createDataFrame([(5,), (100,)], "cell_id long")
     w = walks.node2vec_walks(pairs, starts, 8, 2).persist()
     got = sorted(
         (r.walk_id, r.center_pos, r.center, r.context)
-        for r in walks.skipgram_pairs(w, window=3).collect()
+        for r in walks.skipgram_pairs(w).collect()
     )
     by_walk: dict[int, dict[int, int]] = {}
     for r in w.collect():
@@ -295,12 +296,13 @@ def test_skipgram_pairs_match_replica(spark, pairs):
     w.unpersist()
 
 
-def test_skipgram_pairs_non_contiguous_positions(spark, pairs):
+def test_skipgram_pairs_non_contiguous_positions(spark, pairs, monkeypatch):
     """Walks whose positions are NOT contiguous (filtered upstream) still
     get exact position-window semantics: the index-space slice is a
     superset of the position window (positions strictly increase along
     the sorted array), and the final |Δpos| ≤ window filter trims the
     extras (ADVICE r5)."""
+    monkeypatch.setattr(walks, "SKIPGRAM_WINDOW", 2)
     starts = spark.createDataFrame([(5,), (100,)], "cell_id long")
     w = (
         walks.node2vec_walks(pairs, starts, 10, 2)
@@ -309,7 +311,7 @@ def test_skipgram_pairs_non_contiguous_positions(spark, pairs):
     )
     got = sorted(
         (r.walk_id, r.center_pos, r.center, r.context)
-        for r in walks.skipgram_pairs(w, window=2).collect()
+        for r in walks.skipgram_pairs(w).collect()
     )
     by_walk: dict[int, dict[int, int]] = {}
     for r in w.collect():
@@ -330,12 +332,12 @@ def test_skipgram_window_ten_covers_reference_context(spark, pairs):
     position pairs with all but the two farthest-away positions."""
     starts = spark.createDataFrame([(42,)], "cell_id long")
     w = walks.node2vec_walks(pairs, starts, 12, 1)
-    n = walks.skipgram_pairs(w, window=10).count()
+    n = walks.skipgram_pairs(w).count()
     # ordered pairs within |Δpos| ≤ 10 among 12 positions: 12·11 − 2
     assert n == 12 * 11 - 2
 
 
-def test_skipgram_pairs_raise_on_duplicate_positions(spark, pairs):
+def test_skipgram_pairs_raise_on_duplicate_positions(spark, pairs, monkeypatch):
     """VERDICT r7 #2: duplicate (walk_id, pos) input — e.g. a unioned
     walk table that reused walk_ids — used to silently drop in-window
     pairs; the precondition is now enforced in-operator with a loud
@@ -343,8 +345,10 @@ def test_skipgram_pairs_raise_on_duplicate_positions(spark, pairs):
     starts = spark.createDataFrame([(5,)], "cell_id long")
     w = walks.node2vec_walks(pairs, starts, 6, 1)
     bad = w.unionAll(w)  # every (walk_id, pos) now appears twice
+    monkeypatch.setattr(walks, "SKIPGRAM_WINDOW", 3)
     with pytest.raises(Exception, match=r"duplicate \(walk_id, pos\)"):
-        walks.skipgram_pairs(bad, window=3).collect()
+        walks.skipgram_pairs(bad).collect()
     # and the clean table still works through the guarded projection —
     # window 10 ≥ max Δpos 5, so all 6·5 ordered pairs qualify
-    assert walks.skipgram_pairs(w, window=10).count() == 6 * 5
+    monkeypatch.setattr(walks, "SKIPGRAM_WINDOW", 10)
+    assert walks.skipgram_pairs(w).count() == 6 * 5

@@ -80,10 +80,11 @@ PAGES_SCHEMA = T.StructType(
 )
 
 
-def cal_all_trajs(points: DataFrame, attrs: tuple[str, ...] = ("lon", "lat")) -> DataFrame:
-    """Per-trajectory timestamp-sorted attribute lists — the reference's
+def cal_all_trajs(points: DataFrame) -> DataFrame:
+    """Per-trajectory timestamp-sorted lon / lat lists — the reference's
     cal_all_trajs (data_definition.py:117-134) as one sort_array +
     collect_list aggregation (no grouped-map UDF)."""
+    attrs = ("lon", "lat")
     skey = F.struct(
         F.col("ts_ms"), F.col("point_id"), *[F.col(a).alias(f"_{a}") for a in attrs]
     )
@@ -104,18 +105,14 @@ def cal_all_trajs(points: DataFrame, attrs: tuple[str, ...] = ("lon", "lat")) ->
     )
 
 
-def traj_table_from_points(points: DataFrame, user_col: str | None = None) -> DataFrame:
+def traj_table_from_points(points: DataFrame) -> DataFrame:
     """Derive the trajectory table: travel_time = last - first timestamp
-    (the reference's tte, trajlib/dataset/data_preprocessing.py:131-136)."""
+    (the reference's tte, trajlib/dataset/data_preprocessing.py:131-136);
+    each trajectory is its own user, user_id = traj_id."""
     agg = points.groupBy("traj_id").agg(
         ((F.max("ts_ms") - F.min("ts_ms")) / 1000.0).alias("travel_time_s"),
     )
-    if user_col and user_col in points.columns:
-        users = points.select("traj_id", F.col(user_col).alias("user_id")).distinct()
-        agg = agg.join(users, "traj_id", "left")
-    else:
-        agg = agg.withColumn("user_id", F.col("traj_id"))
-    return agg.select("traj_id", "user_id", "travel_time_s")
+    return agg.select("traj_id", F.col("traj_id").alias("user_id"), "travel_time_s")
 
 
 def polygon_adjacency(covering_cells: DataFrame) -> DataFrame:
@@ -133,7 +130,7 @@ def polygon_adjacency(covering_cells: DataFrame) -> DataFrame:
         .select("origin_id", "dest_id")
         .distinct()
     )
-    ranked, _n = global_row_number(pairs, ("origin_id", "dest_id"), out="_rn0")
+    ranked, _n = global_row_number(pairs, ("origin_id", "dest_id"))
     return ranked.select(
         (F.col("_rn0") + 1).cast("long").alias("rel_id"), "origin_id", "dest_id"
     )

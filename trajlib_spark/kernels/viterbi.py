@@ -67,13 +67,12 @@ def viterbi_match(
     cand_edges: list[np.ndarray],
     cand_dists: list[np.ndarray],
     edge_nodes: np.ndarray,
-    obs_noise: float = OBS_NOISE_M,
 ) -> np.ndarray:
     """Matched edge id per point (−1 where no candidate). ``cand_edges``
     must be ascending per point (tie-break contract)."""
     n = len(pts_xy)
     out = np.full(n, -1, dtype=np.int64)
-    inv2s2 = 1.0 / (2.0 * obs_noise * obs_noise)
+    inv2s2 = 1.0 / (2.0 * OBS_NOISE_M * OBS_NOISE_M)
     seg_start = None
     score = None
     back: list[np.ndarray] = []
@@ -118,7 +117,6 @@ def brute_force_match(
     cand_edges: list[np.ndarray],
     cand_dists: list[np.ndarray],
     edge_nodes: np.ndarray,
-    obs_noise: float = OBS_NOISE_M,
 ) -> np.ndarray:
     """Exponential-time reference: enumerate every state sequence per
     no-candidate-separated segment and take the max. Exact score ties
@@ -131,7 +129,7 @@ def brute_force_match(
 
     n = len(pts_xy)
     out = np.full(n, -1, dtype=np.int64)
-    inv2s2 = 1.0 / (2.0 * obs_noise * obs_noise)
+    inv2s2 = 1.0 / (2.0 * OBS_NOISE_M * OBS_NOISE_M)
     seg: list[int] = []
 
     def flush():

@@ -10,6 +10,8 @@ Both are one scan, ``_scan_topk``: the bounded query set is scored against
 each corpus Arrow batch in numpy with the Catalyst fold's exact IEEE op
 order, and only chunk-local top-k candidates reach the final rank window.
 The exact top-k is the scan with a single list that every query probes.
+
+Corpus and queries are (vec_id long, embedding array<float>) rows.
 """
 
 from __future__ import annotations
@@ -52,12 +54,10 @@ def _pair_scores(C: np.ndarray, Q: np.ndarray, metric: str) -> np.ndarray:
     return out
 
 
-def _collect_queries(
-    queries: DataFrame, id_col: str, vec_col: str
-) -> tuple[np.ndarray, np.ndarray]:
+def _collect_queries(queries: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """Driver-side (ids, float64 matrix) of the bounded query set — the
     same query-bounded broadcast the crossJoin build side already held."""
-    rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
+    rows = queries.select(F.col("vec_id"), F.col("embedding")).collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     mat = np.array([r[1] for r in rows], dtype=np.float64)
     return ids, mat
@@ -86,8 +86,6 @@ def _scan_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str,
-    vec_col: str,
     metric: str,
     centroids: np.ndarray | None = None,
     n_probe: int = 0,
@@ -107,7 +105,7 @@ def _scan_topk(
     the exact scan. With them, a row's list is its nearest centroid and a
     query probes its ``n_probe`` nearest, both from nearest_lists_py."""
     spark = corpus.sparkSession
-    qids, QM = _collect_queries(queries, id_col, vec_col)
+    qids, QM = _collect_queries(queries)
     if len(qids) == 0:
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, rank int, cosine double"
@@ -132,8 +130,8 @@ def _scan_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            nids_all = pdf[id_col].to_numpy(dtype=np.int64)
-            vecs = pdf[vec_col].to_numpy()
+            nids_all = pdf["vec_id"].to_numpy(dtype=np.int64)
+            vecs = pdf["embedding"].to_numpy()
             outs = []
             for lo in range(0, len(pdf), 4096):
                 CM = np.array(list(vecs[lo : lo + 4096]), dtype=np.float64)
@@ -171,8 +169,8 @@ def _scan_topk(
                 yield pd.concat(outs, ignore_index=True)
 
     cand = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .repartition(spark.sparkContext.defaultParallelism, id_col)
+        corpus.select(F.col("vec_id"), F.col("embedding"))
+        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .mapInPandas(run, "query_id long, neighbor_id long, cosine double")
     )
     order = (
@@ -192,8 +190,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     metric: str = "cosine",
 ) -> DataFrame:
     """Exact top-k → (query_id, neighbor_id, rank, cosine); rank by (score,
@@ -204,44 +200,40 @@ def cosine_topk(
     never as a per-pair Catalyst fold over a cross join."""
     if metric not in ("cosine", "l2", "l1"):
         raise ValueError("metric must be cosine | l2 | l1")
-    return _scan_topk(corpus, queries, k, id_col, vec_col, metric)
+    return _scan_topk(corpus, queries, k, metric)
 
 
 SAMPLE_HASH_MULT = 2654435761
 SAMPLE_HASH_MOD = 999999937
 CENTROID_ITERS = 8  # Lloyd iterations of train_centroids
+CENTROID_SAMPLE = 4096  # rows train_centroids trains on
+CENTROID_SEED = 11
 
 
-def train_centroids(
-    corpus: DataFrame,
-    n_list: int = 64,
-    sample: int = 4096,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 11,
-) -> np.ndarray:
-    """Lloyd's iterations on a driver-side sample (centroid training is a
-    tiny fraction of corpus size; assignment stays distributed). The sample
-    is DETERMINISTIC across runs and partitionings: rows ordered by a fixed
-    multiplicative hash of the id (pure int64 arithmetic, reproducible
-    outside Spark for oracle parity)."""
+def train_centroids(corpus: DataFrame, n_list: int = 64) -> np.ndarray:
+    """Lloyd's iterations on a driver-side sample of ``CENTROID_SAMPLE``
+    rows (centroid training is a tiny fraction of corpus size; assignment
+    stays distributed). The sample is DETERMINISTIC across runs and
+    partitionings: rows ordered by a fixed multiplicative hash of the id
+    (pure int64 arithmetic, reproducible outside Spark for oracle
+    parity)."""
     rows = (
-        corpus.select(F.col(vec_col), F.col(id_col))
+        corpus.select(F.col("embedding"), F.col("vec_id"))
         .orderBy(
             # reduce the id mod MOD BEFORE multiplying: pmod(id) < 1e9 keeps
             # the product < 2.7e18 < int64 max for ANY id, where id * MULT
             # overflows (ANSI ArithmeticException) past id ≈ 3.5e9
             # (ADVICE r2); identical ordering for id < MOD
-            (F.pmod(F.col(id_col).cast("long"), F.lit(SAMPLE_HASH_MOD))
+            (F.pmod(F.col("vec_id").cast("long"), F.lit(SAMPLE_HASH_MOD))
              * F.lit(SAMPLE_HASH_MULT)) % F.lit(SAMPLE_HASH_MOD),
-            F.col(id_col),
+            F.col("vec_id"),
         )
-        .limit(sample)
+        .limit(CENTROID_SAMPLE)
         .collect()
     )
     X = np.array([r[0] for r in rows], dtype=np.float64)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(CENTROID_SEED)
     cent = X[rng.choice(len(X), min(n_list, len(X)), replace=False)]
     for _ in range(CENTROID_ITERS):
         sims = X @ cent.T
@@ -271,8 +263,6 @@ def ivf_topk(
     k: int,
     centroids: np.ndarray,
     n_probe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate cosine top-k: corpus rows live in their
     nearest-centroid list; queries probe their n_probe nearest lists; exact
@@ -280,7 +270,7 @@ def ivf_topk(
     stays ~n_probe/n_list of the corpus. As in ``cosine_topk``, a query is
     never its own neighbor; both are one ``_scan_topk``."""
     return _scan_topk(
-        corpus, queries, k, id_col, vec_col, "cosine",
+        corpus, queries, k, "cosine",
         centroids=centroids, n_probe=n_probe,
     )
 

@@ -68,12 +68,14 @@ def _truncated_rand(rng: np.random.Generator, mu=0.0, sigma=0.5, factor=100.0,
             return n
 
 
+MASK_RATIO = 0.3  # share of points "mask" deletes
+SUBSET_RATIO = 0.7  # share of points "subset" keeps
+
+
 def apply_stochastic(
     polys: DataFrame,
     op: str,
     salt: int = 0,
-    mask_ratio: float = 0.3,
-    subset_ratio: float = 0.7,
     rate: float = 0.0,
 ) -> DataFrame:
     """Apply a seeded stochastic augmentation to (traj_id, xs, ys) rows.
@@ -84,6 +86,7 @@ def apply_stochastic(
     by a truncated-gaussian offset. The reference consumes one global
     unseeded stream; the engine uses a per-trajectory seeded stream (the
     distributable design) with the same per-trajectory logic."""
+    mask_ratio, subset_ratio = MASK_RATIO, SUBSET_RATIO
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

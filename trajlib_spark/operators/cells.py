@@ -169,8 +169,7 @@ def neighbour_cell_pairs(spark: SparkSession, grid: GridConfig) -> DataFrame:
     return out
 
 
-def with_cell(df: DataFrame, grid: GridConfig, x: str = "x", y: str = "y",
-              prefix: str = "") -> DataFrame:
+def with_cell(df: DataFrame, grid: GridConfig) -> DataFrame:
     """Attach (i_x, i_y, cell_id) columns computed from Mercator x/y.
 
     ``cell_id`` is never null (null and out-of-MBR points snap to the
@@ -181,10 +180,10 @@ def with_cell(df: DataFrame, grid: GridConfig, x: str = "x", y: str = "y",
     no common-subexpression elimination. On a non-nullable key the
     inferred filter folds to true, and the chain runs once, in the project.
     """
-    xc, yc = F.col(x), F.col(y)
+    xc, yc = F.col("x"), F.col("y")
     ix, iy = x_idx(xc, yc, grid), y_idx(xc, yc, grid)
     return df.withColumns({
-        f"{prefix}i_x": ix,
-        f"{prefix}i_y": iy,
-        f"{prefix}cell_id": _never_null(cell_id_from_idx(ix, iy, grid), grid),
+        "i_x": ix,
+        "i_y": iy,
+        "cell_id": _never_null(cell_id_from_idx(ix, iy, grid), grid),
     })

@@ -150,13 +150,12 @@ def federated_merge(
 def silhouette_distributed(
     labeled_segments: DataFrame,
     pair_dists: DataFrame,
-    id_col: str = "segment_id",
     label_col: str = "global_cluster",
 ) -> float:
-    """Mean silhouette over a symmetric (i, j, dist) pair table + labels —
-    two groupBys, no dense matrix."""
-    lab = labeled_segments.select(F.col(id_col).alias("i"), F.col(label_col).alias("li"))
-    lab_j = labeled_segments.select(F.col(id_col).alias("j"), F.col(label_col).alias("lj"))
+    """Mean silhouette over a symmetric (i, j, dist) pair table + labels
+    of ``segment_id`` — two groupBys, no dense matrix."""
+    lab = labeled_segments.select(F.col("segment_id").alias("i"), F.col(label_col).alias("li"))
+    lab_j = labeled_segments.select(F.col("segment_id").alias("j"), F.col(label_col).alias("lj"))
     d = pair_dists.join(lab, "i").join(lab_j, "j")
     per = d.groupBy("i", "li", "lj").agg(
         F.sum("dist").alias("sd"), F.count(F.lit(1)).alias("n")

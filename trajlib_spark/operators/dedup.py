@@ -3,7 +3,8 @@ MinHash+LSH, SimHash, n-gram Jaccard verification, and embedding-cosine
 near-dup. Designed for the 100 TB shape: every method reduces to
 hash → groupBy/join on small keys; no all-pairs stage ever runs on the full
 corpus — candidates come from banded buckets, and only candidates get the
-exact verification kernel.
+exact verification kernel. Documents are (doc_id long, text string)
+rows; embeddings (vec_id long, embedding array) rows.
 """
 
 from __future__ import annotations
@@ -21,20 +22,24 @@ from .pairs import collect_within_budget, score_pairs
 
 # --- exact dedup -------------------------------------------------------------
 
-def exact_duplicates(docs: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(text_hash, keeper, n_dups): md5 groups; keeper = min id."""
+def exact_duplicates(docs: DataFrame) -> DataFrame:
+    """(text_hash, keeper, n_dups): md5 groups of ``text``; keeper = min
+    ``doc_id``."""
     return (
-        docs.select(F.md5(F.col(text)).alias("text_hash"), F.col(id_col))
+        docs.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id"))
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias("keeper"), F.count(F.lit(1)).alias("n_dups"))
+        .agg(F.min("doc_id").alias("keeper"), F.count(F.lit(1)).alias("n_dups"))
     )
 
 
 # --- shingling + MinHash ------------------------------------------------------
 
 SHINGLE_K = 5  # byte-shingle width of every signature and the Jaccard verify
+NUM_PERM = 64  # MinHash permutations per signature
+MINHASH_SEED = 1
+LSH_BANDS = 16  # bands of the MinHash LSH join
 
-def _minhash_params(num_perm: int, seed: int = 1) -> tuple[np.ndarray, np.ndarray]:
+def _minhash_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """Multiply-shift style mixing family on Z_2^64: x → a·x + b with odd a
     (wrapping uint64) is a bijection, so per-row minima estimate Jaccard
     like the classic (a·x + b) mod p family — but the whole signature
@@ -102,40 +107,31 @@ def _minhash_block(texts, a: np.ndarray, b: np.ndarray, k: int) -> np.ndarray:
     return sig
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_perm: int = 64,
-    text: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 1,
-) -> DataFrame:
-    """(doc_id, sig array<long>) — multiply-shift row-wise min, one
-    ``_minhash_block`` per Arrow batch: no per-document Python loop and no
-    per-document (num_perm × n_shingles) allocation (that allocation
-    dominated the sf0.1 bench at ~2 ms/doc)."""
-    a, b = _minhash_params(num_perm, seed)
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, sig array<long>) — ``NUM_PERM`` multiply-shift row-wise
+    minima, one ``_minhash_block`` per Arrow batch: no per-document Python
+    loop and no per-document (NUM_PERM × n_shingles) allocation (that
+    allocation dominated the sf0.1 bench at ~2 ms/doc)."""
+    a, b = _minhash_params(NUM_PERM, MINHASH_SEED)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            sig = _minhash_block(pdf[text], a, b, SHINGLE_K)
+            sig = _minhash_block(pdf["text"], a, b, SHINGLE_K)
             # stored as signed 64-bit for the Spark LongType column
-            yield pd.DataFrame({id_col: pdf[id_col], "sig": sig.view(np.int64).T.tolist()})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "sig": sig.view(np.int64).T.tolist()})
 
-    return docs.select(id_col, text).mapInPandas(
-        run, f"{id_col} long, sig array<long>"
+    return docs.select("doc_id", "text").mapInPandas(
+        run, "doc_id long, sig array<long>"
     )
 
 
-def lsh_candidates(
-    signatures: DataFrame,
-    bands: int = 16,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Banded LSH: split each signature into ``bands`` bands, bucket-join on
-    (band_idx, band hash), emit candidate pairs (i < j) once. The join key
-    is a hash — tiny shuffle rows, the scale path."""
+def lsh_candidates(signatures: DataFrame) -> DataFrame:
+    """Banded LSH: split each signature into ``LSH_BANDS`` bands,
+    bucket-join on (band_idx, band hash), emit candidate pairs (i < j)
+    once. The join key is a hash — tiny shuffle rows, the scale path."""
+    bands = LSH_BANDS
     banded = signatures.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -146,13 +142,13 @@ def lsh_candidates(
                 ),
             )
         ).alias("band_idx", "band"),
-    ).select(id_col, "band_idx", F.hash("band").alias("bucket"))
+    ).select("doc_id", "band_idx", F.hash("band").alias("bucket"))
     # the banded table feeds BOTH sides of the self-join — materialize it
     # once (at 100 TB this is the "write the signature table" step) instead
     # of recomputing the signature UDF per side
     banded = banded.persist()
-    a = banded.select(F.col(id_col).alias("i"), "band_idx", "bucket")
-    b = banded.select(F.col(id_col).alias("j"), "band_idx", "bucket")
+    a = banded.select(F.col("doc_id").alias("i"), "band_idx", "bucket")
+    b = banded.select(F.col("doc_id").alias("j"), "band_idx", "bucket")
     # the (small) pair table is filled by one eager local checkpoint while
     # banded is hot; the ContextCleaner frees its blocks once the result
     # is unreachable, where a persist() stayed in the session cache
@@ -196,8 +192,6 @@ def ngram_jaccard_verify(
     docs: DataFrame,
     candidates: DataFrame,
     threshold: float = 0.8,
-    text: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact shingle-set Jaccard on candidate pairs only → (i, j, jaccard)
     with jaccard >= threshold, ids as long.
@@ -211,31 +205,27 @@ def ngram_jaccard_verify(
 
     def kernel(ii: np.ndarray, jj: np.ndarray, payload_of) -> pd.DataFrame:
         for ids, side in ((ii, "i"), (jj, "j")):
-            for d, t in zip(ids, payload_of(side, text)):
+            for d, t in zip(ids, payload_of(side, "text")):
                 if d not in shingles:
                     shingles[d] = _stable_shingles(t, SHINGLE_K)
         return _jaccard_scores(ii, jj, shingles.__getitem__)
 
     slim = candidates.select(F.col("i").cast("long"), F.col("j").cast("long"))
-    payload = docs.select(id_col, text)
-    out = score_pairs(payload, payload, id_col, kernel, "jaccard double")(slim)
+    payload = docs.select("doc_id", "text")
+    out = score_pairs(payload, payload, "doc_id", kernel, "jaccard double")(slim)
     return out.where(F.col("jaccard") >= threshold)
 
 
 # --- SimHash ------------------------------------------------------------------
 
-def simhash_signatures(
-    docs: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """64-bit SimHash of the shingle set → (doc_id, simhash). Near-dups have
     small Hamming distance; bucket by rotations/bands for candidate joins."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for s in pdf[text]:
+            for s in pdf["text"]:
                 sh = _stable_shingles(s or "", SHINGLE_K)
                 if len(sh) == 0:
                     out.append(0)
@@ -249,31 +239,25 @@ def simhash_signatures(
                         val |= 1 << bit
                 # store as signed 64-bit
                 out.append(val - (1 << 64) if val >= (1 << 63) else val)
-            yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": out})
 
-    return docs.select(id_col, text).mapInPandas(run, f"{id_col} long, simhash long")
+    return docs.select("doc_id", "text").mapInPandas(run, "doc_id long, simhash long")
 
 
-def simhash_candidates(
-    sigs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    n_bands: int | None = None,
-) -> DataFrame:
+def simhash_candidates(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Candidate pairs with Hamming distance <= max_hamming, via banded
-    bucket joins on n_bands equal slices of the 64-bit signature. By the
-    pigeonhole principle any pair within distance n_bands - 1 shares at
-    least one untouched band, so n_bands defaults to max_hamming + 1
-    (guaranteed recall); fewer bands = cheaper but probabilistic."""
-    if n_bands is None:
-        n_bands = min(64, max_hamming + 1)
+    bucket joins on n_bands = max_hamming + 1 equal slices of the 64-bit
+    signature. By the pigeonhole principle any pair within distance
+    n_bands - 1 shares at least one untouched band: recall is
+    guaranteed."""
+    n_bands = min(64, max_hamming + 1)
     width = 64 // n_bands
     mask = (1 << width) - 1
     # feeds both sides of the banded self-join; a lazy local checkpoint,
     # filled by the first job that reads it, not a persist() left cached
     sigs = sigs.localCheckpoint(eager=False)
     banded = sigs.select(
-        F.col(id_col), F.col("simhash"),
+        F.col("doc_id"), F.col("simhash"),
         F.posexplode(
             F.array(*[
                 F.shiftrightunsigned(F.col("simhash"), width * b).bitwiseAND(F.lit(mask))
@@ -291,12 +275,12 @@ def simhash_candidates(
     # spreads over SALT partitions, each pair still meets once per band.
     salt_n = 16
     a = banded.select(
-        F.col(id_col).alias("i"), F.col("simhash").alias("h_i"),
+        F.col("doc_id").alias("i"), F.col("simhash").alias("h_i"),
         "band_idx", "band_val",
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_n)).cast("int").alias("_salt"),
+        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(salt_n)).cast("int").alias("_salt"),
     )
     b = banded.select(
-        F.col(id_col).alias("j"), F.col("simhash").alias("h_j"),
+        F.col("doc_id").alias("j"), F.col("simhash").alias("h_j"),
         "band_idx", "band_val",
     ).withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_n - 1))))
     return (
@@ -312,27 +296,25 @@ def simhash_candidates(
 # --- embedding-cosine near-dup --------------------------------------------------
 
 N_PLANES = 12  # hyperplanes per sign-sketch table (a 12-bit bucket key)
+N_TABLES = 4  # independent sign-sketch tables
+SKETCH_SEED = 7
+NEAR_DUP_COSINE = 0.95  # the cosine a pair needs to be a near-dup
 
-def embedding_near_dups(
-    embs: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tables: int = 4,
-    seed: int = 7,
-) -> DataFrame:
-    """(i, j, cosine) pairs with cosine >= threshold. Candidates from
-    ``n_tables`` INDEPENDENT random-hyperplane sign sketches (a pair within
-    angle θ collides in one table w.p. (1−θ/π)^N_PLANES; independent tables
-    raise recall to 1−(1−p)^T — a single sketch misses any pair that
-    differs in ≥1 bit), then each distinct candidate pair verified exactly
-    by ``pairs.score_pairs`` with the vectors as its payload — bucket
+def embedding_near_dups(embs: DataFrame) -> DataFrame:
+    """(i, j, cosine) pairs of (vec_id, embedding) rows with cosine >=
+    ``NEAR_DUP_COSINE``. Candidates from ``N_TABLES`` INDEPENDENT
+    random-hyperplane sign sketches (a pair within angle θ collides in one
+    table w.p. (1−θ/π)^N_PLANES; independent tables raise recall to
+    1−(1−p)^T — a single sketch misses any pair that differs in ≥1 bit),
+    then each distinct candidate pair verified exactly by
+    ``pairs.score_pairs`` with the vectors as its payload — bucket
     equi-joins over slim rows only."""
-    first = embs.select(vec_col).first()
+    n_tables, threshold = N_TABLES, NEAR_DUP_COSINE
+    first = embs.select("embedding").first()
     if first is None:
         return embs.sparkSession.createDataFrame([], "i long, j long, cosine double")
     dim = len(first[0])
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(SKETCH_SEED)
     # sequential per-table draws, stacked (identical values to drawing
     # inside a per-table loop — the oracle generator replicates this)
     planes = np.vstack([rng.normal(size=(N_PLANES, dim)) for _ in range(n_tables)])
@@ -345,7 +327,7 @@ def embedding_near_dups(
         # values reproducible outside Spark for the oracle.
         weights = (1 << np.arange(N_PLANES)).astype(np.int64)
         for pdf in batches:
-            vecs = pdf[vec_col].to_numpy()
+            vecs = pdf["embedding"].to_numpy()
             buckets = []
             for lo in range(0, len(pdf), 1024):
                 X = np.stack(vecs[lo : lo + 1024]).astype(np.float64)
@@ -356,20 +338,20 @@ def embedding_near_dups(
             pdf["_buckets"] = buckets
             yield pdf
 
-    fields = ", ".join(f"{n} {t}" for n, t in embs.select(id_col, vec_col).dtypes)
+    fields = ", ".join(f"{n} {t}" for n, t in embs.select("vec_id", "embedding").dtypes)
     # a lazy local checkpoint, not persist(): the first job that reads it
     # fills its blocks, and the ContextCleaner frees them once the result
     # is unreachable instead of leaving a CacheManager entry per call
-    sk = embs.select(id_col, vec_col).mapInPandas(
+    sk = embs.select("vec_id", "embedding").mapInPandas(
         sketch_batch, f"{fields}, _buckets array<long>"
     ).localCheckpoint(eager=False)
     # one slim row per (table, bucket) — candidates are the union of
     # per-table bucket self-joins, deduped before the exact verify so a
     # pair colliding in several tables is scored once
-    banded = sk.select(id_col, F.posexplode("_buckets").alias("table_idx", "bucket"))
+    banded = sk.select("vec_id", F.posexplode("_buckets").alias("table_idx", "bucket"))
     cands = (
-        banded.select(F.col(id_col).cast("long").alias("i"), "table_idx", "bucket")
-        .join(banded.select(F.col(id_col).cast("long").alias("j"), "table_idx", "bucket"),
+        banded.select(F.col("vec_id").cast("long").alias("i"), "table_idx", "bucket")
+        .join(banded.select(F.col("vec_id").cast("long").alias("j"), "table_idx", "bucket"),
               ["table_idx", "bucket"])
         .where(F.col("i") < F.col("j"))
         .select("i", "j")
@@ -383,8 +365,8 @@ def embedding_near_dups(
     # cosine is bit-identical to the fold, at a fraction of its
     # interpreted per-row cost.
     def kernel(ii: np.ndarray, jj: np.ndarray, payload_of) -> pd.DataFrame:
-        Vi = np.array(list(payload_of("i", vec_col)), dtype=np.float64)
-        Vj = np.array(list(payload_of("j", vec_col)), dtype=np.float64)
+        Vi = np.array(list(payload_of("i", "embedding")), dtype=np.float64)
+        Vj = np.array(list(payload_of("j", "embedding")), dtype=np.float64)
         dot = np.zeros(len(ii))
         ni = np.zeros(len(ii))
         nj = np.zeros(len(ii))
@@ -394,8 +376,8 @@ def embedding_near_dups(
             nj += Vj[:, d] * Vj[:, d]
         return pd.DataFrame({"i": ii, "j": jj, "cosine": dot / (np.sqrt(ni) * np.sqrt(nj))})
 
-    payload = sk.select(id_col, vec_col)
-    scored = score_pairs(payload, payload, id_col, kernel, "cosine double")(cands)
+    payload = sk.select("vec_id", "embedding")
+    scored = score_pairs(payload, payload, "vec_id", kernel, "cosine double")(cands)
     return scored.where(F.col("cosine") >= threshold)
 
 
@@ -480,11 +462,10 @@ def _components_distributed(
     return labels, rounds, False
 
 
-def connected_components(
-    pairs: DataFrame, i: str = "i", j: str = "j", max_iter: int = 25,
-    stats: dict | None = None,
-) -> DataFrame:
-    """(node, component) for every node appearing in ``pairs``: component
+MAX_ROUNDS = 25  # connected_components' round limit: diameters to ~2²⁵
+
+def connected_components(pairs: DataFrame, stats: dict | None = None) -> DataFrame:
+    """(node, component) for every node appearing in the (i, j) ``pairs``: component
     = the smallest node id reachable over the undirected pair edges — the
     stage that turns verified near-dup PAIRS into dedup GROUPS (keep
     component == node, drop the rest).  Ids are integers (else TypeError);
@@ -496,13 +477,13 @@ def connected_components(
     then (2) replaces every label by its label's label (one self-join) —
     the path-compression half of large-star/small-star.  Propagation
     alone needs diameter rounds; with jumping the label horizon doubles
-    per round, so rounds ≈ log₂(diameter) and max_iter=25 covers
+    per round, so rounds ≈ log₂(diameter) and ``MAX_ROUNDS`` = 25 covers
     diameters up to ~2²⁵.  Dense near-dup clusters (diameter 1-3)
     converge in 2-3 rounds.
 
     Labels only decrease, so the global label sum is a convergence
     certificate — one scalar aggregate per round, no row-level diff join;
-    exhausting max_iter without fixpoint RAISES instead of returning a
+    exhausting ``MAX_ROUNDS`` without fixpoint RAISES instead of returning a
     partial labeling.
 
     Where the rounds run: the undirected edge table is built and
@@ -517,12 +498,13 @@ def connected_components(
     {"rounds": n, "path": "local" | "distributed"}."""
     # mirror each edge via explode, not union: a union's two branches
     # would each re-run the whole upstream pipeline (e.g. the verify)
+    max_iter = MAX_ROUNDS
     und = (
-        pairs.where(F.col(i).isNotNull() & F.col(j).isNotNull())
+        pairs.where(F.col("i").isNotNull() & F.col("j").isNotNull())
         .select(
             F.explode(F.array(
-                F.struct(F.col(i).alias("a"), F.col(j).alias("b")),
-                F.struct(F.col(j).alias("a"), F.col(i).alias("b")),
+                F.struct(F.col("i").alias("a"), F.col("j").alias("b")),
+                F.struct(F.col("j").alias("a"), F.col("i").alias("b")),
             )).alias("_e")
         )
         .select("_e.a", "_e.b")
@@ -532,7 +514,7 @@ def connected_components(
     if id_type.typeName() not in ("byte", "short", "integer", "long"):
         # the certificate is an exact decimal sum only over integers
         raise TypeError(
-            f"connected_components needs integer ids; {i!r}/{j!r} are "
+            f"connected_components needs integer ids; 'i'/'j' are "
             f"{id_type.simpleString()}"
         )
     und.persist()

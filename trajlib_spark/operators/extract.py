@@ -61,20 +61,20 @@ def extract_text_py(html: bytes) -> str:
     return b"\n".join(parts).decode("utf-8")
 
 
-def with_extracted_text(pages: DataFrame, html_col: str = "html",
-                        out_col: str = "extracted_text") -> DataFrame:
-    """Arrow-batched twin of extract_text_py (bytes → str per batch)."""
+def with_extracted_text(pages: DataFrame) -> DataFrame:
+    """Arrow-batched twin of extract_text_py (bytes → str per batch):
+    ``html`` → ``extracted_text``."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            pdf[out_col] = [extract_text_py(bytes(b)) for b in pdf[html_col]]
+            pdf["extracted_text"] = [extract_text_py(bytes(b)) for b in pdf["html"]]
             yield pdf
 
     from pyspark.sql import types as T
 
     schema = T.StructType(
-        list(pages.schema.fields) + [T.StructField(out_col, T.StringType())]
+        list(pages.schema.fields) + [T.StructField("extracted_text", T.StringType())]
     )
     return pages.mapInPandas(run, schema)
 
@@ -84,9 +84,9 @@ def mine_coordinates_py(text: str) -> list[tuple[float, float]]:
     return [(float(a), float(b)) for a, b in COORD_RE.findall(text)]
 
 
-def pages_to_points(pages: DataFrame, text_col: str = "text") -> DataFrame:
+def pages_to_points(pages: DataFrame) -> DataFrame:
     """(url, pos, ts_ms, lon, lat, x, y): one row per in-bbox coordinate
-    mention, Mercator-projected.
+    mention of a page's ``text``, Mercator-projected.
 
     The whole stage is Catalyst and stays inside whole-stage codegen:
     ``regexp_extract_all`` + ``posexplode`` mine the mentions (the same
@@ -97,7 +97,7 @@ def pages_to_points(pages: DataFrame, text_col: str = "text") -> DataFrame:
             "url",
             F.unix_millis(F.col("warc_ts").cast("timestamp")).alias("base_ms"),
             F.posexplode(
-                F.regexp_extract_all(F.col(text_col), F.lit(COORD_RE.pattern), F.lit(0))
+                F.regexp_extract_all(F.col("text"), F.lit(COORD_RE.pattern), F.lit(0))
             ).alias("pos", "mention"),
         )
         .select(

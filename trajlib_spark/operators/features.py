@@ -19,7 +19,9 @@ use the actual per-point timestamps).
 traj.py:157-161), chord length, sinuosity = path/chord, travel time, and
 point count per trajectory.
 
-One shuffle (hash by traj key); everything else is codegen.
+Points are (traj_id, ts_ms, point_id, x, y) rows, ordered by (ts_ms,
+point_id) within a trajectory. One shuffle (hash by traj key);
+everything else is codegen.
 """
 
 from __future__ import annotations
@@ -40,14 +42,12 @@ def spatial_features(
     grid: GridConfig,
     traj: str = "traj_id",
     order: list[str] | None = None,
-    x: str = "x",
-    y: str = "y",
 ) -> DataFrame:
     order = order or ["ts_ms", "point_id"]
     w = Window.partitionBy(traj).orderBy(*order)
-    xp, yp = F.lag(x).over(w), F.lag(y).over(w)
-    xn, yn = F.lead(x).over(w), F.lead(y).over(w)
-    xc, yc = F.col(x), F.col(y)
+    xp, yp = F.lag("x").over(w), F.lag("y").over(w)
+    xn, yn = F.lead("x").over(w), F.lead("y").over(w)
+    xc, yc = F.col("x"), F.col("y")
 
     prev_len = l2_distance(xp, yp, xc, yc)
     next_len = l2_distance(xc, yc, xn, yn)
@@ -72,23 +72,15 @@ def spatial_features(
     })
 
 
-def kinematics(
-    points: DataFrame,
-    traj: str = "traj_id",
-    ts_ms: str = "ts_ms",
-    order_tiebreak: str | None = "point_id",
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
+def kinematics(points: DataFrame) -> DataFrame:
     """step_m (meters from previous point), dt_s, speed_mps, accel_mps2,
     bearing_rad (atan2(dy, dx) in (-π, π], geographic-style bearing of the
     incoming step). First point of a trajectory has NULL kinematics."""
-    order = [ts_ms] + ([order_tiebreak] if order_tiebreak else [])
-    w = Window.partitionBy(traj).orderBy(*order)
-    xp, yp = F.lag(x).over(w), F.lag(y).over(w)
-    xc, yc = F.col(x), F.col(y)
+    w = Window.partitionBy("traj_id").orderBy("ts_ms", "point_id")
+    xp, yp = F.lag("x").over(w), F.lag("y").over(w)
+    xc, yc = F.col("x"), F.col("y")
     step = l2_distance(xp, yp, xc, yc)
-    dt = (F.col(ts_ms) - F.lag(ts_ms).over(w)) / F.lit(1000.0)
+    dt = (F.col("ts_ms") - F.lag("ts_ms").over(w)) / F.lit(1000.0)
     speed = F.when(dt > 0, step / dt)
     df = points.withColumns({
         "step_m": step,
@@ -100,32 +92,25 @@ def kinematics(
     return df.withColumn("accel_mps2", F.when(F.col("dt_s") > 0, accel))
 
 
-def traj_stats(
-    points: DataFrame,
-    traj: str = "traj_id",
-    ts_ms: str = "ts_ms",
-    order_tiebreak: str | None = "point_id",
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
+def traj_stats(points: DataFrame) -> DataFrame:
     """Per-trajectory aggregates: n_points, path_m, chord_m, sinuosity,
     travel_time_s, plus start/end coordinates. Single groupBy after the
     window pass; partial aggregation is map-side."""
-    order = [ts_ms] + ([order_tiebreak] if order_tiebreak else [])
-    w = Window.partitionBy(traj).orderBy(*order)
+    order = ["ts_ms", "point_id"]
+    w = Window.partitionBy("traj_id").orderBy(*order)
     stepped = points.withColumn(
-        "_step", l2_distance(F.lag(x).over(w), F.lag(y).over(w), F.col(x), F.col(y))
+        "_step", l2_distance(F.lag("x").over(w), F.lag("y").over(w), F.col("x"), F.col("y"))
     )
     ordcols = [F.col(c) for c in order]
-    agg = stepped.groupBy(traj).agg(
+    agg = stepped.groupBy("traj_id").agg(
         F.count(F.lit(1)).alias("n_points"),
         F.coalesce(F.sum("_step"), F.lit(0.0)).alias("path_m"),
-        F.min_by(F.struct(x, y), F.struct(*ordcols)).alias("_first"),
-        F.max_by(F.struct(x, y), F.struct(*ordcols)).alias("_last"),
-        ((F.max(ts_ms) - F.min(ts_ms)) / F.lit(1000.0)).alias("travel_time_s"),
+        F.min_by(F.struct("x", "y"), F.struct(*ordcols)).alias("_first"),
+        F.max_by(F.struct("x", "y"), F.struct(*ordcols)).alias("_last"),
+        ((F.max("ts_ms") - F.min("ts_ms")) / F.lit(1000.0)).alias("travel_time_s"),
     )
     chord = l2_distance(
-        F.col(f"_first.{x}"), F.col(f"_first.{y}"), F.col(f"_last.{x}"), F.col(f"_last.{y}")
+        F.col("_first.x"), F.col("_first.y"), F.col("_last.x"), F.col("_last.y")
     )
     return agg.withColumns({
         "chord_m": chord,

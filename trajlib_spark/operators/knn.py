@@ -148,21 +148,17 @@ def knn_join(
     queries: DataFrame,
     grid: GridConfig,
     k: int,
-    ring: int | None = None,
-    id_col: str = "point_id",
-    x: str = "x",
-    y: str = "y",
 ) -> DataFrame:
     """→ (query_id, neighbor_id, dist_sq, rank): each query's k nearest
-    other points, exact for every input (``ring_topk`` from a radius
-    picked from the point density unless ``ring`` is given)."""
-    if ring is None:
-        ring = pick_ring_radius(points.count(), grid, k)
+    other points by (point_id, x, y), exact for every input
+    (``ring_topk`` from the radius ``pick_ring_radius`` picks from the
+    point density)."""
+    ring = pick_ring_radius(points.count(), grid, k)
     db = points.select(
-        F.col(id_col).alias("neighbor_id"), F.col(x).alias("nx"), F.col(y).alias("ny")
+        F.col("point_id").alias("neighbor_id"), F.col("x").alias("nx"), F.col("y").alias("ny")
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(x).alias("qx"), F.col(y).alias("qy")
+        F.col("point_id").alias("query_id"), F.col("x").alias("qx"), F.col("y").alias("qy")
     )
     dist_sq = (F.col("nx") - F.col("qx")) ** 2 + (F.col("ny") - F.col("qy")) ** 2
     unit = min(grid.x_unit, grid.y_unit)

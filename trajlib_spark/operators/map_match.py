@@ -26,13 +26,13 @@ from ..config import GridConfig
 from ..kernels import viterbi as vk
 
 
-def edge_covering_cells(
-    edges: DataFrame, grid: GridConfig, halo_m: float = vk.MAX_DIST_M
-) -> DataFrame:
-    """(edge_id, cx, cy): COARSE candidate cells (side = halo_m, decoupled
-    from the analytics grid) covering each edge's MBR grown by one cell —
-    a point within halo_m of the edge always lands in one of them, at
-    ~10 cover rows per edge instead of ~80 on the fine grid."""
+def edge_covering_cells(edges: DataFrame, grid: GridConfig) -> DataFrame:
+    """(edge_id, cx, cy): COARSE candidate cells (side = halo_m =
+    ``viterbi.MAX_DIST_M``, decoupled from the analytics grid) covering
+    each edge's MBR grown by one cell — a point within halo_m of the edge
+    always lands in one of them, at ~10 cover rows per edge instead of ~80
+    on the fine grid."""
+    halo_m = vk.MAX_DIST_M
     d = edges.select(
         "edge_id",
         # ±1 covers the halo: a point passing the (float) d ≤ halo_m filter
@@ -55,15 +55,13 @@ def edge_covering_cells(
 
 
 def candidate_edges(
-    points_cells: DataFrame,
-    edges: DataFrame,
-    grid: GridConfig,
-    max_dist: float = vk.MAX_DIST_M,
+    points_cells: DataFrame, edges: DataFrame, grid: GridConfig
 ) -> DataFrame:
     """(traj_id, point_id, ts_ms, x, y, edge_id, dist) for every edge within
-    max_dist of the point, via the coarse-cell equi-join + exact Catalyst
-    point-to-segment distance."""
-    cov = edge_covering_cells(edges, grid, max_dist)
+    max_dist = ``viterbi.MAX_DIST_M`` of the point, via the coarse-cell
+    equi-join + exact Catalyst point-to-segment distance."""
+    max_dist = vk.MAX_DIST_M
+    cov = edge_covering_cells(edges, grid)
     geom = edges.select("edge_id", "x1", "y1", "x2", "y2")
     cand = (
         points_cells.select(
@@ -96,13 +94,11 @@ def match_trajectories(
     edges: DataFrame,
     grid: GridConfig,
     edge_nodes: np.ndarray,
-    max_dist: float = vk.MAX_DIST_M,
-    obs_noise: float = vk.OBS_NOISE_M,
 ) -> DataFrame:
     """→ (traj_id, point_id, edge_id) matched edge per point (−1 where no
-    edge is within max_dist). edge_nodes is the broadcast [n_edges, 2]
-    topology array (roads.road_grid_arrays)."""
-    cand = candidate_edges(points_cells, edges, grid, max_dist)
+    edge is within ``viterbi.MAX_DIST_M``). edge_nodes is the broadcast
+    [n_edges, 2] topology array (roads.road_grid_arrays)."""
+    cand = candidate_edges(points_cells, edges, grid)
     # every point must reach the kernel, including candidate-less ones
     # (they reset the chain). Round 9: UNION one null-edge row per point
     # instead of left-joining candidates back onto the points — the join
@@ -148,9 +144,7 @@ def match_trajectories(
             m = ~np.isnan(block)
             ce.append(block[m].astype(np.int64))
             cd.append(dist[s:e][m])
-        matched = vk.viterbi_match(
-            np.asarray(pts), ce, cd, topo, obs_noise=obs_noise
-        )
+        matched = vk.viterbi_match(np.asarray(pts), ce, cd, topo)
         return pd.DataFrame(
             {
                 "traj_id": pdf["traj_id"].iat[0],

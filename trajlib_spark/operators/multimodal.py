@@ -30,6 +30,9 @@ MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
     "meta struct<width:int, height:int, n_frames:int, sample_rate:int, codec:string>"
 )
+RESIZE_TO = 8  # features are RESIZE_TO² block means / RMS chunks
+FRAME_SAMPLES = 4  # frames video_frame_features samples per clip
+SAMPLE_RATE = 16000  # Hz of the WAV payloads
 
 
 def _media_row(i: int, kind: str, payload_format: str) -> tuple:
@@ -69,7 +72,7 @@ def _media_row(i: int, kind: str, payload_format: str) -> tuple:
     return (
         i, kind, payload,
         {"width": w, "height": h, "n_frames": 1 + i % 30,
-         "sample_rate": 16000, "codec": codec},
+         "sample_rate": SAMPLE_RATE, "codec": codec},
     )
 
 
@@ -174,13 +177,13 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     return rows[:, :, ::-1]  # BGR → RGB
 
 
-def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
-    """int16 mono samples → WAV (PCM16)."""
+def encode_wav(samples: np.ndarray) -> bytes:
+    """int16 mono samples → WAV (PCM16) at ``SAMPLE_RATE``."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as wv:
         wv.setnchannels(1)
         wv.setsampwidth(2)
-        wv.setframerate(sample_rate)
+        wv.setframerate(SAMPLE_RATE)
         wv.writeframes(samples.astype("<i2").tobytes())
     return buf.getvalue()
 
@@ -242,17 +245,14 @@ def _decode_real(payload: bytes, codec: str, resize_to: int) -> np.ndarray:
     )
 
 
-def decode_features(
-    media: DataFrame,
-    decoder: str = "fake",
-    resize_to: int = 8,
-) -> DataFrame:
+def decode_features(media: DataFrame, decoder: str = "fake") -> DataFrame:
     """→ (media_id, kind, feat array<float>): decode → fixed-length
-    feature (resize_to² floats: block-mean grayscale for images, RMS
+    feature (RESIZE_TO² floats: block-mean grayscale for images, RMS
     chunks for audio). 'real' decodes PPM/BMP/WAV payloads with the
     library-free codecs; unsupported codecs raise NotImplementedError."""
     if decoder not in ("fake", "real"):
         raise ValueError("decoder must be 'fake' or 'real'")
+    resize_to = RESIZE_TO
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -296,16 +296,16 @@ def decode_rawvid(payload: bytes) -> np.ndarray:
     return np.frombuffer(payload, np.uint8, n * h * w, 16).reshape(n, h, w)
 
 
-def video_frame_features(
-    media: DataFrame, n_samples: int = 4, resize_to: int = 8
-) -> DataFrame:
+def video_frame_features(media: DataFrame) -> DataFrame:
     """Frame-sample + per-frame features for RV01 video payloads:
-    m = min(n_samples, n_frames) uniformly-spaced frames (idx_k =
+    m = min(n_samples, n_frames) uniformly-spaced frames, n_samples =
+    ``FRAME_SAMPLES`` (idx_k =
     floor(k·n_frames / m) — deterministic, distinct, and spanning the whole
     clip even when the video is shorter than n_samples; ADVICE r3: dividing
     by n_samples instead of m yielded duplicate early frames on short
     clips), each reduced to resize_to² block means / 255 — one output row
     per sampled frame, Arrow-batched."""
+    n_samples, resize_to = FRAME_SAMPLES, RESIZE_TO
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -3,7 +3,7 @@ downsampled and distorted variants (/root/reference/fedtraj/utils/
 preprocessing_porto.py:94-192), composed Spark-first from engine
 primitives:
 
-- test slice = rows [int(0.8·n), int(0.8·n) + n_db) in ``order`` —
+- test slice = rows [int(0.8·n), int(0.8·n) + n_db) in ``traj_id`` order —
   positional slicing via the partition-parallel global_row_number (no
   single-task window);
 - per trajectory, the QUERY polyline keeps the EVEN-index points
@@ -44,25 +44,25 @@ def newsimi_datasets(
     n_db: int = 100_000,
     variant: str = "raw",
     rate: float = 0.0,
-    salt: int = 0,
-    order: tuple[str, ...] = ("traj_id",),
 ) -> tuple[DataFrame, DataFrame]:
-    """→ (query_polys, db_polys), each (traj_id, xs, ys)."""
+    """→ (query_polys, db_polys), each (traj_id, xs, ys); the query side
+    draws its augmentation stream with salt 0 and the db side with
+    salt 1."""
     if variant not in ("raw", "downsample", "distort"):
         raise ValueError("variant must be raw | downsample | distort")
-    d, n = global_row_number(polys.select(*order, "xs", "ys"), order)
+    d, n = global_row_number(polys.select("traj_id", "xs", "ys"), ("traj_id",))
     lo = int(n * 0.8)
     test = d.where((F.col("_rn0") >= lo) & (F.col("_rn0") < lo + n_db))
     query = test.where(F.col("_rn0") < lo + n_query).select(
-        *order, _index_filter("xs", 0).alias("xs"), _index_filter("ys", 0).alias("ys")
+        "traj_id", _index_filter("xs", 0).alias("xs"), _index_filter("ys", 0).alias("ys")
     )
     db = test.select(
-        *order, _index_filter("xs", 1).alias("xs"), _index_filter("ys", 1).alias("ys")
+        "traj_id", _index_filter("xs", 1).alias("xs"), _index_filter("ys", 1).alias("ys")
     )
     if variant == "downsample":
-        query = augment.apply_stochastic(query, "newsimi_downsample", salt=salt, rate=rate)
-        db = augment.apply_stochastic(db, "newsimi_downsample", salt=salt + 1, rate=rate)
+        query = augment.apply_stochastic(query, "newsimi_downsample", salt=0, rate=rate)
+        db = augment.apply_stochastic(db, "newsimi_downsample", salt=1, rate=rate)
     elif variant == "distort":
-        query = augment.apply_stochastic(query, "newsimi_distort", salt=salt, rate=rate)
-        db = augment.apply_stochastic(db, "newsimi_distort", salt=salt + 1, rate=rate)
+        query = augment.apply_stochastic(query, "newsimi_distort", salt=0, rate=rate)
+        db = augment.apply_stochastic(db, "newsimi_distort", salt=1, rate=rate)
     return query, db

@@ -25,26 +25,20 @@ from ..config import GridConfig
 from . import cells
 
 TILE_SIZE = 64
+ZOOMS = (0, 1, 2, 3)  # the pyramid's levels
 
 
-def tile_counts(
-    points: DataFrame,
-    grid: GridConfig,
-    zooms: tuple[int, ...] = (0, 1, 2, 3),
-    x: str = "x",
-    y: str = "y",
-    salt: int = 0,
-) -> DataFrame:
-    """(zoom, i_x, i_y, cell_id, cnt) per pyramid level, built as a
-    HIERARCHICAL rollup: the source is scanned exactly once for the finest
+def tile_counts(points: DataFrame, grid: GridConfig, salt: int = 0) -> DataFrame:
+    """(zoom, i_x, i_y, cell_id, cnt) per pyramid level of ``ZOOMS`` over
+    Mercator x/y, built as a HIERARCHICAL rollup: the source is scanned exactly once for the finest
     level, and every coarser level aggregates the previous level's (tiny)
     cell table — parent count = sum of its 4 children. A per-level
     groupBy over the source would rescan (and re-mine) the input once per
     zoom, which at 100 TB is the whole cost of the query."""
-    zooms = sorted(zooms)
+    zooms = sorted(ZOOMS)
     idx = points.select(
-        cells.x_idx(F.col(x), F.col(y), grid).alias("bx"),
-        cells.y_idx(F.col(x), F.col(y), grid).alias("by"),
+        cells.x_idx(F.col("x"), F.col("y"), grid).alias("bx"),
+        cells.y_idx(F.col("x"), F.col("y"), grid).alias("by"),
     )
     if salt and salt > 1:
         # two-phase salted count for pathologically hot cells (a plain
@@ -105,12 +99,11 @@ def tile_counts(
     )
 
 
-def to_dense_tiles(
-    counts: DataFrame, tile_size: int = TILE_SIZE
-) -> DataFrame:
+def to_dense_tiles(counts: DataFrame) -> DataFrame:
     """(zoom, tile_x, tile_y, pixels array<long>) — pixels is the
-    row-major flattened tile_size×tile_size count raster (sparse cells = 0).
+    row-major flattened TILE_SIZE×TILE_SIZE count raster (sparse cells = 0).
     Grouped by tile so each group is one bounded numpy array."""
+    tile_size = TILE_SIZE
     t = counts.withColumns(
         {
             "tile_x": (F.col("i_x") / tile_size).cast("long"),
@@ -137,9 +130,10 @@ def to_dense_tiles(
     )
 
 
-def from_dense_tiles(tiles: DataFrame, tile_size: int = TILE_SIZE) -> DataFrame:
+def from_dense_tiles(tiles: DataFrame) -> DataFrame:
     """Inverse bridge: dense tiles → (zoom, i_x, i_y, cnt) vector cells,
     zero pixels dropped. Pure Catalyst (posexplode)."""
+    tile_size = TILE_SIZE
     return (
         tiles.select(
             "zoom", "tile_x", "tile_y", F.posexplode("pixels").alias("pos", "cnt")

@@ -35,13 +35,7 @@ _SEGMENT_SCHEMA = (
 )
 
 
-def segment_trajectories(
-    points: DataFrame,
-    traj: str = "traj_id",
-    order: tuple[str, ...] = ("ts_ms", "point_id"),
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
+def segment_trajectories(points: DataFrame) -> DataFrame:
     """→ one row per TRACLUS segment with its polyline.
 
     Shape: nest to polylines first (sort_array inside the agg — one
@@ -51,19 +45,17 @@ def segment_trajectories(
     per-call overhead by ~the batch size while the work stays identical."""
     from .similarity import collect_polylines
 
-    polys = collect_polylines(
-        points.select(traj, *order, x, y), traj=traj, order=order, x=x, y=y
-    )
+    polys = collect_polylines(points.select("traj_id", "ts_ms", "point_id", "x", "y"))
     # per-TRAJECTORY python kernel: respread explicitly (AQE coalesces the
     # few-MB polyline table onto 1-2 cores otherwise)
     polys = polys.repartition(
-        polys.sparkSession.sparkContext.defaultParallelism, traj
+        polys.sparkSession.sparkContext.defaultParallelism, "traj_id"
     )
 
     def cut(batches):
         for pdf in batches:
             rows = []
-            for tid, xs, ys in zip(pdf[traj], pdf["xs"], pdf["ys"]):
+            for tid, xs, ys in zip(pdf["traj_id"], pdf["xs"], pdf["ys"]):
                 xs = np.asarray(xs, dtype=np.float64)
                 ys = np.asarray(ys, dtype=np.float64)
                 tr = np.column_stack([xs, ys])
@@ -81,50 +73,34 @@ def segment_trajectories(
     return polys.mapInPandas(cut, _SEGMENT_SCHEMA)
 
 
-def simplify_trajectories(
-    points: DataFrame,
-    epsilon: float = TRAJ_SIMP_DIST,
-    traj: str = "traj_id",
-    order: tuple[str, ...] = ("ts_ms", "point_id"),
-    x: str = "x",
-    y: str = "y",
-    keep_col: str = "rdp_keep",
-) -> DataFrame:
-    """Attach a boolean RDP keep-flag per point (filter on it to simplify)."""
-    cols = list(dict.fromkeys([traj, *order, x, y] ))
-    src = points.select(*cols)
-    ocols = list(order)
-    schema = ", ".join(
-        [f"{traj} string"] + [f"{c} {t}" for c, t in
-         zip(ocols + [x, y], ["long", "long", "double", "double"])]
-    ) + f", {keep_col} boolean"
+def simplify_trajectories(points: DataFrame) -> DataFrame:
+    """Attach a boolean RDP keep-flag ``rdp_keep`` per point, ε =
+    ``config.TRAJ_SIMP_DIST`` (filter on it to simplify)."""
+    src = points.select("traj_id", "ts_ms", "point_id", "x", "y")
+    schema = ("traj_id string, ts_ms long, point_id long, x double, y double, "
+              "rdp_keep boolean")
 
     def simp(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ocols, kind="mergesort").copy()
-        tr = np.column_stack([pdf[x].to_numpy(), pdf[y].to_numpy()])
-        pdf[keep_col] = rdp_mask(tr, epsilon)
-        pdf[traj] = pdf[traj].astype(str)
+        pdf = pdf.sort_values(["ts_ms", "point_id"], kind="mergesort").copy()
+        tr = np.column_stack([pdf["x"].to_numpy(), pdf["y"].to_numpy()])
+        pdf["rdp_keep"] = rdp_mask(tr, TRAJ_SIMP_DIST)
+        pdf["traj_id"] = pdf["traj_id"].astype(str)
         return pdf
 
-    return src.groupBy(traj).applyInPandas(simp, schema)
+    return src.groupBy("traj_id").applyInPandas(simp, schema)
 
 
-def global_row_number(
-    df: DataFrame,
-    order: tuple[str, ...],
-    out: str = "_rn0",
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, int]:
-    """0-based global row number in ``order`` WITHOUT a single-task global
+def global_row_number(df: DataFrame, order: tuple[str, ...]) -> tuple[DataFrame, int]:
+    """0-based global row number ``_rn0`` in ``order`` WITHOUT a single-task global
     window: range-partition on the order keys (ascending partition ids hold
     ascending key ranges), rank inside each partition in parallel, then add
     per-partition offsets computed from a tiny count-per-partition job.
     This is the two-pass zipWithIndex pattern — every stage is
-    partition-parallel, so it holds at any N. Returns (df + out column,
+    partition-parallel, so it holds at any N. Returns (df + ``_rn0``,
     total row count). Deterministic when the order keys are unique. Row
     numbers and counts read one eager local checkpoint, whose blocks go
     with the frame (the session's cache is left as it was)."""
-    P = num_partitions or max(
+    P = max(
         df.sparkSession.sparkContext.defaultParallelism,
         int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
     )
@@ -140,24 +116,22 @@ def global_row_number(
     off_expr = F.element_at(F.create_map(*kv), F.col("_pid")) if kv else F.lit(0)
     w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order])
     return (
-        d.withColumn(out, (off_expr + F.row_number().over(w) - 1).cast("long"))
+        d.withColumn("_rn0", (off_expr + F.row_number().over(w) - 1).cast("long"))
         .drop("_pid"),
         acc,
     )
 
 
 def positional_split(
-    df: DataFrame,
-    fractions: dict[str, tuple[float, float]],
-    order: tuple[str, ...] = ("traj_id",),
+    df: DataFrame, fractions: dict[str, tuple[float, float]]
 ) -> DataFrame:
     """Deterministic train/eval/test slicing by positional fractions in
-    ``order`` — the reference's read_traj_dataset splits
+    ``traj_id`` order — the reference's read_traj_dataset splits
     (/root/reference/fedtraj/utils/data_loader.py:31-40: e.g. train
     [0, 0.7), eval [0.7, 0.8), test [0.8, 1.0)). Adds a `split` column;
     rows outside every range get NULL. Ranking is partition-parallel
     (global_row_number), never a single-task global window."""
-    d, n = global_row_number(df, order)
+    d, n = global_row_number(df, ("traj_id",))
     rn = F.col("_rn0")
     expr = F.lit(None).cast("string")
     for name, (lo, hi) in reversed(list(fractions.items())):
@@ -166,13 +140,9 @@ def positional_split(
     return d.withColumn("split", expr).drop("_rn0")
 
 
-def pad_polylines(
-    polys: DataFrame,
-    max_len: int,
-    xs: str = "xs",
-    ys: str = "ys",
-) -> DataFrame:
-    """Pad nested polylines to ``max_len`` by repeating the last point —
+def pad_polylines(polys: DataFrame, max_len: int) -> DataFrame:
+    """Pad nested polylines (xs, ys) to ``max_len`` by repeating the last
+    point, as xs_pad / ys_pad —
     the ML-boundary padding step (/root/reference/trajlib/dataset/
     data_preprocessing.py:109-120), as a pure Catalyst transform (storage
     stays variable-length; only the model-facing view is padded)."""
@@ -184,19 +154,15 @@ def pad_polylines(
             lambda i: F.element_at(arr, F.least(i, F.size(arr))),
         )
 
-    return polys.withColumns({f"{xs}_pad": pad(xs), f"{ys}_pad": pad(ys)})
+    return polys.withColumns({"xs_pad": pad("xs"), "ys_pad": pad("ys")})
 
 
-def federated_split(
-    trajs: DataFrame,
-    fed_num: int,
-    order: tuple[str, ...] = ("traj_id",),
-) -> DataFrame:
-    """Attach fed_id ∈ [0, fed_num): positional N-way split in ``order``
+def federated_split(trajs: DataFrame, fed_num: int) -> DataFrame:
+    """Attach fed_id ∈ [0, fed_num): positional N-way split in ``traj_id`` order
     (np.array_split semantics: the first n % fed_num shards get one extra
     row). Deterministic given the order columns; ranking is
     partition-parallel (global_row_number), never a single-task window."""
-    d, n = global_row_number(trajs, order)
+    d, n = global_row_number(trajs, ("traj_id",))
     base, extra = divmod(n, fed_num)
     # row_number 1..n → shard via array_split boundaries
     boundaries = []

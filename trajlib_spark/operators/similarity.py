@@ -12,9 +12,12 @@ Plan shape:
   polylines and evaluates the kernels per Arrow batch (never a dense
   matrix — the pair table is the output).
 
-Every pair scorer — similarity_join, multi_measure_join and the three
-measure_topk paths (brute, grid ring, ε-match) — runs the same kernel,
-``_measure_scorer``; each caller only builds its slim pair table.
+Every pair scorer — multi_measure_join, the grid-ring and ε-match
+measure_topk paths and the broadcast scan ``_brute_topk`` — runs the same
+kernel, ``_measure_scorer``; each caller only builds its slim pair table.
+
+Polylines are (traj_id, xs, ys) rows; ``collect_polylines`` builds them
+from (traj_id, ts_ms, point_id, x, y) points.
 
 Normalization matches the reference: per-axis population-σ z-score over
 ALL points of the dataset (preprocessing_porto.py:232-252 — numpy std is
@@ -38,22 +41,17 @@ from .knn import rank_topk, ring_topk
 from .pairs import score_pairs
 
 
-def collect_polylines(
-    points: DataFrame,
-    traj: str = "traj_id",
-    order: tuple[str, ...] = ("ts_ms", "point_id"),
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
-    """(traj_id, xs array<double>, ys array<double>) — one shuffle; the
-    sort happens inside the agg via sort_array over (order, coords) structs
-    so no grouped-map UDF is needed."""
-    skey = F.struct(*[F.col(c) for c in order], F.col(x).alias("_x"), F.col(y).alias("_y"))
+def collect_polylines(points: DataFrame) -> DataFrame:
+    """(traj_id, xs array<double>, ys array<double>) in (ts_ms, point_id)
+    order — one shuffle; the sort happens inside the agg via sort_array
+    over (order, coords) structs so no grouped-map UDF is needed."""
+    skey = F.struct(F.col("ts_ms"), F.col("point_id"),
+                    F.col("x").alias("_x"), F.col("y").alias("_y"))
     return (
-        points.groupBy(traj)
+        points.groupBy("traj_id")
         .agg(F.sort_array(F.collect_list(skey)).alias("_pts"))
         .select(
-            traj,
+            "traj_id",
             F.transform("_pts", lambda s: s["_x"]).alias("xs"),
             F.transform("_pts", lambda s: s["_y"]).alias("ys"),
         )
@@ -88,16 +86,13 @@ def normalize_polylines(
     )
 
 
-def pair_table(
-    ids: DataFrame,
-    id_col: str = "traj_id",
-    block_col: str | None = None,
-) -> DataFrame:
-    """Upper-triangular (i, j) pairs; optionally blocked so only rows
-    sharing ``block_col`` pair up (the federation / cell-block bound that
-    keeps the pair count quadratic-in-shard instead of quadratic-in-N)."""
-    a = ids.select(F.col(id_col).alias("i"), *( [F.col(block_col)] if block_col else [] ))
-    b = ids.select(F.col(id_col).alias("j"), *( [F.col(block_col).alias("_bj")] if block_col else [] ))
+def pair_table(ids: DataFrame, block_col: str | None = None) -> DataFrame:
+    """Upper-triangular (i, j) pairs of ``traj_id``; optionally blocked so
+    only rows sharing ``block_col`` pair up (the federation / cell-block
+    bound that keeps the pair count quadratic-in-shard instead of
+    quadratic-in-N)."""
+    a = ids.select(F.col("traj_id").alias("i"), *( [F.col(block_col)] if block_col else [] ))
+    b = ids.select(F.col("traj_id").alias("j"), *( [F.col(block_col).alias("_bj")] if block_col else [] ))
     if block_col:
         joined = a.join(b, F.col(block_col) == F.col("_bj")).drop("_bj")
     else:
@@ -164,30 +159,14 @@ def _measure_scorer(
     )
 
 
-def similarity_join(
-    polys: DataFrame,
-    measure: str,
-    eps: float = LCSS_EDR_EPS,
-    pairs: DataFrame | None = None,
-    id_col: str = "traj_id",
-    block_col: str | None = None,
-) -> DataFrame:
-    """→ (i, j, dist) for every pair. ``pairs`` overrides the generated
-    upper-triangular pair table (e.g. a k-ring-bounded candidate set)."""
-    return multi_measure_join(
-        polys, {"dist": (measure, eps)}, pairs=pairs, id_col=id_col, block_col=block_col
-    )
-
-
 def multi_measure_join(
     polys: DataFrame,
     measures: dict[str, tuple[str, float]],
     coord_cols: dict[str, tuple[str, str]] | None = None,
-    pairs: DataFrame | None = None,
-    id_col: str = "traj_id",
     block_col: str | None = None,
 ) -> DataFrame:
-    """All requested measures for every pair in ONE pass → (i, j, <out>...).
+    """All requested measures for every upper-triangular pair of
+    ``pair_table`` in ONE pass → (i, j, <out>...).
 
     The reference evaluates each measure in a separate full sweep over the
     pair space (one preprocessing run per config, /root/reference/fedtraj/
@@ -202,14 +181,13 @@ def multi_measure_join(
     defaults to ("xs", "ys")."""
     coord_cols = coord_cols or {}
     arr_cols = sorted({c for out in measures for c in coord_cols.get(out, ("xs", "ys"))})
-    if pairs is None:
-        pairs = pair_table(polys.select(id_col, *( [block_col] if block_col else [] )),
-                           id_col, block_col)
-    payload = polys.select(id_col, *arr_cols)
-    return _measure_scorer(payload, payload, id_col, measures, coord_cols)(pairs)
+    pairs = pair_table(polys.select("traj_id", *( [block_col] if block_col else [] )),
+                       block_col)
+    payload = polys.select("traj_id", *arr_cols)
+    return _measure_scorer(payload, payload, "traj_id", measures, coord_cols)(pairs)
 
 
-def _traj_anchor(polys: DataFrame, id_alias: str, id_col: str = "traj_id") -> DataFrame:
+def _traj_anchor(polys: DataFrame, id_alias: str) -> DataFrame:
     """(id, xs, ys, _ax, _ay, radius): anchor = MBR center, radius = max
     point distance to the anchor — all Catalyst array arithmetic, one pass
     over the nested polyline. An empty polyline anchors at the origin with
@@ -218,7 +196,7 @@ def _traj_anchor(polys: DataFrame, id_alias: str, id_col: str = "traj_id") -> Da
     against anything, above every ring bound."""
     ax = F.coalesce((F.array_min("xs") + F.array_max("xs")) / 2, F.lit(0.0))
     ay = F.coalesce((F.array_min("ys") + F.array_max("ys")) / 2, F.lit(0.0))
-    d = polys.select(F.col(id_col).alias(id_alias), "xs", "ys").withColumns(
+    d = polys.select(F.col("traj_id").alias(id_alias), "xs", "ys").withColumns(
         {"_ax": ax, "_ay": ay}
     )
     radius = F.sqrt(
@@ -233,15 +211,15 @@ def _traj_anchor(polys: DataFrame, id_alias: str, id_col: str = "traj_id") -> Da
     return d.withColumn("radius", F.coalesce(radius, F.lit(0.0)))
 
 
-def _anchored(db_polys, query_polys, id_col, q_radius):
+def _anchored(db_polys, query_polys, q_radius):
     """(db anchors "j", query anchors "i", max db radius, ``q_radius`` of
     the query radii). Both anchor tables are lazy local checkpoints that
     ONE scalar job (a side-tagged union agg reading both radii) fills, so
     every later plan reads their blocks, and the ContextCleaner frees them
     once the result is unreachable. An empty side gives None (float(None)
     would crash; the NULL aggregate doubles as the emptiness probe)."""
-    db_a = _traj_anchor(db_polys, "j", id_col=id_col).localCheckpoint(eager=False)
-    q_a = _traj_anchor(query_polys, "i", id_col=id_col).localCheckpoint(eager=False)
+    db_a = _traj_anchor(db_polys, "j").localCheckpoint(eager=False)
+    q_a = _traj_anchor(query_polys, "i").localCheckpoint(eager=False)
     rd, rq = (
         db_a.select(F.lit(True).alias("_d"), "radius")
         .unionByName(q_a.select(F.lit(False).alias("_d"), "radius"))
@@ -255,21 +233,21 @@ def _anchored(db_polys, query_polys, id_col, q_radius):
 
 
 def _neighbor_scorer(
-    queries: DataFrame, db: DataFrame, measure: str, eps: float
+    queries: DataFrame, db: DataFrame, measure: str
 ) -> Callable[[DataFrame], DataFrame]:
     """(i, j) → (query_id, neighbor_id, dist), the polylines of query "i"
     and db "j" rows as the payloads."""
     score = _measure_scorer(
         queries.select(F.col("i").alias("id"), "xs", "ys"),
         db.select(F.col("j").alias("id"), "xs", "ys"),
-        "id", {"dist": (measure, eps)},
+        "id", {"dist": (measure, LCSS_EDR_EPS)},
     )
     return lambda pairs: score(pairs).withColumnsRenamed(
         {"i": "query_id", "j": "neighbor_id"})
 
 
-def _no_neighbors(db_polys: DataFrame, id_col: str) -> DataFrame:
-    t = dict(db_polys.dtypes)[id_col]
+def _no_neighbors(db_polys: DataFrame) -> DataFrame:
+    t = dict(db_polys.dtypes)["traj_id"]
     return db_polys.sparkSession.createDataFrame(
         [], f"query_id {t}, neighbor_id {t}, dist double"
     )
@@ -300,8 +278,6 @@ def _lcss_edr_topk(
     query_polys: DataFrame,
     measure: str,
     k: int,
-    eps: float,
-    id_col: str,
 ) -> DataFrame:
     """Exact top-k for the ε-match measures WITHOUT a full-corpus scan.
 
@@ -328,9 +304,10 @@ def _lcss_edr_topk(
     from pyspark.sql import Window
 
     sqrt2 = 2.0 ** 0.5
-    anchored = _anchored(db_polys, query_polys, id_col, F.max)
+    eps = LCSS_EDR_EPS
+    anchored = _anchored(db_polys, query_polys, F.max)
     if anchored is None:
-        return rank_topk(_no_neighbors(db_polys, id_col), k)
+        return rank_topk(_no_neighbors(db_polys), k)
     db_a, q_a, r_dmax, r_qmax = anchored
     match_r = eps * sqrt2
     # δ trades ring size (query fan-out) against cell occupancy; ~6 rings
@@ -352,7 +329,7 @@ def _lcss_edr_topk(
     )
     cand = fan.join(db_cells, ["cx", "cy"]).where(F.col("i") != F.col("j")).select("i", "j")
     # the candidate join moves slim (i, j) rows; the scorer brings the polylines
-    scored = _neighbor_scorer(q_a, db_a, measure, eps)(cand)
+    scored = _neighbor_scorer(q_a, db_a, measure)(cand)
 
     prefix = (
         db_a.select("j").orderBy("j").limit(k + 1)
@@ -370,16 +347,25 @@ def _lcss_edr_topk(
     return rank_topk(best, k)
 
 
+def _brute_topk(
+    db_polys: DataFrame, query_polys: DataFrame, measure: str, k: int
+) -> DataFrame:
+    """The broadcast query × db scan: every pair scored, then ranked — the
+    reference path the pruned ``measure_topk`` paths are tested against."""
+    q = query_polys.select(F.col("traj_id").alias("i"), "xs", "ys")
+    db = db_polys.select(F.col("traj_id").alias("j"), "xs", "ys")
+    score = _neighbor_scorer(q, db, measure)
+    pairs = F.broadcast(q.select("i")).crossJoin(db.select("j"))
+    return rank_topk(score(pairs.where(F.col("i") != F.col("j"))), k)
+
+
 def measure_topk(
     db_polys: DataFrame,
     query_polys: DataFrame,
     measure: str,
     k: int,
-    eps: float = LCSS_EDR_EPS,
-    id_col: str = "traj_id",
     grid=None,
     ring: int | None = None,
-    brute: bool = False,
 ) -> DataFrame:
     """kNN by a true trajectory measure (the reference's knn-by-EDwP/LCSS,
     /root/reference/fedtraj/model/trainer/fed_trainer.py:445-452) →
@@ -398,25 +384,21 @@ def measure_topk(
     Only anchor-cell candidates are scored; every other pair scores
     exactly 1.0, so the tail comes from the k+1 smallest db ids, which
     always hold the 1.0 rows a query's top-k can need (see
-    _lcss_edr_topk). The broadcast query × db scan runs only for
-    ``grid=None`` or ``brute=True`` (kept for parity testing)."""
-    if measure in _EPS_MATCH_MEASURES and not brute:
-        return _lcss_edr_topk(db_polys, query_polys, measure, k, eps, id_col)
+    _lcss_edr_topk). A metric measure without ``grid`` runs the broadcast
+    query × db scan, ``_brute_topk``. ε is ``config.LCSS_EDR_EPS``."""
+    if measure in _EPS_MATCH_MEASURES:
+        return _lcss_edr_topk(db_polys, query_polys, measure, k)
 
-    if grid is None or measure not in _METRIC_MEASURES or brute:
-        q = query_polys.select(F.col(id_col).alias("i"), "xs", "ys")
-        db = db_polys.select(F.col(id_col).alias("j"), "xs", "ys")
-        score = _neighbor_scorer(q, db, measure, eps)
-        pairs = F.broadcast(q.select("i")).crossJoin(db.select("j"))
-        return rank_topk(score(pairs.where(F.col("i") != F.col("j"))), k)
+    if grid is None or measure not in _METRIC_MEASURES:
+        return _brute_topk(db_polys, query_polys, measure, k)
 
-    anchored = _anchored(db_polys, query_polys, id_col, F.min)
+    anchored = _anchored(db_polys, query_polys, F.min)
     if anchored is None:
-        return rank_topk(_no_neighbors(db_polys, id_col), k)
+        return rank_topk(_no_neighbors(db_polys), k)
     db_a, q_a, r_dmax, r_qmin = anchored
     # one scorer for every round: the polylines are gated (and broadcast)
     # once, not once per ring
-    score = _neighbor_scorer(q_a, db_a, measure, eps)
+    score = _neighbor_scorer(q_a, db_a, measure)
     min_unit = min(grid.x_unit, grid.y_unit)
     # smallest ring whose bound CAN be positive: below it every round's
     # kernel work is wasted (whole-extent trajectories degrade gracefully

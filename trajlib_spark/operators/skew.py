@@ -17,11 +17,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, salt: int, col_name: str = "_salt") -> DataFrame:
-    """Deterministic per-row salt (task-retry-safe: hash of all columns,
-    not rand())."""
+def with_salt(df: DataFrame, salt: int) -> DataFrame:
+    """Deterministic per-row salt ``_salt`` (task-retry-safe: hash of all
+    columns, not rand())."""
     return df.withColumn(
-        col_name, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt))
+        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt))
     )
 
 

@@ -116,8 +116,6 @@ def point_in_polygon(
     points: DataFrame,
     polygons: DataFrame,
     grid: GridConfig,
-    x: str = "x",
-    y: str = "y",
     point_cols: list[str] | None = None,
 ) -> DataFrame:
     """Join rows (point columns…, geo_id) for every point inside a polygon.
@@ -126,7 +124,7 @@ def point_in_polygon(
     ``polygons`` is GeoData-shaped: (geo_id, coord array<array<array<double>>>).
     """
     if "cell_id" not in points.columns:
-        points = cells.with_cell(points, grid, x=x, y=y)
+        points = cells.with_cell(points, grid)
     # Round 9: classify each covering cell ONCE at index-build time. A cell
     # is _full when a margin-grown rectangle containing every point the
     # cell can hold is provably inside the polygon: (a) no polygon edge's
@@ -246,7 +244,7 @@ def point_in_polygon(
     # join's probe, immune to pushdown/replan mangling
     cond = (points["cell_id"] == index["_g_cell"]) & (
         index["_full"]
-        | ray_cast_inside(points[x], points[y], index["coord"])
+        | ray_cast_inside(points["x"], points["y"], index["coord"])
     )
     cand = points.join(index, cond)
     out_cols = point_cols or [c for c in points.columns if c != "cell_id"]

@@ -29,14 +29,13 @@ def collapse_consecutive_cells(
     grid: GridConfig,
     traj: str = "traj_id",
     order: list[str] | None = None,
-    x: str = "x",
-    y: str = "y",
 ) -> DataFrame:
     """Returns the kept points with (i_x, i_y, cell_id, seq) where seq is
-    the 0-based position in the collapsed sequence."""
+    the 0-based position in the collapsed sequence. A point table without
+    ``cell_id`` gets its cells from Mercator x/y."""
     order = order or ["ts_ms", "point_id"]
     if "cell_id" not in points.columns:
-        points = cells.with_cell(points, grid, x=x, y=y)
+        points = cells.with_cell(points, grid)
     w = Window.partitionBy(traj).orderBy(*order)
     kept = points.withColumn("_prev_cell", F.lag("cell_id").over(w)).where(
         F.col("_prev_cell").isNull() | (F.col("cell_id") != F.col("_prev_cell"))
@@ -45,30 +44,23 @@ def collapse_consecutive_cells(
     return kept.withColumn("seq", F.row_number().over(wk) - 1).drop("_prev_cell")
 
 
-def sessionize(
-    points: DataFrame,
-    traj: str = "traj_id",
-    ts_ms: str = "ts_ms",
-    order_tiebreak: str | None = "point_id",
-    gap_s: int = SESSION_GAP_S,
-    min_points: int = MIN_TRIP_POINTS,
-) -> DataFrame:
-    """Attach (session_idx, session_id) per point; drop sessions shorter
-    than ``min_points``. Gap rule: strictly greater than ``gap_s`` seconds
-    since the previous point starts a new session
-    (beijng2traj.py:79 ``time_difference.total_seconds() > 360``)."""
-    order = [ts_ms] + ([order_tiebreak] if order_tiebreak else [])
-    w = Window.partitionBy(traj).orderBy(*order)
-    gap_ms = gap_s * 1000
+def sessionize(points: DataFrame, min_points: int = MIN_TRIP_POINTS) -> DataFrame:
+    """Attach (session_idx, session_id) per (traj_id, ts_ms, point_id)
+    point; drop sessions shorter than ``min_points``. Gap rule: strictly
+    greater than ``config.SESSION_GAP_S`` seconds since the previous point
+    starts a new session (beijng2traj.py:79
+    ``time_difference.total_seconds() > 360``)."""
+    w = Window.partitionBy("traj_id").orderBy("ts_ms", "point_id")
+    gap_ms = SESSION_GAP_S * 1000
     new_sess = F.when(
-        (F.col(ts_ms) - F.lag(ts_ms).over(w)) > F.lit(gap_ms), 1
+        (F.col("ts_ms") - F.lag("ts_ms").over(w)) > F.lit(gap_ms), 1
     ).otherwise(0)
     df = points.withColumn("session_idx", F.sum(new_sess).over(w))
     df = df.withColumn(
-        "session_id", F.concat_ws("#", F.col(traj).cast("string"), F.col("session_idx"))
+        "session_id", F.concat_ws("#", F.col("traj_id").cast("string"), F.col("session_idx"))
     )
     if min_points and min_points > 1:
-        cnt = Window.partitionBy(traj, "session_idx")
+        cnt = Window.partitionBy("traj_id", "session_idx")
         df = df.withColumn("_n", F.count(F.lit(1)).over(cnt)).where(
             F.col("_n") >= min_points
         ).drop("_n")

@@ -27,6 +27,8 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 PUNCT = (".", ",", "!", "?", ";", ":")
+VOCAB_TOPK = 100  # tokens vocab_topk keeps
+TFIDF_TOPK = 5  # terms per document tfidf_top_terms keeps
 
 
 def occurrences(text: Column, needle: str) -> Column:
@@ -45,11 +47,11 @@ def word_count(text: Column) -> Column:
 
 
 def _with_needle_counts(
-    docs: DataFrame, text: str, out_needles: dict[str, tuple[str, ...]],
+    docs: DataFrame, out_needles: dict[str, tuple[str, ...]],
     pad: bool = False, lower: bool = False,
 ) -> DataFrame:
     """Adds one long column per ``out_needles`` entry: the summed
-    non-overlapping occurrence count of its needles in text (optionally
+    non-overlapping occurrence count of its needles in ``text`` (optionally
     lowercased and space-padded first). str.count scans left-to-right
     non-overlapping — the identical tally the length/replace trick
     produces — so the integer columns match ``occurrences`` exactly while
@@ -64,7 +66,7 @@ def _with_needle_counts(
 
         for pdf in batches:
             cols = {n: np.empty(len(pdf), dtype=np.int64) for n in names}
-            for r, s in enumerate(pdf[text]):
+            for r, s in enumerate(pdf["text"]):
                 s = s or ""
                 if lower:
                     s = s.lower()
@@ -84,14 +86,12 @@ def _with_needle_counts(
     return docs.mapInPandas(run, schema)
 
 
-def with_quality(docs: DataFrame, text: str = "text") -> DataFrame:
+def with_quality(docs: DataFrame) -> DataFrame:
     """Adds n_words, punct_ratio, avg_word_len, upper_start, quality_score
     ∈ [0, 1] (length/punct/structure heuristic)."""
-    t = F.col(text)
+    t = F.col("text")
     n_chars = F.length(t)
-    counted = _with_needle_counts(
-        docs, text, {"_spaces": (" ",), "_punct": PUNCT}
-    )
+    counted = _with_needle_counts(docs, {"_spaces": (" ",), "_punct": PUNCT})
     n_words = F.col("_spaces") + F.lit(1)
     punct = F.col("_punct")
     punct_ratio = punct.cast("double") / F.greatest(n_chars, F.lit(1)).cast("double")
@@ -111,11 +111,11 @@ def with_quality(docs: DataFrame, text: str = "text") -> DataFrame:
     ).drop("_spaces", "_punct")
 
 
-def with_lang_id(docs: DataFrame, text: str = "text") -> DataFrame:
+def with_lang_id(docs: DataFrame) -> DataFrame:
     """Adds lang_pred = argmax language by stopword-marker hits (ties by
     language code ascending), and the per-language hit counts."""
     df = _with_needle_counts(
-        docs, text,
+        docs,
         {f"hits_{lang}": markers for lang, markers in LANG_MARKERS.items()},
         pad=True, lower=True,
     )
@@ -209,14 +209,14 @@ def fingerprint_block(texts: list[str]) -> np.ndarray:
     return out
 
 
-def with_fingerprint(docs: DataFrame, text: str = "text") -> DataFrame:
+def with_fingerprint(docs: DataFrame) -> DataFrame:
     """Adds fingerprint (rolling hash) via an Arrow-batched UDF — a
     deterministic 61-bit content id usable as a join/dedup key."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            pdf["fingerprint"] = fingerprint_block(list(pdf[text])).astype(
+            pdf["fingerprint"] = fingerprint_block(list(pdf["text"])).astype(
                 np.int64
             )
             yield pdf
@@ -229,8 +229,8 @@ def with_fingerprint(docs: DataFrame, text: str = "text") -> DataFrame:
     return docs.mapInPandas(run, schema)
 
 
-def vocab_topk(docs: DataFrame, k: int = 100, text: str = "text") -> DataFrame:
-    """Vocabulary heavy hitters: (token, n_occurrences) for the k most
+def vocab_topk(docs: DataFrame) -> DataFrame:
+    """Vocabulary heavy hitters: (token, n_occurrences) for the VOCAB_TOPK most
     frequent lowercased whitespace tokens, tie-broken by token ascending.
 
     Scale shape: explode(split) → hash aggregate (map-side partial
@@ -240,16 +240,14 @@ def vocab_topk(docs: DataFrame, k: int = 100, text: str = "text") -> DataFrame:
     the driver merges k·P rows — never a global sort, never a one-task
     window."""
     toks = docs.select(
-        F.explode(F.split(F.lower(F.col(text)), " ")).alias("token")
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("token")
     ).where(F.length("token") > 0)
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n_occurrences"))
-    return counts.orderBy(F.desc("n_occurrences"), F.asc("token")).limit(k)
+    return counts.orderBy(F.desc("n_occurrences"), F.asc("token")).limit(VOCAB_TOPK)
 
 
-def tfidf_top_terms(
-    docs: DataFrame, k: int = 5, text: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Top-k TF-IDF terms per document: tf = in-doc token count, idf =
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Top-TFIDF_TOPK TF-IDF terms per document: tf = in-doc token count, idf =
     ln((N+1)/(df+1)) + 1 (smoothed, sklearn-style), ranked per doc by the
     6-dp-rounded score then token (the rounding makes the rank key
     discrete, so a 1-ulp ln() divergence between engines cannot flip an
@@ -261,7 +259,7 @@ def tfidf_top_terms(
     metadata scalar."""
     from pyspark.sql import Window
 
-    tf = _per_doc_token_counts(docs, text=text, id_col=id_col)
+    tf = _per_doc_token_counts(docs)
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.count()
     idf = F.log((F.lit(float(n_docs + 1))) / (F.col("df") + F.lit(1.0))) + F.lit(1.0)
@@ -269,18 +267,16 @@ def tfidf_top_terms(
         "tfidf_r",
         F.round(F.col("tf") * idf, 6) + F.lit(0.0),
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf_r"), F.asc("token"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf_r"), F.asc("token"))
     return (
         scored.withColumn("term_rank", F.row_number().over(w))
-        .where(F.col("term_rank") <= k)
-        .select(id_col, "token", "tf", "df", "tfidf_r",
+        .where(F.col("term_rank") <= TFIDF_TOPK)
+        .select("doc_id", "token", "tf", "df", "tfidf_r",
                 F.col("term_rank").cast("long").alias("term_rank"))
     )
 
 
-def _per_doc_trigram_counts(
-    docs: DataFrame, text: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def _per_doc_trigram_counts(docs: DataFrame) -> DataFrame:
     """(doc_id, tri, _k): count of every distinct character trigram of
     lower(text) per document — integer-exact equivalent of the Catalyst
     ``explode(sequence) + substr + groupBy count`` chain, vectorized per
@@ -295,8 +291,8 @@ def _per_doc_trigram_counts(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            texts = pdf[text].to_numpy()
+            ids = pdf["doc_id"].to_numpy()
+            texts = pdf["text"].to_numpy()
             doc_parts: list[np.ndarray] = []
             key_parts: list[np.ndarray] = []
             for r, s in enumerate(texts):
@@ -315,7 +311,7 @@ def _per_doc_trigram_counts(
                 doc_parts.append(np.full(n, r, dtype=np.int64))
             if not key_parts:
                 yield pd.DataFrame(
-                    {id_col: ids[:0], "tri": np.array([], dtype=object),
+                    {"doc_id": ids[:0], "tri": np.array([], dtype=object),
                      "_k": np.array([], dtype=np.int64)}
                 )
                 continue
@@ -341,7 +337,7 @@ def _per_doc_trigram_counts(
             )
             yield pd.DataFrame(
                 {
-                    id_col: ids[drows[bnd]],
+                    "doc_id": ids[drows[bnd]],
                     "tri": tri_strs[np.searchsorted(uk, out_keys)],
                     "_k": counts,
                 }
@@ -351,15 +347,13 @@ def _per_doc_trigram_counts(
     # table, which inherits this partitioning) — a single-file corpus
     # otherwise pins it to the scan's 1-4 partitions
     return (
-        docs.select(id_col, text)
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism, id_col)
-        .mapInPandas(run, f"{id_col} long, tri string, _k long")
+        docs.select("doc_id", "text")
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism, "doc_id")
+        .mapInPandas(run, "doc_id long, tri string, _k long")
     )
 
 
-def _per_doc_token_counts(
-    docs: DataFrame, text: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def _per_doc_token_counts(docs: DataFrame) -> DataFrame:
     """(doc_id, token, tf): per-document counts of the non-empty
     single-space-split lowercased tokens — integer-exact equivalent of
     ``explode(split(lower(text), " ")) → groupBy count`` (Python's
@@ -372,8 +366,8 @@ def _per_doc_token_counts(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            texts = pdf[text].to_numpy()
+            ids = pdf["doc_id"].to_numpy()
+            texts = pdf["text"].to_numpy()
             out_ids: list[np.ndarray] = []
             toks: list[str] = []
             tfs: list[int] = []
@@ -387,7 +381,7 @@ def _per_doc_token_counts(
                 tfs.extend(c.values())
             yield pd.DataFrame(
                 {
-                    id_col: np.concatenate(out_ids) if out_ids
+                    "doc_id": np.concatenate(out_ids) if out_ids
                     else np.array([], dtype=np.int64),
                     "token": np.array(toks, dtype=object),
                     "tf": np.array(tfs, dtype=np.int64),
@@ -396,15 +390,13 @@ def _per_doc_token_counts(
 
     # spread the counting pass (see _per_doc_trigram_counts)
     return (
-        docs.select(id_col, text)
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism, id_col)
-        .mapInPandas(run, f"{id_col} long, token string, tf long")
+        docs.select("doc_id", "text")
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism, "doc_id")
+        .mapInPandas(run, "doc_id long, token string, tf long")
     )
 
 
-def trigram_lm_score(
-    docs: DataFrame, text: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
+def trigram_lm_score(docs: DataFrame) -> DataFrame:
     """Statistical quality scoring: mean character-trigram log-probability
     under a model trained on the corpus itself — the relational core of
     perplexity-style quality filters (KenLM-class scoring without the
@@ -420,16 +412,16 @@ def trigram_lm_score(
     repeated in a document joins the model once; the score is the
     k-weighted mean. Everything float (the ln() scoring join and both
     final aggregates) is Catalyst."""
-    per_doc = _per_doc_trigram_counts(docs, text=text, id_col=id_col).localCheckpoint(
+    per_doc = _per_doc_trigram_counts(docs).localCheckpoint(
         eager=True)
     model = per_doc.groupBy("tri").agg(F.sum("_k").alias("cnt"))
     total = per_doc.agg(F.sum("_k")).collect()[0][0]
     scored = per_doc.join(F.broadcast(model), "tri").select(
-        id_col,
+        "doc_id",
         "_k",
         (F.col("_k") * F.log(F.col("cnt") / F.lit(float(total)))).alias("_lp"),
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.sum("_k").alias("n_trigrams"),
         (F.round(F.sum("_lp") / F.sum("_k"), 6) + F.lit(0.0)).alias("lm_score_r"),
     )

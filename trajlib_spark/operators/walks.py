@@ -61,7 +61,6 @@ def node2vec_walks(
     start_nodes: DataFrame,
     walk_length: int = 12,
     walks_per_node: int = 2,
-    node_col: str = "cell_id",
 ) -> DataFrame:
     """→ (walk_id, pos, cell_id): ``walks_per_node`` uniform walks of
     ``walk_length`` positions from every start node (p = q = 1, the
@@ -79,13 +78,13 @@ def node2vec_walks(
     order and the same integer hash chooser."""
     edges = collect_within_budget(pairs.select("src_cell", "dst_cell"))
     if edges is not None:
-        return _walks_arrow(edges, start_nodes, walk_length, walks_per_node, node_col)
+        return _walks_arrow(edges, start_nodes, walk_length, walks_per_node)
     # The path accumulates as an ARRAY column and explodes once at the
     # end — a per-step union would re-evaluate each prefix chain (O(L²)
     # joins total). A walk reaching a degree-0 node vanishes at that
     # step's inner join — the dropped-walk rule above.
     adj = indexed_adjacency(pairs).withColumnRenamed("src", "cur")
-    starts = start_nodes.select(F.col(node_col).cast("long").alias("cur"))
+    starts = start_nodes.select(F.col("cell_id").cast("long").alias("cur"))
     frontier = starts.select(
         F.explode(
             F.sequence(
@@ -106,8 +105,8 @@ def node2vec_walks(
             )
         )
     return frontier.select(
-        "walk_id", F.posexplode("path").alias("pos", node_col)
-    ).select("walk_id", F.col("pos").cast("long").alias("pos"), node_col)
+        "walk_id", F.posexplode("path").alias("pos", "cell_id")
+    ).select("walk_id", F.col("pos").cast("long").alias("pos"), "cell_id")
 
 
 def _walks_arrow(
@@ -115,7 +114,6 @@ def _walks_arrow(
     start_nodes: DataFrame,
     walk_length: int,
     walks_per_node: int,
-    node_col: str,
 ) -> DataFrame:
     """One-pass walk generation over the broadcast adjacency built from
     the collected ``edges`` table (src, dst)."""
@@ -129,7 +127,7 @@ def _walks_arrow(
         adj[k].sort()
     spark = start_nodes.sparkSession
     bcast = spark.sparkContext.broadcast(adj)
-    starts = start_nodes.select(F.col(node_col).cast("long").alias("node"))
+    starts = start_nodes.select(F.col("cell_id").cast("long").alias("node"))
     # respread: the walk cost is per START NODE; AQE would coalesce the
     # tiny start table onto a couple of cores
     starts = starts.repartition(spark.sparkContext.defaultParallelism)
@@ -161,16 +159,15 @@ def _walks_arrow(
                     out_w.extend([wid] * walk_length)
                     out_p.extend(range(walk_length))
                     out_c.extend(path)
-            yield pd.DataFrame({"walk_id": out_w, "pos": out_p, node_col: out_c})
+            yield pd.DataFrame({"walk_id": out_w, "pos": out_p, "cell_id": out_c})
 
-    return starts.mapInPandas(gen, f"walk_id long, pos long, {node_col} long")
+    return starts.mapInPandas(gen, "walk_id long, pos long, cell_id long")
 
 
-def skipgram_pairs(
-    walks: DataFrame,
-    window: int = 10,
-    node_col: str = "cell_id",
-) -> DataFrame:
+SKIPGRAM_WINDOW = 10  # the reference's context_size
+
+
+def skipgram_pairs(walks: DataFrame) -> DataFrame:
     """(walk_id, center_pos, center, context) skip-gram pair generation
     from the walk table — the remaining relational half of the reference's
     cell-graph embedding before the torch boundary (torch-geometric's
@@ -180,7 +177,7 @@ def skipgram_pairs(
 
     ONE shuffle: collect each walk into a sorted array (walks are short —
     ≤ walk_length elements), then explode each center against only the
-    SLICE of the walk within ±``window`` ARRAY INDICES of the center's
+    SLICE of the walk within ±``window`` (``SKIPGRAM_WINDOW``) ARRAY INDICES of the center's
     index, then keep the rows within ±``window`` POSITIONS. The slice
     bound makes the fan linear — ≤ 2·window+1 context rows materialized
     per center instead of the full L (at the reference's walk_length 50
@@ -206,7 +203,8 @@ def skipgram_pairs(
     A walk_id self-join would shuffle the table twice AND evaluate the
     walk-generation chain twice (it is not cached); the collect form
     evaluates it once."""
-    seq = F.sort_array(F.collect_list(F.struct(F.col("pos"), F.col(node_col))))
+    window = SKIPGRAM_WINDOW
+    seq = F.sort_array(F.collect_list(F.struct(F.col("pos"), F.col("cell_id"))))
     arr = walks.groupBy("walk_id").agg(seq.alias("_seq"))
     # pos is referenced outside the lambda too (below), so the Spark 4.1
     # HOF-capture pushdown bug (see memory notes) is not in play here
@@ -238,7 +236,7 @@ def skipgram_pairs(
         centers.select(
             "walk_id",
             F.col("_c.pos").alias("center_pos"),
-            F.col(f"_c.{node_col}").alias("center"),
+            F.col("_c.cell_id").alias("center"),
             F.explode(
                 F.slice("_seq", start_1b, end_1b - start_1b + 1)
             ).alias("_x"),
@@ -249,7 +247,7 @@ def skipgram_pairs(
         )
         .select(
             "walk_id", "center_pos", "center",
-            F.col(f"_x.{node_col}").alias("context"),
+            F.col("_x.cell_id").alias("context"),
         )
     )
 

@@ -21,14 +21,17 @@ from ..sources.store import TableStore, run_stages
 G = PORTO_GRID
 EMB_DIM = 32
 EMB_SEED = 0.7
+SIMI_SAMPLE_TRAJS = 40  # trajectories in the similarity matrix
+FED_NUM = 5  # federated shards
+CLUSTER_EPS, CLUSTER_MIN_SAMPLES, CLUSTER_MERGE_EPS = 50_000.0, 2, 10_000.0  # DBSCAN, merge
 
 
-def preprocess_stages(points: DataFrame, simi_sample_trajs: int = 40):
+def preprocess_stages(points: DataFrame):
     """points: (point_id, traj_id, ts_ms, lon, lat, x, y) — already
     bbox-filtered (the porto/clean or pages/mine step). Stages: cell
     assignment → cell-graph edges (node2vec input) → normalized polylines →
-    blocked similarity matrix (the reference's trajsimi step, bounded like
-    its 5000-traj cap)."""
+    blocked similarity matrix of ``SIMI_SAMPLE_TRAJS`` trajectories (the
+    reference's trajsimi step, bounded like its 5000-traj cap)."""
 
     def s_cells(spark, store):
         return cells.with_cell(points, G)
@@ -41,8 +44,8 @@ def preprocess_stages(points: DataFrame, simi_sample_trajs: int = 40):
         return similarity.normalize_polylines(similarity.collect_polylines(pts))
 
     def s_simi(spark, store):
-        polys = store.load(spark, "pre_polylines").limit(simi_sample_trajs)
-        d = similarity.similarity_join(polys, "hausdorff")
+        polys = store.load(spark, "pre_polylines").limit(SIMI_SAMPLE_TRAJS)
+        d = similarity.multi_measure_join(polys, {"dist": ("hausdorff", 0.0)})
         return similarity.symmetrize_normalize(d)
 
     return [
@@ -53,14 +56,14 @@ def preprocess_stages(points: DataFrame, simi_sample_trajs: int = 40):
     ]
 
 
-def segmentation_stages(points: DataFrame, fed_num: int = 5):
-    """Stages: federated shard assignment → TRACLUS segments per shard →
+def segmentation_stages(points: DataFrame):
+    """Stages: ``FED_NUM``-way shard assignment → TRACLUS segments per shard →
     pseudo-embedding column → the golden-output-shaped table
     (fed_id, segment_id, seg geometry, emb)."""
 
     def s_shards(spark, store):
         trajs = points.select("traj_id").distinct()
-        return segment.federated_split(trajs, fed_num)
+        return segment.federated_split(trajs, FED_NUM)
 
     def s_segments(spark, store):
         shards = store.load(spark, "seg_shards")
@@ -95,8 +98,7 @@ def segmentation_stages(points: DataFrame, fed_num: int = 5):
     ]
 
 
-def clustering_stages(eps: float = 50_000.0, min_samples: int = 2,
-                      merge_eps: float = 10_000.0):
+def clustering_stages():
     """Stages over the segmentation output: per-fed DBSCAN labels →
     cluster aggregates (size/centroid/radius) → greedy federated merge."""
 
@@ -105,7 +107,7 @@ def clustering_stages(eps: float = 50_000.0, min_samples: int = 2,
         return cluster.cluster_segments(
             segs.select("fed_id", "segment_id", "start_x", "start_y",
                         "end_x", "end_y", "emb"),
-            eps=eps, min_samples=min_samples,
+            eps=CLUSTER_EPS, min_samples=CLUSTER_MIN_SAMPLES,
         )
 
     def s_aggs(spark, store):
@@ -115,7 +117,7 @@ def clustering_stages(eps: float = 50_000.0, min_samples: int = 2,
 
     def s_merged(spark, store):
         aggs = store.load(spark, "clu_aggregates")
-        return cluster.federated_merge(aggs, eps=merge_eps)
+        return cluster.federated_merge(aggs, eps=CLUSTER_MERGE_EPS)
 
     return [
         ("clu_labels", s_labels),
@@ -124,11 +126,11 @@ def clustering_stages(eps: float = 50_000.0, min_samples: int = 2,
     ]
 
 
-def run_all(spark: SparkSession, points: DataFrame, store: TableStore,
-            resume: bool = True) -> dict[str, str]:
-    """All three reference pipelines back-to-back over one point source."""
+def run_all(spark: SparkSession, points: DataFrame, store: TableStore) -> dict[str, str]:
+    """All three reference pipelines back-to-back over one point source,
+    each resuming from its committed stages."""
     status = {}
-    status.update(run_stages(spark, store, preprocess_stages(points), resume=resume))
-    status.update(run_stages(spark, store, segmentation_stages(points), resume=resume))
-    status.update(run_stages(spark, store, clustering_stages(), resume=resume))
+    status.update(run_stages(spark, store, preprocess_stages(points)))
+    status.update(run_stages(spark, store, segmentation_stages(points)))
+    status.update(run_stages(spark, store, clustering_stages()))
     return status

@@ -5,7 +5,7 @@ access or graphml cache here). A jittered Manhattan grid of streets gives
 the map-matching operator a connected graph with the same table shape an
 imported road network would have.
 
-Layout: ``n_rows × n_cols`` intersections spanning the grid MBR, each
+Layout: ``N_ROWS × N_COLS`` intersections spanning the grid MBR, each
 jittered deterministically; every node connects to its right and upper
 neighbour. Edge rows carry endpoint coordinates AND endpoint node ids, so
 connectivity queries are joins on node id (the reference instead rebuilds
@@ -23,17 +23,17 @@ ROAD_SCHEMA = (
     "edge_id long, from_node long, to_node long, "
     "x1 double, y1 double, x2 double, y2 double"
 )
+N_ROWS = N_COLS = 40  # intersections per grid column / row
+JITTER_M = 40.0  # largest per-axis node offset
 
 
 def road_grid_arrays(
     grid: GridConfig = PORTO_GRID,
-    n_rows: int = 40,
-    n_cols: int = 40,
-    jitter_m: float = 40.0,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(node_xy [n_nodes, 2], edge_nodes [n_edges, 2], edge_xy [n_edges, 4])
     — the single source of truth shared by the Spark table, the golden
     generator, and the tests."""
+    n_rows, n_cols, jitter_m = N_ROWS, N_COLS, JITTER_M
     r = np.arange(n_rows)
     c = np.arange(n_cols)
     cc, rr = np.meshgrid(c, r)
@@ -57,15 +57,9 @@ def road_grid_arrays(
     return node_xy, edge_nodes, edge_xy
 
 
-def road_edges(
-    spark: SparkSession,
-    grid: GridConfig = PORTO_GRID,
-    n_rows: int = 40,
-    n_cols: int = 40,
-    jitter_m: float = 40.0,
-) -> DataFrame:
+def road_edges(spark: SparkSession, grid: GridConfig = PORTO_GRID) -> DataFrame:
     """Road edge table (edge_id = row index of road_grid_arrays)."""
-    _, edge_nodes, edge_xy = road_grid_arrays(grid, n_rows, n_cols, jitter_m)
+    _, edge_nodes, edge_xy = road_grid_arrays(grid)
     rows = [
         (int(i), int(fn), int(tn), float(x1), float(y1), float(x2), float(y2))
         for i, ((fn, tn), (x1, y1, x2, y2)) in enumerate(zip(edge_nodes, edge_xy))

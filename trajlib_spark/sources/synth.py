@@ -140,7 +140,7 @@ FROM (
 """
 
 
-def polygon_edges_sql(nation: str = "nation") -> str:
+def polygon_edges_sql() -> str:
     """(geo_id, x1, y1, x2, y2) — the 8 directed edges of each octagon."""
     arms = []
     n = len(_VERTS)
@@ -151,7 +151,7 @@ def polygon_edges_sql(nation: str = "nation") -> str:
             f"SELECT geo_id, {x1} AS x1, {y1} AS y1, {x2} AS x2, {y2} AS y2 FROM poly_base"
         )
     union = "\nUNION ALL\n".join(arms)
-    return f"WITH poly_base AS ({polygons_base_sql(nation)})\n{union}"
+    return f"WITH poly_base AS ({polygons_base_sql()})\n{union}"
 
 
 def synthetic_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:

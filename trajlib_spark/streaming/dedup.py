@@ -1,19 +1,13 @@
 """Structured-Streaming deduplication — the streaming half of the
 training-data pipeline's dedup story (batch: operators/dedup.py).
 
-Two levels, both bounded-state by watermark:
-
-- ``streaming_exact_dedup``: one survivor per md5 content hash via
-  ``dropDuplicatesWithinWatermark`` — Spark keeps one state row per hash
-  only within the watermark horizon, so state is bounded by arrival rate
-  × horizon, not corpus size (the semantics a 100 TB ingest needs: exact
-  global dedup of an unbounded stream is unbounded state by definition).
-  The survivor is engine-arrival-ordered, not event-time min — Spark
-  documents no intra-batch ordering for this operator.
-- ``streaming_signature_dedup``: the MinHash-bucket variant — documents
-  carry a coarse signature prefix (computed batch-side or by the same
-  Arrow UDF), and dedup keys on (band bucket) instead of the exact hash,
-  collapsing near-dups that share every band within the horizon.
+``streaming_exact_dedup`` keeps one survivor per md5 content hash via
+``dropDuplicatesWithinWatermark`` — Spark keeps one state row per hash
+only within the watermark horizon, so state is bounded by arrival rate ×
+horizon, not corpus size (the semantics a 100 TB ingest needs: exact
+global dedup of an unbounded stream is unbounded state by definition).
+The survivor is engine-arrival-ordered, not event-time min — Spark
+documents no intra-batch ordering for this operator.
 
 Late data beyond the watermark simply re-admits a duplicate — the
 documented, tunable trade (horizon vs dedup recall) every streaming
@@ -31,38 +25,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def streaming_exact_dedup(
-    docs: DataFrame,
-    ts: str = "ts",
-    text: str = "text",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """docs must be a streaming DataFrame with an event-time column.
-    Emits the first-seen row per exact text hash within the watermark
-    horizon; duplicates arriving inside the horizon are dropped with
-    bounded state."""
+def streaming_exact_dedup(docs: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+    """docs must be a streaming DataFrame with event time ``ts`` and
+    ``text``. Emits the first-seen row per exact text hash within the
+    watermark horizon; duplicates arriving inside the horizon are dropped
+    with bounded state."""
     return (
-        docs.withColumn(ts, F.col(ts).cast("timestamp"))
-        .withColumn("text_hash", F.md5(F.col(text)))
-        .withWatermark(ts, watermark)
+        docs.withColumn("ts", F.col("ts").cast("timestamp"))
+        .withColumn("text_hash", F.md5(F.col("text")))
+        .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["text_hash"])
-    )
-
-
-def streaming_signature_dedup(
-    docs: DataFrame,
-    sig_col: str = "sig_band",
-    ts: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Near-dup variant: dedup on a precomputed signature-band column
-    (e.g. the first MinHash band) instead of the exact hash — documents
-    whose band collides within the horizon collapse to the first seen.
-    Recall/precision follow the banding math of the batch LSH
-    (operators/dedup.lsh_candidates); this is the cheap streaming gate in
-    front of it."""
-    return (
-        docs.withColumn(ts, F.col(ts).cast("timestamp"))
-        .withWatermark(ts, watermark)
-        .dropDuplicatesWithinWatermark([sig_col])
     )

@@ -15,26 +15,26 @@ from pyspark.sql import functions as F
 from ..config import SESSION_GAP_S
 
 
-def streaming_sessions(
-    events: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    gap_s: int = SESSION_GAP_S,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """events must be a streaming DataFrame (readStream). Returns the
-    windowed aggregation; attach writeStream with outputMode('append')."""
+# the late-data horizon of streaming_sessions
+WATERMARK = "30 minutes"
+
+
+def streaming_sessions(events: DataFrame) -> DataFrame:
+    """events must be a streaming DataFrame (readStream) of (user_id, ts)
+    rows; sessions close after ``config.SESSION_GAP_S`` seconds without a
+    point. Returns the windowed aggregation; attach writeStream with
+    outputMode('append')."""
     return (
-        events.withColumn(ts, F.col(ts).cast("timestamp"))
-        .withWatermark(ts, watermark)
-        .groupBy(F.session_window(F.col(ts), f"{gap_s} seconds"), F.col(key))
+        events.withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window(F.col("ts"), f"{SESSION_GAP_S} seconds"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_points"),
-            F.min(ts).alias("start_ts"),
-            F.max(ts).alias("end_ts"),
+            F.min("ts").alias("start_ts"),
+            F.max("ts").alias("end_ts"),
         )
         .select(
-            key,
+            "user_id",
             F.col("session_window.start").alias("window_start"),
             F.col("session_window.end").alias("window_end"),
             "n_points",

@@ -19,24 +19,18 @@ from ..config import GridConfig
 from ..operators import cells
 
 
-def streaming_tile_counts(
-    points: DataFrame,
-    grid: GridConfig,
-    ts: str = "ts",
-    window: str = "1 minute",
-    watermark: str = "10 minutes",
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
+WINDOW = "1 minute"  # the tumbling count window
+WATERMARK = "10 minutes"  # the late-data horizon
+
+
+def streaming_tile_counts(points: DataFrame, grid: GridConfig) -> DataFrame:
     """points must be a streaming DataFrame with event time ``ts`` and
     Mercator ``x``/``y``. → (window_start, window_end, cell_id, i_x, i_y,
-    cnt); attach writeStream with outputMode('append')."""
-    with_cells = cells.with_cell(
-        points.withColumn(ts, F.col(ts).cast("timestamp")), grid, x=x, y=y
-    )
+    cnt) per ``WINDOW``; attach writeStream with outputMode('append')."""
+    with_cells = cells.with_cell(points.withColumn("ts", F.col("ts").cast("timestamp")), grid)
     return (
-        with_cells.withWatermark(ts, watermark)
-        .groupBy(F.window(F.col(ts), window), "cell_id", "i_x", "i_y")
+        with_cells.withWatermark("ts", WATERMARK)
+        .groupBy(F.window(F.col("ts"), WINDOW), "cell_id", "i_x", "i_y")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(
             F.col("window.start").alias("window_start"),
