@@ -63,6 +63,8 @@ from trajlib_spark.sources import pages as pages_src
 
 from trajlib_spark.sources import synth
 
+from trajlib_spark.sources import tables
+
 from trajlib_spark.sources.synth import dlit
 from trajlib_spark.oracles import (
     _PORTO_CSV,  # noqa: E501 — DuckDB oracle SQL (VERDICT r4 item 8 split)
@@ -143,7 +145,7 @@ def _points_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return tables.read_table(spark, f"{sf_dir}/documents.parquet", tables.DOCUMENTS)
 
 
 def _docs_fanned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,7 +164,7 @@ def _docs_fanned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return tables.read_table(spark, f"{sf_dir}/embeddings.parquet", tables.EMBEDDINGS)
 
 
 # ---------------------------------------------------------------------------
@@ -422,7 +424,7 @@ def q_traj_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary over lineitem — the general-OLAP
     sanity anchor (groupBy + 6 aggregates + having-free ordering)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = tables.read_table(spark, f"{sf_dir}/lineitem.parquet", tables.LINEITEM)
     out = (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -443,9 +445,9 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way join (customer ⋈ nation broadcast, orders shuffle) + agg +
     top-k — the classic star-join shape."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    c = tables.read_table(spark, f"{sf_dir}/customer.parquet", tables.CUSTOMER)
+    o = tables.read_table(spark, f"{sf_dir}/orders.parquet", tables.ORDERS)
+    n = tables.read_table(spark, f"{sf_dir}/nation.parquet", tables.NATION)
     out = (
         o.join(c, o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
@@ -465,7 +467,7 @@ def q_events_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape over the events stream table."""
     from pyspark.sql import Window
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read_table(spark, f"{sf_dir}/events.parquet", tables.EVENTS)
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_millis(F.col("ts").cast("timestamp")), "event_id")

@@ -52,7 +52,7 @@ from trajlib_spark.operators import cells  # noqa: E402
 from trajlib_spark.plans import pages_pipeline  # noqa: E402
 from trajlib_spark.session import default_cpus, get_spark, stop_spark  # noqa: E402
 from trajlib_spark.sources import pages as pages_src  # noqa: E402
-from trajlib_spark.sources import synth  # noqa: E402
+from trajlib_spark.sources import synth, tables  # noqa: E402
 
 G = PORTO_GRID
 _PKG = os.path.join(_ROOT, "trajlib_spark")
@@ -96,7 +96,8 @@ def prepare_pages(spark, n_pages: int) -> str:
 def _flagship_frames(spark, sf_dir: str, pages_path: str) -> dict:
     """The flagship's lazy frames over the stored pages table."""
     return pages_pipeline.flagship_frames(
-        spark.read.parquet(pages_path), synth.synthetic_polygons(spark, sf_dir)
+        tables.read_table(spark, pages_path, tables.PAGES),
+        synth.synthetic_polygons(spark, sf_dir),
     )
 
 
@@ -311,7 +312,7 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
 
         # 2) minhash dedup at 50k docs: 10 deterministically salted copies
         # of the sf0.1 documents table (salt suffix changes the shingles)
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs = tables.read_table(spark, f"{sf_dir}/documents.parquet", tables.DOCUMENTS)
         salted = docs.select(
             F.explode(F.sequence(F.lit(0), F.lit(9))).alias("_salt"),
             "doc_id", "text",
@@ -537,7 +538,9 @@ def _sf10_salted_docs(spark, sf_dir: str, cpus: int):
     cache key tracks exactly what determines the measurement — this
     corpus construction + the package — and not the pilot's bookkeeping
     code."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # only the two columns the corpus is built from are declared (and read)
+    docs = tables.read_table(spark, f"{sf_dir}/documents.parquet",
+                             "doc_id bigint, text string")
     # ~593 chars of (doc_id, salt)-seeded md5 tokens ≈ 2× the 297-char
     # mean text: dilutes every cross similarity of a salt≥10 copy to
     # ≤ ~1/3 (shared original shingles over a 3×-sized union)

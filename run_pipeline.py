@@ -36,14 +36,14 @@ def main() -> int:
     from trajlib_spark.plans.pages_pipeline import pipeline_stages
     from trajlib_spark.session import get_spark
     from trajlib_spark.sources import pages as pages_src
-    from trajlib_spark.sources import synth
+    from trajlib_spark.sources import synth, tables
     from trajlib_spark.sources.store import TableStore, run_stages
 
     spark = get_spark(app_name="trajlib-pipeline", master=args.master)
     if args.pages.startswith("synth:"):
         pages = pages_src.generate_pages(spark, int(args.pages.split(":", 1)[1]))
     else:
-        pages = spark.read.parquet(args.pages)
+        pages = tables.read_table(spark, args.pages, tables.PAGES)
     polygons = synth.synthetic_polygons(spark, args.sf_dir)
 
     stages = pipeline_stages(pages, polygons)

@@ -5,6 +5,21 @@ import pytest
 SF = "/root/testdata/sf0.001"
 
 
+def job_count(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from trajlib_spark.session import get_spark
@@ -25,12 +40,16 @@ def points(spark):
 
 @pytest.fixture(scope="session")
 def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").cache()
+    from trajlib_spark.sources import tables
+
+    return tables.read_table(spark, f"{SF}/documents.parquet", tables.DOCUMENTS).cache()
 
 
 @pytest.fixture(scope="session")
 def embs(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+    from trajlib_spark.sources import tables
+
+    return tables.read_table(spark, f"{SF}/embeddings.parquet", tables.EMBEDDINGS).cache()
 
 
 class PairPath(str):

@@ -10,6 +10,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import job_count
+
 
 def _planted_segments(spark):
     """Two tight spatial clusters per fed + one outlier; embeddings equal so
@@ -198,21 +200,6 @@ def test_store_uncommitted_write_is_invisible(spark):
         shutil.rmtree(root)
 
 
-def _job_count(spark, fn) -> int:
-    """Spark jobs that ``fn()`` runs, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _store_frames(spark):
     return {
         "plain": (spark.range(1000).repartition(4), None),
@@ -229,12 +216,29 @@ def test_store_commit_runs_only_its_data_write(spark, tmp_path, kind):
 
     df, partition_by = _store_frames(spark)[kind]
     store = TableStore(str(tmp_path / "store"))
-    save = _job_count(spark, lambda: store.save(df, "t", partition_by=partition_by))
+    save = job_count(spark, lambda: store.save(df, "t", partition_by=partition_by))
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    plain = _job_count(spark, lambda: writer.parquet(str(tmp_path / "plain")))
+    plain = job_count(spark, lambda: writer.parquet(str(tmp_path / "plain")))
     assert save == plain
+
+
+@pytest.mark.parametrize("kind", ["plain", "partitioned", "empty"])
+def test_store_load_runs_no_job_and_matches_inferring_read(spark, tmp_path, kind):
+    """A load reads with the schema its manifest records: no schema
+    inference job, and the same columns and types as ``spark.read.parquet``
+    (a partition column last, typed from its directory names)."""
+    from trajlib_spark.sources.store import TableStore
+
+    df, partition_by = _store_frames(spark)[kind]
+    store = TableStore(str(tmp_path / "store"))
+    store.save(df, "t", partition_by=partition_by)
+    got = {}
+    assert job_count(spark, lambda: got.update(df=store.load(spark, "t"))) == 0
+    inferred = spark.read.parquet(str(tmp_path / "store" / "t" / "data"))
+    assert got["df"].schema == inferred.schema
+    assert sorted(got["df"].collect()) == sorted(inferred.collect())
 
 
 def test_store_save_leaves_no_persisted_rdd(spark, tmp_path):

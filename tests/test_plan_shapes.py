@@ -8,7 +8,7 @@ import pytest
 
 from trajlib_spark.plans import pages_pipeline
 from trajlib_spark.sources import pages as pages_src
-from trajlib_spark.sources import synth
+from trajlib_spark.sources import synth, tables
 
 from conftest import SF
 
@@ -18,7 +18,8 @@ def flagship(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("plan_pages") / "pages")
     pages_src.generate_pages(spark, 500, skew=True).write.parquet(path)
     polys = synth.synthetic_polygons(spark, SF)
-    return pages_pipeline.flagship_frames(spark.read.parquet(path), polys)
+    return pages_pipeline.flagship_frames(
+        tables.read_table(spark, path, tables.PAGES), polys)
 
 
 def _final_plan(df) -> str:

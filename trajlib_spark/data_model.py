@@ -69,16 +69,6 @@ SEGMENT_SCHEMA = T.StructType(
     ]
 )
 
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ]
-)
-
 
 def cal_all_trajs(points: DataFrame) -> DataFrame:
     """Per-trajectory timestamp-sorted lon / lat lists — the reference's

@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import LAT_SPAN, LON_SPAN, MIN_LAT, MIN_LON
+from .tables import PAGES
 
 LANGS = ("en", "pt", "zh", "de")
 _BASE_TS = int(_dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc).timestamp())
@@ -117,6 +118,4 @@ def generate_pages(
         spark.range(0, n, 1, num_partitions)
         if num_partitions else spark.range(n)
     )
-    return rng.mapInPandas(
-        gen, "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
+    return rng.mapInPandas(gen, PAGES)

@@ -20,7 +20,6 @@ the written files' parquet footers on the driver with pyarrow.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -35,6 +34,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+from .tables import data_files, partition_columns, read_table
 
 # The types every _lineage file holds, so lineage files written by the
 # Spark-job store of earlier versions and by this one read together.
@@ -52,16 +53,6 @@ def _publish(path: str, write) -> None:
     tmp = os.path.join(head, "." + name)
     write(tmp)
     os.replace(tmp, path)
-
-
-def _data_files(root: str) -> list[str]:
-    """The files ``spark.read.parquet(root)`` reads, in path order. Spark
-    skips names starting with ``.`` (so does glob) or ``_`` (bar ``_c=v``)."""
-    return sorted(
-        os.path.join(root, p)
-        for p in glob.glob("**/*.parquet", root_dir=root, recursive=True)
-        if not any(c.startswith("_") and "=" not in c for c in p.split(os.sep))
-    )
 
 
 @dataclass
@@ -82,12 +73,16 @@ class TableStore:
     # -- commits ---------------------------------------------------------------
     def exists(self, table: str) -> bool:
         """True iff a committed snapshot exists (manifest present + parses)."""
+        return self._committed(table) is not None
+
+    def _committed(self, table: str) -> dict | None:
+        """The table's manifest, if a committed snapshot exists."""
         try:
             with open(self._manifest(table)) as f:
                 m = json.load(f)
-            return "row_count" in m
         except (OSError, json.JSONDecodeError):
-            return False
+            return None
+        return m if "row_count" in m else None
 
     def save(self, df: DataFrame, table: str, stage: str | None = None,
              partition_by: list[str] | None = None) -> None:
@@ -104,7 +99,7 @@ class TableStore:
         # Lineage: one row per non-empty output file, in path order; the
         # counts come from the footers just written, not from a Spark job.
         counts = [n for n in (pq.read_metadata(p).num_rows
-                              for p in _data_files(self._data(table))) if n]
+                              for p in data_files(self._data(table))) if n]
         now, inputs = datetime.now(timezone.utc), sorted(df.inputFiles())
         lineage = pa.Table.from_pylist(
             [dict(run_id=self.run_id, stage=stage, partition_id=i, input_files=inputs,
@@ -122,9 +117,18 @@ class TableStore:
                  lambda tmp: Path(tmp).write_text(json.dumps(manifest)))
 
     def load(self, spark: SparkSession, table: str) -> DataFrame:
-        if not self.exists(table):
+        """The committed snapshot, read with the schema its manifest
+        records (no inference job). Partition columns are left out of it,
+        so Spark types them from the directory names as an inferring read
+        does."""
+        m = self._committed(table)
+        if m is None:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
-        return spark.read.parquet(self._data(table))
+        data = self._data(table)
+        parts = set(partition_columns(data))
+        schema = StructType.fromJson(m["schema"])
+        return read_table(spark, data, StructType(
+            [f for f in schema.fields if f.name not in parts]))
 
     def drop(self, table: str) -> None:
         shutil.rmtree(self._dir(table), ignore_errors=True)

@@ -36,6 +36,7 @@ from ..config import (
     PORTO_GRID,
     SEMI_MAJOR_AXIS,
 )
+from . import tables
 
 
 def dlit(v: float) -> str:
@@ -90,7 +91,7 @@ def synthetic_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session timezone; DuckDB's epoch_ms over the same naive value is
     # UTC. Pin it here so the caller's session config can't skew ts_ms.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = tables.read_table(spark, f"{sf_dir}/events.parquet", tables.EVENTS)
     events.createOrReplaceTempView("ts_synth_events")
     return spark.sql(points_sql("spark", events="ts_synth_events"))
 
@@ -157,7 +158,7 @@ def polygon_edges_sql() -> str:
 def synthetic_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark polygon table in GeoData shape: (geo_id, type, coord) with
     coord = array<array<array<double>>> — one closed outer ring."""
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    nation = tables.read_table(spark, f"{sf_dir}/nation.parquet", tables.NATION)
     nation.createOrReplaceTempView("ts_synth_nation")
     base = spark.sql(polygons_base_sql(nation="ts_synth_nation"))
     ring_elems = [
