@@ -1287,11 +1287,10 @@ def q_polygon_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL oracle (round 3): DuckDB rebuilds the octagon vertices, bounded
     MBR cell ranges, covering-cell self-join, and dense rel_id rank."""
     from trajlib_spark.data_model import polygon_adjacency
-    from trajlib_spark.operators.spatial_join import polygon_covering_cells
+    from trajlib_spark.operators.spatial_join import polygon_index
 
     polys = synth.synthetic_polygons(spark, sf_dir)
-    cov = polygon_covering_cells(polys, G)
-    return polygon_adjacency(cov)
+    return polygon_adjacency(polygon_index(polys, G))
 
 
 def q_pages_points(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,6 +20,36 @@ def job_count(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def session_cache_state(spark) -> tuple[int, int]:
+    """(CacheManager entries, persistent RDDs) once the session settles.
+
+    Each round runs a Python GC, waits (bounded) for py4j's finalizer
+    thread, which polls once a second, to release the dropped handles on
+    the JVM side, then runs a JVM ``System.gc()`` and waits briefly for
+    the ContextCleaner. The RDD count is read from the SparkContext's
+    weak-valued map itself: ``getPersistentRDDs()`` returns a copy that
+    holds every RDD it counts. The rounds stop once the count holds
+    still, after five at most."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+    pending = sc._gateway._gateway_client.finalizer_deque
+    count = None
+    for _ in range(5):
+        gc.collect()
+        for _ in range(30):
+            if not pending:
+                break
+            time.sleep(0.1)
+        sc._jvm.System.gc()
+        time.sleep(0.2)
+        last, count = count, sc._jsc.sc().persistentRdds().size()
+        if count == last:
+            break
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries(), count
+
+
 @pytest.fixture(scope="session")
 def spark():
     from trajlib_spark.session import get_spark

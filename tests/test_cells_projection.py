@@ -36,16 +36,20 @@ def oracle_cell(x: float, y: float) -> tuple[int, int, int]:
 )
 @settings(max_examples=40, deadline=None)
 def test_cell_id_matches_scalar_oracle(spark, x, y):
+    ex, ey = cells.edge_idx(F.col("x"), F.col("y"), G)
     row = (
         spark.createDataFrame([(x, y)], "x double, y double")
         .select(
             cells.x_idx(F.col("x"), F.col("y"), G).alias("ix"),
             cells.y_idx(F.col("x"), F.col("y"), G).alias("iy"),
             cells.cell_id(F.col("x"), F.col("y"), G).alias("cid"),
+            ex.alias("ex"),
+            ey.alias("ey"),
         )
         .collect()[0]
     )
     assert (row.ix, row.iy, row.cid) == oracle_cell(x, y)
+    assert (row.ex, row.ey) == cells.edge_idx_py(x, y, G)
 
 
 def test_grid_dimensions():

@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import job_count
+from conftest import job_count, session_cache_state
 
 
 def _planted_segments(spark):
@@ -123,16 +123,6 @@ def test_segment_distance_terms_match_numpy_kernel(spark):
     assert next(r.d for r in got if (r.i, r.j) == (2, 3)) == 0.0
 
 
-def _session_cache_state(spark) -> tuple[int, int]:
-    """(CacheManager entries, persistent RDDs) after a Python and a JVM GC."""
-    import gc
-
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    return cm.numCachedEntries(), spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
 @pytest.mark.parametrize("query", ["silhouette", "cluster_merge"])
 def test_cluster_query_leaves_session_cache_as_found(spark, query):
     """The query releases what it caches: after it runs and a GC, the
@@ -142,10 +132,10 @@ def test_cluster_query_leaves_session_cache_as_found(spark, query):
     import __spark_entry__ as E
     from conftest import SF
 
-    before = _session_cache_state(spark)
+    before = session_cache_state(spark)
     rows = E.queries()[query](spark, SF).collect()
     assert rows
-    after = _session_cache_state(spark)
+    after = session_cache_state(spark)
     assert after[0] <= before[0] and after[1] <= before[1], (before, after)
 
 
@@ -245,9 +235,9 @@ def test_store_save_leaves_no_persisted_rdd(spark, tmp_path):
     from trajlib_spark.sources.store import TableStore
 
     store = TableStore(str(tmp_path / "store"))
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    before = session_cache_state(spark)[1]
     store.save(spark.range(100).repartition(4), "t")
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    assert session_cache_state(spark)[1] == before
 
 
 @pytest.mark.parametrize("kind", ["plain", "partitioned", "empty"])

@@ -583,7 +583,7 @@ def test_federated_split_positional(spark):
     out = segment.federated_split(trajs, 3).orderBy("traj_id")
     got = [r.fed_id for r in out.collect()]
     # np.array_split over 10 rows ordered by traj_id string: '0','1',...,'9'
-    assert sorted(got) == got or True  # shards are contiguous in order
+    assert sorted(got) == got  # shards are contiguous in order
     import collections
 
     sizes = collections.Counter(got)

@@ -22,8 +22,8 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "trajlib_spark")
-CALLERS = ("trajlib_spark", "__spark_entry__.py", "bench.py", "bench_extra.py",
-           "run_pipeline.py", "tools", "perfbench")
+CALLERS = ("trajlib_spark", "__spark_entry__.py", "bench.py", "run_pipeline.py",
+           "tools", "perfbench")
 
 PERFBENCH = "perfbench passes it (perfbench is frozen)"
 CAPABILITY = "a BASELINE/COVERAGE capability a test checks"

@@ -6,7 +6,8 @@ Reference semantics (/root/reference/fedtraj/utils/cellspace.py):
 - cell id layout ``i_x * y_size + i_y`` (:26-27)
 - out-of-MBR points snap to the MBR center (:39-43) — quirk reproduced
   for cell assignment; ``edge_idx`` is the clamp-to-edge index that
-  polygon coverage and the kNN ring certificates use instead
+  polygon coverage (through its scalar twin ``edge_idx_py``) and the kNN
+  ring certificates use instead
 - truncation order ``int(x - x_min) // x_unit`` (:47-48): integer cast of
   the offset *before* the unit division. For the non-negative offsets that
   remain after clamping this equals ``floor(floor(x - x_min) / x_unit)``,
@@ -78,13 +79,26 @@ def cell_id_from_idx(i_x: Column, i_y: Column, grid: GridConfig) -> Column:
     return (i_x * F.lit(grid.y_size) + i_y).cast("long")
 
 
+def _idx_py(v: float, v_min: float, unit: float) -> int:
+    """``_idx`` in Python: the same floor arithmetic on a float."""
+    return math.floor(math.floor(v - v_min) / unit)
+
+
+def edge_idx_py(x: float, y: float, grid: GridConfig) -> tuple[int, int]:
+    """Scalar twin of ``edge_idx``, for indexes built on the driver."""
+    def one(v: float, v_min: float, v_max: float, unit: float, size: int) -> int:
+        return min(size - 1, max(0, _idx_py(max(v_min, min(v_max, v)), v_min, unit)))
+
+    return (one(x, grid.x_min, grid.x_max, grid.x_unit, grid.x_size),
+            one(y, grid.y_min, grid.y_max, grid.y_unit, grid.y_size))
+
+
 def center_cell_id(grid: GridConfig) -> int:
     """Cell id of the MBR center, where clamp_x/clamp_y park null and
-    out-of-MBR points: the same floor arithmetic as ``_idx``, in Python."""
+    out-of-MBR points."""
     cx, cy = grid.center
-    i_x = math.floor(math.floor(cx - grid.x_min) / grid.x_unit)
-    i_y = math.floor(math.floor(cy - grid.y_min) / grid.y_unit)
-    return int(i_x * grid.y_size + i_y)
+    return _idx_py(cx, grid.x_min, grid.x_unit) * grid.y_size + _idx_py(
+        cy, grid.y_min, grid.y_unit)
 
 
 def _never_null(cid: Column, grid: GridConfig) -> Column:

@@ -2,10 +2,12 @@
 
 Two-phase plan (the STRtree-broadcast analog from the survey §4.2):
 
-1. **Coarse**: each polygon is rasterized to the grid cells covering its
-   bounding box (pure expressions over the GeoJSON coord array), giving a
-   small (cell_id, geo_id, coord) index that Catalyst broadcast-joins with
-   the point table on cell_id — a hash join, no theta join, no UDF.
+1. **Coarse**: ``polygon_index`` rasterizes each polygon, on the driver, to
+   the grid cells covering its bounding box and marks the cells that lie
+   wholly inside it. The (geo_id, cell_id, full, coord) index is one Arrow
+   table that Catalyst broadcast-joins with the point table on cell_id — a
+   hash join, no theta join, no UDF. The same index gives the GeoRelation
+   adjacency (``data_model.polygon_adjacency``).
 2. **Refine**: an exact even-odd ray-cast implemented with array
    higher-order functions (aggregate/filter over the ring edges), staying
    inside codegen. Even-odd over all rings handles holes for free.
@@ -25,48 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import GridConfig
 from . import cells
-
-
-def polygon_covering_cells(polygons: DataFrame, grid: GridConfig) -> DataFrame:
-    """(geo_id, cell_id, coord): every grid cell whose MBR intersects the
-    polygon's bounding box. coord is carried along so the refine phase
-    needs no second join."""
-    pts = F.flatten(F.col("coord"))
-    xs = F.transform(pts, lambda p: p[0])
-    ys = F.transform(pts, lambda p: p[1])
-    # coverage clamps the bounding box to the MBR edge (point assignment
-    # snaps out-of-MBR points to the center instead)
-    ix_lo, iy_lo = cells.edge_idx(F.array_min(xs), F.array_min(ys), grid)
-    ix_hi, iy_hi = cells.edge_idx(F.array_max(xs), F.array_max(ys), grid)
-    df = polygons.select(
-        "geo_id",
-        "coord",
-        ix_lo.alias("ix_lo"),
-        ix_hi.alias("ix_hi"),
-        iy_lo.alias("iy_lo"),
-        iy_hi.alias("iy_hi"),
-    )
-    df = df.select(
-        "geo_id",
-        "coord",
-        F.explode(F.sequence("ix_lo", "ix_hi")).alias("i_x"),
-        "iy_lo",
-        "iy_hi",
-    ).select(
-        "geo_id",
-        "coord",
-        "i_x",
-        F.explode(F.sequence("iy_lo", "iy_hi")).alias("i_y"),
-    )
-    return df.select(
-        "geo_id",
-        cells.cell_id_from_idx(F.col("i_x"), F.col("i_y"), grid).alias("cell_id"),
-        "coord",
-    )
 
 
 def ray_cast_inside(x: Column, y: Column, coord: Column) -> Column:
@@ -112,68 +75,37 @@ def ray_cast_inside(x: Column, y: Column, coord: Column) -> Column:
     return total % 2 == 1
 
 
-def point_in_polygon(
-    points: DataFrame,
-    polygons: DataFrame,
-    grid: GridConfig,
-    point_cols: list[str] | None = None,
-) -> DataFrame:
-    """Join rows (point columns…, geo_id) for every point inside a polygon.
+def polygon_index(polygons: DataFrame, grid: GridConfig) -> DataFrame:
+    """(geo_id, cell_id, full, coord): one row per grid cell that meets a
+    polygon row's bounding box, clamped onto the MBR edge. coord rides on
+    every row, so rows sharing a geo_id stay apart and the refine phase
+    needs no second join. A polygon with no ring of >= 2 points has no
+    edge, contains no point and covers no cell.
 
-    ``points`` needs Mercator columns x/y; cell_id is computed if absent.
-    ``polygons`` is GeoData-shaped: (geo_id, coord array<array<array<double>>>).
+    The index is built on the driver: the polygon side is the bounded
+    build side by design (regions/countries, broadcast anyway), and numpy
+    classifies each cell in milliseconds where the same arithmetic as a
+    Catalyst HOF expression cost ~0.5 s of planning per pass.
+
+    A cell is ``full`` when the rectangle of every point it can hold,
+    grown by a margin, is provably inside the polygon: no polygon edge's
+    bbox overlaps the rectangle (so the even-odd parity is constant across
+    it) and its lower-left corner has odd parity. Probes against full
+    cells skip the ray cast. The margin (-2 below, +3 above) covers the
+    floor-of-floor index slack of +1 with room. Out-of-MBR points park in
+    the center cell at arbitrary coordinates, so that cell is never full.
     """
-    if "cell_id" not in points.columns:
-        points = cells.with_cell(points, grid)
-    # Round 9: classify each covering cell ONCE at index-build time. A cell
-    # is _full when a margin-grown rectangle containing every point the
-    # cell can hold is provably inside the polygon: (a) no polygon edge's
-    # bbox overlaps the rectangle — the boundary never enters it, so the
-    # even-odd parity is constant across it — and (b) one rectangle corner
-    # has odd parity. Probes against _full cells then skip the per-point
-    # ray cast entirely (the interpreted HOF that dominated the pip stage);
-    # only boundary-cell probes still pay it, and Or short-circuits. The
-    # margin covers the inner-floor index slack (+1) with room (±2); the
-    # grid's snap-to-center quirk parks out-of-MBR points in the CENTER
-    # cell at arbitrary coordinates, so that one cell is never _full.
-    # The covering cells AND the classification are computed ON THE DRIVER
-    # in numpy: the polygon side is the bounded build side by design (the
-    # module docstring's 100 TB story — regions/countries, already collected
-    # to a broadcast), and the former giant Catalyst HOF expression cost
-    # ~0.5 s of per-pass fixed ANALYSIS + interpreted evaluation on the
-    # flagship critical path (measured: the cost barely scaled from 500 to
-    # 18k index rows — it was planning-bound). The numpy replay computes
-    # the identical arithmetic — same clamped-floor covering ranges, same
-    # edge-bbox predicate per edge, same crossing expression
-    # (bx−ax)·(py−ay)/(by−ay)+ax with IEEE doubles, same any-over-all-edges
-    # / parity-over-all-rings shape (classification diffed cell-exact
-    # against the Catalyst expression: 18 203 rows, 0 diffs) — in
-    # milliseconds, and ships (cell, _full) scalars back per cell. geo_id
-    # and coord go back once per polygon row, in a small local frame that
-    # the tiny broadcast join re-attaches on the row index (a mapInPandas
-    # variant that shipped coord per row measured SLOWER than the HOF
-    # because of the nested-array Arrow transfer).
-    import math
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    x_min, x_unit, x_max, x_size = grid.x_min, grid.x_unit, grid.x_max, grid.x_size
-    y_min, y_unit, y_max, y_size = grid.y_min, grid.y_unit, grid.y_max, grid.y_size
+    x_min, x_unit = grid.x_min, grid.x_unit
+    y_min, y_unit, y_size = grid.y_min, grid.y_unit, grid.y_size
     center_cell_v = cells.center_cell_id(grid)
 
-    def _bidx(v: float, v_min: float, v_max: float, unit: float, size: int) -> int:
-        clamped = max(v_min, min(v_max, v))
-        idx = int(math.floor(math.floor(clamped - v_min) / unit))
-        return min(size - 1, max(0, idx))
-
-    # Each collected polygon row gets its own index (_pidx), and coord is
-    # re-attached on that index, so rows sharing a geo_id stay apart.
-    # A polygon with no ring of >= 2 points has no edge and so contains
-    # no point: it is skipped and covers no cells.
-    out_pidx, out_cell, out_full, kept = [], [], [], []
-    for r in polygons.select("geo_id", "coord").collect():
-        gid, coord = r["geo_id"], r["coord"] or []
+    polys = polygons.select("geo_id", "coord").toArrow()
+    out_row, out_cell, out_full = [], [], []
+    for row, coord in enumerate(polys.column("coord").to_pylist()):
+        coord = coord or []
         segs = []
         for ring in coord:
             if ring and len(ring) >= 2:
@@ -181,16 +113,12 @@ def point_in_polygon(
                 segs.append((R[:-1], R[1:]))
         if not segs:
             continue
-        pidx = len(kept)
-        kept.append((pidx, gid, coord))
         pts_all = np.array(
             [p for ring in coord if ring for p in ring], dtype=np.float64
         )
         xs_a, ys_a = pts_all[:, 0], pts_all[:, 1]
-        ix_lo = _bidx(float(np.min(xs_a)), x_min, x_max, x_unit, x_size)
-        ix_hi = _bidx(float(np.max(xs_a)), x_min, x_max, x_unit, x_size)
-        iy_lo = _bidx(float(np.min(ys_a)), y_min, y_max, y_unit, y_size)
-        iy_hi = _bidx(float(np.max(ys_a)), y_min, y_max, y_unit, y_size)
+        ix_lo, iy_lo = cells.edge_idx_py(float(np.min(xs_a)), float(np.min(ys_a)), grid)
+        ix_hi, iy_hi = cells.edge_idx_py(float(np.max(xs_a)), float(np.max(ys_a)), grid)
         cell_ids = (
             np.arange(ix_lo, ix_hi + 1, dtype=np.int64)[:, None] * y_size
             + np.arange(iy_lo, iy_hi + 1, dtype=np.int64)[None, :]
@@ -217,33 +145,37 @@ def point_in_polygon(
             ] + ax[None, :]
         inside = ((cond & (rx_lo < xint)).sum(axis=1) % 2) == 1
         full = (cell_ids != center_cell_v) & ~overlap & inside
-        out_pidx.extend([pidx] * len(cell_ids))
+        out_row.extend([row] * len(cell_ids))
         out_cell.extend(cell_ids.tolist())
         out_full.extend(full.tolist())
 
-    spark = polygons.sparkSession
-    schema = "_pidx long, _g_cell long, _full boolean"
-    poly_schema = T.StructType([T.StructField("_pidx", T.LongType(), False),
-                                polygons.schema["geo_id"], polygons.schema["coord"]])
-    if kept:
-        cells_df = spark.createDataFrame(
-            pd.DataFrame(
-                {"_pidx": out_pidx, "_g_cell": out_cell, "_full": out_full}
-            ),
-            schema=schema,
-        )
-        poly_df = spark.createDataFrame(
-            pd.DataFrame(kept, columns=["_pidx", "geo_id", "coord"]),
-            schema=poly_schema,
-        )
-    else:
-        cells_df = spark.createDataFrame([], schema)
-        poly_df = spark.createDataFrame([], poly_schema)
-    index = F.broadcast(cells_df.join(F.broadcast(poly_df), "_pidx"))
+    taken = polys.take(pa.array(out_row, pa.int64()))
+    index = pa.Table.from_arrays(
+        [taken.column("geo_id"), pa.array(out_cell, pa.int64()),
+         pa.array(out_full, pa.bool_()), taken.column("coord")],
+        names=["geo_id", "cell_id", "full", "coord"],
+    )
+    return polygons.sparkSession.createDataFrame(index)
+
+
+def point_in_polygon(
+    points: DataFrame,
+    polygons: DataFrame,
+    grid: GridConfig,
+    point_cols: list[str] | None = None,
+) -> DataFrame:
+    """Join rows (point columns…, geo_id) for every point inside a polygon.
+
+    ``points`` needs Mercator columns x/y; cell_id is computed if absent.
+    ``polygons`` is GeoData-shaped: (geo_id, coord array<array<array<double>>>).
+    """
+    if "cell_id" not in points.columns:
+        points = cells.with_cell(points, grid)
+    index = F.broadcast(polygon_index(polygons, grid))
     # refine lives in the join condition: evaluated exactly at the hash
     # join's probe, immune to pushdown/replan mangling
-    cond = (points["cell_id"] == index["_g_cell"]) & (
-        index["_full"]
+    cond = (points["cell_id"] == index["cell_id"]) & (
+        index["full"]
         | ray_cast_inside(points["x"], points["y"], index["coord"])
     )
     cand = points.join(index, cond)

@@ -146,9 +146,3 @@ def porto_fixture_rows(n: int, seed: int = 42) -> list[tuple]:
         )
     return rows
 
-
-def porto_fixture(spark: SparkSession, n: int) -> DataFrame:
-    """The first ``n`` rows of ``porto_fixture_rows`` as a porto frame with
-    the parsed ``wgs_seq`` polyline."""
-    df = spark.createDataFrame(porto_fixture_rows(n), PORTO_SCHEMA)
-    return df.withColumn("wgs_seq", F.from_json("POLYLINE", "array<array<double>>"))
